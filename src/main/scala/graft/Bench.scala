@@ -260,15 +260,7 @@ object Bench {
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1700").toDouble
     val wallT0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - wallT0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-bench", cpus.toInt)
 
     val fns = SparkEntry.queries
     // local-iteration subset (driver sets no env → full headline)

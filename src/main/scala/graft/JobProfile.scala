@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import scala.collection.concurrent.TrieMap
 
@@ -23,15 +22,7 @@ object JobProfile {
     val warm = args.lift(2).map(_.toInt).getOrElse(1)
     val timed = args.lift(3).map(_.toInt).getOrElse(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-jobprofile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-jobprofile", cpus.toInt)
     val fn = SparkEntry.queries(name)
 
     val starts = TrieMap.empty[Int, (Long, String)]

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named catalog queries to files —
@@ -27,15 +26,7 @@ object PlanDump {
     }
     val suffix = args.lift(3).getOrElse("before")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plandump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-plandump", cpus.toInt)
     Files.createDirectories(Paths.get(outDir))
     val fns = SparkEntry.queries
     names.filter(fns.contains).foreach { n =>

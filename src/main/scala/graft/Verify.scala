@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.concurrent.TrieMap
 
@@ -46,13 +45,7 @@ object Verify {
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_VERIFY_BUDGET_S", "1500").toDouble
     val wallT0 = System.nanoTime()
     def elapsed(): Double = (System.nanoTime() - wallT0) / 1e9
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local("graft-verify", cpus.toInt)
     new java.io.File(outDir).mkdirs()
 
     // — oracle_sql.json FIRST: cheapest artifact, and the one the driver's

@@ -59,20 +59,21 @@ object DqRunner {
     */
   def writeReport(spark: SparkSession, checks: Seq[DqCheck], path: String): Unit = {
     import spark.implicits._
+    val target = new org.apache.hadoop.fs.Path(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val fresh = spark.createDataset(checks).toDF()
     val combined =
-      try {
+      if (!fs.exists(target)) fresh
+      else {
         val existing = spark.read.option("header", "true").csv(path)
         if (existing.columns.sameElements(fresh.columns)) existing.unionByName(fresh) else fresh
-      } catch { case _: org.apache.spark.sql.AnalysisException => fresh }
+      }
     val out = combined.orderBy(col("timestamp").desc).coalesce(1).cache()
     out.count() // materialize before overwriting the path we just read
     out.write.mode(SaveMode.Overwrite).option("header", "true").csv(path + "_tmp")
     out.unpersist()
     // atomic-ish swap: read side is a directory; rename tmp over it
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(hconf)
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    fs.rename(new org.apache.hadoop.fs.Path(path + "_tmp"), new org.apache.hadoop.fs.Path(path))
+    fs.delete(target, true)
+    fs.rename(new org.apache.hadoop.fs.Path(path + "_tmp"), target)
   }
 }

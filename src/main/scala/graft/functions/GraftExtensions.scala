@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.IntegerType
   *
   * Two install paths, same registrations:
   *   - config-based: `spark.sql.extensions=graft.functions.GraftExtensions`
-  *     (or `SparkSession.builder().withExtensions(new GraftExtensions)`),
+  *     (or `withExtensions(new GraftExtensions)` on the session builder,
+  *     as `graft.Sessions.local` does),
   *     the standard engine-extension mechanism — survives into every new
   *     session derived from the builder;
   *   - imperative: [[GraftExtensions.register]] on a live session (tests,

@@ -50,8 +50,10 @@ object Readers {
     * `events.ts` has shipped as two physical types across fixture
     * generations: parquet TIMESTAMP(NANOS) — which Spark rejects outright
     * (PARQUET_TYPE_ILLEGAL) unless read as a raw nano count via the legacy
-    * conf — and plain µs TIMESTAMP. Dispatch on the *read schema* so both
-    * work: LongType (nanosAsLong in effect) → truncate ns→µs, the same
+    * conf — and plain µs TIMESTAMP. Only a file whose footer declares
+    * NANOS turns that session conf on; a µs file leaves the caller's
+    * session as it was. Dispatch on the *read schema* so both work:
+    * LongType (nanosAsLong in effect) → truncate ns→µs, the same
     * truncation DuckDB applies, so both engines see identical values;
     * any timestamp flavor → cast to the session timestamp type.
     */
@@ -60,7 +62,8 @@ object Readers {
     if (name == "events") {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      if (tsIsNanos(spark, path))
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(path)
       raw.schema("ts").dataType match {
         case LongType =>
@@ -71,5 +74,33 @@ object Readers {
           throw new IllegalStateException(s"unsupported events.ts type: $other")
       }
     } else spark.read.parquet(path)
+  }
+
+  /** Whether the footer of `path` (a parquet file, or the first data file
+    * of a parquet directory) declares its `ts` column TIMESTAMP(NANOS).
+    */
+  private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(path)
+    val fs = root.getFileSystem(hconf)
+    val file =
+      if (!fs.exists(root)) None // the read below reports the missing path
+      else if (!fs.getFileStatus(root).isDirectory) Some(root)
+      else fs.listStatus(root).map(_.getPath)
+        .find(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
+    file.exists { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, hconf))
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        schema.containsField("ts") && (schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+          case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+          case _ => false
+        })
+      } finally reader.close()
+    }
   }
 }

@@ -121,6 +121,18 @@ class EtlGoldenSpec extends SparkSpec {
     assert(report.count() == 8 * 4, "8 checkpoints x (1 non-empty + 3 null checks)")
   }
 
+  test("DQ report: a fresh path gets the new checks, an existing report is appended to, newest first") {
+    val path = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "dqreport").toString + "/dq_report"
+    val df = Seq((Some(1), Some("a"))).toDF("k", "v")
+    def report() = spark.read.option("header", "true").csv(path)
+      .select("check_point", "timestamp").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    DqRunner.writeReport(spark, DqRunner.run(df, "OLD", () => "2026-01-01 00:00:00"), path)
+    assert(report() == Seq.fill(3)(("OLD", "2026-01-01 00:00:00")))
+    DqRunner.writeReport(spark, DqRunner.run(df, "NEW", () => "2026-01-02 00:00:00"), path)
+    assert(report() == Seq.fill(3)(("NEW", "2026-01-02 00:00:00")) ++ Seq.fill(3)(("OLD", "2026-01-01 00:00:00")))
+    assert(!Files.exists(Paths.get(path + "_tmp")), "the staging copy is swapped into place")
+  }
+
   test("re-run into the same warehouse: first run's frames stay live; release() sweeps its stage") {
     val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "rerunwh").toString
     val csvDir = warehouseDir.replace("/warehouse", "/input")

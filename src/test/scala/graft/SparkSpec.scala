@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one per suite via lazy val). */
+/** Shared local session for all suites, from the production builder: the
+  * JVM-wide generated-code cache is sized by the first session that
+  * generates code, so no suite may build its own first.
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf0001 = "/root/testdata/sf0.001"
@@ -11,13 +14,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Sessions.local("graft-test", 8)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
