@@ -18,19 +18,25 @@ object Concurrent {
     * outlives a hidden exception).
     */
   def par[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(ra, rb) = all(Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
+  }
+
+  /** Evaluate every branch on its own pool thread and return the results
+    * in branch order; like [[par]], every branch finishes before the first
+    * failure (in branch order) is rethrown.
+    */
+  def all[A](branches: Seq[() => A]): Seq[A] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(branches.size.max(1))
     implicit val ec: ExecutionContext =
       ExecutionContext.fromExecutorService(pool)
     try {
-      val fa = Future(a)
-      val fb = Future(b)
-      // await both even when the first throws: the slower branch must not
-      // keep submitting jobs after par() returns
-      val ra = scala.util.Try(Await.result(fa, Duration.Inf))
-      val rb = scala.util.Try(Await.result(fb, Duration.Inf))
-      (ra.get, rb.get)
+      val futures = branches.map(b => Future(b()))
+      // await every branch even when one throws: the slower branches must
+      // not keep submitting jobs after all() returns
+      futures.map(f => scala.util.Try(Await.result(f, Duration.Inf))).map(_.get)
     } finally pool.shutdown()
   }
 }

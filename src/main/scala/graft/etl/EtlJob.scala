@@ -1,53 +1,31 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Readers
 
 /** End-to-end ETL orchestration (reference `etl/main.py` main flow), with
   * the deliberate physical deltas of SURVEY §7.3:
   *
-  *   - the flat frame is materialized once (parquet staging table by
-  *     default — see [[Materialization]]) and reused by every dim build,
-  *     DQ checkpoint and write (the reference recomputes the
-  *     non-splittable CSV parse dozens of times);
-  *   - each checkpoint is a single aggregation job ([[DqRunner]]);
+  *   - the flat frame is written once to a run-unique parquet staging table
+  *     (`<warehouse>/_stage/flat-<uuid>`) and re-read by every dim build
+  *     and write (the reference recomputes the non-splittable CSV parse
+  *     dozens of times). The stage is lineage-free (executor loss re-reads
+  *     files), has no cache-manager involvement (no eviction, no block-lock
+  *     races between the dim broadcast-exchange threads), and scans back
+  *     columnar through the vectorized reader — measured on the round-11
+  *     host as the fastest multi-consumer form at 10× scale (q17@sf1 17.1 s
+  *     vs 19.9 s columnar cache vs 35.1 s localCheckpoint);
+  *   - no DQ checkpoint runs a job of its own: each rides a write the run
+  *     does anyway ([[DqRunner.observe]]) — the two pre-parse checkpoints
+  *     the staging write, each table's checkpoint that table's write;
+  *   - the six table writes are independent and run concurrently;
   *   - surrogate keys are deterministic sha2 by default, so the written
   *     star schema is referentially closed (SURVEY §2.12.1); `uuid()` parity
   *     mode caches each dim before fan-out so a single evaluation is reused;
   *   - fact writes can partition by event year/month for 100-TB pruning.
   */
 object EtlJob {
-
-  /** How the flattened frame is materialized for reuse across the dim/
-    * fact/DQ subtrees:
-    *
-    *   - [[ParquetStage]] (default) writes the flat frame to
-    *     a run-unique `<warehouse>/_stage/flat-<uuid>` and re-reads it —
-    *     the production
-    *     staging-table shape. Lineage-free (executor loss re-reads
-    *     files), no cache-manager involvement (no eviction semantics, no
-    *     block-lock races between the dim broadcast-exchange threads),
-    *     columnar-compressed on disk and scanned back through the
-    *     vectorized parquet reader. Measured on the round-11 host it is
-    *     also the FASTEST multi-consumer form at 10× scale (q17@sf1
-    *     17.1 s vs 19.9 s columnar cache vs 35.1 s localCheckpoint —
-    *     row-format checkpoint blocks cost ~2× in memory traffic across
-    *     the ~8 consumer scans).
-    *   - [[LocalCheckpoint]] truncates lineage into block storage — no
-    *     recompute, no staging I/O path needed, but row-format blocks
-    *     (slower to re-scan than columnar) and ANY executor loss
-    *     (dynamic-allocation decommission, preemption, OOM kill) fails
-    *     the job irrecoverably. Single-JVM / static-executor only.
-    *   - [[Cache]] keeps lineage — executor loss recomputes and the job
-    *     survives, at the cost of the eviction→recompute hazard on the
-    *     non-splittable CSV parse. Pick this when the staging write is
-    *     unwanted and executors are preemptible.
-    */
-  sealed trait Materialization
-  case object ParquetStage extends Materialization
-  case object LocalCheckpoint extends Materialization
-  case object Cache extends Materialization
 
   final case class Config(
       inputPath: String,
@@ -56,8 +34,7 @@ object EtlJob {
       keyMode: SurrogateKeys.Mode = SurrogateKeys.Deterministic,
       parityDedup: Boolean = false,
       partitionFactByMonth: Boolean = false,
-      clock: DqRunner.Clock = DqRunner.systemClock,
-      materialization: Materialization = ParquetStage
+      clock: DqRunner.Clock = DqRunner.systemClock
   )
 
   final case class Warehouse(
@@ -68,20 +45,21 @@ object EtlJob {
       dimShipping: DataFrame,
       fact: DataFrame,
       dqChecks: Seq[DqCheck],
-      // ids of the RDDs THIS run materialized (flat's checkpoint blocks,
-      // parity-mode dim caches) — the handle [[release]] frees, so a
-      // long-lived app doesn't accumulate checkpoint blocks across runs
+      // ids of the RDDs THIS run cached (the parity-mode dim pins) — the
+      // handle [[release]] frees, so a long-lived app doesn't accumulate
+      // cached blocks across runs
       releasableRddIds: Seq[Int] = Seq.empty,
-      // the run-unique staging dir behind the returned frames (ParquetStage
-      // mode) — [[release]] deletes it, so repeated run()s into the same
-      // warehouse don't accumulate stage copies
+      // the run-unique staging dir behind the returned frames — [[release]]
+      // deletes it, so repeated run()s into the same warehouse don't
+      // accumulate stage copies
       stagePath: Option[String] = None
   )
 
-  /** Build all tables from an already-flattened event frame. */
+  /** Build all tables from an already-flattened event frame (lazily, but
+    * for the parity-mode pins); no DQ runs here — [[write]] reports the
+    * tables' checkpoints.
+    */
   def buildFromFlat(flat: DataFrame, cfg: Config): Warehouse = {
-    var dq = Vector.empty[DqCheck]
-
     // uuid() is per-evaluation non-deterministic: parity mode must pin ONE
     // evaluation of each dim before it is both joined and written.
     def pin(df: DataFrame): DataFrame = cfg.keyMode match {
@@ -96,65 +74,41 @@ object EtlJob {
     val dimShipping = pin(FactBuilder.dimShipping(flat, dimClient, dimLocation, dimState, cfg.parityDedup))
     val fact = FactBuilder.fact(flat, dimShipping, dimDate, cfg.keyMode)
 
-    dq ++= DqRunner.run(dimClient, "After Tables Build: DimClient", cfg.clock)
-    dq ++= DqRunner.run(dimLocation, "After Tables Build: DimLocation", cfg.clock)
-    dq ++= DqRunner.run(dimState, "After Tables Build: DimState", cfg.clock)
-    dq ++= DqRunner.run(dimDate, "After Tables Build: DimDate", cfg.clock)
-    dq ++= DqRunner.run(dimShipping, "After Tables Build: DimShipping", cfg.clock)
-    dq ++= DqRunner.run(fact, "After Tables Build: FactShippingEvent", cfg.clock)
-
-    Warehouse(dimClient, dimLocation, dimState, dimDate, dimShipping, fact, dq)
+    Warehouse(dimClient, dimLocation, dimState, dimDate, dimShipping, fact, Seq.empty)
   }
 
   /** Full run: CSV → parse → flatten → star schema → parquet + DQ report. */
   def run(spark: SparkSession, cfg: Config): Warehouse = {
     val raw = Readers.parcelCsv(spark, cfg.inputPath)
-    var dq = Vector.empty[DqCheck]
-    dq ++= DqRunner.run(raw, "Before Parsing", cfg.clock)
-
     // the multiLine CSV scans as ONE task however large the file is —
-    // spread the raw rows across the cluster before the JSON parse
-    val parsed = Flatten.parse(Readers.fanOut(raw))
-    dq ++= DqRunner.run(parsed, "After Parsing", cfg.clock)
+    // spread the raw rows across the cluster before the JSON parse. Both
+    // pre-parse checkpoints ride the staging write: parsing only appends
+    // event_json, so every raw row reaches the stage
+    val (fanned, beforeParsing) = DqRunner.observe(Readers.fanOut(raw), "Before Parsing", cfg.clock)
+    val (parsed, afterParsing) = DqRunner.observe(Flatten.parse(fanned), "After Parsing", cfg.clock)
 
-    // Materialize once, reuse across every dim build, DQ checkpoint and
-    // write (the reference recomputes the CSV parse dozens of times). See
-    // [[Materialization]] for the localCheckpoint-vs-cache trade.
     val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
     // Run-unique: a second run() into the same warehouse must not overwrite
     // the stage under the first run's still-live (lazily re-reading) frames.
-    var stagePath: Option[String] = None
-    val flat = cfg.materialization match {
-      case ParquetStage =>
-        // the staging table lives beside the warehouse it feeds; it stays
-        // on disk until the caller releases the run ([[release]] deletes it)
-        val stage = s"${cfg.warehousePath}/_stage/flat-${java.util.UUID.randomUUID()}"
-        Flatten.flatten(parsed).write.mode(SaveMode.Overwrite).parquet(stage)
-        stagePath = Some(stage)
-        spark.read.parquet(stage)
-      case LocalCheckpoint => Flatten.flatten(parsed).localCheckpoint()
-      case Cache => val c = Flatten.flatten(parsed).cache(); c.count(); c
-    }
+    // The stage lives beside the warehouse it feeds and stays on disk until
+    // the caller releases the run ([[release]] deletes it).
+    val stage = s"${cfg.warehousePath}/_stage/flat-${java.util.UUID.randomUUID()}"
+    Flatten.flatten(parsed).write.mode(SaveMode.Overwrite).parquet(stage)
+    val wh0 = buildFromFlat(spark.read.parquet(stage), cfg)
+    val allChecks = beforeParsing() ++ afterParsing() ++ write(wh0, cfg)
 
-    val wh0 = buildFromFlat(flat, cfg)
-    val allChecks = (dq ++ wh0.dqChecks).toSeq // pre-parse checkpoints lead
-
-    write(wh0, cfg)
     cfg.dqReportPath.foreach(p => DqRunner.writeReport(spark, allChecks, p))
-    // The returned frames keep flat's blocks referenced (checkpoint blocks
-    // otherwise linger until driver GC + ContextCleaner — accumulating
-    // across run() calls in a long-lived app). The warehouse is already
-    // safely on disk: callers done with the in-memory frames free them via
-    // [[release]], scoped to exactly the blocks this run pinned.
+    // The warehouse is already safely on disk: callers done with the
+    // returned frames free the stage and the parity-mode dim caches via
+    // [[release]], scoped to exactly what this run pinned.
     val pinnedByRun = (spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore).toSeq
-    wh0.copy(dqChecks = allChecks, releasableRddIds = pinnedByRun, stagePath = stagePath)
+    wh0.copy(dqChecks = allChecks, releasableRddIds = pinnedByRun, stagePath = Some(stage))
   }
 
-  /** Free the materialized state behind a [[run]] result (flat's
-    * checkpoint blocks, parity-mode dim caches, the run-unique staging dir
-    * — nothing the caller pinned themselves). After this the returned
-    * frames must not be re-executed (a localCheckpoint has no lineage to
-    * recompute from; the staged parquet is gone) — re-read the written
+  /** Free the materialized state behind a [[run]] result (parity-mode
+    * dim caches, the run-unique staging dir — nothing the caller pinned
+    * themselves). After this the returned frames must not be re-executed
+    * (the staged parquet they read is gone) — re-read the written
     * warehouse instead.
     */
   def release(wh: Warehouse): Unit = {
@@ -168,22 +122,31 @@ object EtlJob {
     }
   }
 
-  def write(wh: Warehouse, cfg: Config): Unit = {
-    val base = cfg.warehousePath
+  /** Write the six tables concurrently; returns their "After Tables Build"
+    * checkpoints, each computed by its table's write.
+    */
+  def write(wh: Warehouse, cfg: Config): Seq[DqCheck] = {
     // Dims are small: single file each (the reference leaks 200-partition
     // shuffles into its part-file counts). AQE coalescing handles the rest.
-    wh.dimClient.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$base/DimClient")
-    wh.dimLocation.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$base/DimLocation")
-    wh.dimState.write.mode(SaveMode.Overwrite).parquet(s"$base/DimState")
-    wh.dimDate.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$base/DimDate")
-    wh.dimShipping.write.mode(SaveMode.Overwrite).parquet(s"$base/DimShipping")
-    val factWriter =
+    def single(df: DataFrame) = df.coalesce(1).write
+    def fact(df: DataFrame) =
       if (cfg.partitionFactByMonth)
-        wh.fact
-          .withColumn("event_year", year(col("event_date")))
+        df.withColumn("event_year", year(col("event_date")))
           .withColumn("event_month", month(col("event_date")))
           .write.partitionBy("event_year", "event_month")
-      else wh.fact.write
-    factWriter.mode(SaveMode.Overwrite).parquet(s"$base/FactShippingEvent")
+      else df.write
+    val tables = Seq[(String, DataFrame, DataFrame => DataFrameWriter[Row])](
+      ("DimClient", wh.dimClient, single),
+      ("DimLocation", wh.dimLocation, single),
+      ("DimState", wh.dimState, _.write),
+      ("DimDate", wh.dimDate, single),
+      ("DimShipping", wh.dimShipping, _.write),
+      ("FactShippingEvent", wh.fact, fact))
+    val writes = tables.map { case (table, df, writer) =>
+      val (observed, checks) = DqRunner.observe(df, s"After Tables Build: $table", cfg.clock)
+      (() => writer(observed).mode(SaveMode.Overwrite).parquet(s"${cfg.warehousePath}/$table"), checks)
+    }
+    graft.Concurrent.all(writes.map(_._1))
+    writes.flatMap(_._2())
   }
 }

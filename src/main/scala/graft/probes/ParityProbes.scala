@@ -509,7 +509,7 @@ object ParityProbes {
     // fan out first: events.parquet is a single row-group at test SFs, so
     // the to_json synth + from_json parse would otherwise run on one core
     val flat = {
-      // parquet staging table, the EtlJob.ParquetStage default: lineage-
+      // parquet staging table, as EtlJob.run stages its flat frame: lineage-
       // free (re-reads files — no recompute path at all), no cache-manager
       // involvement (the block-lock race between dim broadcast-exchange
       // threads that motivated the round-10 localCheckpoint cannot exist),

@@ -26,7 +26,7 @@ class EtlGoldenSpec extends SparkSpec {
        |   "parcel_number": 1, "shipping_number": 2, "parcel_sequence": 0}}""".stripMargin
   }
 
-  private lazy val warehouseDir = {
+  private lazy val (warehouseDir, goldenChecks) = {
     val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "golden").toString
     val rows = Seq(
       // SH1 complete: sent d1, delivered d3, picked d6 (+ a LATER duplicate
@@ -57,8 +57,8 @@ class EtlGoldenSpec extends SparkSpec {
     val cfg = EtlJob.Config(csvDir, s"$base/warehouse",
       dqReportPath = Some(s"$base/dq_report"),
       clock = () => "2026-01-01 00:00:00")
-    EtlJob.run(spark, cfg)
-    s"$base/warehouse"
+    val wh = EtlJob.run(spark, cfg)
+    (s"$base/warehouse", wh.dqChecks)
   }
 
   test("star schema lands in parquet with expected grain") {
@@ -107,6 +107,100 @@ class EtlGoldenSpec extends SparkSpec {
     val pivoted = Kpi.pivotEarliest(labeled, "shipping_id", "event_type", "event_date",
       Seq("SENT" -> "sent_time", "DELIVERED_TO_POINT" -> "delivered_time", "PICKED_UP" -> "picked_time"))
     assert(pivoted.groupBy("shipping_id").count().filter($"count" > 1).count() == 0)
+  }
+
+  test("golden run: every DQ checkpoint's checks, in run order, and the same rows in the report") {
+    def nulls(point: String, counts: (String, Int)*) = counts.map { case (c, n) =>
+      (point, s"No nulls in column '$c'", if (n == 0) "PASS" else "FAIL", s"Null count: $n")
+    }
+    def checkpoint(point: String, rows: Int, counts: (String, Int)*) =
+      (point, "Non-empty dataframe", "PASS", s"Row count: $rows") +: nulls(point, counts: _*)
+    val build = "After Tables Build: "
+    val expected =
+      // the raw CSV columns: the malformed-JSON row is still a full CSV row
+      checkpoint("Before Parsing", 10, "event" -> 0, "row_id" -> 0, "ingest_file" -> 0) ++
+        checkpoint("After Parsing", 10, "event" -> 0, "row_id" -> 0, "ingest_file" -> 0) ++
+        checkpoint(build + "DimClient", 2, "client_key" -> 0, "brand_code_alpha" -> 0, "sign_code" -> 0) ++
+        // the malformed row's null rounds, once as collection and once as delivery
+        checkpoint(build + "DimLocation", 4, "codeAgence" -> 2, "pays" -> 2, "location_type" -> 0) ++
+        checkpoint(build + "DimState", 2, "state_code" -> 1, "state_date" -> 1, "state_nature" -> 1) ++
+        // six event days plus the null-event_date row
+        checkpoint(build + "DimDate", 7, "date" -> 1, "year" -> 1, "month" -> 1) ++
+        // SH3 has a null brand, so no client
+        checkpoint(build + "DimShipping", 4, "shipping_id" -> 0, "client_id" -> 1, "collection_location_id" -> 0) ++
+        // 3 LIV + ANN + malformed have no sub-code
+        checkpoint(build + "FactShippingEvent", 10, "event_id" -> 0, "event_code" -> 1, "event_sub_code" -> 5)
+    assert(goldenChecks.map(c => (c.check_point, c.check_name, c.status, c.details)) == expected)
+    assert(goldenChecks.forall(_.timestamp == "2026-01-01 00:00:00"))
+    val report = spark.read.option("header", "true").csv(warehouseDir.replace("/warehouse", "/dq_report"))
+      .select("check_point", "check_name", "status", "details").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSeq
+    assert(report.sorted == expected.sorted)
+  }
+
+  test("EtlJob.run launches no standalone DQ job: every checkpoint rides an action the run needs anyway") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val input = warehouseDir.replace("/warehouse", "/input")
+    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "dqjobs").toString
+    val tag = "graft.test.dqjobs"
+    // a job's call site is its stage's, or (for the stages adaptive execution
+    // submits from a pool thread) that of the SQL execution it runs for
+    val execSites = scala.collection.concurrent.TrieMap.empty[String, String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Seq[String], Seq[String])]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execSites(s.executionId.toString) = s.details
+        case _ =>
+      }
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).filter(_.getProperty(tag) != null).foreach { p =>
+          val execs = Seq("spark.sql.execution.id", "spark.sql.execution.root.id").flatMap(k => Option(p.getProperty(k)))
+          jobs.add((js.stageInfos.map(_.details), execs))
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    // a local property reaches the pool threads the run starts, so only this
+    // run's jobs are counted whatever else shares the session
+    sc.setLocalProperty(tag, "1")
+    try {
+      EtlJob.release(EtlJob.run(spark, EtlJob.Config(input, s"$base/warehouse",
+        dqReportPath = Some(s"$base/dq_report"), clock = () => "2026-01-01 00:00:00")))
+    } finally {
+      sc.setLocalProperty(tag, null)
+      org.apache.spark.GraftTestSpark.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    val sites = scala.jdk.CollectionConverters.CollectionHasAsScala(jobs).asScala.toSeq
+      .map { case (stages, execs) => (stages ++ execs.flatMap(execSites.get)).mkString("\n") }
+    assert(sites.nonEmpty, "the listener saw the run's jobs")
+    val dq = sites.filter(s => s.contains("DqRunner$.run(") || s.contains("DqRunner$.$anonfun$run$"))
+    assert(dq.size == 0, s"of ${sites.size} jobs were launched by DqRunner.run, e.g.\n${dq.headOption.getOrElse("")}")
+  }
+
+  test("header-only input runs to completion and every checkpoint reports an empty frame") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "emptyetl").toString
+    Files.createDirectories(Paths.get(s"$base/input"))
+    Files.write(Paths.get(s"$base/input/part-0.csv"), "event,row_id,ingest_file\n".getBytes("UTF-8"))
+    val cfg = EtlJob.Config(s"$base/input", s"$base/warehouse",
+      dqReportPath = Some(s"$base/dq_report"), clock = () => "2026-01-01 00:00:00")
+    // a checkpoint whose metrics never arrive would block the run forever:
+    // bound it, so that shows as a failure instead of a hung suite
+    val run = Future(EtlJob.run(spark, cfg))(ExecutionContext.global)
+    val wh = Await.result(run, 5.minutes)
+    val points = Seq("Before Parsing", "After Parsing") ++
+      Seq("DimClient", "DimLocation", "DimState", "DimDate", "DimShipping", "FactShippingEvent")
+        .map("After Tables Build: " + _)
+    assert(wh.dqChecks.map(_.check_point).distinct == points)
+    val (nonEmpty, nullChecks) = wh.dqChecks.partition(_.check_name == "Non-empty dataframe")
+    assert(nonEmpty.map(c => (c.check_point, c.status, c.details)) ==
+      points.map(p => (p, "FAIL", "Dataframe is empty")))
+    assert(nullChecks.size == 8 * 3 && nullChecks.forall(c => c.status == "PASS" && c.details == "Null count: 0"))
+    assert(spark.read.parquet(s"$base/warehouse/FactShippingEvent").count() == 0)
+    EtlJob.release(wh)
   }
 
   test("DQ report: single-pass checks with PASS/FAIL statuses and audit CSV") {

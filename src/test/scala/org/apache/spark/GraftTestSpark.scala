@@ -10,4 +10,7 @@ object GraftTestSpark {
     */
   def codegenCompiles: Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Block until every event posted so far has reached the listeners. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
