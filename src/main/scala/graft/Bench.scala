@@ -41,7 +41,7 @@ import scala.collection.concurrent.TrieMap
   * Scale leg: when the bench runs at the sf0.1 default, `Sf1ReserveS`
   * seconds are withheld from the sf0.1 round budget up front, the
   * synthetic sf1 directory (10× key-shifted copies,
-  * `ScalePilot.buildScaled` — the build is marker-cached across runs) is
+  * `BuildSf.buildScaled` — the build is marker-cached across runs) is
   * materialized, and the heavy subset runs MIN-OF-2 passes at sf1,
   * reported under `"sf1_queries"` with `"sf1_rounds"` recording how many
   * passes fed the min and per-query `"sf1_shuffle_mb"` (file artifact
@@ -494,7 +494,7 @@ object Bench {
     if (wantSf1) {
       val sf1Dir = sys.env.getOrElse("SPARK_GRAFT_SF1_DIR", s"${graft.TmpDir.root}/sf1_synth")
       try {
-        ScalePilot.buildScaled(spark, sfDir, sf1Dir, 10, ScalePilot.AllTables, eventsNs = true)
+        BuildSf.buildScaled(spark, sfDir, sf1Dir, 10, BuildSf.AllTables)
         // min-of-2 passes per query: one ambient spike on a shared host
         // would otherwise distort the recorded sf1 numbers (the first
         // pass also carries codegen warm-up for the 10× plans). The
@@ -684,7 +684,8 @@ object Bench {
     f"""{"cpu":${escape(model)},"mhz":${escape(mhz)},"cores":${Runtime.getRuntime.availableProcessors},"mem_gb":${escape(memGb)},"heap_max_gb":${Runtime.getRuntime.maxMemory / (1 << 30)},"code_cache_max_mb":$ccMax%.0f,"jvm_args":$jvmArgs}"""
   }
 
-  private def escape(s: String): String =
+  /** `s` as a JSON string literal, quotes included. */
+  private[graft] def escape(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -21,7 +21,7 @@ object TmpDir {
 
   /** Cheap content token for a source dataset: a hex mix over the sorted
     * (path, length, mtime) of every file under the given paths. Folded
-    * into marker-cache names (x49 fixture, [[ScalePilot.buildScaled]]'s
+    * into marker-cache names (x49 fixture, [[BuildSf.buildScaled]]'s
     * `_built` marker) so a source regenerated IN PLACE — same path, new
     * bytes, as the driver did to `/root/testdata` mid-round-6 — yields a
     * different token and self-invalidates the stale cache. Metadata only:

@@ -28,7 +28,7 @@ object PipelineProbes {
   //   coalesce self-pairs any id the join misses), not an unpartitioned
   //   lead() window — the fixture build itself parallelizes at pilot scale.
   //   The synthesized frame is materialized ONCE per sf dir (parquet +
-  //   _SUCCESS marker, same marker-cache idea as ScalePilot.buildScaled):
+  //   _SUCCESS marker, same marker-cache idea as BuildSf.buildScaled):
   //   round 4's bench showed the in-probe count()+join doubling x49's
   //   timed number — the probe must track the OPERATOR, so every pass
   //   after the first (the untimed warm-up, in the bench) just re-reads.

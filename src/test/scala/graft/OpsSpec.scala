@@ -529,14 +529,19 @@ class OpsSpec extends SparkSpec {
     assert(keptUrls == expectedUrls)
   }
 
-  test("Graft facade: front-door entry points delegate correctly") {
+  test("minhash → LSH → verify pairs ⊆ exact pairs; withStats, hashSplit keep every row") {
     val docsT = Readers.table(spark, sf0001, "documents")
-    assert(Graft.textStats(docsT).count() == docsT.count())
-    val pairs = Graft.nearDupMinhash(docsT, "doc_id", $"text", threshold = 0.2)
-    val exact = graft.ops.Dedup.ngramJaccardPairs(docsT, "doc_id", $"text", 3, 0.2)
-    assert(pairs.count() <= exact.count()) // LSH candidates ⊆ exact pairs at same threshold
+    assert(TextStats.withStats(docsT).count() == docsT.count())
+    val sig = Dedup.minhashSignatures(docsT, "doc_id", $"text", 3, 64)
+    val lsh = Dedup.jaccardVerify(docsT, "doc_id", $"text", 3,
+      Dedup.lshCandidates(sig, "doc_id", 16, 4), 0.2).select("id_a", "id_b")
+    val exact = Dedup.ngramJaccardPairs(docsT, "doc_id", $"text", 3, 0.2, maxDf = Int.MaxValue)
+      .select("id_a", "id_b")
+    assert(lsh.count() > 0, "the fixture must yield LSH pairs for the subset check to mean anything")
+    assert(lsh.exceptAll(exact).isEmpty, "an LSH-verified pair must be an exact pair at the same threshold")
     val ev = Readers.table(spark, sf0001, "events")
-    val split = Graft.hashSplit(ev, $"event_id", Seq("train" -> 0.9, "test" -> 0.1))
+    val split = Sampling.hashSplit(ev, $"event_id", Seq("train" -> 0.9, "test" -> 0.1))
+    assert(split.count() == ev.count())
     assert(split.select("split").distinct().count() == 2)
   }
 

@@ -50,7 +50,7 @@ class ScaleSpec extends SparkSpec {
     Seq((1L, "one"), (2L, "two")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$src/documents.parquet")
     val tok1 = TmpDir.sourceToken(s"$src/documents.parquet")
-    ScalePilot.buildScaled(spark, src, out, 1, Set("documents"))
+    BuildSf.buildScaled(spark, src, out, 1, Set("documents"))
     assert(spark.read.parquet(s"$out/documents.parquet").count() == 2)
     Seq((1L, "one"), (2L, "two"), (3L, "three")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$src/documents.parquet")
@@ -61,7 +61,7 @@ class ScaleSpec extends SparkSpec {
     }
     val tok2 = TmpDir.sourceToken(s"$src/documents.parquet")
     assert(tok1 != tok2, "source token must change when content changes")
-    ScalePilot.buildScaled(spark, src, out, 1, Set("documents"))
+    BuildSf.buildScaled(spark, src, out, 1, Set("documents"))
     assert(spark.read.parquet(s"$out/documents.parquet").count() == 3,
       "scaled copy must rebuild after the source regenerated in place")
   }

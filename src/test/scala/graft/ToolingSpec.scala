@@ -1,0 +1,68 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+/** The measurement tooling: [[Profile]]'s plan reading and its run on the
+  * shared session, and the guard that keeps `src/main` at one session
+  * builder and one profiling tool.
+  */
+class ToolingSpec extends SparkSpec {
+
+  test("broadcastHeads reads each exchange's own children, never the sibling after it") {
+    // the left exchange has a single child line and its join sibling
+    // follows at once; the sibling's deeper lines must not fill the head
+    val plan =
+      """AdaptiveSparkPlan isFinalPlan=true
+        |+- == Final Plan ==
+        |   BroadcastHashJoin [k#1L], [k#2L], Inner, BuildLeft, false
+        |   :- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=10]
+        |   :  +- LocalTableScan [k#1L]
+        |   +- Project [k#2L, v#3]
+        |      +- BroadcastHashJoin [v#3], [w#4], Inner, BuildRight, false
+        |         :- Filter isnotnull(k#2L)
+        |         :  +- Scan ExistingRDD[k#2L,v#3]
+        |         +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, int, true]),false), [plan_id=11]
+        |            +- AQEShuffleRead local
+        |               +- ShuffleQueryStage 0
+        |                  +- Exchange hashpartitioning(w#4, 8), ENSURE_REQUIREMENTS, [plan_id=9]
+        |""".stripMargin
+    assert(Profile.broadcastHeads(plan) == Seq(
+      "+- LocalTableScan [k#1L]",
+      "+- AQEShuffleRead local | +- ShuffleQueryStage 0"))
+    assert(Profile.broadcastHeads("Project [a#1]\n+- Scan ExistingRDD[a#1]").isEmpty)
+  }
+
+  test("Profile on a catalog query prints its jobs, writes its plan and leaves the session running") {
+    val out = Files.createTempDirectory(Paths.get(TmpDir.root), "profile").toString
+    val lines = Profile.profile(spark, sf0001, Seq("q16_kpi_headline"), out)
+    assert(!lines.exists(_.contains("\"error\"")), lines.mkString("\n"))
+    assert(lines.count(_.contains("\"job\":")) >= 1, lines.mkString("\n"))
+    assert(lines.exists(_.contains("\"timed_s\":")), lines.mkString("\n"))
+    val plan = Files.readString(Paths.get(out, "q16_kpi_headline.txt"))
+    assert(plan.contains("== Physical Plan =="), plan)
+    assert(!spark.sparkContext.isStopped)
+    assert(spark.range(3).count() == 3)
+  }
+
+  test("src/main has four mains and one SparkSession builder") {
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+    assert(sources.nonEmpty)
+    val objectDecl = """^\s*(?:(?:private|protected)(?:\[\w+\])?\s+)?(?:case\s+)?object\s+(\w+)""".r
+    val mains = sources.flatMap { p =>
+      val text = Files.readString(p)
+      text.linesIterator.foldLeft((Option.empty[String], Vector.empty[String])) {
+        case ((owner, found), line) =>
+          val o = objectDecl.findFirstMatchIn(line).map(_.group(1)).orElse(owner)
+          (o, if (line.contains("def main(")) found ++ o else found)
+      }._2
+    }
+    assert(mains.sorted == Vector("Bench", "BuildSf", "Profile", "Verify"),
+      s"objects with a main: ${mains.sorted}")
+    val builders = sources.filter(p => Files.readString(p).contains("SparkSession.builder"))
+      .map(_.getFileName.toString)
+    assert(builders == Vector("Sessions.scala"), s"files building a SparkSession: $builders")
+  }
+}
