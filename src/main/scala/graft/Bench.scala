@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
 /** Benchmark main: headline queries on `SPARK_GRAFT_SF_DIR` at local[32],
@@ -47,10 +46,6 @@ import scala.collection.concurrent.TrieMap
   * passes fed the min and per-query `"sf1_shuffle_mb"` (file artifact
   * only) carrying the 10× shuffle/spill signature. Override with
   * `SPARK_GRAFT_BENCH_SF1=0|1`.
-  *
-  * `SPARK_GRAFT_BREAKDOWN=1` additionally prints a stage-level timing of
-  * the q17 ETL build (synth+parse+flatten / dims+fact / sort) to stderr —
-  * stdout stays the single JSON line.
   */
 object Bench {
 
@@ -285,7 +280,6 @@ object Bench {
     val tap = new ShuffleTap(spark)
     @volatile var roundsDone = 0
     @volatile var sf1RoundsDone = 0
-    @volatile var sf1Q17Breakdown: Seq[(String, Double)] = Nil
     // guards the one-artifact-only contract between main and the hook
     val emitLock = new Object
     var finalPrinted = false // only touched under emitLock
@@ -317,8 +311,7 @@ object Bench {
         sf1Rounds = sf1RoundsDone,
         sf1Shuffle = if (includeShuffle) sf1Shuffle.toMap else Map.empty,
         telemetry = if (includeShuffle) telem.toMap else Map.empty,
-        sf1Telemetry = if (includeShuffle) sf1Telem.toMap else Map.empty,
-        sf1Breakdown = if (includeShuffle) sf1Q17Breakdown else Nil)
+        sf1Telemetry = if (includeShuffle) sf1Telem.toMap else Map.empty)
 
     /** Emit the artifact exactly once: the JSON line on stdout AND bare
       * copies at `target/bench_artifact.json` (scratch, untracked) and
@@ -403,17 +396,13 @@ object Bench {
     def dropPersisted(): Unit = {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // the q17 probe writes a fresh UUID-named parquet stage per call and
-      // its frame dies with the sample — sweep the dirs here (a 48-query
-      // 3-round run otherwise leaks ~150 stage dirs into target/)
+      // the parcel probes stage a fresh UUID-named table per call and its
+      // frame dies with the sample — drop the stages here (a 48-query
+      // 3-round run otherwise leaks ~150 stage dirs into target/ and as
+      // many entries into the session catalog)
       Option(new java.io.File(graft.TmpDir.root)
           .listFiles((_, n) => n.startsWith("parcel_flat_stage_")))
-        .foreach(_.foreach { d =>
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-          }
-          rm(d)
-        })
+        .foreach(_.foreach(d => graft.etl.EtlJob.dropStage(spark, d.getPath)))
       System.gc()
     }
 
@@ -550,29 +539,11 @@ object Bench {
           System.err.println(f"""{"bench_note":"q17 fixed extra sample (unconditional)","extra":$q17Extra}""")
           sf1Sample(q17, s"sf1_q17_extra$q17Extra")
         }
-        // q17@sf1 stage attribution, wired into the ARTIFACT (r11's
-        // verdict: the driver artifact and the builder's pin disagreed by
-        // 3× CPU-seconds on identical shuffle with nothing recorded to
-        // localize the stage — make the next disagreement self-diagnosing).
-        // One extra q17-shaped run; ~1/12 of a pass, gated on budget.
-        if (sf1Best.contains("q17_parcel_etl_fact") &&
-            budgetS - elapsed() >= lastPassWall * 0.25) {
-          try {
-            val bd = q17Breakdown(spark, sf1Dir)
-            sf1Q17Breakdown = bd
-            dropPersisted()
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"""{"bench_note":"sf1 q17 breakdown failed","error":${escape(String.valueOf(e.getMessage).take(200))}}""")
-          }
-        }
       } catch {
         case e: Throwable =>
           System.err.println(s"""{"bench_note":"sf1 leg skipped","error":${escape(String.valueOf(e.getMessage).take(200))}}""")
       }
     }
-
-    if (sys.env.get("SPARK_GRAFT_BREAKDOWN").contains("1")) q17Breakdown(spark, sfDir)
 
     emitArtifact(partial = false)
     try Runtime.getRuntime.removeShutdownHook(hook) catch { case _: IllegalStateException => }
@@ -600,8 +571,7 @@ object Bench {
       sf1Rounds: Int = 0,
       sf1Shuffle: Map[String, ShuffleTap.Snap] = Map.empty,
       telemetry: Map[String, Seq[String]] = Map.empty,
-      sf1Telemetry: Map[String, Seq[String]] = Map.empty,
-      sf1Breakdown: Seq[(String, Double)] = Nil): String = {
+      sf1Telemetry: Map[String, Seq[String]] = Map.empty): String = {
     val qs = names.flatMap(n => best.get(n).orElse(warm.get(n)).map(n -> _))
     val qsJson = qs.map { case (k, v) => "\"" + k + f"\":$v%.2f" }.mkString("{", ",", "}")
     val total = qs.map(_._2).sum
@@ -630,14 +600,8 @@ object Bench {
       else m.toSeq.sortBy(_._1).map { case (k, samples) =>
         "\"" + k + "\":[" + samples.mkString(",") + "]"
       }.mkString(s""","$field":{""", ",", "}")
-    // q17@sf1 stage attribution (file artifact only; insertion order kept
-    // — the stages are a pipeline, not a map to sort)
-    val bdJson =
-      if (sf1Breakdown.isEmpty) ""
-      else sf1Breakdown.map { case (k, v) => "\"" + k + f"\":$v%.2f" }
-        .mkString(""","sf1_q17_breakdown":{""", ",", "}")
     val shufJson = shufMap(shuffle, "shuffle_mb") + shufMap(sf1Shuffle, "sf1_shuffle_mb") +
-      telemMap(telemetry, "telemetry") + telemMap(sf1Telemetry, "sf1_telemetry") + bdJson +
+      telemMap(telemetry, "telemetry") + telemMap(sf1Telemetry, "sf1_telemetry") +
       (if (compact) "" else s""","host":$hostJson""")
     val partialJson = if (partial) ""","partial":true""" else ""
     // compact (stdout) variant: sf as basename, rounds_done omitted —
@@ -695,55 +659,4 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-
-  /** Stage-level timing of the q17 ETL build (same code path as the probe):
-    * (1) events scan → to_json synth → from_json parse → flatten → persist
-    * (the bench fixture synthesis + the reference's parse stage), (2) dim
-    * builds + dimShipping + fact joins, (3) the probe's determinism
-    * orderBy. Printed to stderr; min of `rounds` not applied (one shot
-    * after warm JVM is representative for a breakdown).
-    */
-  private def q17Breakdown(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
-    import graft.etl._
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    val cores = Runtime.getRuntime.availableProcessors
-    def timed[A](label: String)(f: => A): A = {
-      // full per-stage attribution (gc/cpu_share/jit/heap/load): the r11
-      // official artifact read q17@sf1 at 3× the builder's CPU-seconds
-      // with nothing recorded to say WHERE the cycles went — every stage
-      // of the breakdown must carry the same telemetry as a bench sample
-      val (gc0, cpu0, jit0, l0) = (gcMillis(), processCpuNanos(), jitMillis(), load1())
-      resetHeapPeaks()
-      val t0 = System.nanoTime()
-      val r = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      out += label -> dt
-      val cpuShare =
-        if (cpu0 < 0) -1.0 else (processCpuNanos() - cpu0) / 1e9 / (dt * cores.toDouble)
-      System.err.println(f"""{"bench_breakdown":"$label","sec":$dt%.3f,"gc_ms":${gcMillis() - gc0},"cpu_share":$cpuShare%.2f,"jit_ms":${jitMillis() - jit0},"heap_peak_mb":${heapPeakMb()}%.0f,"code_cache_mb":${codeCacheMb()._1}%.0f,"load1":$l0%.2f,"load1_end":${load1()}%.2f}""")
-      r
-    }
-    val events = graft.sources.Readers.table(spark, sfDir, "events")
-    val flat = timed("synth_parse_flatten_stage") {
-      val stage = s"${graft.TmpDir.root}/q17_breakdown_stage"
-      Flatten(graft.probes.EventsVocab.synth(graft.sources.Readers.fanOut(events)))
-        .write.mode("overwrite").parquet(stage)
-      spark.read.parquet(stage)
-    }
-    val fact = timed("dims_fact_joins") {
-      val dimClient = Dims.client(flat, SurrogateKeys.Deterministic)
-      val dimLocation = Dims.location(flat, SurrogateKeys.Deterministic)
-      val dimState = Dims.state(flat, SurrogateKeys.Deterministic)
-      val dimDate = Dims.date(flat, SurrogateKeys.Deterministic)
-      val dimShipping = FactBuilder.dimShipping(flat, dimClient, dimLocation, dimState)
-      val fact = FactBuilder.fact(flat, dimShipping, dimDate, SurrogateKeys.Deterministic)
-      fact.write.format("noop").mode("overwrite").save()
-      fact
-    }
-    timed("determinism_orderby") {
-      fact.orderBy("event_id").write.format("noop").mode("overwrite").save()
-    }
-    spark.catalog.clearCache()
-    out.toSeq
-  }
 }

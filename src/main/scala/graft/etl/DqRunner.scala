@@ -35,17 +35,19 @@ object DqRunner {
   }
 
   /** The same checks without a job of their own: `df` with the checkpoint's
-    * aggregate attached, and the checks, which are ready once an action on
-    * that frame (or on a frame derived from it that reads every row, such
-    * as a write) has finished; asking earlier blocks until then.
+    * aggregate attached, the checks, and the observed values by alias
+    * (`extra` rides the same aggregate, for engine-side counts that are not
+    * report rows). Both are ready once an action on that frame (or on a
+    * frame derived from it that reads every row, such as a write) has
+    * finished; asking earlier blocks until then.
     */
-  def observe(df: DataFrame, checkPointName: String,
-      clock: Clock = systemClock): (DataFrame, () => Seq[DqCheck]) = {
+  def observe(df: DataFrame, checkPointName: String, clock: Clock = systemClock,
+      extra: Seq[Column] = Nil): (DataFrame, () => Seq[DqCheck], () => Map[String, Any]) = {
     val ts = clock()
     val cols = df.columns.take(3).toSeq
-    val aggs = aggregates(cols)
+    val aggs = aggregates(cols) ++ extra
     val obs = new Observation()
-    (df.observe(obs, aggs.head, aggs.tail: _*), () => render(checkPointName, ts, cols, obs.get))
+    (df.observe(obs, aggs.head, aggs.tail: _*), () => render(checkPointName, ts, cols, obs.get), () => obs.get)
   }
 
   private def aggregates(cols: Seq[String]): Seq[Column] =

@@ -491,71 +491,23 @@ object ParityProbes {
        |  WHERE rn = 1 AND shipping_id IS NOT NULL)""".stripMargin
   }
 
-  final case class ParcelTables(
-      flat: DataFrame, dimClient: DataFrame, dimLocation: DataFrame,
-      dimState: DataFrame, dimDate: DataFrame, dimShipping: DataFrame, fact: DataFrame)
-
-  private def parcelBuildAll(s: SparkSession, dir: String): ParcelTables = {
-    // materialized once, reused by every dim/fact subtree (EtlJob's
-    // documented physical delta, SURVEY §7.3) — without this each of the
-    // ~8 subtrees recompiles and re-executes the whole synth+parse+flatten
-    // projection. NOT persist+count: a cached plan leaves lineage behind
-    // it, and under memory pressure an evicted partition recomputes —
-    // re-opening the block-lock race between the dim broadcast-exchange
-    // threads that eager materialization was added to close (observed
-    // minutes-long stalls against the 300 s broadcast timeout; the r9
-    // driver recorded q17@sf1 at 297 s min-of-2 vs 13 s idle with
-    // byte-identical shuffle).
-    // fan out first: events.parquet is a single row-group at test SFs, so
-    // the to_json synth + from_json parse would otherwise run on one core
-    val flat = {
-      // parquet staging table, as EtlJob.run stages its flat frame: lineage-
-      // free (re-reads files — no recompute path at all), no cache-manager
-      // involvement (the block-lock race between dim broadcast-exchange
-      // threads that motivated the round-10 localCheckpoint cannot exist),
-      // and columnar-compressed — measured 2× faster than row-format
-      // checkpoint blocks across the ~8 consumer scans at sf1 (17.1 s vs
-      // 35.1 s on the round-11 host; columnar cache() read 19.9 s and
-      // keeps the eviction hazard). Unique path per build: concurrent
-      // suites sharing the session must never overwrite a stage another
-      // build is still lazily reading. Stages live under TmpDir (target/)
-      // and go with `clean`.
-      // BUCKETED on shipping_id since round 16 (guide §2.4/§6: bucketed
-      // tables persist a partitioning across the stage boundary): the
-      // dimShipping window dedup AND both sides of the fact SMJ are keyed
-      // by shipping_id, so the bucketed-sorted scan elides their
-      // exchanges — ShuffleTap reads 15.9 MB shuffled vs 28.1 MB for the
-      // plain-parquet stage at sf0.1 (−43%), wall ~5-8% (the exchanges
-      // are small at test scale; at 100 TB the fact join's co-partitioned
-      // shuffle is the dominant one, see FactBuilder.fact). The bucket
-      // COUNT is scale-adaptive from the input size (~128 MB/bucket,
-      // floor 8 — a constant tuned to the local core count would violate
-      // the scale rule); the table is EXTERNAL under TmpDir with the
-      // parcel_flat_stage_ prefix, so the bench's stage sweeper reclaims
-      // the data files (the catalog entry is session-local and uniquely
-      // named — never re-read once the sample's action completes).
-      val uuid = java.util.UUID.randomUUID.toString.replace("-", "_")
-      val stagePath = s"${graft.TmpDir.root}/parcel_flat_stage_$uuid"
-      val inBytes = t(s, dir, "events").queryExecution.optimizedPlan.stats
-        .sizeInBytes.min(BigInt(Long.MaxValue)).toLong
-      val buckets = math.min(4096L,
-        math.max(8L, (inBytes + (128L << 20) - 1) / (128L << 20))).toInt
-      val tbl = s"parcel_flat_stage_$uuid"
-      Bucketing.writeBucketed(
-        Flatten(EventsVocab.synth(Readers.fanOut(t(s, dir, "events")))),
-        tbl, Seq("shipping_id"), numBuckets = buckets,
-        sortCols = Seq("shipping_id"), path = Some(stagePath),
-        onePerBucket = true)
-      s.table(tbl)
-    }
-    val dimClient = Dims.client(flat, SurrogateKeys.Deterministic)
-    val dimLocation = Dims.location(flat, SurrogateKeys.Deterministic)
-    val dimState = Dims.state(flat, SurrogateKeys.Deterministic)
-    val dimDate = Dims.date(flat, SurrogateKeys.Deterministic)
-    val dimShipping = FactBuilder.dimShipping(flat, dimClient, dimLocation, dimState)
-    val fact = FactBuilder.fact(flat, dimShipping, dimDate, SurrogateKeys.Deterministic)
-    ParcelTables(flat, dimClient, dimLocation, dimState, dimDate, dimShipping, fact)
+  /** The probes' fixture — the events table synthesized as the ETL's JSON
+    * payload, parsed and flattened — staged by [[EtlJob.stage]] under
+    * TmpDir with the `parcel_flat_stage_` prefix, which the bench's sweeper
+    * reclaims. Fan out first: events.parquet is a single row-group at test
+    * SFs, so the to_json synth + from_json parse would otherwise run on one
+    * core. Unique per call: concurrent suites sharing the session must
+    * never overwrite a stage another build is still lazily reading.
+    */
+  private def parcelStage(s: SparkSession, dir: String): DataFrame = {
+    val events = t(s, dir, "events")
+    val stageDir = s"${graft.TmpDir.root}/parcel_flat_stage_${java.util.UUID.randomUUID}"
+    EtlJob.stage(Flatten(EventsVocab.synth(Readers.fanOut(events))), stageDir,
+      events.queryExecution.optimizedPlan.stats.sizeInBytes)
   }
+
+  private def parcelBuildAll(s: SparkSession, dir: String): EtlJob.Warehouse =
+    EtlJob.buildFromFlat(parcelStage(s, dir), EtlJob.Config(inputPath = "", warehousePath = ""))
 
   private val q17 = Probe(
     "q17_parcel_etl_fact",
@@ -778,9 +730,7 @@ object ParityProbes {
   private val q46 = Probe(
     "q46_uuid_parity_fk",
     (s, dir) => {
-      val flat = Flatten(EventsVocab.synth(Readers.fanOut(t(s, dir, "events")))).persist()
-      flat.count()
-      val wh = EtlJob.buildFromFlat(flat, EtlJob.Config(
+      val wh = EtlJob.buildFromFlat(parcelStage(s, dir), EtlJob.Config(
         inputPath = "", warehousePath = "",
         keyMode = SurrogateKeys.UuidParity,
         clock = () => "2026-01-01 00:00:00"))

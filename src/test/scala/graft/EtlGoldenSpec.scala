@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.etl._
 import graft.analytics.Kpi
@@ -26,7 +28,7 @@ class EtlGoldenSpec extends SparkSpec {
        |   "parcel_number": 1, "shipping_number": 2, "parcel_sequence": 0}}""".stripMargin
   }
 
-  private lazy val (warehouseDir, goldenChecks) = {
+  private lazy val (warehouseDir, goldenChecks, goldenParseFailures) = {
     val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "golden").toString
     val rows = Seq(
       // SH1 complete: sent d1, delivered d3, picked d6 (+ a LATER duplicate
@@ -45,7 +47,7 @@ class EtlGoldenSpec extends SparkSpec {
       j("LIV", null, "2024-01-05 08:00:00.000000", "2024-01-05 07:00:00.000000", null, "B2", "S2"),
       // null event_date → DimDate null row, J6 never matches (§2.12.5)
       j("ANN", null, null, "2024-01-05 07:00:00.000000", "SH9", "B2", "S2")
-    ).map(_.replace("\n", " ")) :+ "{this is not json" // malformed → PERMISSIVE null struct
+    ).map(_.replace("\n", " ")) :+ "{this is not json" // malformed → PERMISSIVE struct of nulls
 
     val csvDir = s"$base/input"
     spark.createDataset(rows).toDF("event")
@@ -58,8 +60,12 @@ class EtlGoldenSpec extends SparkSpec {
       dqReportPath = Some(s"$base/dq_report"),
       clock = () => "2026-01-01 00:00:00")
     val wh = EtlJob.run(spark, cfg)
-    (s"$base/warehouse", wh.dqChecks)
+    (s"$base/warehouse", wh.dqChecks, wh.parseFailures)
   }
+
+  /** Catalog entries of run stages (`_stage/flat-<uuid>`). */
+  private def stageTables(): Set[String] =
+    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith("flat_")).toSet
 
   test("star schema lands in parquet with expected grain") {
     val fact = spark.read.parquet(s"$warehouseDir/FactShippingEvent")
@@ -136,6 +142,33 @@ class EtlGoldenSpec extends SparkSpec {
       .select("check_point", "check_name", "status", "details").collect()
       .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3))).toSeq
     assert(report.sorted == expected.sorted)
+  }
+
+  test("golden run: the staging write counts the malformed row as a parse failure, outside the DQ report") {
+    assert(goldenParseFailures == 1)
+    assert(!goldenChecks.exists(_.check_name.toLowerCase.contains("parse")))
+  }
+
+  test("a run that fails after its staging write leaves no stage files and no stage table") {
+    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "failedrun").toString
+    val csvDir = warehouseDir.replace("/warehouse", "/input")
+    // the first two calls stamp the pre-parse checkpoints; the third is the
+    // first table's checkpoint, built after the stage is written
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val clock: DqRunner.Clock = () =>
+      if (calls.incrementAndGet() <= 2) "2026-01-01 00:00:00"
+      else throw new IllegalStateException("clock failed after the staging write")
+    val before = stageTables()
+    val e = intercept[IllegalStateException] {
+      EtlJob.run(spark, EtlJob.Config(csvDir, s"$base/warehouse", clock = clock))
+    }
+    assert(e.getMessage == "clock failed after the staging write")
+    assert(calls.get == 3, "the run failed at the first table checkpoint")
+    val stageRoot = Paths.get(s"$base/warehouse/_stage")
+    assert(Files.isDirectory(stageRoot), "the stage was written before the failure")
+    val left = Files.list(stageRoot).iterator().asScala.map(_.getFileName.toString).toVector
+    assert(left.isEmpty, s"stage data left behind: $left")
+    assert(stageTables() == before, s"stage tables left behind: ${stageTables() -- before}")
   }
 
   test("EtlJob.run launches no standalone DQ job: every checkpoint rides an action the run needs anyway") {
@@ -239,12 +272,16 @@ class EtlGoldenSpec extends SparkSpec {
     assert(first.stagePath.isDefined && second.stagePath.isDefined &&
       first.stagePath != second.stagePath, "stage dirs must be run-unique")
     assert(first.fact.count() == factBefore, "first run's frames re-read their own stage")
-    // release sweeps exactly the released run's stage dir
+    // release sweeps exactly the released run's stage dir and table
+    def table(wh: EtlJob.Warehouse) = EtlJob.stageTable(wh.stagePath.get)
+    assert(Set(table(first), table(second)).subsetOf(stageTables()))
     EtlJob.release(first)
     assert(!Files.exists(Paths.get(first.stagePath.get)))
+    assert(!stageTables().contains(table(first)) && stageTables().contains(table(second)))
     assert(second.fact.count() == factBefore, "second run unaffected by first's release")
     EtlJob.release(second)
     assert(!Files.exists(Paths.get(second.stagePath.get)))
+    assert(!stageTables().contains(table(second)))
   }
 
   test("uuid parity mode keeps FK closure via pinned evaluation") {

@@ -5,8 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The measurement tooling: [[Profile]]'s plan reading and its run on the
-  * shared session, and the guard that keeps `src/main` at one session
-  * builder and one profiling tool.
+  * shared session, the guard that keeps `src/main` at one session builder
+  * and one profiling tool, and the guard that keeps the star-schema build
+  * and its stage in `graft.etl`.
   */
 class ToolingSpec extends SparkSpec {
 
@@ -64,5 +65,28 @@ class ToolingSpec extends SparkSpec {
     val builders = sources.filter(p => Files.readString(p).contains("SparkSession.builder"))
       .map(_.getFileName.toString)
     assert(builders == Vector("Sessions.scala"), s"files building a SparkSession: $builders")
+  }
+
+  test("only graft.etl stages a flat frame or builds the star schema") {
+    val etl = Paths.get("src/main/scala/graft/etl")
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(etl)).toVector
+    assert(sources.nonEmpty)
+    // the argument list of every writeBucketed call, parentheses balanced
+    def bucketedCalls(text: String): Iterator[String] =
+      """writeBucketed\(""".r.findAllMatchIn(text).map { m =>
+        val args = text.iterator.drop(m.end).scanLeft(1) {
+          case (depth, '(') => depth + 1
+          case (depth, ')') => depth - 1
+          case (depth, _) => depth
+        }.drop(1).takeWhile(_ > 0).size
+        text.substring(m.end, m.end + args)
+      }
+    val offenders = sources.filter { p =>
+      val text = Files.readString(p)
+      """\b(?:FactBuilder|Dims)\.\w""".r.findFirstIn(text).nonEmpty ||
+        bucketedCalls(text).exists(_.contains("\"shipping_id\""))
+    }.map(_.getFileName.toString).sorted
+    assert(offenders.isEmpty, s"files building the star schema or its stage outside graft.etl: $offenders")
   }
 }
