@@ -382,27 +382,14 @@ object Bench {
       f"""{"phase":"$phase","sec":$dt%.3f,"gc_ms":${gcMillis() - gc0},"cpu_share":$cpuShare%.2f,"steal_share":$stealShare%.2f,"heap_peak_mb":${heapPeakMb()}%.0f,"jit_ms":$jitD,"code_cache_mb":$ccUsed%.0f,"load1":$l0%.2f,"load1_end":${load1()}%.2f}"""
     }
 
-    /** Drop persisted intermediates so queries are timed in isolation.
-      * clearCache() misses localCheckpoint blocks (Dedup/Curate/q17 stage
-      * pins): those normally free only when the driver GCs the RDD
-      * reference and the ContextCleaner notices — by default up to 30 min
-      * later — so a multi-pass run accumulates every dropped plan's blocks
-      * and later samples pay the storage/GC pressure (r10's q17@sf1 pass2
-      * peaked at 35 GB heap vs pass1's 14.4 GB for identical shuffle: both
-      * passes' checkpoint blocks were alive at once). Unpersisting every
-      * registered RDD is deterministic and blocking; the follow-up gc()
+    /** Drop persisted intermediates so queries are timed in isolation
+      * ([[SparkEntry.release]]): left to the ContextCleaner, a multi-pass
+      * run keeps every dropped plan's checkpoint blocks (r10's q17@sf1
+      * pass2 peaked at 35 GB heap vs pass1's 14.4 GB). The follow-up gc()
       * lets the cleaner reap anything reference-held.
       */
     def dropPersisted(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-      // the parcel probes stage a fresh UUID-named table per call and its
-      // frame dies with the sample — drop the stages here (a 48-query
-      // 3-round run otherwise leaks ~150 stage dirs into target/ and as
-      // many entries into the session catalog)
-      Option(new java.io.File(graft.TmpDir.root)
-          .listFiles((_, n) => n.startsWith("parcel_flat_stage_")))
-        .foreach(_.foreach(d => graft.etl.EtlJob.dropStage(spark, d.getPath)))
+      SparkEntry.release(spark)
       System.gc()
     }
 

@@ -8,7 +8,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.Bench.escape
 
@@ -23,8 +26,10 @@ import graft.Bench.escape
   *    `localCheckpoint`-pinned stages, index builds and the final sink each
   *    surface as separate jobs, so the composition's cost splits operator
   *    by operator;
-  *  - the timed run's formatted plan, written to `<outDir>/<query>.txt`;
-  *  - the head of every BroadcastExchange subtree in its plan (see
+  *  - the plan the timed run executed, formatted, written to
+  *    `<outDir>/<query>.txt`: the final adaptive plan, with the runtime
+  *    join and partitioning decisions;
+  *  - the head of every BroadcastExchange subtree in that final plan (see
   *    [[broadcastHeads]]).
   *
   * Scaling of a query is `runMain graft.BuildSf <src> <out> <N>` and this
@@ -87,20 +92,26 @@ object Profile {
       while (starts.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
       Thread.sleep(300)
     }
-    def release(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    // the timed noop write's own QueryExecution, as adaptive execution
+    // left it (the noop sink is the only overwrite a catalog query issues)
+    @volatile var written: Option[QueryExecution] = None
+    val writeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.logical.isInstanceOf[OverwriteByExpression]) written = Some(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
 
     spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(writeListener)
     try names.foreach { n =>
       try {
         val fn = SparkEntry.queries(n)
         val w0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         val warmS = (System.nanoTime() - w0) / 1e9
-        release()
+        SparkEntry.release(spark)
         drain()
+        written = None
         recording = Some(n)
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
@@ -109,6 +120,9 @@ object Profile {
         val timedS = (System.nanoTime() - t0) / 1e9
         drain()
         recording = None
+        val deadline = System.nanoTime() + 5_000_000_000L
+        while (written.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+        val qe = written.getOrElse(df.queryExecution)
         jobLines.asScala.foreach(emit)
         emit(f"""{"query":${escape(n)},"warm_s":$warmS%.3f,"construct_s":$constructS%.3f,"timed_s":$timedS%.3f}""")
 
@@ -116,9 +130,11 @@ object Profile {
         val header = s"== $n @ $sfDir (${spark.sparkContext.master}) ==\n" +
           "NOTE: stages pinned via localCheckpoint appear as 'Scan ExistingRDD' —\n" +
           "their subtree plans executed eagerly during construction.\n\n"
-        Files.writeString(file, header + df.queryExecution.explainString(FormattedMode))
+        Files.writeString(file, header + qe.explainString(FormattedMode))
         emit(s"""{"query":${escape(n)},"plan":${escape(file.toString)}}""")
-        broadcastHeads(df.queryExecution.executedPlan.toString).foreach { h =>
+        val finalPlan = qe.executedPlan.collectFirst { case a: AdaptiveSparkPlanExec => a.executedPlan }
+          .getOrElse(qe.executedPlan)
+        broadcastHeads(finalPlan.toString).foreach { h =>
           emit(s"""{"query":${escape(n)},"bx":${escape(h)}}""")
         }
       } catch {
@@ -127,9 +143,12 @@ object Profile {
       } finally {
         recording = None
         jobLines.clear()
-        release()
+        SparkEntry.release(spark)
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      spark.listenerManager.unregister(writeListener)
+      spark.sparkContext.removeSparkListener(listener)
+    }
     out.result()
   }
 
@@ -139,11 +158,11 @@ object Profile {
     * or above the exchange's indent, so a sibling or parent subtree never
     * leaks into a head.
     *
-    * [[profile]] reads the query's plan as planned (the noop write runs its
-    * own copy), so every exchange it lists is a static planner decision
-    * from Catalyst estimates — a hazard when the subtree is
-    * checkpoint-backed (`Scan ExistingRDD`), whose estimates do not grow
-    * with the data.
+    * [[profile]] reads the final adaptive plan the timed noop write ran,
+    * so every exchange it lists is one that ran, after adaptive execution
+    * re-planned from the measured stage sizes — including a broadcast
+    * over a checkpoint-backed subtree (`Scan ExistingRDD`), whose
+    * Catalyst estimates do not grow with the data.
     */
   def broadcastHeads(plan: String): Seq[String] = {
     val ls = plan.linesIterator.toVector

@@ -42,6 +42,17 @@ object SparkEntry {
     rest ++ streaming
   }
 
+  /** Frees what a catalog query leaves behind, for the tools that run
+    * them in turn: cached frames, every persisted RDD (blocking; with the
+    * `localCheckpoint` blocks `clearCache` misses) and the parcel probes'
+    * stages with their catalog tables.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    ParityProbes.dropStages(spark)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     */

@@ -170,11 +170,10 @@ object Verify {
           System.err.println(
             f"""{"verify_sample":"$name","error":${q(msg)},"cum_s":${elapsed()}%.1f}""")
         }
-        // hygiene: drop cached frames and localCheckpoint blocks so the
-        // 191-query dump doesn't accumulate every dropped plan's storage
-        // (round 7 measured this; round 13 amortized the forced GC)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+        // hygiene: free what the query left behind so the dump doesn't
+        // accumulate every dropped plan's storage and stages (round 7
+        // measured this; round 13 amortized the forced GC)
+        SparkEntry.release(spark)
         sinceGc += 1
         if (sinceGc >= GcEvery) { System.gc(); sinceGc = 0 }
       }

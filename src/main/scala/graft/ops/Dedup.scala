@@ -1317,7 +1317,7 @@ object Dedup {
     spark.range(1).select(xxhash64(lit("__graft_empty_bloom")).as("__k"))
       .stat.bloomFilter("__k", expectedItems, fpp)
 
-  private def writeBloomFile(spark: org.apache.spark.sql.SparkSession, path: String,
+  private[graft] def writeBloomFile(spark: org.apache.spark.sql.SparkSession, path: String,
       bf: org.apache.spark.util.sketch.BloomFilter, expectedItems: Long, fpp: Double): Unit = {
     val (fs, p) = hadoopFs(spark, path)
     val out = fs.create(p, true)
@@ -1332,46 +1332,51 @@ object Dedup {
     } finally out.close()
   }
 
-  /** Persist the corpus-side state of [[incrementalExactBloom]]:
-    * `path/hashes` (parquet: `__h` sha256 hex, `__exact_of` min corpus
-    * id) plus `path/bloom.bin` (the serialized sketch with its creation
-    * params). One corpus scan total; the sketch is rebuilt from the
-    * written index (a compact re-read, not a second corpus pass) so the
-    * two artifacts can never disagree about membership.
+  /** Persist the corpus-side state of [[incrementalExactBloom]] as an
+    * [[IndexStore]] version: the `hashes` table (`__h` sha256 hex,
+    * `__exact_of` min corpus id), the sketch, and its creation params as
+    * `expectedItems`/`fpp`. One corpus scan; the sketch is built from the
+    * written table, so the two can never disagree about membership.
     */
   def writeHashIndex(corpus: DataFrame, idCol: String, textCol: String, path: String,
       expectedItems: Long, fpp: Double = 0.01): Unit = {
     require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
     val spark = corpus.sparkSession
-    corpus
+    val v = IndexStore.nextVersion(spark, path)
+    val hashes = IndexStore.writeTable(path, "hashes", v, corpus
       .select(sha2(tagged(col(textCol)), 256).as("__h"), col(idCol).as("__cid"))
-      .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of"))
-      .write.mode("overwrite").parquet(s"$path/hashes")
-    val persisted = spark.read.parquet(s"$path/hashes")
+      .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of")))
+    val persisted = IndexStore.read(spark, path, "hashes", Seq(hashes))
     val bf =
       if (persisted.isEmpty) // stat.bloomFilter NPEs on zero rows
         emptyBloom(spark, expectedItems, fpp)
       else persisted.select(xxhash64(col("__h")).as("__k"))
         .stat.bloomFilter("__k", expectedItems, fpp)
-    writeBloomFileAtomic(spark, path, bf, expectedItems, fpp)
+    IndexStore.commit(spark, path, IndexStore.Manifest(v,
+      Map("expectedItems" -> expectedItems, "fpp" -> fpp), Map("hashes" -> Seq(hashes)),
+      IndexStore.writeSketch(spark, path, v, bf, expectedItems, fpp)))
   }
 
-  /** Load a persisted index. The hash table is a lazy parquet frame; only
-    * the sketch (sized by `expectedItems` at write time) is driver-held.
+  /** Load the committed version of a persisted index. The hash table is a
+    * lazy parquet frame; only the sketch (sized by `expectedItems` at
+    * write time) is driver-held.
     */
-  def readHashIndex(spark: org.apache.spark.sql.SparkSession, path: String): HashIndex = {
-    finishBatchCompaction(spark, path) // complete an interrupted dir swap first
-    val (bf, items, fpp) = readBloomFile(spark, path)
-    HashIndex(spark.read.parquet(s"$path/hashes"), bf, items, fpp)
+  def readHashIndex(spark: org.apache.spark.sql.SparkSession, path: String): HashIndex =
+    readHashIndex(spark, path, IndexStore.latest(spark, path))
+
+  private def readHashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest): HashIndex = {
+    val (bf, _, _) = IndexStore.readSketch(spark, path, m)
+    HashIndex(IndexStore.read(spark, path, m, "hashes"), bf, m.long("expectedItems"), m.double("fpp"))
   }
 
-  /** Read a `<dir>/bloom.bin` written by [[writeBloomFileAtomic]]: the
-    * header's creation params ride back so later deltas stay
-    * bit-compatible (`mergeInPlace` refuses mismatched sizes).
+  /** Read a sketch file written by [[writeBloomFile]]: the header's
+    * creation params ride back so later deltas stay bit-compatible
+    * (`mergeInPlace` refuses mismatched sizes).
     */
   private[graft] def readBloomFile(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (org.apache.spark.util.sketch.BloomFilter, Long, Double) = {
-    val (fs, p) = hadoopFs(spark, s"$dir/bloom.bin")
+      file: String): (org.apache.spark.util.sketch.BloomFilter, Long, Double) = {
+    val (fs, p) = hadoopFs(spark, file)
     val in = fs.open(p)
     try {
       val dis = new java.io.DataInputStream(in)
@@ -1397,40 +1402,35 @@ object Dedup {
 
   /** Fold a batch's accepted documents into a persisted index without
     * rebuilding it: new hash rows are anti-joined against the existing
-    * table (idempotent re-ingest; intra-batch duplicates elect min id)
-    * and appended as new parquet parts, and their keys merge into the
-    * sketch (a delta filter built with the SAME creation params is
-    * bit-compatible with the stored one — `mergeInPlace` is a bitwise
-    * OR). The sketch saturates past `expectedItems` total inserts (fpp
-    * degrades, correctness doesn't — positives always verify); rewrite
-    * with [[writeHashIndex]] when the corpus outgrows it. Once the table
-    * accumulates `autoCompactAt` part files the append folds it in place
-    * ([[maybeAutoCompact]] — crash-safe via the compaction marker).
+    * table (idempotent re-ingest; intra-batch duplicates elect min id),
+    * and their keys merge into the sketch with a bit-compatible delta.
+    * The new dir and sketch commit as one [[IndexStore]] version; a batch
+    * with nothing new commits nothing. The sketch saturates past
+    * `expectedItems` total inserts (fpp degrades, correctness doesn't —
+    * positives always verify); rewrite with [[writeHashIndex]] when the
+    * corpus outgrows it. Folds once the table holds `autoCompactAt` part
+    * files ([[compactHashIndex]]; 0 disables).
     */
   def appendToHashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       autoCompactAt: Int = AutoCompactDefault): Unit = {
-    val index = readHashIndex(spark, path)
+    val m = IndexStore.latest(spark, path)
+    val index = readHashIndex(spark, path, m)
     val fresh = newDocs
       .select(sha2(tagged(col(textCol)), 256).as("__h"), col(idCol).as("__cid"))
       .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of"))
       .join(index.hashes, Seq("__h"), "left_anti")
-      .localCheckpoint() // pin BEFORE the append below rewrites the dir it reads
-    val delta =
-      if (fresh.isEmpty) emptyBloom(spark, index.expectedItems, index.fpp)
-      else fresh.select(xxhash64(col("__h")).as("__k"))
-        .stat.bloomFilter("__k", index.expectedItems, index.fpp)
-    // sketch BEFORE table: a crash between the two writes must leave keys
-    // in the sketch without rows (harmless false positives — the verify
-    // join is exact, and the retry's anti-join still sees the rows as
-    // missing and re-appends them), never rows without keys — the retry
-    // anti-joins the TABLE, so a sketch that missed its delta would stay
-    // stale forever and every later probe of those keys would false-
-    // NEGATIVE (a duplicate classified new, silently admitted)
-    index.bloom.mergeInPlace(delta)
-    writeBloomFileAtomic(spark, path, index.bloom, index.expectedItems, index.fpp)
-    fresh.write.mode("append").parquet(s"$path/hashes")
-    maybeAutoCompact(spark, path, HashIndexTables, autoCompactAt)
+      .localCheckpoint()
+    if (fresh.isEmpty) return
+    index.bloom.mergeInPlace(fresh.select(xxhash64(col("__h")).as("__k"))
+      .stat.bloomFilter("__k", index.expectedItems, index.fpp))
+    val v = m.version + 1
+    val hashes = IndexStore.writeTable(path, "hashes", v, fresh)
+    val next = IndexStore.commit(spark, path, m.copy(version = v,
+      tables = Map("hashes" -> (m.tables("hashes") :+ hashes)),
+      sketch = IndexStore.writeSketch(spark, path, v, index.bloom, index.expectedItems, index.fpp)))
+    autoCompactTarget(spark, path, Seq((next.files("hashes"), next.bytes("hashes"))), autoCompactAt)
+      .foreach(compactHashIndex(spark, path, _))
   }
 
   // — persisted PARAGRAPH index (FineWeb incremental deployment shape) —————
@@ -1603,7 +1603,7 @@ object Dedup {
       if (fresh.isEmpty) emptyBloom(spark, index.expectedItems, index.fpp)
       else fresh.select(xxhash64(col("__h")).as("__k"))
         .stat.bloomFilter("__k", index.expectedItems, index.fpp)
-    // sketch BEFORE table — see [[appendToHashIndex]]: rows-without-keys
+    // sketch BEFORE table: rows-without-keys
     // false-negative forever (the retry anti-join hides them from the
     // delta), keys-without-rows just verify-fail
     index.bloom.mergeInPlace(delta)
@@ -1784,14 +1784,10 @@ object Dedup {
   /** Write a small text file ATOMICALLY-ish: content lands whole in
     * `<path>.__tmp` first and swaps in via rename (the
     * [[writeBloomFileAtomic]] discipline). A crash mid-write can never
-    * leave a TRUNCATED destination — the hazard became live in round 14
-    * when `meta.json` turned into a PER-FOLD rewrite on the BM25 index
-    * (truncated JSON loses `id_col` and bricks the index). Worst case
-    * (crash inside the delete→rename window) leaves the file MISSING,
-    * which every reader treats as "incomplete": it fails loud with
-    * rebuild guidance, or self-heals where a sibling artifact carries
-    * the lost fields (the BM25 family reconstructs meta.json from the
-    * `stats.dirty` marker + the doclen table).
+    * leave a TRUNCATED destination (truncated JSON loses the fields a
+    * reader needs). Worst case (crash inside the delete→rename window)
+    * leaves the file MISSING, which every reader treats as "incomplete":
+    * it fails loud with rebuild guidance.
     */
   private[graft] def writeTextFile(spark: org.apache.spark.sql.SparkSession, path: String,
       content: String): Unit = {
@@ -2246,7 +2242,7 @@ object Dedup {
       if (freshHashes.isEmpty)
         emptyBloom(spark, idx.expectedItems, idx.fpp)
       else freshHashes.stat.bloomFilter("__h", idx.expectedItems, idx.fpp)
-    // sketch BEFORE tables — see [[appendToHashIndex]]: rows-without-keys
+    // sketch BEFORE tables: rows-without-keys
     // false-negative forever (the retry anti-join hides them from the
     // delta), keys-without-rows just verify-fail
     idx.bloom.mergeInPlace(delta)
@@ -2799,10 +2795,9 @@ object Dedup {
 
   // — batch-index COMPACTION (small-file maintenance for the append
   //   deltas) ———————————————————————————————————————————————————————————
-  //   appendToHashIndex / appendToBandIndex / appendToVecIndex /
-  //   appendToParagraphIndex each land `mode("append")` parquet parts in
-  //   flat table dirs: months of daily appends reproduce the small-file
-  //   swamp the streaming IngestIndex already solved for its partitioned
+  //   appendToBandIndex / appendToVecIndex / appendToParagraphIndex each
+  //   land `mode("append")` parquet parts in flat table dirs: months of
+  //   daily appends reproduce the small-file swamp the streaming IngestIndex already solved for its partitioned
   //   layout. This is the flat-dir twin of that marker protocol — each
   //   table dir is rewritten into few files via invisible `.staging`
   //   dirs, a self-describing `_compacting_batch.json` marker gates the
@@ -2828,7 +2823,6 @@ object Dedup {
   }
 
   /** Table sets for the convenience wrappers below. */
-  private val HashIndexTables = Seq("hashes")
   private val ParagraphIndexTables = Seq("paras")
   private val BandIndexTables = Seq("shingles", "sizes", "bands")
   private val VecIndexTables = Seq("vecs", "hashes")
@@ -2842,41 +2836,58 @@ object Dedup {
     */
   val AutoCompactDefault = 256
 
-  /** Append-side auto-compaction policy (r11 verdict task #6: deltas
-    * accumulated until someone remembered to call `compact*Index`). After
-    * a successful append, if any of the index's table dirs has reached
-    * `at` part files, fold the layout via [[compactBatchIndex]] — the
-    * staging+marker protocol already makes an in-append fold crash-safe
-    * (a crash mid-fold is finished by the next reader). Target file count
-    * is sized from the largest table's bytes against
-    * `spark.sql.files.maxPartitionBytes`, so a compacted 100-TB-scale
-    * index folds to scan-parallel files, not to one giant part.
+  /** Append-side auto-compaction of the marker-protocol families: once a
+    * table dir holds `at` part files ([[autoCompactTarget]]), fold the
+    * layout via [[compactBatchIndex]] — crash-safe in-append, as a crash
+    * mid-fold is finished by the next reader.
     */
   private[graft] def maybeAutoCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String, tables: Seq[String], at: Int): Unit = {
-    if (at <= 0) return
-    val (fs, _) = hadoopFs(spark, path)
-    def parts(tbl: String): Array[org.apache.hadoop.fs.FileStatus] = {
-      val p = new org.apache.hadoop.fs.Path(s"$path/$tbl")
-      if (!fs.exists(p)) Array.empty
+      path: String, tables: Seq[String], at: Int): Unit =
+    autoCompactTarget(spark, path, tables.map(t => partFiles(spark, s"$path/$t")), at)
+      .foreach(compactBatchIndex(spark, path, tables, _))
+
+  /** (part files, bytes) directly under `dir`; none when it is absent. */
+  private[graft] def partFiles(spark: org.apache.spark.sql.SparkSession, dir: String): (Int, Long) = {
+    val (fs, p) = hadoopFs(spark, dir)
+    val parts = if (!fs.exists(p)) Array.empty[org.apache.hadoop.fs.FileStatus]
       else fs.listStatus(p).filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    }
-    val all = tables.map(parts)
-    val maxFiles = all.map(_.length).max
-    if (maxFiles >= at) {
+    (parts.length, parts.map(_.getLen).sum)
+  }
+
+  /** The shared auto-compaction trigger (r11 verdict task #6: deltas
+    * accumulated until someone remembered to call `compact*Index`): over
+    * each table's (part files, bytes), once the largest file count
+    * reaches `at` (0 disables), the file count to fold to — the largest
+    * table's bytes over `spark.sql.files.maxPartitionBytes`, so a
+    * 100-TB-scale index folds to scan-parallel files. Logged on stderr.
+    */
+  private[graft] def autoCompactTarget(spark: org.apache.spark.sql.SparkSession,
+      path: String, tables: Seq[(Int, Long)], at: Int): Option[Int] = {
+    val maxFiles = tables.map(_._1).max
+    if (at <= 0 || maxFiles < at) None
+    else {
       val maxPartBytes = spark.sessionState.conf.filesMaxPartitionBytes
-      val maxTableBytes = all.map(_.map(_.getLen).sum).max
-      val target = math.max(1L, (maxTableBytes + maxPartBytes - 1) / maxPartBytes).toInt
+      val target = math.max(1L, (tables.map(_._2).max + maxPartBytes - 1) / maxPartBytes).toInt
       System.err.println(
         s"""{"index_auto_compact":${"\"" + path + "\""},"part_files":$maxFiles,"trigger":$at,"target_files":$target}""")
-      compactBatchIndex(spark, path, tables, target)
+      Some(target)
     }
   }
 
-  /** [[compactBatchIndex]] over [[writeHashIndex]]'s layout. */
+  /** Rewrite [[writeHashIndex]]'s table into `targetFiles` parquet parts
+    * and commit it as a new [[IndexStore]] version naming only the
+    * rewritten dir (same sketch, same params). Row content is identical,
+    * so classification cannot shift.
+    */
   def compactHashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFiles: Int = 1): Unit =
-    compactBatchIndex(spark, path, HashIndexTables, targetFiles)
+      targetFiles: Int = 1): Unit = {
+    require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
+    val m = IndexStore.latest(spark, path)
+    val v = m.version + 1
+    val hashes = IndexStore.writeTable(path, "hashes", v,
+      IndexStore.read(spark, path, m, "hashes").coalesce(targetFiles))
+    IndexStore.commit(spark, path, m.copy(version = v, tables = Map("hashes" -> Seq(hashes))))
+  }
 
   /** [[compactBatchIndex]] over [[writeParagraphIndex]]'s layout. */
   def compactParagraphIndex(spark: org.apache.spark.sql.SparkSession, path: String,

@@ -182,26 +182,14 @@ object Frequency {
     Dedup.finishBatchCompaction(spark, path)
   }
 
-  /** [[Dedup.maybeAutoCompact]]'s trigger (part-file count ≥ `at`) with
+  /** [[Dedup.autoCompactTarget]]'s trigger (part-file count ≥ `at`) with
     * the HLL-specific compaction: registers fold by union, not by file
     * coalesce — a coalesce-only compaction would leave duplicate keys
     * forever.
     */
-  private def maybeAutoCompactHll(spark: SparkSession, path: String, at: Int): Unit = {
-    if (at <= 0) return
-    val (fs, p) = Dedup.hadoopFs(spark, s"$path/sketches")
-    val parts =
-      if (!fs.exists(p)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(p).filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    if (parts.length >= at) {
-      val maxPartBytes = spark.sessionState.conf.filesMaxPartitionBytes
-      val bytes = parts.map(_.getLen).sum
-      val target = math.max(1L, (bytes + maxPartBytes - 1) / maxPartBytes).toInt
-      System.err.println(
-        s"""{"index_auto_compact":${"\"" + path + "\""},"part_files":${parts.length},"trigger":$at,"target_files":$target}""")
-      compactHllIndex(spark, path, target)
-    }
-  }
+  private def maybeAutoCompactHll(spark: SparkSession, path: String, at: Int): Unit =
+    Dedup.autoCompactTarget(spark, path, Seq(Dedup.partFiles(spark, s"$path/sketches")), at)
+      .foreach(compactHllIndex(spark, path, _))
 
   /** Per-key approx-distinct estimates from the persisted sketches
     * (healing an interrupted compaction swap first; delta rows for the

@@ -132,7 +132,7 @@ object Similarity {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val idCol = graft.ops.TextStats.bm25IndexIdCol(spark, bm25IndexPath)
     // the two arms' DRIVER-side prep is eager (postings slot-count
-    // collect + heal on the lexical side, centroid probe collect + heal
+    // collect on the lexical side, centroid probe collect + heal
     // on the semantic side) and independent — overlap it (guide §2.6,
     // round 16; the fused action below already overlaps the executor work)
     val (lexical, semantic) = graft.Concurrent.par(

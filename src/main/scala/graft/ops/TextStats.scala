@@ -915,11 +915,11 @@ object TextStats {
   //   statistics ONCE — (term, doc, tf, dl) rows partitioned by a
   //   256-slot term hash plus a (doc, dl) length table — and a probe
   //   reads only the matched term partitions (directory-level pruning:
-  //   queries touch ≤ |query terms| of the 256 slots). Batch folds are
-  //   per-table idempotent anti-join appends (the simhash two-table
-  //   discipline: each table heals independently on a crash replay);
-  //   compaction rewrites under the shared staging+marker swap,
-  //   preserving the term partitioning. meta.json pins the id column.
+  //   queries touch ≤ |query terms| of the 256 slots). Build, fold and
+  //   compaction each commit one [[IndexStore]] version: both tables'
+  //   new write dirs, the id sketch and the metadata land together or
+  //   not at all. Folds are idempotent anti-join appends; compaction
+  //   preserves the term partitioning. The manifest pins the id column.
 
   /** Cap on the term-partition fan-out of the postings table: probes
     * prune to the matched directories, so a q-term query reads
@@ -928,7 +928,7 @@ object TextStats {
     * the cluster is 256 near-empty directories at test scale — measured
     * ~4 s of commit/listing overhead per sf0.1 build): derived from the
     * corpus token count at build time ([[bm25TpPartitions]]), pinned in
-    * meta.json, and read back by every probe/fold, capped here.
+    * the manifest, and read back by every probe/fold, capped here.
     */
   val Bm25Partitions = 256
 
@@ -965,15 +965,8 @@ object TextStats {
       .agg(count(lit(1)).cast("double").as("__tf"), first(col("__dl")).as("__dl"))
       .withColumn("__tp", pmod(xxhash64(col("__term")), lit(tp.toLong)))
 
-  private def postingsOf(docs: DataFrame, idCol: String, text: Column,
-      tp: Int): DataFrame =
-    postingsFromToks(tokenizedOf(docs, idCol, text), tp)
-
   private def doclenFromToks(toks: DataFrame): DataFrame =
     toks.select(col("id"), size(col("__toks")).cast("double").as("__dl"))
-
-  private def doclenOf(docs: DataFrame, idCol: String, text: Column): DataFrame =
-    doclenFromToks(tokenizedOf(docs, idCol, text))
 
   /** Cap (and legacy default) for the index's id Bloom sketch: ~4M ids
     * at fpp 0.01 is a few MB driver-side; the sketch saturates
@@ -992,255 +985,105 @@ object TextStats {
     * index of 10⁴ ids that needs a 48 KB sketch. 4× headroom leaves room
     * for folds before fpp drifts; the cap preserves the old worst-case
     * driver/executor footprint, the floor keeps tiny builds from a
-    * useless sketch. Explicit `expectedItems` still wins (pinned in
-    * meta.json either way, so a lost sketch rebuilds at the same size).
+    * useless sketch. Explicit `expectedItems` still wins (pinned in the
+    * manifest either way, so every fold's delta stays bit-compatible).
     */
   def bm25BloomAutoItems(nDocs: Long): Long =
     math.min(Bm25BloomItems, math.max(Bm25BloomMinItems, 4L * nDocs))
 
-  /** Exact additive sufficient statistics of the index, pinned in
-    * `meta.json`: token counts are integers, so `sum_dl` is
-    * order-independent and survives append/compact exactly — the probe's
-    * (N, avgdl) never needs a doclen scan. `bloomItems`/`bloomFpp` pin
-    * the sketch's BUILD params (round 15): a lost `bloom.bin` rebuilds
-    * at the index's own sizing, not the default — a 100M-id index whose
-    * sketch rebuilt at the 4M default would silently saturate and
-    * degrade every fold back toward O(index).
+  /** The index's metadata, one [[IndexStore]] manifest's `meta`: the id
+    * column, exact additive counters (token counts are integers, so
+    * `sum_dl` is order-independent and survives append/compact exactly —
+    * the probe's (N, avgdl) never needs a doclen scan), the sketch's
+    * build params and the term-partition modulus.
     */
   private final case class Bm25Meta(idCol: String, nDocs: Long, sumDl: Long,
-      bloomItems: Long, bloomFpp: Double, tp: Int)
-
-  private def writeBm25Meta(spark: SparkSession, path: String, m: Bm25Meta): Unit =
-    Dedup.writeTextFile(spark, s"$path/meta.json",
-      s"""{"id_col":"${m.idCol}","n_docs":${m.nDocs},"sum_dl":${m.sumDl},""" +
-        s""""bloom_items":${m.bloomItems},"bloom_fpp":${m.bloomFpp},"tp":${m.tp}}""")
-
-  private def bm25AggDoclen(doclen: DataFrame): (Long, Long) = {
-    val row = doclen.agg(count(lit(1)).as("n"),
-      sum(col("__dl").cast("long")).as("s")).head()
-    (row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
+      bloomItems: Long, bloomFpp: Double, tp: Int) {
+    def toMap: Map[String, Any] = Map("id_col" -> idCol, "n_docs" -> nDocs,
+      "sum_dl" -> sumDl, "bloom_items" -> bloomItems, "bloom_fpp" -> bloomFpp, "tp" -> tp.toLong)
   }
 
-  /** Build the index from the current corpus: `postings` (term-hash
-    * partitioned), `doclen`, `bloom.bin` (id sketch — lets a fold's
-    * idempotency check skip the postings scan for genuinely-new ids),
-    * and `meta.json` (the id column + exact (n_docs, sum_dl) counters —
-    * written LAST, so its presence marks a complete index). The sketch
+  private def bm25Meta(m: IndexStore.Manifest): Bm25Meta =
+    Bm25Meta(m.string("id_col"), m.long("n_docs"), m.long("sum_dl"),
+      m.long("bloom_items"), m.double("bloom_fpp"), m.long("tp").toInt)
+
+  /** Write a doclen frame as the `doclen` dir of `version`; its exact
+    * (rows, sum of `__dl`) ride the write job via observe().
+    */
+  private def writeDoclen(path: String, version: Long, doclen: DataFrame)
+      : (IndexStore.WriteDir, Long, Long) = {
+    val obs = new org.apache.spark.sql.Observation()
+    val dir = IndexStore.writeTable(path, "doclen", version,
+      doclen.observe(obs, count(lit(1)).as("n"), sum(col("__dl").cast("long")).as("s")))
+    val row = obs.get
+    (dir, row("n").asInstanceOf[Long], Option(row("s")).map(_.asInstanceOf[Long]).getOrElse(0L))
+  }
+
+  /** Build the index from the current corpus and commit it as the next
+    * [[IndexStore]] version: `postings` (term-hash partitioned),
+    * `doclen`, the id sketch (lets a fold's idempotency check skip the
+    * postings scan for genuinely-new ids) and the metadata. The sketch
     * and the counters derive from the PERSISTED doclen (a compact
-    * re-read, not a second corpus pass), so the artifacts can never
-    * disagree with the tables.
+    * re-read, not a second corpus pass), so they can never disagree with
+    * the tables. An empty corpus is refused and commits nothing.
     */
   def writeBm25Index(docs: DataFrame, idCol: String, text: Column, path: String,
       expectedItems: Long = 0L /* 0 = auto-size from the corpus count */,
       fpp: Double = 0.01): Unit = {
     val spark = docs.sparkSession
-    val (fs, metaP) = Dedup.hadoopFs(spark, s"$path/meta.json")
-    if (fs.exists(metaP)) fs.delete(metaP, false)
-    // ONE corpus text scan per build (round 16, guide §1.2/§6 — the r15
-    // shape tokenized the corpus twice, once per table): the shared
-    // tokenize projection is pinned, the doclen write populates it, and
-    // the postings write re-reads the pinned tokens instead of re-scanning
-    // the corpus text. persist (not localCheckpoint): an evicted block
-    // recomputes from lineage instead of failing the build, and the
-    // finally-unpersist below keeps nothing in the cache manager past the
-    // build (no cross-query substitution, nothing for callers to release).
+    val v = IndexStore.nextVersion(spark, path)
+    // ONE corpus text scan per build (round 16): the doclen write
+    // populates the pinned tokens and the postings write re-reads them.
+    // persist (not localCheckpoint): an evicted block recomputes from
+    // lineage, and the finally-unpersist keeps nothing cached past the build.
     val toks = tokenizedOf(docs, idCol, text)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // doclen FIRST (round 15): its (n, sum_dl) aggregate sizes the
       // adaptive term-partition count BEFORE any postings land, and the
-      // empty-build guard now fires before a partitionBy dir even exists.
-      // The aggregate rides the write job via observe() — same exact
-      // integer sums, one less pass over doclen (guide §1.2 job-count).
-      val obs = new org.apache.spark.sql.Observation()
-      doclenFromToks(toks)
-        .observe(obs, count(lit(1)).as("n"), sum(col("__dl").cast("long")).as("s"))
-        .write.mode("overwrite").parquet(s"$path/doclen")
-      val row = obs.get
-      val (n, sumDl) =
-        (row("n").asInstanceOf[Long],
-          Option(row("s")).map(_.asInstanceOf[Long]).getOrElse(0L))
-      val doclen = spark.read.parquet(s"$path/doclen")
+      // empty-build guard fires before a partitionBy dir even exists
+      val (doclen, n, sumDl) = writeDoclen(path, v, doclenFromToks(toks))
       require(n > 0, s"refusing to build an EMPTY BM25 index at $path — " +
         "a partitioned postings dir with no part files is unreadable; " +
         "build from the first non-empty batch instead")
       val items = if (expectedItems > 0L) expectedItems else bm25BloomAutoItems(n)
       val tp = bm25TpPartitions(sumDl)
-      // layout.json is WRITE-ONCE per build: id_col and the term-partition
-      // modulus are layout facts no fold ever changes, so they get a file
-      // the per-fold meta rewrite can never touch — heal reads them back
-      // even when BOTH meta.json and the intent marker are lost (the one
-      // scenario where guessing tp would silently prune probes to the
-      // wrong directory slots)
-      Dedup.writeTextFile(spark, s"$path/layout.json",
-        s"""{"id_col":"$idCol","tp":$tp}""")
-      postingsFromToks(toks, tp)
-        .write.mode("overwrite").partitionBy("__tp").parquet(s"$path/postings")
-      val bf = doclen.select(xxhash64(col("id")).as("__k"))
+      val postings = IndexStore.writeTable(path, "postings", v, postingsFromToks(toks, tp), Seq("__tp"))
+      val bf = IndexStore.read(spark, path, "doclen", Seq(doclen))
+        .select(xxhash64(col("id")).as("__k"))
         .stat.bloomFilter("__k", items, fpp)
-      Dedup.writeBloomFileAtomic(spark, path, bf, items, fpp)
-      val (dfs, dirtyP) = Dedup.hadoopFs(spark, s"$path/stats.dirty")
-      if (dfs.exists(dirtyP)) dfs.delete(dirtyP, false) // stale intent marker
-      writeBm25Meta(spark, path, Bm25Meta(idCol, n, sumDl, items, fpp, tp))
+      IndexStore.commit(spark, path, IndexStore.Manifest(v,
+        Bm25Meta(idCol, n, sumDl, items, fpp, tp).toMap,
+        Map("postings" -> Seq(postings), "doclen" -> Seq(doclen)),
+        IndexStore.writeSketch(spark, path, v, bf, items, fpp)))
     } finally toks.unpersist(blocking = false)
   }
 
-  /** The id column from `meta.json`, with the round-15 crash fallback:
-    * every meta REWRITE (fold, heal) is bracketed by a `stats.dirty`
-    * marker that carries `id_col` too, so the one unrecoverable loss a
-    * truncating rewrite used to risk — meta gone, id column unknowable,
-    * index bricked — now heals: a missing meta with a pending marker
-    * reads the id column from the marker (and [[healBm25Stats]] rebuilds
-    * the counters from doclen).
-    */
-  private def bm25MetaIdCol(spark: SparkSession, path: String): String = {
-    val (fs, p) = Dedup.hadoopFs(spark, s"$path/meta.json")
-    val idRe = """"id_col"\s*:\s*"([^"]+)"""".r
-    if (fs.exists(p))
-      idRe.findFirstMatchIn(Dedup.readTextFile(spark, s"$path/meta.json"))
-        .map(_.group(1)).getOrElse(throw new IllegalStateException(
-          s"BM25 index at $path has no id_col in meta.json"))
-    else {
-      val (_, dirtyP) = Dedup.hadoopFs(spark, s"$path/stats.dirty")
-      val fromDirty =
-        if (fs.exists(dirtyP))
-          idRe.findFirstMatchIn(Dedup.readTextFile(spark, s"$path/stats.dirty"))
-            .map(_.group(1))
-        else None
-      val (_, layoutP) = Dedup.hadoopFs(spark, s"$path/layout.json")
-      val fromLayout =
-        if (fs.exists(layoutP))
-          idRe.findFirstMatchIn(Dedup.readTextFile(spark, s"$path/layout.json"))
-            .map(_.group(1))
-        else None
-      fromDirty.orElse(fromLayout).getOrElse(throw new IllegalStateException(
-        s"BM25 index at $path has no meta.json (incomplete or interrupted " +
-          "build) — rebuild with writeBm25Index"))
-    }
-  }
-
-  /** Ensure `meta.json` carries trustworthy (n_docs, sum_dl) counters:
-    * re-derives them from the doclen table when (a) a `stats.dirty`
-    * intent marker is pending — a fold crashed between its table appends
-    * and its meta update — or (b) the meta predates the counters
-    * (pre-round-14 index). Exact either way: token counts are integers,
-    * so the re-derived sum is order-independent.
-    */
-  private def healBm25Stats(spark: SparkSession, path: String): Bm25Meta = {
-    val idCol = bm25MetaIdCol(spark, path)
-    val (fs, dirtyP) = Dedup.hadoopFs(spark, s"$path/stats.dirty")
-    val (_, metaP) = Dedup.hadoopFs(spark, s"$path/meta.json")
-    val meta = if (fs.exists(metaP)) Dedup.readTextFile(spark, s"$path/meta.json") else ""
-    def num(k: String): Option[Long] =
-      (s""""$k"\\s*:\\s*(-?[0-9]+)""").r.findFirstMatchIn(meta).map(_.group(1).toLong)
-    def dbl(k: String): Option[Double] =
-      (s""""$k"\\s*:\\s*([0-9.eE+-]+)""").r.findFirstMatchIn(meta).map(_.group(1).toDouble)
-    // bloom build params: meta's pin, else the bin file's own header
-    // (pre-round-15 meta), else the defaults (bin lost too)
-    lazy val (bloomItems, bloomFpp) = (num("bloom_items"), dbl("bloom_fpp")) match {
-      case (Some(i), Some(f)) => (i, f)
-      case _ =>
-        val (bfs, bp) = Dedup.hadoopFs(spark, s"$path/bloom.bin")
-        if (bfs.exists(bp)) { val (_, i, f) = Dedup.readBloomFile(spark, path); (i, f) }
-        else (Bm25BloomItems, 0.01)
-    }
-    // term-partition modulus: meta's pin; else the write-once
-    // layout.json (round 15 — survives ANY meta/marker loss, because no
-    // fold ever rewrites it); else the intent marker's copy; else the
-    // legacy constant (every pre-round-15 index was built at the 256
-    // cap). The modulus is LAYOUT: a healed meta guessing it wrong would
-    // silently prune probe reads to the WRONG directory slots.
-    def fileNum(file: String, k: String): Option[Long] = {
-      val (_, fp) = Dedup.hadoopFs(spark, s"$path/$file")
-      if (fs.exists(fp))
-        (s""""$k"\\s*:\\s*(-?[0-9]+)""").r
-          .findFirstMatchIn(Dedup.readTextFile(spark, s"$path/$file"))
-          .map(_.group(1).toLong)
-      else None
-    }
-    def markerNum(k: String): Option[Long] =
-      if (fs.exists(dirtyP)) fileNum("stats.dirty", k) else None
-    val tp = num("tp").orElse(fileNum("layout.json", "tp"))
-      .orElse(markerNum("tp")).map(_.toInt).getOrElse(Bm25Partitions)
-    (num("n_docs"), num("sum_dl")) match {
-      case (Some(n), Some(s)) if !fs.exists(dirtyP) =>
-        Bm25Meta(idCol, n, s, bloomItems, bloomFpp, tp)
-      case _ =>
-        // bracket the rewrite with the id_col+tp-carrying intent marker so
-        // a crash inside the meta swap window stays recoverable (the
-        // marker is the id column's AND the layout modulus's backup while
-        // meta.json is in flight)
-        Dedup.writeTextFile(spark, s"$path/stats.dirty",
-          s"""{"id_col":"$idCol","tp":$tp}""")
-        val (n, s) = bm25AggDoclen(spark.read.parquet(s"$path/doclen"))
-        val healed = Bm25Meta(idCol, n, s, bloomItems, bloomFpp, tp)
-        writeBm25Meta(spark, path, healed)
-        fs.delete(dirtyP, false)
-        healed
-    }
-  }
-
-  /** The index's id sketch, self-healing: a missing `bloom.bin` (legacy
-    * pre-round-14 index, or a crash inside the atomic-rename window)
-    * rebuilds from the UNION of both tables' ids — after a crash between
-    * the two table writes the id sets can differ, and a doclen-only
-    * rebuild could false-NEGATIVE a posted id and double-append its
-    * postings on the next fold.
-    */
-  private def readBm25Bloom(spark: SparkSession, path: String, meta: Bm25Meta)
-      : (org.apache.spark.util.sketch.BloomFilter, Long, Double) = {
-    val (fs, p) = Dedup.hadoopFs(spark, s"$path/bloom.bin")
-    if (fs.exists(p)) Dedup.readBloomFile(spark, path)
-    else {
-      // rebuild at the index's own pinned sizing (meta.json, round 15) —
-      // the default 4M-item sketch would silently saturate under a larger
-      // index and degrade every fold back toward O(index); log the event
-      // so a recurring rebuild (flaky FS, crash loop) is visible
-      System.err.println(s"""{"bm25_bloom_rebuild":"$path",""" +
-        s""""expected_items":${meta.bloomItems},"fpp":${meta.bloomFpp}}""")
-      val ids = spark.read.parquet(s"$path/postings").select(col("id"))
-        .union(spark.read.parquet(s"$path/doclen").select(col("id")))
-      val bf = ids.select(xxhash64(col("id")).as("__k"))
-        .stat.bloomFilter("__k", meta.bloomItems, meta.bloomFpp)
-      Dedup.writeBloomFileAtomic(spark, path, bf, meta.bloomItems, meta.bloomFpp)
-      (bf, meta.bloomItems, meta.bloomFpp)
-    }
-  }
-
-  /** Fold new documents: per-table idempotent anti-join appends — a
-    * crash between the two table writes heals on replay because each
-    * table's delta is anti-joined against ITS OWN existing ids (the
-    * [[Dedup.appendToSimhashIndex]] discipline). Documents whose id is
-    * already indexed are skipped (re-ingest no-op). Ids must be unique
-    * (and non-null) per document, and the fold FAILS LOUD when a batch
-    * violates that (round 15; one cheap batch-sized aggregate): with
-    * different text under one id, both the live [[bm25]] and
-    * [[postingsOf]] pick `__dl` via a partition-order-dependent
-    * `first()`, so live and indexed scores could silently diverge on
-    * exactly that input — the keep-first dedups guard their id
-    * preconditions at runtime, and so does the fold.
+  /** Fold new documents: an idempotent anti-join append. Documents whose
+    * id is already indexed are skipped (re-ingest no-op), and a batch
+    * with nothing new commits nothing. Ids must be unique (and non-null)
+    * per document, and the fold FAILS LOUD when a batch violates that
+    * (round 15; one cheap batch-sized aggregate): with different text
+    * under one id, both the live [[bm25]] and [[postingsFromToks]] pick `__dl`
+    * via a partition-order-dependent `first()`, so live and indexed
+    * scores could silently diverge on exactly that input — the
+    * keep-first dedups guard their id preconditions at runtime, and so
+    * does the fold.
     *
-    * Fold cost is O(batch + bloom-positives), NOT O(index) (round 14;
-    * the r13 shape anti-joined the FULL postings id column per fold):
-    * batch ids probe the driver-held Bloom sketch, bloom-NEGATIVES —
-    * the whole batch, in the common all-new case — skip the index
-    * entirely, and only positives verify exactly against each table's
-    * id column (a map-side scan pruned by the broadcast positive set;
-    * no corpus-scale distinct shuffle). Sketch-before-table write order
-    * (the [[Dedup.appendToHashIndex]] argument): a crash between the
-    * sketch and table writes leaves keys in the sketch without rows —
-    * harmless false positives that verify exactly — never rows without
-    * keys, which would false-negative forever and double-append.
-    * A `stats.dirty` intent marker brackets the table appends so the
-    * meta counters re-derive on the next touch if the fold dies between
-    * the appends and its meta update. Auto-compacts once `doclen`
-    * accumulates `autoCompactAt` part files.
+    * Fold cost is O(batch + bloom-positives), NOT O(index) (round 14):
+    * batch ids probe the driver-held Bloom sketch, bloom-NEGATIVES — the
+    * whole batch, in the common all-new case — skip the index entirely,
+    * and only positives verify exactly against the doclen id column,
+    * which holds every indexed id. Both tables' new dirs, the merged
+    * sketch and the advanced counters commit as one [[IndexStore]]
+    * version. Compacts once `doclen` holds `autoCompactAt` part files
+    * ([[Dedup.autoCompactTarget]]; 0 disables).
     */
   def appendToBm25Index(spark: SparkSession, path: String, newDocs: DataFrame,
       idCol: String, text: Column,
       autoCompactAt: Int = Dedup.AutoCompactDefault): Unit = {
-    Dedup.finishBatchCompaction(spark, path)
-    val meta = healBm25Stats(spark, path)
+    val m = IndexStore.latest(spark, path)
+    val meta = bm25Meta(m)
     require(meta.idCol == idCol,
       s"BM25 index at $path was built over id column '${meta.idCol}', append passed '$idCol'")
     // unique-id precondition, GUARDED (see scaladoc): batch rows vs
@@ -1253,81 +1096,62 @@ object TextStats {
         s"${bCheck.getLong(0) - bCheck.getLong(1)} duplicated or null '$idCol' " +
         "rows — per-document term counts would merge non-deterministically; " +
         "dedup the batch (keep-first / digest agg) before the fold")
-    val (bloom, items, fpp) = readBm25Bloom(spark, path, meta)
+    val (bloom, items, fpp) = IndexStore.readSketch(spark, path, m)
     val positives = newDocs.select(col(idCol).as("id")).distinct()
       .filter(graft.functions.BloomFunctions.mightContain(xxhash64(col("id")), bloom))
       .localCheckpoint()
     val nPos = positives.count() // driver scalar; gates the verify path
-    // per-table already-present ids among the positives: a map-side scan
-    // of the table's id column semi-joined against the (small) positive
-    // set — runs ONLY when positives exist, broadcasts only on evidence
-    def presentIn(table: String): DataFrame =
+    // already-indexed ids among the positives: a map-side scan of the
+    // doclen id column semi-joined against the (small) positive set —
+    // runs ONLY when positives exist, broadcasts only on evidence
+    val present =
       if (nPos == 0L) positives // empty, right schema: anti-join keeps all
-      else spark.read.parquet(s"$path/$table").select(col("id"))
+      else IndexStore.read(spark, path, m, "doclen").select(col("id"))
         .join(if (nPos <= Dedup.BatchBroadcastCap) broadcast(positives) else positives,
           Seq("id"), "left_semi")
-        .distinct()
-    // pin both deltas BEFORE appending to the dirs their plans read; the
-    // delta's term-partition modulus is the INDEX's (meta.json) — a fold
-    // must extend the existing layout, never re-derive its own
-    val freshP = postingsOf(newDocs, idCol, text, meta.tp)
-      .join(presentIn("postings"), Seq("id"), "left_anti")
+        .distinct().localCheckpoint()
+    val toks = tokenizedOf(newDocs, idCol, text)
+    val freshD = doclenFromToks(toks).join(present, Seq("id"), "left_anti")
       .localCheckpoint()
-    val freshD = doclenOf(newDocs, idCol, text)
-      .join(presentIn("doclen"), Seq("id"), "left_anti")
-      .localCheckpoint()
-    val freshIds = freshD.select(col("id")).union(freshP.select(col("id"))).distinct()
-    val delta =
-      if (freshIds.isEmpty) Dedup.emptyBloom(spark, items, fpp)
-      else freshIds.select(xxhash64(col("id")).as("__k"))
-        .stat.bloomFilter("__k", items, fpp)
-    // sketch BEFORE tables; intent marker BEFORE the appends (see scaladoc)
-    bloom.mergeInPlace(delta)
-    Dedup.writeBloomFileAtomic(spark, path, bloom, items, fpp)
-    // the intent marker carries id_col (round 15): while meta.json is in
-    // flight — including this fold's own rewrite below — the marker is
-    // the id column's recoverable backup
-    Dedup.writeTextFile(spark, s"$path/stats.dirty",
-      s"""{"id_col":"$idCol","tp":${meta.tp}}""")
-    freshP.write.mode("append").partitionBy("__tp").parquet(s"$path/postings")
-    freshD.write.mode("append").parquet(s"$path/doclen")
-    val (dn, dsum) = bm25AggDoclen(freshD) // pinned delta: exact by additivity
-    writeBm25Meta(spark, path,
-      Bm25Meta(idCol, meta.nDocs + dn, meta.sumDl + dsum, items, fpp, meta.tp))
-    val (dfs, dirtyP) = Dedup.hadoopFs(spark, s"$path/stats.dirty")
-    dfs.delete(dirtyP, false)
-    val (fs, dp) = Dedup.hadoopFs(spark, s"$path/doclen")
-    val parts = fs.listStatus(dp).count(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    if (autoCompactAt > 0 && parts >= autoCompactAt) {
-      System.err.println(
-        s"""{"index_auto_compact":${"\"" + path + "\""},"part_files":$parts,"trigger":$autoCompactAt}""")
-      compactBm25Index(spark, path)
-    }
+    if (freshD.isEmpty) return
+    bloom.mergeInPlace(freshD.select(xxhash64(col("id")).as("__k"))
+      .stat.bloomFilter("__k", items, fpp))
+    val v = m.version + 1
+    // the delta's term-partition modulus is the INDEX's — a fold must
+    // extend the existing layout, never re-derive its own
+    val postings = IndexStore.writeTable(path, "postings", v,
+      postingsFromToks(toks, meta.tp).join(present, Seq("id"), "left_anti"), Seq("__tp"))
+    val (doclen, dn, dsum) = writeDoclen(path, v, freshD)
+    val next = IndexStore.commit(spark, path, IndexStore.Manifest(v,
+      meta.copy(nDocs = meta.nDocs + dn, sumDl = meta.sumDl + dsum).toMap,
+      Map("postings" -> (m.tables("postings") :+ postings), "doclen" -> (m.tables("doclen") :+ doclen)),
+      IndexStore.writeSketch(spark, path, v, bloom, items, fpp)))
+    Dedup.autoCompactTarget(spark, path, Seq((next.files("doclen"), next.bytes("doclen"))),
+      autoCompactAt).foreach(compactBm25Index(spark, path, _))
   }
 
-  /** Collapse accumulated delta part files under the shared
-    * staging+marker swap. The postings rewrite goes through
-    * `repartition(__tp)` so the term-partition layout (and its probe
-    * pruning) survives — a plain coalesce would collapse it. Compaction
-    * preserves rows, so the meta counters are re-derived from the
-    * compacted doclen as an exact cross-check (a mismatch means a bug,
-    * not drift — fail loud).
+  /** Collapse accumulated fold dirs: rewrite both tables and commit an
+    * [[IndexStore]] version naming only the rewritten dirs. The postings
+    * rewrite goes through `repartition(__tp)` so the term-partition
+    * layout (and its probe pruning) survives — a plain coalesce would
+    * collapse it. Compaction preserves rows, so the rewritten doclen's
+    * counters must equal the manifest's — a mismatch means a bug, not
+    * drift: fail loud, before the commit.
     */
   def compactBm25Index(spark: SparkSession, path: String, targetFiles: Int = 1): Unit = {
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    Dedup.finishBatchCompaction(spark, path)
-    val meta = healBm25Stats(spark, path)
-    spark.read.parquet(s"$path/postings")
-      .repartition(col("__tp"))
-      .write.mode("overwrite").partitionBy("__tp").parquet(s"$path/postings.staging")
-    spark.read.parquet(s"$path/doclen").coalesce(targetFiles)
-      .write.mode("overwrite").parquet(s"$path/doclen.staging")
-    Dedup.publishBatchMarker(spark, path, Seq("postings", "doclen"))
-    Dedup.finishBatchCompaction(spark, path)
-    val (n, s) = bm25AggDoclen(spark.read.parquet(s"$path/doclen"))
+    val m = IndexStore.latest(spark, path)
+    val meta = bm25Meta(m)
+    val v = m.version + 1
+    val postings = IndexStore.writeTable(path, "postings", v,
+      IndexStore.read(spark, path, m, "postings").repartition(col("__tp")), Seq("__tp"))
+    val (doclen, n, s) = writeDoclen(path, v,
+      IndexStore.read(spark, path, m, "doclen").coalesce(targetFiles))
     require(n == meta.nDocs && s == meta.sumDl,
       s"BM25 meta counters diverged from doclen after compaction at $path: " +
         s"meta=(${meta.nDocs}, ${meta.sumDl}) table=($n, $s)")
+    IndexStore.commit(spark, path, m.copy(version = v,
+      tables = Map("postings" -> Seq(postings), "doclen" -> Seq(doclen))))
   }
 
   /** Score fresh queries against the persisted index WITHOUT touching
@@ -1335,18 +1159,16 @@ object TextStats {
     * terms' hash partitions (directory pruning) and semi-joins the
     * survivors, then runs the exact same scoring tail as the live
     * [[bm25]] (shared code — x137 additionally pins value-equality).
-    * (N, avgdl) read from meta.json's exact additive counters — the
+    * (N, avgdl) read from the manifest's exact additive counters — the
     * probe plan touches ONLY the pruned postings partitions, no doclen
     * scan (round 14; r13 re-aggregated the full doclen per probe).
-    * Heals an interrupted compaction swap and stale counters first.
     */
   def probeBm25Index(spark: SparkSession, path: String,
       queries: DataFrame, qIdCol: String, qText: Column,
       k1: Double = 1.2, b: Double = 0.75,
       queryBroadcastCap: Long = Dedup.BatchBroadcastCap): DataFrame = {
-    Dedup.finishBatchCompaction(spark, path)
-    val meta = healBm25Stats(spark, path)
-    require(meta.nDocs > 0, s"BM25 index at $path is empty — rebuild with writeBm25Index")
+    val m = IndexStore.latest(spark, path)
+    val meta = bm25Meta(m) // never empty: the build refuses an empty corpus
     // avgdl = sum/n over integer token counts ≡ the live path's avg()
     // (Spark's Average over integral doubles is the same exact sum, same
     // IEEE division) — x137/x138 pin the value equality end-to-end
@@ -1369,7 +1191,7 @@ object TextStats {
     val tps = slotCounts.map(_.getLong(0).toInt)
     val small = slotCounts.map(_.getLong(1)).sum <= queryBroadcastCap
     def gated(f: DataFrame): DataFrame = if (small) broadcast(f) else f
-    val tf = spark.read.parquet(s"$path/postings")
+    val tf = IndexStore.read(spark, path, m, "postings")
       .filter(col("__tp").isin(tps: _*))
       .join(gated(qTerms.select(col("__term")).distinct()), Seq("__term"), "left_semi")
       .select(col("id").as(meta.idCol), col("__term"), col("__tf"), col("__dl"))
@@ -1397,11 +1219,11 @@ object TextStats {
     corpus.join(hits, Seq(idCol), "left_anti")
   }
 
-  /** The id column a persisted BM25 index was built over (from
-    * meta.json) — for callers composing over [[probeBm25Index]] results.
+  /** The id column a persisted BM25 index was built over (from its
+    * manifest) — for callers composing over [[probeBm25Index]] results.
     */
   def bm25IndexIdCol(spark: SparkSession, path: String): String =
-    bm25MetaIdCol(spark, path)
+    IndexStore.latest(spark, path).string("id_col")
 
   /** [[bm25Decontaminate]] with the retrieval served from a persisted
     * postings index — the daily-sweep shape: fresh benchmark queries
@@ -1414,7 +1236,7 @@ object TextStats {
       corpus: DataFrame, queries: DataFrame, qIdCol: String, qText: Column,
       k: Int, minScore: Double = 0.0,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val idCol = bm25MetaIdCol(spark, indexPath)
+    val idCol = bm25IndexIdCol(spark, indexPath)
     val hits = bm25RankCut(
         probeBm25Index(spark, indexPath, queries, qIdCol, qText, k1, b),
         qIdCol, idCol, k)

@@ -491,12 +491,17 @@ object ParityProbes {
        |  WHERE rn = 1 AND shipping_id IS NOT NULL)""".stripMargin
   }
 
+  /** Drop every stage [[parcelStage]] made: its dir and catalog table. */
+  def dropStages(s: SparkSession): Unit =
+    Option(new java.io.File(graft.TmpDir.root).listFiles((_, n) => n.startsWith("parcel_flat_stage_")))
+      .foreach(_.foreach(d => EtlJob.dropStage(s, d.getPath)))
+
   /** The probes' fixture — the events table synthesized as the ETL's JSON
     * payload, parsed and flattened — staged by [[EtlJob.stage]] under
-    * TmpDir with the `parcel_flat_stage_` prefix, which the bench's sweeper
-    * reclaims. Fan out first: events.parquet is a single row-group at test
-    * SFs, so the to_json synth + from_json parse would otherwise run on one
-    * core. Unique per call: concurrent suites sharing the session must
+    * TmpDir with the `parcel_flat_stage_` prefix, which [[dropStages]]
+    * reclaims. Fan out first: events.parquet is a single row-group at
+    * test SFs, so the to_json synth + from_json parse would otherwise run
+    * on one core. Unique per call: concurrent suites sharing the session must
     * never overwrite a stage another build is still lazily reading.
     */
   private def parcelStage(s: SparkSession, dir: String): DataFrame = {

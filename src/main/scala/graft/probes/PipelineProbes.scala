@@ -129,14 +129,14 @@ object PipelineProbes {
   //   indistinguishable from the live path, false-positive pruning and
   //   all. Index version token + source token key the cache dir, so a
   //   formula change or an in-place fixture regen rebuilds the index.
-  private val X57IndexV = "v1"
+  private val X57IndexV = "v2"
   private def x57Index(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val srcTok = graft.TmpDir.sourceToken(s"$dir/documents.parquet")
     val path = s"${graft.TmpDir.root}/tmp/x57_hashidx_${X57IndexV}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcTok"
-    // bloom.bin is written LAST by writeHashIndex, so its presence marks a
+    // writeHashIndex commits last, so a committed version marks a
     // complete index
-    if (!new java.io.File(s"$path/bloom.bin").exists()) synchronized {
-      if (!new java.io.File(s"$path/bloom.bin").exists())
+    if (!IndexStore.committed(s, path)) synchronized {
+      if (!IndexStore.committed(s, path))
         Dedup.writeHashIndex(Readers.fanOut(t(s, dir, "documents")), "doc_id", "text",
           path, expectedItems = 1000L)
     }
@@ -175,7 +175,7 @@ object PipelineProbes {
   //   persisted near-dup path must classify every batch row identically
   //   to the live operator, so it shares x21's full per-row value oracle
   //   (banding recall is exactly 1.0 on this fixture, same pin as x21).
-  private val X59IndexV = "v1"
+  private val X59IndexV = "v2"
   private def x59Index(s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val srcTok = graft.TmpDir.sourceToken(s"$dir/documents.parquet")
     val base = s"${graft.TmpDir.root}/tmp/x59_bandidx_${X59IndexV}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcTok"

@@ -714,14 +714,11 @@ object StreamingIngest {
   /** Streaming arm of the persisted BM25 postings index
     * ([[graft.ops.TextStats.appendToBm25Index]]): each micro-batch of
     * documents folds into the postings + doclen tables. Exactly-once by
-    * ANTI-JOIN idempotence (no ledger, no partition exclusion): a
-    * crash-replayed micro-batch's per-table deltas anti-join against
-    * the ids its first attempt already appended and land empty — and
-    * the two tables heal INDEPENDENTLY (a crash between the postings
-    * and doclen writes leaves one table behind; the replay's anti-join
-    * re-appends exactly the missing table's rows). Initializes an empty
-    * index on first touch; compaction (staging+marker, term layout
-    * preserved) rides the append's auto-compact trigger.
+    * ANTI-JOIN idempotence over atomic commits: a crash-replayed
+    * micro-batch finds its first attempt either committed (its anti-join
+    * lands empty) or absent. The first NON-EMPTY batch builds the index;
+    * an empty batch before then is skipped. Compaction rides the
+    * append's auto-compact trigger.
     */
   def bm25IndexSink(docs: DataFrame, indexPath: String, checkpoint: String,
       idCol: String, textCol: String = "text")
@@ -731,16 +728,7 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        graft.ops.Dedup.finishBatchCompaction(spark, indexPath)
-        val mp = new org.apache.hadoop.fs.Path(s"$indexPath/meta.json")
-        val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // first NON-EMPTY batch BUILDS the index (meta.json written last =
-        // complete; a crash mid-build rebuilds on replay via the
-        // overwrite) — an empty build would write a partitioned parquet
-        // dir with no part files, which is unreadable forever (ADVICE
-        // r13), so an empty batch before the index exists is skipped
-        // entirely, leaving meta.json absent; later batches append
-        if (!fs.exists(mp)) {
+        if (!graft.ops.IndexStore.committed(spark, indexPath)) {
           if (!batch.isEmpty)
             // explicit full-size sketch: a stream's FIRST micro-batch says
             // nothing about the eventual corpus, so the batch-count

@@ -874,10 +874,12 @@ class OpsSpec extends SparkSpec {
       r.unpersist(); rows
     }
     val textBefore = classifyText()
-    assert(partFiles(s"$base/hash/hashes") >= 3, "appends must have accumulated parts")
+    // the hash table's part files, as its committed manifest names them
+    def hashFiles(): Int = IndexStore.latest(spark, s"$base/hash").files("hashes")
+    assert(hashFiles() >= 3, "appends must have accumulated parts")
     Dedup.compactHashIndex(spark, s"$base/hash")
     Dedup.compactBandIndex(spark, s"$base/band")
-    assert(partFiles(s"$base/hash/hashes") == 1, "hash table must fold to one file")
+    assert(hashFiles() == 1, "hash table must fold to one file")
     assert(partFiles(s"$base/band/shingles") == 1 && partFiles(s"$base/band/bands") == 1,
       "band tables must fold to one file")
     assert(classifyText() == textBefore, "text classification changed after compaction")
@@ -925,34 +927,32 @@ class OpsSpec extends SparkSpec {
   test("auto-compaction: appends past the part-file trigger fold in place; classification unchanged") {
     val base = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(graft.TmpDir.root), "autoCompact").toString
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def partFiles(dir: String): Int =
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/part-*")))
-        .map(_.length).getOrElse(0)
+    // the hash table's part files and write dirs, as its committed
+    // manifest names them
+    def partFiles(): Int = IndexStore.latest(spark, s"$base/hash").files("hashes")
+    def writeDirs(): Int = IndexStore.latest(spark, s"$base/hash").tables("hashes").size
 
     val corpus = Seq((10L, "a b c d e f g h")).toDF("doc_id", "text")
     Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 100L)
-    val baselineFiles = partFiles(s"$base/hash/hashes")
+    val baselineFiles = partFiles()
     // appends below the trigger accumulate part files; the one that
     // crosses it folds the table automatically — no compact* call anywhere
     val trigger = baselineFiles + 3
     var i = 0L
-    while (partFiles(s"$base/hash/hashes") < trigger - 1) {
+    while (partFiles() < trigger - 1) {
       Dedup.appendToHashIndex(spark, s"$base/hash",
         Seq((100L + i, s"unique doc number $i body")).toDF("doc_id", "text"),
         "doc_id", "text", autoCompactAt = trigger)
       i += 1
     }
-    val before = partFiles(s"$base/hash/hashes")
+    val before = partFiles()
     assert(before >= trigger - 1 && before < trigger, s"drill setup: $before files")
     Dedup.appendToHashIndex(spark, s"$base/hash",
       Seq((999L, "the crossing append body")).toDF("doc_id", "text"),
       "doc_id", "text", autoCompactAt = trigger)
-    val after = partFiles(s"$base/hash/hashes")
+    val after = partFiles()
     assert(after < trigger, s"append past the trigger must fold the table, got $after files")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/hash/_compacting_batch.json")),
-      "the fold must consume its marker")
+    assert(writeDirs() == 1, "the fold must commit the table as one rewritten dir")
     // every appended doc still classifies exact_dup against the folded table
     val batch = ((0L until i).map(k => (5000L + k, s"unique doc number $k body")) :+
       ((9000L, "the crossing append body")) :+ ((9001L, "never seen before text")))
@@ -968,7 +968,7 @@ class OpsSpec extends SparkSpec {
     Dedup.appendToHashIndex(spark, s"$base/hash",
       Seq((1000L, "another unique body")).toDF("doc_id", "text"),
       "doc_id", "text", autoCompactAt = 0)
-    assert(partFiles(s"$base/hash/hashes") > after, "autoCompactAt=0 must not fold")
+    assert(partFiles() > after, "autoCompactAt=0 must not fold")
   }
 
   test("batch index compaction crash drills: pre-marker staging never publishes; post-marker swap self-heals on read") {
@@ -976,6 +976,10 @@ class OpsSpec extends SparkSpec {
       java.nio.file.Paths.get(graft.TmpDir.root), "batchCrash").toString
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+    // hash index (manifest-committed, IndexStore): a write dir no manifest
+    // names — what a crash before the commit leaves — is never read, and
+    // the next commit at that version replaces it
     val corpus = Seq((10L, "a b c d e f g h")).toDF("doc_id", "text")
     Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 100L)
     Dedup.appendToHashIndex(spark, s"$base/hash",
@@ -990,34 +994,54 @@ class OpsSpec extends SparkSpec {
     }
     val expect = Seq((100L, "exact_dup", Some(10L)), (101L, "exact_dup", Some(20L)))
     assert(classify() == expect)
-    // pre-marker crash: poison staging, NO marker — a plain read must not
-    // see it, and the next compaction must sweep (not publish) it
-    Seq(("POISON", 999L)).toDF("__h", "__exact_of")
-      .write.parquet(s"$base/hash/hashes.staging")
-    assert(classify() == expect, "an unpublished staging dir leaked into a read")
+    val orphan = s"$base/hash/hashes/__w=${IndexStore.nextVersion(spark, s"$base/hash")}"
+    Seq(("POISON", 999L)).toDF("__h", "__exact_of").write.parquet(orphan)
+    assert(classify() == expect, "an uncommitted write dir leaked into a read")
     Dedup.compactHashIndex(spark, s"$base/hash")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/hash/hashes.staging")))
-    assert(classify() == expect, "compaction after a pre-marker crash corrupted the table")
+    assert(classify() == expect, "compaction over an orphan write dir corrupted the table")
+    assert(IndexStore.read(spark, s"$base/hash", IndexStore.latest(spark, s"$base/hash"), "hashes")
+      .filter($"__h" === "POISON").isEmpty, "the orphan's rows must not survive the next commit")
+
+    // paragraph index (staging + marker swap, Dedup.compactBatchIndex)
+    val para = s"$base/para"
+    Dedup.writeParagraphIndex(Seq((1L, "alpha\nshared line"), (2L, "beta\nother"))
+      .toDF("doc_id", "text"), "doc_id", "text", para, expectedItems = 100L)
+    Dedup.appendToParagraphIndex(spark, para,
+      Seq((3L, "gamma\nmore")).toDF("doc_id", "text"), "doc_id", "text")
+    val pbatch = Seq((100L, "shared line\ngamma\nfresh para")).toDF("doc_id", "text")
+    def classifyPara() =
+      Dedup.incrementalParagraphIndexed(Dedup.readParagraphIndex(spark, para), pbatch,
+        "doc_id", "text").orderBy("doc_id").as[(Long, String)].collect().toSeq
+    val pexpect = Seq((100L, "fresh para"))
+    assert(classifyPara() == pexpect)
+    // pre-marker crash: poison staging (an EMPTY table: published, every
+    // paragraph would read new), NO marker — a plain read must not see
+    // it, and the next compaction must sweep (not publish) it
+    spark.read.parquet(s"$para/paras").limit(0).write.parquet(s"$para/paras.staging")
+    assert(classifyPara() == pexpect, "an unpublished staging dir leaked into a read")
+    Dedup.compactParagraphIndex(spark, para)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$para/paras.staging")))
+    assert(classifyPara() == pexpect, "compaction after a pre-marker crash corrupted the table")
     // post-marker crash: stage (marker published), swap never ran — the
     // next READER must complete the swap before scanning
-    Dedup.appendToHashIndex(spark, s"$base/hash",
-      Seq((21L, "z y x w v u t s")).toDF("doc_id", "text"), "doc_id", "text")
-    Dedup.stageBatchCompaction(spark, s"$base/hash", Seq("hashes"), targetFiles = 1)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$base/hash/_compacting_batch.json")))
-    assert(classify() == expect, "self-heal read after a post-marker crash misclassified")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/hash/_compacting_batch.json")),
+    Dedup.appendToParagraphIndex(spark, para,
+      Seq((4L, "delta\nepsilon")).toDF("doc_id", "text"), "doc_id", "text")
+    Dedup.stageBatchCompaction(spark, para, Seq("paras"), targetFiles = 1)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$para/_compacting_batch.json")))
+    assert(classifyPara() == pexpect, "self-heal read after a post-marker crash misclassified")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$para/_compacting_batch.json")),
       "the reader must consume the marker")
     assert(Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$base/hash/hashes/part-*"))).map(_.length).getOrElse(0) == 1,
+      new org.apache.hadoop.fs.Path(s"$para/paras/part-*"))).map(_.length).getOrElse(0) == 1,
       "the healed table must be the compacted copy")
     // and a re-staged run over a published marker completes the prior swap
     // first (the invalidate-marker-first discipline, ingest-protocol twin)
-    Dedup.appendToHashIndex(spark, s"$base/hash",
-      Seq((22L, "q q q q w w w w")).toDF("doc_id", "text"), "doc_id", "text")
-    Dedup.stageBatchCompaction(spark, s"$base/hash", Seq("hashes"), targetFiles = 1)
-    Dedup.stageBatchCompaction(spark, s"$base/hash", Seq("hashes"), targetFiles = 1)
-    Dedup.finishBatchCompaction(spark, s"$base/hash")
-    assert(classify() == expect, "double-stage over a live marker corrupted the table")
+    Dedup.appendToParagraphIndex(spark, para,
+      Seq((5L, "zeta\neta")).toDF("doc_id", "text"), "doc_id", "text")
+    Dedup.stageBatchCompaction(spark, para, Seq("paras"), targetFiles = 1)
+    Dedup.stageBatchCompaction(spark, para, Seq("paras"), targetFiles = 1)
+    Dedup.finishBatchCompaction(spark, para)
+    assert(classifyPara() == pexpect, "double-stage over a live marker corrupted the table")
   }
 
   test("ingest index compaction: a re-run over a published marker completes the prior fold before sweeping staging") {
@@ -2257,28 +2281,29 @@ class OpsSpec extends SparkSpec {
   }
 
   test("index append sketch-before-table: phantom hash-index keys never flip classification") {
-    // the appendToHashIndex ordering fix: simulate the crash window's
-    // keys-without-rows state and assert the probe still classifies
-    // through the exact verify join (false positives cost a join probe,
-    // never a wrong status)
+    // keys in the sketch without rows (here: committed on purpose, the
+    // exact digests a batch WOULD add) are false positives: the probe
+    // still classifies through the exact verify join
     val base = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(graft.TmpDir.root), "hashIdxCrash").toString
     val corpus = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
     Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 100L)
     val idx = Dedup.readHashIndex(spark, s"$base/hash")
-    // phantom keys = the exact digests a crashed append WOULD have added
     val batch = Seq((10L, "gamma"), (11L, "alpha")).toDF("doc_id", "text")
     idx.bloom.mergeInPlace(
       batch.select(xxhash64(sha2(
           concat(isnull(col("text")).cast("string"), coalesce(col("text"), lit(""))),
           256)).as("__k"))
         .stat.bloomFilter("__k", idx.expectedItems, idx.fpp))
-    Dedup.writeBloomFileAtomic(spark, s"$base/hash", idx.bloom, idx.expectedItems, idx.fpp)
+    val m = IndexStore.latest(spark, s"$base/hash")
+    IndexStore.commit(spark, s"$base/hash", m.copy(version = m.version + 1,
+      sketch = IndexStore.writeSketch(spark, s"$base/hash", m.version + 1, idx.bloom,
+        idx.expectedItems, idx.fpp)))
     val st = Dedup.incrementalExactIndexed(Dedup.readHashIndex(spark, s"$base/hash"),
         batch, "doc_id", "text")
       .select("doc_id", "status").as[(Long, String)].collect().toMap
     assert(st == Map(10L -> "new", 11L -> "exact_dup"), s"got $st")
-    // and the retry append still inserts the rows the crash lost
+    // and the next append still inserts the rows the sketch already claims
     Dedup.appendToHashIndex(spark, s"$base/hash", batch, "doc_id", "text")
     val st2 = Dedup.incrementalExactIndexed(Dedup.readHashIndex(spark, s"$base/hash"),
         Seq((20L, "gamma")).toDF("doc_id", "text"), "doc_id", "text")
@@ -2973,13 +2998,15 @@ class OpsSpec extends SparkSpec {
     val q = corpus.filter($"id" % 83 === 1)
       .select(($"id" * 100).as("qid"),
         concat_ws(" ", slice(ops.TextStats.tokens($"text"), 1, 3)).as("qt"))
+    // a table as the index's committed manifest names it
+    def table(t: String) = IndexStore.read(spark, path, IndexStore.latest(spark, path), t)
     ops.TextStats.writeBm25Index(a, "id", $"text", path)
     ops.TextStats.appendToBm25Index(spark, path, b, "id", $"text")
-    val nPostings = spark.read.parquet(s"$path/postings").count()
+    val nPostings = table("postings").count()
     ops.TextStats.appendToBm25Index(spark, path, b, "id", $"text")
-    assert(spark.read.parquet(s"$path/postings").count() == nPostings,
+    assert(table("postings").count() == nPostings,
       "replayed append must anti-join to nothing")
-    assert(spark.read.parquet(s"$path/doclen").count() == corpus.count())
+    assert(table("doclen").count() == corpus.count())
     // round6-quantized compare: the two paths sum identical per-term
     // contributions in different partition orders (IEEE add order)
     def r6(df: org.apache.spark.sql.DataFrame) = df
@@ -2995,14 +3022,15 @@ class OpsSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("__tp"),
       s"probe must carry a __tp partition filter:\n${plan.take(2000)}")
-    // compaction preserves values + layout; post-marker crash heals on probe
+    // compaction preserves values + layout; what a writer that crashed
+    // before its commit leaves (a write dir at the next version) is
+    // never read
     ops.TextStats.compactBm25Index(spark, path)
     assert(probe() == live, "compaction must not move scores")
-    spark.read.parquet(s"$path/doclen")
-      .write.mode("overwrite").parquet(s"$path/doclen.staging")
-    ops.Dedup.publishBatchMarker(spark, path, Seq("doclen"))
-    assert(probe() == live, "probe after a post-marker crash must heal and score identically")
-    // id-column contract is pinned in meta.json
+    table("doclen").limit(1)
+      .write.parquet(s"$path/doclen/__w=${IndexStore.nextVersion(spark, path)}")
+    assert(probe() == live, "probe after a pre-commit crash must score identically")
+    // id-column contract is pinned in the manifest
     val e = intercept[IllegalArgumentException] {
       ops.TextStats.appendToBm25Index(spark, path, b.withColumnRenamed("id", "x"), "x", $"text")
     }
@@ -3010,49 +3038,31 @@ class OpsSpec extends SparkSpec {
 
     // — round 14: meta counters + bloom-pruned fold invariants ——————————
     // the probe plan reads ONLY the pruned postings — no doclen scan
-    // (N/avgdl come from meta.json's exact additive counters)
+    // (N/avgdl come from the manifest's exact additive counters)
     assert(!plan.contains("doclen"),
       s"probe plan must not scan doclen (meta counters):\n${plan.take(2000)}")
-    // the id sketch exists and the meta counters equal the table's
-    assert(new java.io.File(s"$path/bloom.bin").exists(), "fold sketch must persist")
-    val metaTxt = ops.Dedup.readTextFile(spark, s"$path/meta.json")
-    val nDocs = """"n_docs"\s*:\s*([0-9]+)""".r.findFirstMatchIn(metaTxt).get.group(1).toLong
-    val sumDl = """"sum_dl"\s*:\s*([0-9]+)""".r.findFirstMatchIn(metaTxt).get.group(1).toLong
-    val agg = spark.read.parquet(s"$path/doclen")
+    // the id sketch exists and the manifest's counters equal the table's
+    val m = IndexStore.latest(spark, path)
+    assert(new java.io.File(s"$path/${m.sketch}").exists(), "fold sketch must persist")
+    val agg = table("doclen")
       .agg(org.apache.spark.sql.functions.count(lit(1)),
         org.apache.spark.sql.functions.sum($"__dl".cast("long")))
       .as[(Long, Long)].head()
-    assert((nDocs, sumDl) == agg, s"meta counters ($nDocs,$sumDl) must equal doclen $agg")
-    // stats.dirty intent marker: a crash between the table appends and
-    // the meta update heals — stale counters re-derive from doclen
-    ops.Dedup.writeTextFile(spark, s"$path/meta.json",
-      s"""{"id_col":"id","n_docs":1,"sum_dl":1}""") // corrupt the counters
-    ops.Dedup.writeTextFile(spark, s"$path/stats.dirty", "{}")
-    assert(probe() == live, "probe must heal dirty counters and score identically")
-    assert(!new java.io.File(s"$path/stats.dirty").exists(), "heal must clear the marker")
-    // legacy (pre-round-14) index: no counters in meta, no bloom.bin —
-    // the next fold heals both and the probe still equals live
-    ops.Dedup.writeTextFile(spark, s"$path/meta.json", """{"id_col":"id"}""")
-    assert(new java.io.File(s"$path/bloom.bin").delete())
-    ops.TextStats.appendToBm25Index(spark, path, b, "id", $"text") // all dup: no-op
-    assert(spark.read.parquet(s"$path/doclen").count() == corpus.count(),
-      "legacy-heal replay must anti-join to nothing")
-    assert(new java.io.File(s"$path/bloom.bin").exists(), "fold must rebuild a missing sketch")
-    assert(probe() == live, "legacy heal must leave scores identical")
+    assert((m.long("n_docs"), m.long("sum_dl")) == agg,
+      s"manifest counters (${m.long("n_docs")},${m.long("sum_dl")}) must equal doclen $agg")
     // building an EMPTY index fails loud (an empty partitionBy dir would
-    // be unreadable forever) and leaves no meta.json behind
+    // be unreadable forever) and commits no manifest
     val path2 = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(graft.TmpDir.root), "bm25empty").toString
     val e2 = intercept[IllegalArgumentException] {
       ops.TextStats.writeBm25Index(corpus.filter($"id" < 0), "id", $"text", path2)
     }
     assert(e2.getMessage.contains("EMPTY"), e2.getMessage)
-    assert(!new java.io.File(s"$path2/meta.json").exists(),
-      "a refused empty build must not stamp meta.json")
+    assert(!IndexStore.committed(spark, path2), "a refused empty build must commit no manifest")
   }
 
-  test("BM25 index round-15 crash/contract drills: lost meta heals from the marker, " +
-      "bloom rebuilds at pinned params, duplicate-id batch fails loud") {
+  test("BM25 index round-15 contract drills: the fold's sketch keeps the build's pinned params, " +
+      "duplicate-id batch fails loud") {
     val path = java.nio.file.Files.createTempDirectory(
       java.nio.file.Paths.get(graft.TmpDir.root), "bm25r15").toString
     val corpus = docs.select($"doc_id".as("id"), $"text")
@@ -3065,48 +3075,38 @@ class OpsSpec extends SparkSpec {
       .select($"qid", $"id", graft.Canonical.round6($"bm25").as("bm25"))
       .orderBy("qid", "id").as[(Long, Long, Double)].collect().toSeq
     def probe() = r6(ops.TextStats.probeBm25Index(spark, path, q, "qid", $"qt"))
+    def doclen() = IndexStore.read(spark, path, IndexStore.latest(spark, path), "doclen")
 
-    // custom sketch sizing pinned in meta.json (advice r15): a lost
-    // bloom.bin must rebuild at the BUILD's params, not the defaults
+    // custom sketch sizing pinned in the manifest (advice r15): a fold's
+    // sketch must keep the BUILD's params, not the defaults
     ops.TextStats.writeBm25Index(a, "id", $"text", path,
       expectedItems = 1234L, fpp = 0.05)
-    val metaTxt = ops.Dedup.readTextFile(spark, s"$path/meta.json")
-    assert(metaTxt.contains("\"bloom_items\":1234") && metaTxt.contains("\"bloom_fpp\":0.05"),
-      s"build params must ride meta.json: $metaTxt")
-    assert(new java.io.File(s"$path/bloom.bin").delete())
+    val built = IndexStore.latest(spark, path)
+    assert(built.long("bloom_items") == 1234L && built.double("bloom_fpp") == 0.05,
+      s"build params must ride the manifest: ${built.meta}")
     ops.TextStats.appendToBm25Index(spark, path, b, "id", $"text")
+    val folded = IndexStore.latest(spark, path)
+    assert(folded.sketch != built.sketch, "the fold must commit a fresh sketch")
     val (fs, _) = ops.Dedup.hadoopFs(spark, path)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/bloom.bin"))
+    val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/${folded.sketch}"))
     val dis = new java.io.DataInputStream(in)
     val (items, fpp) = try (dis.readLong(), dis.readDouble()) finally in.close()
     assert((items, fpp) == ((1234L, 0.05)),
-      s"rebuilt sketch must use the pinned params, got ($items, $fpp)")
+      s"the fold's sketch must use the pinned params, got ($items, $fpp)")
     val live = r6(ops.TextStats.bm25(corpus, "id", $"text", q, "qid", $"qt"))
-    assert(probe() == live, "probe after the param-pinned rebuild must equal live")
-
-    // the one crash the r14 layout could not survive: meta.json LOST
-    // mid-rewrite (atomic-swap worst case) while the fold's intent
-    // marker is pending — id_col now heals from the marker, counters
-    // from doclen, and the index keeps working
-    ops.Dedup.writeTextFile(spark, s"$path/stats.dirty", """{"id_col":"id"}""")
-    assert(new java.io.File(s"$path/meta.json").delete())
-    assert(probe() == live, "probe must reconstruct meta from marker + doclen")
-    val healed = ops.Dedup.readTextFile(spark, s"$path/meta.json")
-    assert(healed.contains("\"id_col\":\"id\"") && healed.contains("\"n_docs\""),
-      s"heal must rewrite a complete meta.json: $healed")
-    assert(!new java.io.File(s"$path/stats.dirty").exists(), "heal must clear the marker")
+    assert(probe() == live, "probe after the param-pinned fold must equal live")
 
     // duplicate ids inside one batch: fail loud BEFORE any mutation
     // (different text under one id would make live and indexed scores
     // diverge via the partition-order first(__dl))
-    val nBefore = spark.read.parquet(s"$path/doclen").count()
+    val nBefore = doclen().count()
     val dup = Seq((999999L, "aa bb"), (999999L, "aa bb cc dd ee")).toDF("id", "text")
     val e = intercept[IllegalArgumentException] {
       ops.TextStats.appendToBm25Index(spark, path, dup, "id", $"text")
     }
     assert(e.getMessage.contains("duplicated"), e.getMessage)
-    assert(spark.read.parquet(s"$path/doclen").count() == nBefore,
-      "a refused fold must not have touched the tables")
+    assert(doclen().count() == nBefore && IndexStore.latest(spark, path) == folded,
+      "a refused fold must not have touched the index")
 
     // writeTextFile is atomic: the destination is only ever whole, and
     // no .__tmp residue survives a completed write

@@ -222,7 +222,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(r2 == Seq((201L, "exact_dup", Some(102L)), (202L, "exact_dup", Some(104L)),
       (203L, "exact_dup", Some(5L)), (204L, "new", None)), s"got $r2")
     Dedup.appendToHashIndex(spark, path, b2, "doc_id", "text")
-    val hashes = spark.read.parquet(s"$path/hashes")
+    val hashes = IndexStore.read(spark, path, IndexStore.latest(spark, path), "hashes")
     assert(hashes.count() == 23, "20 base + fresh a/b/c — idempotent re-append must not duplicate")
     assert(hashes.groupBy("__h").count().filter($"count" > 1).isEmpty,
       "hash table must stay unique after appends")

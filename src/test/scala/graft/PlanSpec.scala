@@ -499,7 +499,8 @@ class PlanSpec extends SparkSpec {
     assert(reads.isEmpty,
       s"an all-new fold must not scan the index tables:\n${reads.mkString("\n")}")
     // and the fold actually landed (the prune didn't just skip the work)
-    assert(spark.read.parquet(s"$base/doclen").count() == docs.count(),
+    assert(graft.ops.IndexStore.read(spark, base, graft.ops.IndexStore.latest(spark, base), "doclen")
+        .count() == docs.count(),
       "fold must append the batch's doclen rows")
   }
 
@@ -523,7 +524,7 @@ class PlanSpec extends SparkSpec {
       docs, queries, "query_id", col("qtext"), k = 5, minScore = 1.0)
     val deconPlan = decon.queryExecution.executedPlan.toString
     // the retrieval side reads ONLY matched term partitions of the
-    // postings; (N, avgdl) ride meta.json, so doclen never appears
+    // postings; (N, avgdl) ride the manifest, so doclen never appears
     assert("""PartitionFilters: \[__tp#\d+ (INSET|IN \()""".r.findFirstIn(deconPlan).isDefined,
       s"decon sweep must prune postings partitions:\n${deconPlan.take(3000)}")
     assert(!deconPlan.linesIterator.exists(l =>

@@ -772,7 +772,8 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.size == 3, "docs 1-3 share query terms; doc 4 must be absent")
     // same-batch crash replay: batch 1's commit vanishes, the restart
     // re-folds it — the per-table anti-joins must land empty
-    val nPost = spark.read.parquet(s"$idx/postings").count()
+    def postings() = ops.IndexStore.read(spark, idx, ops.IndexStore.latest(spark, idx), "postings")
+    val nPost = postings().count()
     assert(new java.io.File(s"$ckp/commits/1").delete())
     new java.io.File(s"$ckp/commits/.1.crc").delete()
     val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
@@ -781,7 +782,7 @@ class StreamingSpec extends SparkSpec {
     val s2 = StreamingIngest.bm25IndexSink(
       spark.readStream.schema(schema).parquet(in), idx, ckp, "doc_id", "text")
     try s2.processAllAvailable() finally s2.stop()
-    assert(spark.read.parquet(s"$idx/postings").count() == nPost,
+    assert(postings().count() == nPost,
       "replayed fold must append nothing")
     assert(probe() == streamed, "replay must not move scores")
   }
@@ -789,7 +790,7 @@ class StreamingSpec extends SparkSpec {
   test("BM25 sink: an EMPTY first micro-batch is skipped, not built — the first real batch builds the index") {
     // ADVICE r13: an empty first batch used to write an empty
     // partitionBy postings dir (no part files, schema uninferable) and
-    // then stamp meta.json — permanently bricking every later fold
+    // then mark the index built — permanently bricking every later fold
     val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "bm25empty").toString
     val docs = Seq((1L, "cat sat"), (2L, "dog fog")).toDF("doc_id", "text")
     val schema = docs.schema
@@ -799,8 +800,8 @@ class StreamingSpec extends SparkSpec {
       spark.readStream.schema(schema).parquet(in), idx, ckp, "doc_id", "text")
     try {
       s1.processAllAvailable()
-      assert(!new java.io.File(s"$idx/meta.json").exists(),
-        "empty first batch must leave the index UNBUILT (no meta.json)")
+      assert(!ops.IndexStore.committed(spark, idx),
+        "empty first batch must leave the index UNBUILT (no manifest)")
       docs.write.mode("append").parquet(in) // batch 1: the real build
       s1.processAllAvailable()
     } finally s1.stop()

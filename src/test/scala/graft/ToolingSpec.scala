@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** The measurement tooling: [[Profile]]'s plan reading and its run on the
   * shared session, the guard that keeps `src/main` at one session builder
-  * and one profiling tool, and the guard that keeps the star-schema build
-  * and its stage in `graft.etl`.
+  * and one profiling tool, the guard that keeps the star-schema build
+  * and its stage in `graft.etl`, and the guard that keeps the
+  * manifest-committed index families free of markers and heal paths.
   */
 class ToolingSpec extends SparkSpec {
 
@@ -37,12 +38,22 @@ class ToolingSpec extends SparkSpec {
 
   test("Profile on a catalog query prints its jobs, writes its plan and leaves the session running") {
     val out = Files.createTempDirectory(Paths.get(TmpDir.root), "profile").toString
-    val lines = Profile.profile(spark, sf0001, Seq("q16_kpi_headline"), out)
+    val lines = Profile.profile(spark, sf0001, Seq("q16_kpi_headline", "q17_parcel_etl_fact"), out)
     assert(!lines.exists(_.contains("\"error\"")), lines.mkString("\n"))
     assert(lines.count(_.contains("\"job\":")) >= 1, lines.mkString("\n"))
-    assert(lines.exists(_.contains("\"timed_s\":")), lines.mkString("\n"))
+    assert(lines.count(_.contains("\"timed_s\":")) == 2, lines.mkString("\n"))
     val plan = Files.readString(Paths.get(out, "q16_kpi_headline.txt"))
     assert(plan.contains("== Physical Plan =="), plan)
+    // the plan the timed write ran, as adaptive execution finished it
+    assert(plan.contains("isFinalPlan=true") || plan.contains("== Final Plan =="), plan)
+    // every query is released: the parcel probe's stage leaves no dir and
+    // no catalog table behind
+    val stages = Option(new java.io.File(TmpDir.root)
+      .listFiles((_, n) => n.startsWith("parcel_flat_stage_"))).map(_.toSeq).getOrElse(Nil)
+    assert(stages.isEmpty, s"stage dirs left behind: $stages")
+    val tables = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("parcel_flat_stage_"))
+    assert(tables.isEmpty, s"stage tables left behind: ${tables.toSeq}")
     assert(!spark.sparkContext.isStopped)
     assert(spark.range(3).count() == 3)
   }
@@ -88,5 +99,21 @@ class ToolingSpec extends SparkSpec {
         bucketedCalls(text).exists(_.contains("\"shipping_id\""))
     }.map(_.getFileName.toString).sorted
     assert(offenders.isEmpty, s"files building the star schema or its stage outside graft.etl: $offenders")
+  }
+
+  test("the BM25 and hash index families keep no marker, intent file, layout file or heal path") {
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toVector
+    assert(sources.nonEmpty)
+    def naming(word: String): Vector[String] =
+      sources.filter(p => Files.readString(p).contains(word)).map(_.getFileName.toString).sorted
+    assert(naming("_manifest") == Vector("IndexStore.scala"),
+      s"only the index store may know its manifest dir: ${naming("_manifest")}")
+    assert(naming("stats.dirty").isEmpty && naming("layout.json").isEmpty,
+      s"intent or layout files: ${naming("stats.dirty") ++ naming("layout.json")}")
+    val textStats = Files.readString(Paths.get("src/main/scala/graft/ops/TextStats.scala"))
+    val swaps = Seq("finishBatchCompaction", "publishBatchMarker", "writeBloomFileAtomic",
+      "writeTextFile").filter(textStats.contains)
+    assert(swaps.isEmpty, s"TextStats still uses the marker/swap protocol: $swaps")
   }
 }
