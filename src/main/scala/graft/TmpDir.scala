@@ -43,4 +43,37 @@ object TmpDir {
         ((a * 1000003L + f.getPath.hashCode) * 1000003L + f.length) * 1000003L + f.lastModified)
     java.lang.Long.toHexString(mixed)
   }
+
+  private val buildLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** A build-once on-disk cache for a probe fixture or index, at
+    * `<root>/tmp/<name>_<version>_<dir slug>_<source token of sources>`.
+    * `build` runs once per path and a `_done` marker is written after it
+    * returns, so a build that did not finish is redone and a build of
+    * several steps (two indexes, a write then an append) counts only when
+    * its last step has. Bump `version` when the cached layout changes:
+    * building also deletes the caches of `name` under any other version.
+    */
+  def cached(name: String, version: String, dir: String, sources: String*)(
+      build: String => Unit): String = {
+    val path = s"$root/tmp/${name}_${version}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_" +
+      sourceToken(sources: _*)
+    val done = new java.io.File(path, "_done")
+    if (!done.exists()) buildLocks.computeIfAbsent(path, _ => new AnyRef).synchronized {
+      if (!done.exists()) {
+        build(path)
+        done.getParentFile.mkdirs()
+        if (!done.createNewFile()) throw new java.io.IOException(s"cache marker create failed at $done")
+        def delete(f: java.io.File): Unit = {
+          Option(f.listFiles()).foreach(_.foreach(delete))
+          f.delete()
+        }
+        Option(new java.io.File(s"$root/tmp").listFiles()).toSeq.flatten
+          .filter(f => f.getName.startsWith(s"${name}_") &&
+            !f.getName.startsWith(s"${name}_${version}_"))
+          .foreach(delete)
+      }
+    }
+    path
+  }
 }

@@ -290,8 +290,8 @@ object Decontaminate {
   //   one sketch probe and never touches the join at all.
 
   /** A loaded persistent bench index. `pairs`/`dfs` are lazy parquet
-    * frames; only the sketch is driver-held. `n` rides in meta.json so a
-    * batch can never shingle at a different grain than the index.
+    * frames; only the sketch is driver-held. `n` rides in the manifest so
+    * a batch can never shingle at a different grain than the index.
     */
   final case class BenchIndex(
       pairs: DataFrame, // (shingle, bench_id) — distinct per bench doc
@@ -299,72 +299,49 @@ object Decontaminate {
       bloom: org.apache.spark.util.sketch.BloomFilter,
       expectedItems: Long, fpp: Double, n: Int)
 
-  /** Persist a benchmark suite's shingle state: `path/pairs` +
-    * `path/dfs` parquet, `path/bloom.bin` (creation params in the
-    * header), `path/meta.json` (the shingle grain `n` — deleted FIRST on
-    * rebuild and written LAST, so its presence marks a complete index).
-    * `dfs` and the sketch build from the PERSISTED pair table, so the
-    * artifacts can never disagree about membership.
+  /** Persist a benchmark suite's shingle state as an [[IndexStore]]
+    * version: `pairs` and `dfs` tables, a sketch over the shingles, and
+    * `n`, `expectedItems` and `fpp` in the manifest. `dfs` and the sketch
+    * build from the PERSISTED pair table, so the artifacts can never
+    * disagree about membership.
     */
   def writeBenchIndex(bench: DataFrame, benchIdCol: String, benchText: Column,
       n: Int, path: String, expectedItems: Long, fpp: Double = 0.01): Unit = {
     require(n >= 1, s"shingle n must be >= 1, got $n")
     require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
     val spark = bench.sparkSession
-    locally { // invalidate the completeness marker before touching tables
-      val (fs, metaP) = Dedup.hadoopFs(spark, s"$path/meta.json")
-      if (fs.exists(metaP)) fs.delete(metaP, false)
-    }
-    bench.select(col(benchIdCol).as("bench_id"),
-        explode(Dedup.shingles(benchText, n)).as("shingle"))
-      .write.mode("overwrite").parquet(s"$path/pairs")
-    val pairs = spark.read.parquet(s"$path/pairs")
-    pairs.groupBy(col("shingle")).agg(count(lit(1)).as("__dfb"))
-      .write.mode("overwrite").parquet(s"$path/dfs")
-    val dfs = spark.read.parquet(s"$path/dfs")
-    val bf =
-      if (dfs.isEmpty) Dedup.emptyBloom(spark, expectedItems, fpp)
-      else dfs.select(xxhash64(col("shingle")).as("__k"))
-        .stat.bloomFilter("__k", expectedItems, fpp)
-    Dedup.writeBloomFileAtomic(spark, path, bf, expectedItems, fpp)
-    Dedup.writeTextFile(spark, s"$path/meta.json",
-      s"""{"n":$n,"expectedItems":$expectedItems,"fpp":$fpp}""")
+    val v = IndexStore.nextVersion(spark, path)
+    val pairs = IndexStore.writeTable(path, "pairs", v,
+      bench.select(col(benchIdCol).as("bench_id"),
+        explode(Dedup.shingles(benchText, n)).as("shingle")))
+    val dfs = writeDfs(spark, path, v, Seq(pairs))
+    val bf = Dedup.bloomOf(IndexStore.read(spark, path, "dfs", Seq(dfs)),
+      xxhash64(col("shingle")), expectedItems, fpp)
+    IndexStore.commit(spark, path, IndexStore.Manifest(v,
+      Map("n" -> n, "expectedItems" -> expectedItems, "fpp" -> fpp),
+      Map("pairs" -> Seq(pairs), "dfs" -> Seq(dfs)),
+      IndexStore.writeSketch(spark, path, v, bf, expectedItems, fpp)))
   }
 
-  /** Load a persisted bench index (completing an interrupted compaction
-    * swap first, like every index reader).
+  /** The per-shingle bench doc-frequency over every `pairs` dir, as
+    * version `v`'s `dfs` dir (an aggregate — appending would
+    * double-count).
     */
+  private def writeDfs(spark: org.apache.spark.sql.SparkSession, path: String, v: Long,
+      pairs: Seq[IndexStore.WriteDir]): IndexStore.WriteDir =
+    IndexStore.writeTable(path, "dfs", v, IndexStore.read(spark, path, "pairs", pairs)
+      .groupBy(col("shingle")).agg(count(lit(1)).as("__dfb")))
+
+  /** Load the committed bench index. */
   def readBenchIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): BenchIndex = {
-    Dedup.finishBatchCompaction(spark, path)
-    // Self-heal the append's dfs swap: a crash between its delete and
-    // rename leaves dfs MISSING with the fully-written replacement still
-    // at dfs.staging — finish the rename here, like every index reader
-    // finishes an interrupted compaction.
-    locally {
-      val (fs, dp) = Dedup.hadoopFs(spark, s"$path/dfs")
-      val staging = new org.apache.hadoop.fs.Path(s"$path/dfs.staging")
-      if (!fs.exists(dp) && fs.exists(staging) &&
-          !fs.rename(staging, dp))
-        throw new java.io.IOException(s"bench index dfs heal $staging -> $dp failed")
-    }
-    val meta = Dedup.readTextFile(spark, s"$path/meta.json")
-    def numOf(k: String): String =
-      s""""$k":\\s*([0-9.eE+-]+)""".r.findFirstMatchIn(meta)
-        .getOrElse(throw new IllegalArgumentException(s"bench index meta missing $k: $meta"))
-        .group(1)
-    val (fs, bp) = Dedup.hadoopFs(spark, s"$path/bloom.bin")
-    val in = fs.open(bp)
-    val (bf, items, fpp) =
-      try {
-        val dis = new java.io.DataInputStream(in)
-        val items = dis.readLong()
-        val fpp = dis.readDouble()
-        (org.apache.spark.util.sketch.BloomFilter.readFrom(dis), items, fpp)
-      } finally in.close()
-    BenchIndex(spark.read.parquet(s"$path/pairs"), spark.read.parquet(s"$path/dfs"),
-      bf, items, fpp, numOf("n").toInt)
-  }
+      path: String): BenchIndex =
+    readBenchIndex(spark, path, IndexStore.latest(spark, path))
+
+  private def readBenchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest): BenchIndex =
+    BenchIndex(IndexStore.read(spark, path, m, "pairs"), IndexStore.read(spark, path, m, "dfs"),
+      IndexStore.readSketch(spark, path, m)._1, m.long("expectedItems"), m.double("fpp"),
+      m.long("n").toInt)
 
   /** [[overlaps]] against a persisted [[BenchIndex]] — IDENTICAL
     * classification to the live operator on the same inputs, with the
@@ -433,55 +410,41 @@ object Decontaminate {
 
   /** Fold newly shipped benchmark documents into a persisted bench index
     * without rebuilding it: new (shingle, bench_id) pairs anti-join the
-    * existing table (idempotent re-ingest), the sketch merges a
-    * bit-compatible delta BEFORE the table append (the
-    * [[Dedup.appendToHashIndex]] ordering: a crash between the two
-    * leaves keys-without-rows — harmless false positives — never
-    * rows-without-keys, which the retry's anti-join would hide from the
-    * delta forever, and a missed bench shingle is a missed CONTAMINATION
-    * — the one failure direction decontamination must not have), and
-    * `dfs` recomputes from the appended pair table via staging + swap
-    * (it is an aggregate — appending would double-count). Crash windows:
-    * before the swap leaves `dfs` stale — under-counted `__dfb` products
-    * NARROW the merge-arm hot-key guard, so fewer keys are excluded (the
-    * safe direction for contamination: more evidence reaches the join, at
-    * extra cost) — and a crash between the swap's delete and rename
-    * leaves `dfs` missing with the replacement at `dfs.staging`, which
-    * [[readBenchIndex]] heals by finishing the rename.
+    * existing table (idempotent re-ingest), their shingles merge into the
+    * sketch as a bit-compatible delta, `dfs` is recomputed over the whole
+    * pair table, and the new pair dir, `dfs` and sketch commit as one
+    * version (a batch with nothing new commits nothing). A crash before
+    * the commit leaves the previous version current — no reader ever sees
+    * pairs without their sketch keys (a missed bench shingle is a missed
+    * CONTAMINATION, the one failure direction decontamination must not
+    * have) or a `dfs` stale against its pairs.
     */
   def appendToBenchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newBench: DataFrame, benchIdCol: String, benchText: Column,
       autoCompactAt: Int = Dedup.AutoCompactDefault): Unit = {
-    val idx = readBenchIndex(spark, path)
+    val m = IndexStore.latest(spark, path)
+    val idx = readBenchIndex(spark, path, m)
     val fresh = newBench.select(col(benchIdCol).as("bench_id"),
         explode(Dedup.shingles(benchText, idx.n)).as("shingle"))
       .join(idx.pairs, Seq("shingle", "bench_id"), "left_anti")
-      .localCheckpoint() // pin BEFORE the append below rewrites the dir it reads
-    val freshKeys = fresh.select(col("shingle")).distinct()
-    val delta =
-      if (freshKeys.isEmpty) Dedup.emptyBloom(spark, idx.expectedItems, idx.fpp)
-      else freshKeys.select(xxhash64(col("shingle")).as("__k"))
-        .stat.bloomFilter("__k", idx.expectedItems, idx.fpp)
-    idx.bloom.mergeInPlace(delta)
-    Dedup.writeBloomFileAtomic(spark, path, idx.bloom, idx.expectedItems, idx.fpp)
-    fresh.write.mode("append").parquet(s"$path/pairs")
-    // dfs: recompute from the appended pair table via staging + swap
-    spark.read.parquet(s"$path/pairs")
-      .groupBy(col("shingle")).agg(count(lit(1)).as("__dfb"))
-      .write.mode("overwrite").parquet(s"$path/dfs.staging")
-    val (fs, dp) = Dedup.hadoopFs(spark, s"$path/dfs")
-    val staging = new org.apache.hadoop.fs.Path(s"$path/dfs.staging")
-    if (fs.exists(dp)) fs.delete(dp, true)
-    if (!fs.rename(staging, dp))
-      throw new java.io.IOException(s"bench index dfs swap $staging -> $dp failed")
-    Dedup.maybeAutoCompact(spark, path, Seq("pairs"), autoCompactAt)
+      .localCheckpoint()
+    if (fresh.isEmpty) return
+    idx.bloom.mergeInPlace(Dedup.bloomOf(fresh.select(col("shingle")).distinct(),
+      xxhash64(col("shingle")), idx.expectedItems, idx.fpp))
+    val v = m.version + 1
+    val pairs = m.tables("pairs") :+ IndexStore.writeTable(path, "pairs", v, fresh)
+    val next = IndexStore.commit(spark, path, m.copy(version = v,
+      tables = Map("pairs" -> pairs, "dfs" -> Seq(writeDfs(spark, path, v, pairs))),
+      sketch = IndexStore.writeSketch(spark, path, v, idx.bloom, idx.expectedItems, idx.fpp)))
+    Dedup.autoCompactTarget(spark, path, next, Seq("pairs"), autoCompactAt)
+      .foreach(compactBenchIndex(spark, path, _))
   }
 
   /** Small-file maintenance for the append deltas
-    * ([[Dedup.compactBatchIndex]] over the pair table; `dfs` is excluded
-    * — each append already rewrites it whole via staging + swap).
+    * ([[Dedup.compactIndexTables]] over the pair table; `dfs` is excluded
+    * — each append already rewrites it whole).
     */
   def compactBenchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int = 1): Unit =
-    Dedup.compactBatchIndex(spark, path, Seq("pairs"), targetFiles)
+    Dedup.compactIndexTables(spark, path, Seq("pairs"), targetFiles)
 }

@@ -749,34 +749,32 @@ object Dedup {
   }
 
   /** Persist component labels — the cluster state a daily dedup pipeline
-    * carries between runs (`path/labels` + the shared staging+marker
-    * protocol; single-table swap, the LM-counts-index shape — and no
-    * replay ledger because [[componentsIncremental]] is idempotent).
+    * carries between runs: one `labels` table committed as an
+    * [[IndexStore]] version (no replay ledger, because
+    * [[componentsIncremental]] is idempotent).
     */
   def writeCcIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      labels: DataFrame): Unit =
-    labels.select(col("id"), col("comp"))
-      .write.mode("overwrite").parquet(s"$path/labels")
-
-  /** Load persisted component labels (healing an interrupted fold first). */
-  def readCcIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    finishBatchCompaction(spark, path)
-    spark.read.parquet(s"$path/labels")
+      labels: DataFrame): Unit = {
+    val v = IndexStore.nextVersion(spark, path)
+    val dir = IndexStore.writeTable(path, "labels", v, labels.select(col("id"), col("comp")))
+    IndexStore.commit(spark, path, IndexStore.Manifest(v, Map.empty, Map("labels" -> Seq(dir))))
   }
 
-  /** Fold a delta pair batch into the persisted labels: compute the
-    * merged labels, stage, publish the marker, swap. A crash between
-    * staging+marker and the swap self-heals on the next read; a crash
-    * before the marker leaves the old labels intact and the replayed
-    * fold recomputes the identical merge.
+  /** Load the committed component labels. */
+  def readCcIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    IndexStore.read(spark, path, IndexStore.latest(spark, path), "labels")
+
+  /** Fold a delta pair batch into the persisted labels: the merged labels
+    * are written whole and committed as the next version. A crash before
+    * the commit leaves the old labels current, and the replayed fold
+    * recomputes the identical merge.
     */
   def appendToCcIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newPairs: DataFrame, maxIter: Int = 20): Unit = {
-    val cur = readCcIndex(spark, path)
-    componentsIncremental(cur, newPairs, maxIter)
-      .write.mode("overwrite").parquet(s"$path/labels.staging")
-    publishBatchMarker(spark, path, Seq("labels"))
-    finishBatchCompaction(spark, path)
+    val m = IndexStore.latest(spark, path)
+    val dir = IndexStore.writeTable(path, "labels", m.version + 1,
+      componentsIncremental(IndexStore.read(spark, path, m, "labels"), newPairs, maxIter))
+    IndexStore.commit(spark, path, m.copy(version = m.version + 1, tables = Map("labels" -> Seq(dir))))
   }
 
   /** End-to-end near-dup REMOVAL: pairs → clusters → keep one canonical
@@ -1303,6 +1301,36 @@ object Dedup {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** Write a small text file ATOMICALLY-ish: content lands whole in
+    * `<path>.__tmp` first and swaps in via rename. A crash mid-write can never
+    * leave a TRUNCATED destination (truncated JSON loses the fields a
+    * reader needs). Worst case (crash inside the delete→rename window)
+    * leaves the file MISSING, which every reader treats as "incomplete":
+    * it fails loud with rebuild guidance.
+    */
+  private[graft] def writeTextFile(spark: org.apache.spark.sql.SparkSession, path: String,
+      content: String): Unit = {
+    val (fs, p) = hadoopFs(spark, path)
+    val tmp = new org.apache.hadoop.fs.Path(path + ".__tmp")
+    val out = fs.create(tmp, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    if (fs.exists(p)) fs.delete(p, false)
+    if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"text-file swap $tmp -> $p failed")
+  }
+
+  private[graft] def readTextFile(spark: org.apache.spark.sql.SparkSession, path: String): String = {
+    val (fs, p) = hadoopFs(spark, path)
+    val in = fs.open(p)
+    try {
+      val buf = new java.io.ByteArrayOutputStream()
+      val arr = new Array[Byte](8192)
+      var r = in.read(arr)
+      while (r >= 0) { buf.write(arr, 0, r); r = in.read(arr) }
+      buf.toString("UTF-8")
+    } finally in.close()
+  }
+
   /** An "empty" sketch that stays BIT-COMPATIBLE with the data-built ones:
     * `BloomFilter.create(n, fpp)` and `DataFrame.stat.bloomFilter(_, n,
     * fpp)` can disagree on the bit count for large `n` (the SQL aggregate
@@ -1316,6 +1344,14 @@ object Dedup {
       expectedItems: Long, fpp: Double): org.apache.spark.util.sketch.BloomFilter =
     spark.range(1).select(xxhash64(lit("__graft_empty_bloom")).as("__k"))
       .stat.bloomFilter("__k", expectedItems, fpp)
+
+  /** The sketch over `key` of `df`'s rows ([[emptyBloom]] when there are
+    * none: `stat.bloomFilter` NPEs on zero rows).
+    */
+  private[graft] def bloomOf(df: DataFrame, key: Column, expectedItems: Long,
+      fpp: Double): org.apache.spark.util.sketch.BloomFilter =
+    if (df.isEmpty) emptyBloom(df.sparkSession, expectedItems, fpp)
+    else df.select(key.as("__k")).stat.bloomFilter("__k", expectedItems, fpp)
 
   private[graft] def writeBloomFile(spark: org.apache.spark.sql.SparkSession, path: String,
       bf: org.apache.spark.util.sketch.BloomFilter, expectedItems: Long, fpp: Double): Unit = {
@@ -1346,12 +1382,8 @@ object Dedup {
     val hashes = IndexStore.writeTable(path, "hashes", v, corpus
       .select(sha2(tagged(col(textCol)), 256).as("__h"), col(idCol).as("__cid"))
       .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of")))
-    val persisted = IndexStore.read(spark, path, "hashes", Seq(hashes))
-    val bf =
-      if (persisted.isEmpty) // stat.bloomFilter NPEs on zero rows
-        emptyBloom(spark, expectedItems, fpp)
-      else persisted.select(xxhash64(col("__h")).as("__k"))
-        .stat.bloomFilter("__k", expectedItems, fpp)
+    val bf = bloomOf(IndexStore.read(spark, path, "hashes", Seq(hashes)),
+      xxhash64(col("__h")), expectedItems, fpp)
     IndexStore.commit(spark, path, IndexStore.Manifest(v,
       Map("expectedItems" -> expectedItems, "fpp" -> fpp), Map("hashes" -> Seq(hashes)),
       IndexStore.writeSketch(spark, path, v, bf, expectedItems, fpp)))
@@ -1422,15 +1454,8 @@ object Dedup {
       .join(index.hashes, Seq("__h"), "left_anti")
       .localCheckpoint()
     if (fresh.isEmpty) return
-    index.bloom.mergeInPlace(fresh.select(xxhash64(col("__h")).as("__k"))
-      .stat.bloomFilter("__k", index.expectedItems, index.fpp))
-    val v = m.version + 1
-    val hashes = IndexStore.writeTable(path, "hashes", v, fresh)
-    val next = IndexStore.commit(spark, path, m.copy(version = v,
-      tables = Map("hashes" -> (m.tables("hashes") :+ hashes)),
-      sketch = IndexStore.writeSketch(spark, path, v, index.bloom, index.expectedItems, index.fpp)))
-    autoCompactTarget(spark, path, Seq((next.files("hashes"), next.bytes("hashes"))), autoCompactAt)
-      .foreach(compactHashIndex(spark, path, _))
+    commitAppend(spark, path, m, index.bloom, fresh, xxhash64(col("__h")), "hashes",
+      autoCompactAt)(compactHashIndex(spark, path, _))
   }
 
   // — persisted PARAGRAPH index (FineWeb incremental deployment shape) —————
@@ -1446,8 +1471,8 @@ object Dedup {
 
   /** A loaded persistent paragraph index: the digest→min-corpus-id table
     * (parquet-backed, executor-scanned) and the driver-resident Bloom
-    * sketch over `xxhash64` of the digests. `sep` rides in meta.json so a
-    * batch can never silently split on a different separator than the
+    * sketch over `xxhash64` of the digests. `sep` rides in the manifest so
+    * a batch can never silently split on a different separator than the
     * corpus was indexed with.
     */
   final case class ParagraphIndex(
@@ -1468,12 +1493,10 @@ object Dedup {
       .toDF(idCol, "__pos", "__para")
       .filter(length(trim(col("__para"))) > 0)
 
-  /** Persist the corpus-side state of incremental paragraph dedup:
-    * `path/paras` parquet (`__h` sha256 of the paragraph body, `__para_of`
-    * min corpus id) + `path/bloom.bin` (creation params in the header) +
-    * `path/meta.json` (the separator — deleted FIRST on rebuild and
-    * written LAST, so its presence marks a complete index even when a
-    * rebuild over an existing index crashes mid-rewrite).
+  /** Persist the corpus-side state of incremental paragraph dedup as an
+    * [[IndexStore]] version: the `paras` table (`__h` sha256 of the
+    * paragraph body, `__para_of` min corpus id), its sketch, and `sep`,
+    * `expectedItems` and `fpp` in the manifest.
     *
     * 100-TB plan shape: one corpus explode, then `groupBy(digest).agg(min
     * (id))` — MAP-SIDE combine collapses a boilerplate paragraph repeated
@@ -1487,48 +1510,29 @@ object Dedup {
       sep: String = "\n"): Unit = {
     require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
     val spark = corpus.sparkSession
-    locally { // invalidate the completeness marker before touching tables
-      val (fs, metaP) = hadoopFs(spark, s"$path/meta.json")
-      if (fs.exists(metaP)) fs.delete(metaP, false)
-    }
-    paragraphTable(corpus, idCol, textCol, sep)
+    val v = IndexStore.nextVersion(spark, path)
+    val paras = IndexStore.writeTable(path, "paras", v, paragraphTable(corpus, idCol, textCol, sep)
       .select(sha2(col("__para"), 256).as("__h"), col(idCol).as("__cid"))
-      .groupBy(col("__h")).agg(min(col("__cid")).as("__para_of"))
-      .write.mode("overwrite").parquet(s"$path/paras")
-    val persisted = spark.read.parquet(s"$path/paras")
-    val bf =
-      if (persisted.isEmpty) emptyBloom(spark, expectedItems, fpp)
-      else persisted.select(xxhash64(col("__h")).as("__k"))
-        .stat.bloomFilter("__k", expectedItems, fpp)
-    writeBloomFileAtomic(spark, path, bf, expectedItems, fpp)
-    writeTextFile(spark, s"$path/meta.json",
-      // sep as JSON code points — exact round-trip for any separator
-      s"""{"sep_cps":[${sep.codePoints().toArray.mkString(",")}]}""")
+      .groupBy(col("__h")).agg(min(col("__cid")).as("__para_of")))
+    val bf = bloomOf(IndexStore.read(spark, path, "paras", Seq(paras)),
+      xxhash64(col("__h")), expectedItems, fpp)
+    IndexStore.commit(spark, path, IndexStore.Manifest(v,
+      Map("sep" -> sep, "expectedItems" -> expectedItems, "fpp" -> fpp),
+      Map("paras" -> Seq(paras)), IndexStore.writeSketch(spark, path, v, bf, expectedItems, fpp)))
   }
 
-  /** Load a persisted paragraph index. The digest table is a lazy parquet
-    * frame; only the sketch is driver-held.
+  /** Load the committed paragraph index. The digest table is a lazy
+    * parquet frame; only the sketch is driver-held.
     */
   def readParagraphIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): ParagraphIndex = {
-    finishBatchCompaction(spark, path) // complete an interrupted dir swap first
-    val meta = readTextFile(spark, s"$path/meta.json")
-    val sep = new String("""\"sep_cps\":\[([0-9,\s]*)\]""".r.findFirstMatchIn(meta)
-      .map(_.group(1)).getOrElse(throw new IllegalStateException(
-        s"paragraph index at $path has no sep_cps in meta.json"))
-      .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt)
-      .foldLeft(new java.lang.StringBuilder()) { (b, cp) => b.appendCodePoint(cp) })
-    val (fs, p) = hadoopFs(spark, s"$path/bloom.bin")
-    val in = fs.open(p)
-    val (bf, items, fpp) =
-      try {
-        val dis = new java.io.DataInputStream(in)
-        val items = dis.readLong()
-        val fpp = dis.readDouble()
-        (org.apache.spark.util.sketch.BloomFilter.readFrom(dis), items, fpp)
-      } finally in.close()
-    ParagraphIndex(spark.read.parquet(s"$path/paras"), bf, items, fpp, sep)
-  }
+      path: String): ParagraphIndex =
+    readParagraphIndex(spark, path, IndexStore.latest(spark, path))
+
+  private def readParagraphIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest): ParagraphIndex =
+    ParagraphIndex(IndexStore.read(spark, path, m, "paras"),
+      IndexStore.readSketch(spark, path, m)._1, m.long("expectedItems"), m.double("fpp"),
+      m.string("sep"))
 
   /** [[paragraphDedup]] against a persisted [[ParagraphIndex]] — the
     * incremental contract of the whole index family: a batch paragraph
@@ -1584,32 +1588,45 @@ object Dedup {
   /** Fold a batch's ACCEPTED documents' paragraphs into a persisted
     * paragraph index without rebuilding it — the [[appendToHashIndex]]
     * twin: new digest rows anti-join the existing table (idempotent
-    * re-ingest; intra-batch duplicates elect min id) and append as new
-    * parquet parts; their keys merge into the sketch via a bit-compatible
-    * delta. The sketch saturates past `expectedItems` total inserts (fpp
-    * degrades, correctness doesn't — positives always verify); rewrite
-    * with [[writeParagraphIndex]] when the corpus outgrows it.
+    * re-ingest; intra-batch duplicates elect min id), their keys merge
+    * into the sketch via a bit-compatible delta, and the new dir and
+    * sketch commit as one version (a batch with nothing new commits
+    * nothing). The sketch saturates past `expectedItems` total inserts
+    * (fpp degrades, correctness doesn't — positives always verify);
+    * rewrite with [[writeParagraphIndex]] when the corpus outgrows it.
     */
   def appendToParagraphIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       autoCompactAt: Int = AutoCompactDefault): Unit = {
-    val index = readParagraphIndex(spark, path)
+    val m = IndexStore.latest(spark, path)
+    val index = readParagraphIndex(spark, path, m)
     val fresh = paragraphTable(newDocs, idCol, textCol, index.sep)
       .select(sha2(col("__para"), 256).as("__h"), col(idCol).as("__cid"))
       .groupBy(col("__h")).agg(min(col("__cid")).as("__para_of"))
       .join(index.paras, Seq("__h"), "left_anti")
-      .localCheckpoint() // pin BEFORE the append below rewrites the dir it reads
-    val delta =
-      if (fresh.isEmpty) emptyBloom(spark, index.expectedItems, index.fpp)
-      else fresh.select(xxhash64(col("__h")).as("__k"))
-        .stat.bloomFilter("__k", index.expectedItems, index.fpp)
-    // sketch BEFORE table: rows-without-keys
-    // false-negative forever (the retry anti-join hides them from the
-    // delta), keys-without-rows just verify-fail
-    index.bloom.mergeInPlace(delta)
-    writeBloomFileAtomic(spark, path, index.bloom, index.expectedItems, index.fpp)
-    fresh.write.mode("append").parquet(s"$path/paras")
-    maybeAutoCompact(spark, path, ParagraphIndexTables, autoCompactAt)
+      .localCheckpoint()
+    if (fresh.isEmpty) return
+    commitAppend(spark, path, m, index.bloom, fresh, xxhash64(col("__h")), "paras",
+      autoCompactAt)(compactParagraphIndex(spark, path, _))
+  }
+
+  /** The shared tail of the sketched single-table appends: merge the
+    * `fresh` rows' keys into `bloom`, write them as `table`'s next dir
+    * and commit both as the next version; then fold the table once it
+    * holds `autoCompactAt` part files.
+    */
+  private def commitAppend(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, bloom: org.apache.spark.util.sketch.BloomFilter,
+      fresh: DataFrame, key: Column, table: String, autoCompactAt: Int)(
+      compact: Int => Unit): Unit = {
+    val (items, fpp) = (m.long("expectedItems"), m.double("fpp"))
+    bloom.mergeInPlace(bloomOf(fresh, key, items, fpp))
+    val v = m.version + 1
+    val dir = IndexStore.writeTable(path, table, v, fresh)
+    val next = IndexStore.commit(spark, path, m.copy(version = v,
+      tables = m.tables.updated(table, m.tables(table) :+ dir),
+      sketch = IndexStore.writeSketch(spark, path, v, bloom, items, fpp)))
+    autoCompactTarget(spark, path, next, Seq(table), autoCompactAt).foreach(compact)
   }
 
   // — persisted SPAN index (Lee '21 exact-substring incremental shape) —————
@@ -1626,64 +1643,45 @@ object Dedup {
   //   suffix array is the same order); the sketch and the digest-keyed
   //   layout keep the per-batch cost at batch explode + column scans.
 
-  /** A loaded persistent span index. `k` rides in meta.json so a batch
-    * can never window at a different grain than the corpus was indexed
-    * with.
+  /** A loaded persistent span index. `k` rides in the manifest so a
+    * batch can never window at a different grain than the corpus was
+    * indexed with.
     */
   final case class SpanIndex(
       spans: DataFrame, // (__h sha256 of k-token window, __span_of min corpus id)
       bloom: org.apache.spark.util.sketch.BloomFilter,
       expectedItems: Long, fpp: Double, k: Int)
 
-  /** Persist the corpus-side state of incremental substring dedup:
-    * `path/spans` parquet + `path/bloom.bin` (creation params in the
-    * header) + `path/meta.json` (the window grain — deleted FIRST on
-    * rebuild and written LAST, so its presence marks a complete index).
-    * One corpus explode, map-side-combined digest election; the sketch
-    * builds from the PERSISTED table so the artifacts can never disagree.
+  /** Persist the corpus-side state of incremental substring dedup as an
+    * [[IndexStore]] version: the `spans` table, its sketch, and `k`,
+    * `expectedItems` and `fpp` in the manifest. One corpus explode,
+    * map-side-combined digest election; the sketch builds from the
+    * PERSISTED table so the artifacts can never disagree.
     */
   def writeSpanIndex(corpus: DataFrame, idCol: String, textCol: String,
       path: String, expectedItems: Long, fpp: Double = 0.01, k: Int = 8): Unit = {
     require(k >= 2, s"window must span at least 2 tokens, got $k")
     require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
     val spark = corpus.sparkSession
-    locally { // invalidate the completeness marker before touching tables
-      val (fs, metaP) = hadoopFs(spark, s"$path/meta.json")
-      if (fs.exists(metaP)) fs.delete(metaP, false)
-    }
-    spanWindows(spanBase(corpus, idCol, textCol), idCol, k)
-      .groupBy(col("__h")).agg(min(col(idCol)).as("__span_of"))
-      .write.mode("overwrite").parquet(s"$path/spans")
-    val persisted = spark.read.parquet(s"$path/spans")
-    val bf =
-      if (persisted.isEmpty) emptyBloom(spark, expectedItems, fpp)
-      else persisted.select(xxhash64(col("__h")).as("__k"))
-        .stat.bloomFilter("__k", expectedItems, fpp)
-    writeBloomFileAtomic(spark, path, bf, expectedItems, fpp)
-    writeTextFile(spark, s"$path/meta.json",
-      s"""{"k":$k,"expectedItems":$expectedItems,"fpp":$fpp}""")
+    val v = IndexStore.nextVersion(spark, path)
+    val spans = IndexStore.writeTable(path, "spans", v,
+      spanWindows(spanBase(corpus, idCol, textCol), idCol, k)
+        .groupBy(col("__h")).agg(min(col(idCol)).as("__span_of")))
+    val bf = bloomOf(IndexStore.read(spark, path, "spans", Seq(spans)),
+      xxhash64(col("__h")), expectedItems, fpp)
+    IndexStore.commit(spark, path, IndexStore.Manifest(v,
+      Map("k" -> k, "expectedItems" -> expectedItems, "fpp" -> fpp),
+      Map("spans" -> Seq(spans)), IndexStore.writeSketch(spark, path, v, bf, expectedItems, fpp)))
   }
 
-  /** Load a persisted span index (completing an interrupted compaction
-    * swap first, like every index reader).
-    */
-  def readSpanIndex(spark: org.apache.spark.sql.SparkSession, path: String): SpanIndex = {
-    finishBatchCompaction(spark, path)
-    val meta = readTextFile(spark, s"$path/meta.json")
-    val k = """"k":\s*([0-9]+)""".r.findFirstMatchIn(meta)
-      .getOrElse(throw new IllegalStateException(s"span index at $path has no k in meta.json"))
-      .group(1).toInt
-    val (fs, p) = hadoopFs(spark, s"$path/bloom.bin")
-    val in = fs.open(p)
-    val (bf, items, fpp) =
-      try {
-        val dis = new java.io.DataInputStream(in)
-        val items = dis.readLong()
-        val fpp = dis.readDouble()
-        (org.apache.spark.util.sketch.BloomFilter.readFrom(dis), items, fpp)
-      } finally in.close()
-    SpanIndex(spark.read.parquet(s"$path/spans"), bf, items, fpp, k)
-  }
+  /** Load the committed span index. */
+  def readSpanIndex(spark: org.apache.spark.sql.SparkSession, path: String): SpanIndex =
+    readSpanIndex(spark, path, IndexStore.latest(spark, path))
+
+  private def readSpanIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest): SpanIndex =
+    SpanIndex(IndexStore.read(spark, path, m, "spans"), IndexStore.readSketch(spark, path, m)._1,
+      m.long("expectedItems"), m.double("fpp"), m.long("k").toInt)
 
   /** [[substringDedup]] against a persisted [[SpanIndex]] — the
     * incremental contract at the window grain: a batch window whose
@@ -1727,35 +1725,29 @@ object Dedup {
   /** Fold a batch's accepted documents' windows into a persisted span
     * index without rebuilding it — the [[appendToHashIndex]] twin at the
     * window grain: new digest rows anti-join the existing table
-    * (idempotent re-ingest; intra-batch duplicates elect min id), the
-    * sketch merges its bit-compatible delta BEFORE the table append
-    * (rows-without-keys would false-negative forever — see
-    * [[appendToHashIndex]]), and the rows append as new parquet parts.
-    * Pass the documents' FINAL (post-cut) text — indexing spans the batch
-    * itself just cut would resurrect them as corpus content.
+    * (idempotent re-ingest; intra-batch duplicates elect min id), and the
+    * new dir and merged sketch commit as one version. Pass the documents'
+    * FINAL (post-cut) text — indexing spans the batch itself just cut
+    * would resurrect them as corpus content.
     */
   def appendToSpanIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       autoCompactAt: Int = AutoCompactDefault): Unit = {
-    val index = readSpanIndex(spark, path)
+    val m = IndexStore.latest(spark, path)
+    val index = readSpanIndex(spark, path, m)
     val fresh = spanWindows(spanBase(newDocs, idCol, textCol), idCol, index.k)
       .groupBy(col("__h")).agg(min(col(idCol)).as("__span_of"))
       .join(index.spans, Seq("__h"), "left_anti")
-      .localCheckpoint() // pin BEFORE the append below rewrites the dir it reads
-    val delta =
-      if (fresh.isEmpty) emptyBloom(spark, index.expectedItems, index.fpp)
-      else fresh.select(xxhash64(col("__h")).as("__k"))
-        .stat.bloomFilter("__k", index.expectedItems, index.fpp)
-    index.bloom.mergeInPlace(delta)
-    writeBloomFileAtomic(spark, path, index.bloom, index.expectedItems, index.fpp)
-    fresh.write.mode("append").parquet(s"$path/spans")
-    maybeAutoCompact(spark, path, Seq("spans"), autoCompactAt)
+      .localCheckpoint()
+    if (fresh.isEmpty) return
+    commitAppend(spark, path, m, index.bloom, fresh, xxhash64(col("__h")), "spans",
+      autoCompactAt)(compactSpanIndex(spark, path, _))
   }
 
-  /** [[compactBatchIndex]] over [[writeSpanIndex]]'s layout. */
+  /** [[compactIndexTables]] over [[writeSpanIndex]]'s layout. */
   def compactSpanIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int = 1): Unit =
-    compactBatchIndex(spark, path, Seq("spans"), targetFiles)
+    compactIndexTables(spark, path, Seq("spans"), targetFiles)
 
   // — persisted NEAR-dup probe state (band index) ——————————————————————————
   //   The banding twin of [[writeHashIndex]]: [[incrementalDedup]] pays a
@@ -1781,83 +1773,66 @@ object Dedup {
       sizes: DataFrame,    // (id, set_size)
       n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int)
 
-  /** Write a small text file ATOMICALLY-ish: content lands whole in
-    * `<path>.__tmp` first and swaps in via rename (the
-    * [[writeBloomFileAtomic]] discipline). A crash mid-write can never
-    * leave a TRUNCATED destination (truncated JSON loses the fields a
-    * reader needs). Worst case (crash inside the delete→rename window)
-    * leaves the file MISSING, which every reader treats as "incomplete":
-    * it fails loud with rebuild guidance.
-    */
-  private[graft] def writeTextFile(spark: org.apache.spark.sql.SparkSession, path: String,
-      content: String): Unit = {
-    val (fs, p) = hadoopFs(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".__tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    if (!fs.rename(tmp, p))
-      throw new java.io.IOException(s"text-file swap $tmp -> $p failed")
-  }
-
-  private[graft] def readTextFile(spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val (fs, p) = hadoopFs(spark, path)
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val arr = new Array[Byte](8192)
-      var r = in.read(arr)
-      while (r >= 0) { buf.write(arr, 0, r); r = in.read(arr) }
-      buf.toString("UTF-8")
-    } finally in.close()
-  }
-
-  /** Persist the corpus-side state of [[incrementalDedup]]'s near stage:
-    * `path/{shingles,sizes,bands,buckets}` parquet plus `path/meta.json`
-    * (the shingle width and banding geometry — written LAST, so its
-    * presence marks a complete index). One corpus pass builds the
-    * shingle table; everything downstream derives from the persisted
-    * copy, so the artifacts can never disagree.
+  /** Persist the corpus-side state of [[incrementalDedup]]'s near stage
+    * as an [[IndexStore]] version: `shingles`, `sizes`, `bands` and
+    * `buckets` tables, with the shingle width and banding geometry in the
+    * manifest. One corpus pass builds the shingle table; everything
+    * downstream derives from the persisted copy, so the artifacts can
+    * never disagree.
     */
   def writeBandIndex(corpus: DataFrame, idCol: String, text: Column, path: String,
       n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int): Unit = {
     require(numBands * rowsPerBand == numPerm,
       s"numBands ($numBands) × rowsPerBand ($rowsPerBand) must equal numPerm ($numPerm)")
     val spark = corpus.sparkSession
-    shingleTable(corpus, idCol, text, n)
-      .write.mode("overwrite").parquet(s"$path/shingles")
-    val shP = spark.read.parquet(s"$path/shingles")
-    shP.groupBy(col("id")).agg(count(lit(1)).as("set_size"))
-      .write.mode("overwrite").parquet(s"$path/sizes")
-    minhashFromShingles(shP, numPerm)
-      .select(col("id").as("corpus_id"),
-        explode(array(bandExprs(numBands, rowsPerBand): _*)).as("band"))
-      .select(col("corpus_id"), col("band.band_idx"), col("band.band_hash"))
-      .write.mode("overwrite").parquet(s"$path/bands")
-    spark.read.parquet(s"$path/bands")
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub"))
-      .write.mode("overwrite").parquet(s"$path/buckets")
-    writeTextFile(spark, s"$path/meta.json",
-      s"""{"n":$n,"numPerm":$numPerm,"numBands":$numBands,"rowsPerBand":$rowsPerBand}""")
+    val v = IndexStore.nextVersion(spark, path)
+    val meta = Map("n" -> n, "numPerm" -> numPerm, "numBands" -> numBands, "rowsPerBand" -> rowsPerBand)
+    IndexStore.commit(spark, path, writeBandDelta(spark, path,
+      IndexStore.Manifest(v, meta, Map.empty), v, shingleTable(corpus, idCol, text, n)))
   }
 
-  /** Load a persisted band index (lazy parquet frames + parsed meta). */
-  def readBandIndex(spark: org.apache.spark.sql.SparkSession, path: String): BandIndex = {
-    finishBatchCompaction(spark, path) // complete an interrupted dir swap first
-    val meta = readTextFile(spark, s"$path/meta.json")
-    def intOf(k: String): Int =
-      s""""$k":\\s*(\\d+)""".r.findFirstMatchIn(meta)
-        .getOrElse(throw new IllegalArgumentException(s"band index meta missing $k: $meta"))
-        .group(1).toInt
-    BandIndex(
-      bands = spark.read.parquet(s"$path/bands"),
-      buckets = spark.read.parquet(s"$path/buckets"),
-      shingles = spark.read.parquet(s"$path/shingles"),
-      sizes = spark.read.parquet(s"$path/sizes"),
-      n = intOf("n"), numPerm = intOf("numPerm"),
-      numBands = intOf("numBands"), rowsPerBand = intOf("rowsPerBand"))
+  /** `sh`'s shingles, sizes and bands as version `v`'s dirs appended to
+    * `m`'s, and the buckets recomputed over every band dir (an aggregate —
+    * appending would double-count): the manifest to commit.
+    */
+  private def writeBandDelta(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, v: Long, sh: DataFrame): IndexStore.Manifest = {
+    def add(t: String, dir: IndexStore.WriteDir) = m.tables.getOrElse(t, Nil) :+ dir
+    val shingles = add("shingles", IndexStore.writeTable(path, "shingles", v, sh))
+    val shP = IndexStore.read(spark, path, "shingles", shingles.takeRight(1))
+    val sizes = add("sizes", IndexStore.writeTable(path, "sizes", v,
+      shP.groupBy(col("id")).agg(count(lit(1)).as("set_size"))))
+    val bands = add("bands", IndexStore.writeTable(path, "bands", v,
+      minhashFromShingles(shP, m.long("numPerm").toInt)
+        .select(col("id").as("corpus_id"), explode(array(
+          bandExprs(m.long("numBands").toInt, m.long("rowsPerBand").toInt): _*)).as("band"))
+        .select(col("corpus_id"), col("band.band_idx"), col("band.band_hash"))))
+    // NOTE: the bucket aggregate scans the FULL band table per append —
+    // amortized for the low-frequency batch-ingest shape this index
+    // serves; for high-frequency (per-micro-batch) appends use the
+    // streaming IngestIndex below, whose appends are pure partition
+    // writes and whose probe derives touched-bucket occupancy per batch
+    val buckets = IndexStore.writeTable(path, "buckets", v,
+      IndexStore.read(spark, path, "bands", bands)
+        .groupBy(col("band_idx"), col("band_hash"))
+        .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub")))
+    m.copy(version = v, tables = Map("shingles" -> shingles, "sizes" -> sizes, "bands" -> bands,
+      "buckets" -> Seq(buckets)))
   }
+
+  /** Load the committed band index (lazy parquet frames + its geometry). */
+  def readBandIndex(spark: org.apache.spark.sql.SparkSession, path: String): BandIndex =
+    readBandIndex(spark, path, IndexStore.latest(spark, path))
+
+  private def readBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest): BandIndex =
+    BandIndex(
+      bands = IndexStore.read(spark, path, m, "bands"),
+      buckets = IndexStore.read(spark, path, m, "buckets"),
+      shingles = IndexStore.read(spark, path, m, "shingles"),
+      sizes = IndexStore.read(spark, path, m, "sizes"),
+      n = m.long("n").toInt, numPerm = m.long("numPerm").toInt,
+      numBands = m.long("numBands").toInt, rowsPerBand = m.long("rowsPerBand").toInt)
 
   /** [[incrementalDedup]] against persisted indexes: the exact stage
     * probes the [[HashIndex]] (Bloom-pruned — negatives skip the verify
@@ -1955,61 +1930,25 @@ object Dedup {
   }
 
   /** Fold a batch's accepted documents into a persisted band index:
-    * shingles, sizes and bands for the new ids append as parquet parts
-    * (ids must be new — idempotence is the caller's [[appendToHashIndex]]
-    * anti-join contract); the bucket aggregate is recomputed from the
-    * appended band table into a staging dir and swapped in (it is an
-    * aggregate — appending would double-count). Meta is unchanged.
+    * shingles, sizes and bands for the new ids land as new dirs, the
+    * bucket aggregate is recomputed over the whole band table, and all
+    * four commit as one version. Idempotent under replay: documents whose
+    * id the index already sizes are skipped, and a batch with nothing new
+    * commits nothing — every table commits together, so one guard covers
+    * them all.
     */
   def appendToBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String,
       autoCompactAt: Int = AutoCompactDefault): Unit = {
-    val idx = readBandIndex(spark, path)
-    // idempotence is THIS function's job (the hash-index twin anti-joins
-    // the same way): a replayed/retried batch must not double-insert —
-    // duplicate shingle rows would inflate every later verification's
-    // intersection counts and duplicate sizes rows would double set_size,
-    // corrupting Jaccard for the re-appended ids. The guard is PER TABLE
-    // (each append drops ids already present in ITS OWN target), so a
-    // retry after a crash BETWEEN the three appends completes exactly the
-    // missing tables: a single up-front guard on one table would either
-    // re-insert into already-written tables or permanently skip the
-    // unwritten ones, depending on which side of the crash the guard
-    // table sat. All three fresh sets are pinned before any write
-    // rewrites the directories they read.
-    def freshVs(existing: DataFrame, existingId: String): DataFrame =
-      newDocs.join(existing.select(col(existingId).as(idCol)), Seq(idCol), "left_anti")
-        .localCheckpoint()
-    val freshSh = freshVs(idx.shingles, "id")
-    val freshSz = freshVs(idx.sizes, "id")
-    val freshBd = freshVs(idx.bands, "corpus_id")
-    shingleTable(freshSh, idCol, col(textCol), idx.n)
-      .write.mode("append").parquet(s"$path/shingles")
-    shingleTable(freshSz, idCol, col(textCol), idx.n)
-      .groupBy(col("id")).agg(count(lit(1)).as("set_size"))
-      .write.mode("append").parquet(s"$path/sizes")
-    minhashFromShingles(shingleTable(freshBd, idCol, col(textCol), idx.n), idx.numPerm)
-      .select(col("id").as("corpus_id"),
-        explode(array(bandExprs(idx.numBands, idx.rowsPerBand): _*)).as("band"))
-      .select(col("corpus_id"), col("band.band_idx"), col("band.band_hash"))
-      .write.mode("append").parquet(s"$path/bands")
-    // buckets: recompute from the appended band table via staging + swap
-    // (cannot overwrite a path feeding the plan being written). NOTE:
-    // this aggregate scans the FULL band table per append — amortized for
-    // the low-frequency batch-ingest shape this index serves; for
-    // high-frequency (per-micro-batch) appends use the streaming
-    // IngestIndex below, whose appends are pure partition writes and
-    // whose probe derives touched-bucket occupancy per batch instead
-    spark.read.parquet(s"$path/bands")
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub"))
-      .write.mode("overwrite").parquet(s"$path/buckets.staging")
-    val (fs, bp) = hadoopFs(spark, s"$path/buckets")
-    val staging = new org.apache.hadoop.fs.Path(s"$path/buckets.staging")
-    if (fs.exists(bp)) fs.delete(bp, true)
-    if (!fs.rename(staging, bp))
-      throw new java.io.IOException(s"band index bucket swap $staging -> $bp failed")
-    maybeAutoCompact(spark, path, BandIndexTables, autoCompactAt)
+    val m = IndexStore.latest(spark, path)
+    val idx = readBandIndex(spark, path, m)
+    val fresh = newDocs.join(idx.sizes.select(col("id").as(idCol)), Seq(idCol), "left_anti")
+      .localCheckpoint()
+    if (fresh.isEmpty) return
+    val next = IndexStore.commit(spark, path, writeBandDelta(spark, path, m, m.version + 1,
+      shingleTable(fresh, idCol, col(textCol), idx.n)))
+    autoCompactTarget(spark, path, next, BandIndexTables, autoCompactAt)
+      .foreach(compactBandIndex(spark, path, _))
   }
 
   // — persisted SEMANTIC incremental-dedup state (vec index) ———————————————
@@ -2027,7 +1966,7 @@ object Dedup {
     * `buckets` carries per-bucket corpus occupancy, min-id hub AND the
     * hub's vector, so hot-bucket detection + star verification need no
     * corpus aggregate per batch. The hyperplane geometry (numPlanes, dim,
-    * seed) rides in meta so batch bucketing can never silently
+    * seed) rides in the manifest so batch bucketing can never silently
     * desynchronize from the persisted corpus bucketing.
     */
   final case class VecIndex(
@@ -2038,13 +1977,10 @@ object Dedup {
       expectedItems: Long, fpp: Double,
       numPlanes: Int, dim: Int, seed: Long)
 
-  /** Persist the corpus-side state of [[incrementalSemanticDedup]]:
-    * `path/{vecs,hashes,buckets}` parquet + `path/bloom.bin` (sketch over
-    * the xxhash64 content keys, creation params in the header) +
-    * `path/meta.json` (hyperplane geometry — deleted FIRST on rebuild and
-    * written LAST, so its presence marks a complete index even when a
-    * rebuild over an existing index crashes mid-rewrite). One corpus pass
-    * builds the
+  /** Persist the corpus-side state of [[incrementalSemanticDedup]] as an
+    * [[IndexStore]] version: `vecs`, `hashes` and `buckets` tables, a
+    * sketch over the xxhash64 content keys, and the hyperplane geometry
+    * and sketch params in the manifest. One corpus pass builds the
     * bucketed vector table; hashes and buckets derive from the persisted
     * copy, so the artifacts can never disagree.
     */
@@ -2053,65 +1989,52 @@ object Dedup {
       seed: Long = 42L): Unit = {
     require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
     val spark = corpus.sparkSession
-    // Invalidate the completeness marker BEFORE touching any table: a
-    // rebuild over an existing index that crashes mid-rewrite (vecs done,
-    // hashes/buckets stale) must not leave the old meta.json vouching for
-    // mutually inconsistent tables.
-    locally {
-      val (fs, metaP) = hadoopFs(spark, s"$path/meta.json")
-      if (fs.exists(metaP)) fs.delete(metaP, false)
-    }
+    val v = IndexStore.nextVersion(spark, path)
     val planes = Similarity.hyperplanes(numPlanes, dim, seed)
-    corpus
+    val vecs = IndexStore.writeTable(path, "vecs", v, corpus
       .select(col(idCol).as("corpus_id"), col(vecCol).as("__cvec"),
-        Similarity.bucketId(col(vecCol), planes).as("__bucket"))
-      .write.mode("overwrite").parquet(s"$path/vecs")
-    val vecsP = spark.read.parquet(s"$path/vecs")
-    vecsP
-      .groupBy(xxhash64(col("__cvec")).as("__h"))
-      .agg(min(col("corpus_id")).as("__exact_of"),
-        min_by(col("__cvec"), col("corpus_id")).as("__rvec"))
-      .write.mode("overwrite").parquet(s"$path/hashes")
-    vecsP
-      .groupBy(col("__bucket"))
-      .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub"),
-        min_by(col("__cvec"), col("corpus_id")).as("__hubvec"))
-      .write.mode("overwrite").parquet(s"$path/buckets")
-    val hashesP = spark.read.parquet(s"$path/hashes")
-    val bf =
-      if (hashesP.isEmpty) // stat.bloomFilter NPEs on zero rows
-        emptyBloom(spark, expectedItems, fpp)
-      else hashesP.stat.bloomFilter("__h", expectedItems, fpp)
-    writeBloomFileAtomic(spark, path, bf, expectedItems, fpp)
-    writeTextFile(spark, s"$path/meta.json",
-      s"""{"numPlanes":$numPlanes,"dim":$dim,"seed":$seed}""")
+        Similarity.bucketId(col(vecCol), planes).as("__bucket")))
+    val hashes = IndexStore.writeTable(path, "hashes", v,
+      IndexStore.read(spark, path, "vecs", Seq(vecs))
+        .groupBy(xxhash64(col("__cvec")).as("__h"))
+        .agg(min(col("corpus_id")).as("__exact_of"),
+          min_by(col("__cvec"), col("corpus_id")).as("__rvec")))
+    val bf = bloomOf(IndexStore.read(spark, path, "hashes", Seq(hashes)), col("__h"),
+      expectedItems, fpp)
+    IndexStore.commit(spark, path, IndexStore.Manifest(v,
+      Map("numPlanes" -> numPlanes, "dim" -> dim, "seed" -> seed,
+        "expectedItems" -> expectedItems, "fpp" -> fpp),
+      Map("vecs" -> Seq(vecs), "hashes" -> Seq(hashes),
+        "buckets" -> Seq(writeVecBuckets(spark, path, v, Seq(vecs)))),
+      IndexStore.writeSketch(spark, path, v, bf, expectedItems, fpp)))
   }
 
-  /** Load a persisted vec index (lazy parquet frames + sketch + meta). */
-  def readVecIndex(spark: org.apache.spark.sql.SparkSession, path: String): VecIndex = {
-    finishBatchCompaction(spark, path) // complete an interrupted dir swap first
-    val meta = readTextFile(spark, s"$path/meta.json")
-    def longOf(k: String): Long =
-      s""""$k":\\s*(-?\\d+)""".r.findFirstMatchIn(meta)
-        .getOrElse(throw new IllegalArgumentException(s"vec index meta missing $k: $meta"))
-        .group(1).toLong
-    val (fs, p) = hadoopFs(spark, s"$path/bloom.bin")
-    val in = fs.open(p)
-    val (bf, items, fpp) =
-      try {
-        val dis = new java.io.DataInputStream(in)
-        val items = dis.readLong()
-        val fpp = dis.readDouble()
-        (org.apache.spark.util.sketch.BloomFilter.readFrom(dis), items, fpp)
-      } finally in.close()
+  /** The per-bucket occupancy, min-id hub and hub vector over every
+    * `vecs` dir, as version `v`'s `buckets` dir (an aggregate —
+    * appending would double-count).
+    */
+  private def writeVecBuckets(spark: org.apache.spark.sql.SparkSession, path: String,
+      v: Long, vecs: Seq[IndexStore.WriteDir]): IndexStore.WriteDir =
+    IndexStore.writeTable(path, "buckets", v,
+      IndexStore.read(spark, path, "vecs", vecs)
+        .groupBy(col("__bucket"))
+        .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub"),
+          min_by(col("__cvec"), col("corpus_id")).as("__hubvec")))
+
+  /** Load the committed vec index (lazy parquet frames + sketch). */
+  def readVecIndex(spark: org.apache.spark.sql.SparkSession, path: String): VecIndex =
+    readVecIndex(spark, path, IndexStore.latest(spark, path))
+
+  private def readVecIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest): VecIndex =
     VecIndex(
-      hashes = spark.read.parquet(s"$path/hashes"),
-      vecs = spark.read.parquet(s"$path/vecs"),
-      buckets = spark.read.parquet(s"$path/buckets"),
-      bloom = bf, expectedItems = items, fpp = fpp,
-      numPlanes = longOf("numPlanes").toInt, dim = longOf("dim").toInt,
-      seed = longOf("seed"))
-  }
+      hashes = IndexStore.read(spark, path, m, "hashes"),
+      vecs = IndexStore.read(spark, path, m, "vecs"),
+      buckets = IndexStore.read(spark, path, m, "buckets"),
+      bloom = IndexStore.readSketch(spark, path, m)._1,
+      expectedItems = m.long("expectedItems"), fpp = m.double("fpp"),
+      numPlanes = m.long("numPlanes").toInt, dim = m.long("dim").toInt,
+      seed = m.long("seed"))
 
   /** [[incrementalSemanticDedup]] against a persisted [[VecIndex]]:
     * classification is IDENTICAL to the live operator (the x84 probe
@@ -2207,25 +2130,22 @@ object Dedup {
   }
 
   /** Fold a batch's accepted vectors into a persisted vec index: bucketed
-    * vector rows for the new ids append as parquet parts, new hash rows
-    * anti-join the existing table on the content key (keep-first: an
-    * existing hash group's representative survives; intra-batch
-    * duplicates elect min id) and merge into the sketch, and the bucket
-    * aggregate is recomputed from the appended vector table via staging +
-    * swap (it is an aggregate — appending would double-count). Guards
-    * are PER TABLE, so a retry after a crash between the appends
-    * completes exactly the missing tables (same idempotence contract as
-    * [[appendToBandIndex]]). Meta is unchanged; the sketch saturates past
-    * `expectedItems` total inserts (fpp degrades, correctness doesn't —
-    * positives always verify); rewrite with [[writeVecIndex]] when the
-    * corpus outgrows it.
+    * vector rows for the new ids and new hash rows (anti-joined on the
+    * content key — keep-first: an existing hash group's representative
+    * survives; intra-batch duplicates elect min id) land as new dirs, the
+    * bucket aggregate is recomputed over the whole vector table, the
+    * hash keys merge into the sketch, and all of it commits as one
+    * version (a batch with nothing new commits nothing). The sketch
+    * saturates past `expectedItems` total inserts (fpp degrades,
+    * correctness doesn't — positives always verify); rewrite with
+    * [[writeVecIndex]] when the corpus outgrows it.
     */
   def appendToVecIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newVecs: DataFrame, idCol: String, vecCol: String,
       autoCompactAt: Int = AutoCompactDefault): Unit = {
-    val idx = readVecIndex(spark, path)
+    val m = IndexStore.latest(spark, path)
+    val idx = readVecIndex(spark, path, m)
     val planes = Similarity.hyperplanes(idx.numPlanes, idx.dim, idx.seed)
-    // all fresh sets are pinned BEFORE any write rewrites the dirs they read
     val freshVecRows = newVecs
       .select(col(idCol).as("corpus_id"), col(vecCol).as("__cvec"),
         Similarity.bucketId(col(vecCol), planes).as("__bucket"))
@@ -2238,33 +2158,100 @@ object Dedup {
       .agg(min(col("__cid")).as("__exact_of"), min_by(col("__v"), col("__cid")).as("__rvec"))
       .join(idx.hashes.select(col("__h")), Seq("__h"), "left_anti")
       .localCheckpoint()
-    val delta =
-      if (freshHashes.isEmpty)
-        emptyBloom(spark, idx.expectedItems, idx.fpp)
-      else freshHashes.stat.bloomFilter("__h", idx.expectedItems, idx.fpp)
-    // sketch BEFORE tables: rows-without-keys
-    // false-negative forever (the retry anti-join hides them from the
-    // delta), keys-without-rows just verify-fail
-    idx.bloom.mergeInPlace(delta)
-    writeBloomFileAtomic(spark, path, idx.bloom, idx.expectedItems, idx.fpp)
-    freshVecRows.write.mode("append").parquet(s"$path/vecs")
-    freshHashes.write.mode("append").parquet(s"$path/hashes")
-    // buckets: recompute from the appended vector table via staging + swap
-    // (cannot overwrite a path feeding the plan being written); same
-    // full-table-aggregate-per-append trade as [[appendToBandIndex]] —
-    // see the streaming IngestIndex for the high-frequency-append shape
-    spark.read.parquet(s"$path/vecs")
-      .groupBy(col("__bucket"))
-      .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub"),
-        min_by(col("__cvec"), col("corpus_id")).as("__hubvec"))
-      .write.mode("overwrite").parquet(s"$path/buckets.staging")
-    val (fs, bp) = hadoopFs(spark, s"$path/buckets")
-    val staging = new org.apache.hadoop.fs.Path(s"$path/buckets.staging")
-    if (fs.exists(bp)) fs.delete(bp, true)
-    if (!fs.rename(staging, bp))
-      throw new java.io.IOException(s"vec index bucket swap $staging -> $bp failed")
-    maybeAutoCompact(spark, path, VecIndexTables, autoCompactAt)
+    if (freshVecRows.isEmpty && freshHashes.isEmpty) return
+    idx.bloom.mergeInPlace(bloomOf(freshHashes, col("__h"), idx.expectedItems, idx.fpp))
+    val v = m.version + 1
+    val vecs = m.tables("vecs") :+ IndexStore.writeTable(path, "vecs", v, freshVecRows)
+    val next = IndexStore.commit(spark, path, m.copy(version = v,
+      tables = Map("vecs" -> vecs,
+        "hashes" -> (m.tables("hashes") :+ IndexStore.writeTable(path, "hashes", v, freshHashes)),
+        "buckets" -> Seq(writeVecBuckets(spark, path, v, vecs))),
+      sketch = IndexStore.writeSketch(spark, path, v, idx.bloom, idx.expectedItems, idx.fpp)))
+    autoCompactTarget(spark, path, next, VecIndexTables, autoCompactAt)
+      .foreach(compactVecIndex(spark, path, _))
   }
+
+  // — batch-index COMPACTION (small-file maintenance for the append
+  //   deltas) ———————————————————————————————————————————————————————————
+  //   Every batch append commits one more write dir per table: months of
+  //   daily appends reproduce the small-file swamp the streaming
+  //   IngestIndex solves for its partitioned layout. A compaction rewrites
+  //   tables into few files and commits them as one [[IndexStore]]
+  //   version naming only the rewritten dirs; a crash before that commit
+  //   leaves the previous version current.
+
+  /** Table sets for the convenience wrappers below. */
+  private val BandIndexTables = Seq("shingles", "sizes", "bands")
+  private val VecIndexTables = Seq("vecs", "hashes")
+
+  /** Default part-file trigger for append-side auto-compaction: every
+    * batch append adds ~one shuffle's worth of part files, so the
+    * threshold is in FILES, not appends — 256 keeps a busy daily-ingest
+    * index from degrading into a many-thousand-file scan swamp while
+    * folding rarely enough that the fold cost (one table rewrite) stays
+    * amortized. Pass `autoCompactAt = 0` on any append to disable.
+    */
+  val AutoCompactDefault = 256
+
+  /** The shared auto-compaction trigger (r11 verdict task #6: deltas
+    * accumulated until someone remembered to call `compact*Index`): over
+    * the (part files, bytes) the manifest `m` records for `tables`, once
+    * the largest file count reaches `at` (0 disables), the file count to
+    * fold to — the largest table's bytes over
+    * `spark.sql.files.maxPartitionBytes`, so a 100-TB-scale index folds
+    * to scan-parallel files. Logged on stderr.
+    */
+  private[graft] def autoCompactTarget(spark: org.apache.spark.sql.SparkSession,
+      path: String, m: IndexStore.Manifest, tables: Seq[String], at: Int): Option[Int] = {
+    val maxFiles = tables.map(m.files).max
+    if (at <= 0 || maxFiles < at) None
+    else {
+      val maxPartBytes = spark.sessionState.conf.filesMaxPartitionBytes
+      val target = math.max(1L, (tables.map(m.bytes).max + maxPartBytes - 1) / maxPartBytes).toInt
+      System.err.println(
+        s"""{"index_auto_compact":${"\"" + path + "\""},"part_files":$maxFiles,"trigger":$at,"target_files":$target}""")
+      Some(target)
+    }
+  }
+
+  /** Rewrite `tables` of the committed index at `path` into `targetFiles`
+    * parquet parts each and commit them as a new [[IndexStore]] version
+    * naming only the rewritten dirs (other tables, the sketch and the
+    * metadata stay as they are). Row content is identical, so
+    * classification cannot shift.
+    */
+  private[graft] def compactIndexTables(spark: org.apache.spark.sql.SparkSession, path: String,
+      tables: Seq[String], targetFiles: Int): Unit = {
+    require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
+    val m = IndexStore.latest(spark, path)
+    val v = m.version + 1
+    IndexStore.commit(spark, path, m.copy(version = v, tables = m.tables ++ tables.map(t =>
+      t -> Seq(IndexStore.writeTable(path, t, v,
+        IndexStore.read(spark, path, m, t).coalesce(targetFiles))))))
+  }
+
+  /** [[compactIndexTables]] over [[writeHashIndex]]'s layout. */
+  def compactHashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      targetFiles: Int = 1): Unit =
+    compactIndexTables(spark, path, Seq("hashes"), targetFiles)
+
+  /** [[compactIndexTables]] over [[writeParagraphIndex]]'s layout. */
+  def compactParagraphIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      targetFiles: Int = 1): Unit =
+    compactIndexTables(spark, path, Seq("paras"), targetFiles)
+
+  /** [[compactIndexTables]] over [[writeBandIndex]]'s layout (`buckets` is
+    * excluded: each append already rewrites it whole).
+    */
+  def compactBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      targetFiles: Int = 1): Unit =
+    compactIndexTables(spark, path, BandIndexTables, targetFiles)
+
+  /** [[compactIndexTables]] over [[writeVecIndex]]'s layout (`buckets`
+    * excluded, same reason as the band index). */
+  def compactVecIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      targetFiles: Int = 1): Unit =
+    compactIndexTables(spark, path, VecIndexTables, targetFiles)
 
   // — duplication-aware SOFT dedup —————————————————————————————————————————
 
@@ -2793,190 +2780,6 @@ object Dedup {
     writeBloomFileAtomic(spark, path, idx.bloom, idx.expectedItems, idx.fpp)
   }
 
-  // — batch-index COMPACTION (small-file maintenance for the append
-  //   deltas) ———————————————————————————————————————————————————————————
-  //   appendToBandIndex / appendToVecIndex / appendToParagraphIndex each
-  //   land `mode("append")` parquet parts in flat table dirs: months of
-  //   daily appends reproduce the small-file swamp the streaming IngestIndex already solved for its partitioned
-  //   layout. This is the flat-dir twin of that marker protocol — each
-  //   table dir is rewritten into few files via invisible `.staging`
-  //   dirs, a self-describing `_compacting_batch.json` marker gates the
-  //   swap, and every index reader completes an interrupted swap before
-  //   scanning. Run while nothing is appending (a maintenance window) —
-  //   the same single-writer assumption as [[compactIngestIndex]].
-
-  /** Compact a batch-maintained index's table dirs into `targetFiles`
-    * parquet parts each. Crash-safe in two stages: stage (read each
-    * table, rewrite into `<table>.staging`, publish the marker via
-    * tmp+rename) and finish (swap each staged dir over its table, remove
-    * the marker). A crash before the marker leaves only invisible staging
-    * dirs (swept by the next run); a crash after it is completed by
-    * [[finishBatchCompaction]], which every `read*Index` runs first.
-    * `bloom.bin` / `meta.json` / `buckets` (already whole-dir swapped per
-    * append) are untouched. Row content is byte-identical — only the
-    * file layout changes — so probe classification cannot shift.
-    */
-  def compactBatchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      tables: Seq[String], targetFiles: Int = 1): Unit = {
-    stageBatchCompaction(spark, path, tables, targetFiles)
-    finishBatchCompaction(spark, path)
-  }
-
-  /** Table sets for the convenience wrappers below. */
-  private val ParagraphIndexTables = Seq("paras")
-  private val BandIndexTables = Seq("shingles", "sizes", "bands")
-  private val VecIndexTables = Seq("vecs", "hashes")
-
-  /** Default append-count trigger for [[maybeAutoCompact]]: every batch
-    * append adds ~one shuffle's worth of part files, so the threshold is
-    * in FILES, not appends — 256 keeps a busy daily-ingest index from
-    * degrading into a many-thousand-file scan swamp while folding rarely
-    * enough that the fold cost (one table rewrite) stays amortized.
-    * Pass `autoCompactAt = 0` on any append to disable.
-    */
-  val AutoCompactDefault = 256
-
-  /** Append-side auto-compaction of the marker-protocol families: once a
-    * table dir holds `at` part files ([[autoCompactTarget]]), fold the
-    * layout via [[compactBatchIndex]] — crash-safe in-append, as a crash
-    * mid-fold is finished by the next reader.
-    */
-  private[graft] def maybeAutoCompact(spark: org.apache.spark.sql.SparkSession,
-      path: String, tables: Seq[String], at: Int): Unit =
-    autoCompactTarget(spark, path, tables.map(t => partFiles(spark, s"$path/$t")), at)
-      .foreach(compactBatchIndex(spark, path, tables, _))
-
-  /** (part files, bytes) directly under `dir`; none when it is absent. */
-  private[graft] def partFiles(spark: org.apache.spark.sql.SparkSession, dir: String): (Int, Long) = {
-    val (fs, p) = hadoopFs(spark, dir)
-    val parts = if (!fs.exists(p)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(p).filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-    (parts.length, parts.map(_.getLen).sum)
-  }
-
-  /** The shared auto-compaction trigger (r11 verdict task #6: deltas
-    * accumulated until someone remembered to call `compact*Index`): over
-    * each table's (part files, bytes), once the largest file count
-    * reaches `at` (0 disables), the file count to fold to — the largest
-    * table's bytes over `spark.sql.files.maxPartitionBytes`, so a
-    * 100-TB-scale index folds to scan-parallel files. Logged on stderr.
-    */
-  private[graft] def autoCompactTarget(spark: org.apache.spark.sql.SparkSession,
-      path: String, tables: Seq[(Int, Long)], at: Int): Option[Int] = {
-    val maxFiles = tables.map(_._1).max
-    if (at <= 0 || maxFiles < at) None
-    else {
-      val maxPartBytes = spark.sessionState.conf.filesMaxPartitionBytes
-      val target = math.max(1L, (tables.map(_._2).max + maxPartBytes - 1) / maxPartBytes).toInt
-      System.err.println(
-        s"""{"index_auto_compact":${"\"" + path + "\""},"part_files":$maxFiles,"trigger":$at,"target_files":$target}""")
-      Some(target)
-    }
-  }
-
-  /** Rewrite [[writeHashIndex]]'s table into `targetFiles` parquet parts
-    * and commit it as a new [[IndexStore]] version naming only the
-    * rewritten dir (same sketch, same params). Row content is identical,
-    * so classification cannot shift.
-    */
-  def compactHashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFiles: Int = 1): Unit = {
-    require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    val m = IndexStore.latest(spark, path)
-    val v = m.version + 1
-    val hashes = IndexStore.writeTable(path, "hashes", v,
-      IndexStore.read(spark, path, m, "hashes").coalesce(targetFiles))
-    IndexStore.commit(spark, path, m.copy(version = v, tables = Map("hashes" -> Seq(hashes))))
-  }
-
-  /** [[compactBatchIndex]] over [[writeParagraphIndex]]'s layout. */
-  def compactParagraphIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFiles: Int = 1): Unit =
-    compactBatchIndex(spark, path, ParagraphIndexTables, targetFiles)
-
-  /** [[compactBatchIndex]] over [[writeBandIndex]]'s layout (`buckets` is
-    * excluded: each append already rewrites it whole via staging+swap).
-    */
-  def compactBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFiles: Int = 1): Unit =
-    compactBatchIndex(spark, path, BandIndexTables, targetFiles)
-
-  /** [[compactBatchIndex]] over [[writeVecIndex]]'s layout (`buckets`
-    * excluded, same reason as the band index). */
-  def compactVecIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFiles: Int = 1): Unit =
-    compactBatchIndex(spark, path, VecIndexTables, targetFiles)
-
-  private val BatchMarker = "_compacting_batch.json"
-
-  /** Stage 1 of [[compactBatchIndex]]: staging dirs + marker. Exposed
-    * `private[graft]` so the crash drills can stop exactly here.
-    */
-  private[graft] def stageBatchCompaction(spark: org.apache.spark.sql.SparkSession,
-      path: String, tables: Seq[String], targetFiles: Int): Unit = {
-    require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    val (fs, _) = hadoopFs(spark, path)
-    // complete a prior run's published-but-unfinished swap BEFORE sweeping
-    // staging: after the marker, staging may hold the only complete copy
-    // of a table (its dir is deleted first in the swap) — sweeping it
-    // while the marker still lists the table would lose the data
-    finishBatchCompaction(spark, path)
-    tables.foreach { tbl =>
-      val stale = new org.apache.hadoop.fs.Path(s"$path/$tbl.staging")
-      if (fs.exists(stale)) fs.delete(stale, true)
-    }
-    val staged = tables.filter(tbl =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"$path/$tbl")))
-    if (staged.isEmpty) return // nothing to compact
-    staged.foreach { tbl =>
-      spark.read.parquet(s"$path/$tbl").coalesce(targetFiles)
-        .write.mode("overwrite").parquet(s"$path/$tbl.staging")
-    }
-    // self-describing marker (same key shape as the ingest protocol's, a
-    // distinct file name because the finish semantics differ: whole-dir
-    // swap here, partition fold there)
-    publishBatchMarker(spark, path, staged)
-  }
-
-  /** Publish the batch-swap marker for `tables` (tmp + rename — the point
-    * of no return: after this, `<tbl>.staging` dirs are COMMITTED and
-    * [[finishBatchCompaction]] will swap them over their tables). Shared
-    * by table compaction and by any maintenance op that rewrites whole
-    * tables behind the same crash protocol (e.g. [[Ivf.rebalanceIndex]]).
-    */
-  private[graft] def publishBatchMarker(spark: org.apache.spark.sql.SparkSession,
-      path: String, tables: Seq[String]): Unit = {
-    val (fs, _) = hadoopFs(spark, path)
-    val marker = tables.map(tbl => s""""$tbl":[]""").mkString("{", ",", "}")
-    writeTextFile(spark, s"$path/$BatchMarker.tmp", marker)
-    val dst = new org.apache.hadoop.fs.Path(s"$path/$BatchMarker")
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(s"$path/$BatchMarker.tmp"), dst))
-      throw new java.io.IOException(s"batch compaction marker publish failed at $dst")
-  }
-
-  /** Stage 2 of [[compactBatchIndex]] and the self-heal every
-    * `read*Index` runs first. Idempotent: a table whose staging dir is
-    * already gone was swapped by a previous attempt.
-    */
-  private[graft] def finishBatchCompaction(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val (fs, markerP) = hadoopFs(spark, s"$path/$BatchMarker")
-    if (!fs.exists(markerP)) return
-    val marker = readTextFile(spark, s"$path/$BatchMarker")
-    val tables = """"([A-Za-z0-9_]+)":\[""".r.findAllMatchIn(marker).map(_.group(1)).toSeq
-    tables.foreach { tbl =>
-      val staging = new org.apache.hadoop.fs.Path(s"$path/$tbl.staging")
-      val target = new org.apache.hadoop.fs.Path(s"$path/$tbl")
-      if (fs.exists(staging)) {
-        if (fs.exists(target)) fs.delete(target, true)
-        if (!fs.rename(staging, target))
-          throw new java.io.IOException(s"batch compaction swap $staging -> $target failed")
-      }
-    }
-    fs.delete(markerP, false)
-  }
-
   // — streaming VEC ingest index (the EMBEDDING arm of the IngestIndex) ————
   //   [[curatedCorpusIndexedSink]]-shaped streams that carry an embedding
   //   column need the same exactly-once discipline for SEMANTIC dedup
@@ -3300,93 +3103,79 @@ object Dedup {
   /** A loaded persistent simhash index. `buckets` carries per-bucket
     * corpus occupancy plus the min-id hub AND the hub's signature, so
     * hot-bucket detection and star verification need no corpus aggregate
-    * per batch (the [[VecIndex]] convention). `maxDist` rides in meta —
-    * probing with a different distance than the index was chunked for
-    * would silently lose the pigeonhole guarantee.
+    * per batch (the [[VecIndex]] convention). `maxDist` rides in the
+    * manifest — probing with a different distance than the index was
+    * chunked for would silently lose the pigeonhole guarantee.
     */
   final case class SimhashIndex(sigs: DataFrame, chunks: DataFrame,
       buckets: DataFrame, maxDist: Int)
 
-  private def rebuildSimhashBuckets(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    // recompute from the persisted chunk table via the shared
-    // staging+MARKER swap (cannot overwrite a path feeding the plan being
-    // written; and a bare delete-then-rename has a crash window — between
-    // the delete and the rename — that leaves NO buckets dir at all.
-    // ADVICE r12: this sits on the streaming hot path via
-    // mediaCorpusIndexedSink's per-micro-batch append, so that window
-    // would brick the sink's replay loop until manual repair; under the
-    // marker protocol the next readSimhashIndex heals the swap instead)
-    spark.read.parquet(s"$path/chunks")
-      .groupBy(col("chunk_idx"), col("chunk_val"))
-      .agg(count(lit(1)).as("__ccnt"),
-        min(struct(col("corpus_id"), col("simhash"))).as("__hub"))
-      .write.mode("overwrite").parquet(s"$path/buckets.staging")
-    publishBatchMarker(spark, path, Seq("buckets"))
-    finishBatchCompaction(spark, path)
+  /** `batch`'s signatures and chunks as version `v`'s dirs appended to
+    * `m`'s, and the buckets recomputed over every chunk dir: the manifest
+    * to commit.
+    */
+  private def writeSimhashDelta(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, v: Long, batch: DataFrame): IndexStore.Manifest = {
+    val sigs = IndexStore.writeTable(path, "sigs", v, batch)
+    val chunks = m.tables.getOrElse("chunks", Nil) :+ IndexStore.writeTable(path, "chunks", v,
+      IndexStore.read(spark, path, "sigs", Seq(sigs))
+        .select(col("corpus_id"), col("simhash"),
+          explode(array(simhashChunkCols(col("simhash"), m.long("maxDist").toInt): _*)).as("ch"))
+        .select(col("corpus_id"), col("simhash"), col("ch.chunk_idx"), col("ch.chunk_val")))
+    val buckets = IndexStore.writeTable(path, "buckets", v,
+      IndexStore.read(spark, path, "chunks", chunks)
+        .groupBy(col("chunk_idx"), col("chunk_val"))
+        .agg(count(lit(1)).as("__ccnt"),
+          min(struct(col("corpus_id"), col("simhash"))).as("__hub")))
+    m.copy(version = v, tables = Map("sigs" -> (m.tables.getOrElse("sigs", Nil) :+ sigs),
+      "chunks" -> chunks, "buckets" -> Seq(buckets)))
   }
 
-  /** Persist the corpus side of Hamming near-dup state:
-    * `path/{sigs,chunks,buckets}` parquet + `path/meta.json` (the chunk
-    * geometry's `maxDist` — deleted FIRST on rebuild and written LAST, so
-    * its presence marks a complete, mutually consistent index).
+  /** Persist the corpus side of Hamming near-dup state as an
+    * [[IndexStore]] version: `sigs`, `chunks` and `buckets` tables, with
+    * the chunk geometry's `maxDist` in the manifest.
     */
   def writeSimhashIndex(sig: DataFrame, idCol: String, sigCol: String,
       path: String, maxDist: Int): Unit = {
     val spark = sig.sparkSession
-    val (fs, metaP) = hadoopFs(spark, s"$path/meta.json")
-    if (fs.exists(metaP)) fs.delete(metaP, false)
-    sig.select(col(idCol).as("corpus_id"), col(sigCol).cast("long").as("simhash"))
-      .write.mode("overwrite").parquet(s"$path/sigs")
-    val sigsP = spark.read.parquet(s"$path/sigs")
-    sigsP.select(col("corpus_id"), col("simhash"),
-        explode(array(simhashChunkCols(col("simhash"), maxDist): _*)).as("ch"))
-      .select(col("corpus_id"), col("simhash"), col("ch.chunk_idx"), col("ch.chunk_val"))
-      .write.mode("overwrite").parquet(s"$path/chunks")
-    rebuildSimhashBuckets(spark, path)
-    writeTextFile(spark, s"$path/meta.json", s"""{"maxDist":$maxDist}""")
+    val v = IndexStore.nextVersion(spark, path)
+    IndexStore.commit(spark, path, writeSimhashDelta(spark, path,
+      IndexStore.Manifest(v, Map("maxDist" -> maxDist), Map.empty), v,
+      sig.select(col(idCol).as("corpus_id"), col(sigCol).cast("long").as("simhash"))))
   }
 
-  /** Load a persisted simhash index (lazy parquet frames + parsed meta). */
+  /** Load the committed simhash index (lazy parquet frames + `maxDist`). */
   def readSimhashIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): SimhashIndex = {
-    finishBatchCompaction(spark, path) // complete an interrupted dir swap first
-    val meta = readTextFile(spark, s"$path/meta.json")
-    val maxDist = """"maxDist":\s*(\d+)""".r.findFirstMatchIn(meta)
-      .getOrElse(throw new IllegalArgumentException(s"simhash index meta missing maxDist: $meta"))
-      .group(1).toInt
-    SimhashIndex(
-      sigs = spark.read.parquet(s"$path/sigs"),
-      chunks = spark.read.parquet(s"$path/chunks"),
-      buckets = spark.read.parquet(s"$path/buckets"),
-      maxDist = maxDist)
-  }
+      path: String): SimhashIndex =
+    readSimhashIndex(spark, path, IndexStore.latest(spark, path))
 
-  /** Append a signature batch. Idempotent under replay: each table
-    * anti-joins the ids it already holds, with both fresh sets pinned
-    * BEFORE any write rewrites the directories they read (the band-index
-    * lesson — a per-table guard completes exactly the missing tables
-    * after a crash between the two appends). Buckets recompute from the
-    * appended chunk table via staging + swap.
+  private def readSimhashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest): SimhashIndex =
+    SimhashIndex(
+      sigs = IndexStore.read(spark, path, m, "sigs"),
+      chunks = IndexStore.read(spark, path, m, "chunks"),
+      buckets = IndexStore.read(spark, path, m, "buckets"),
+      maxDist = m.long("maxDist").toInt)
+
+  /** Append a signature batch: new ids' signatures and chunks land as new
+    * dirs, the buckets are recomputed over the whole chunk table, and all
+    * three commit as one version. Idempotent under replay: ids the index
+    * already holds are skipped, and a batch with nothing new commits
+    * nothing.
     */
   def appendToSimhashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newSigs: DataFrame, idCol: String, sigCol: String,
       autoCompactAt: Int = AutoCompactDefault): Unit = {
-    val idx = readSimhashIndex(spark, path)
-    val batch = newSigs.select(col(idCol).as("corpus_id"),
-      col(sigCol).cast("long").as("simhash"))
-    def freshVs(existing: DataFrame): DataFrame =
-      batch.join(existing.select(col("corpus_id")), Seq("corpus_id"), "left_anti")
-        .localCheckpoint()
-    val freshSigs = freshVs(idx.sigs)
-    val freshChunks = freshVs(idx.chunks)
-    freshSigs.write.mode("append").parquet(s"$path/sigs")
-    freshChunks.select(col("corpus_id"), col("simhash"),
-        explode(array(simhashChunkCols(col("simhash"), idx.maxDist): _*)).as("ch"))
-      .select(col("corpus_id"), col("simhash"), col("ch.chunk_idx"), col("ch.chunk_val"))
-      .write.mode("append").parquet(s"$path/chunks")
-    rebuildSimhashBuckets(spark, path)
-    maybeAutoCompact(spark, path, SimhashIndexTables, autoCompactAt)
+    val m = IndexStore.latest(spark, path)
+    val idx = readSimhashIndex(spark, path, m)
+    val fresh = newSigs.select(col(idCol).as("corpus_id"), col(sigCol).cast("long").as("simhash"))
+      .join(idx.sigs.select(col("corpus_id")), Seq("corpus_id"), "left_anti")
+      .localCheckpoint()
+    if (fresh.isEmpty) return
+    val next = IndexStore.commit(spark, path,
+      writeSimhashDelta(spark, path, m, m.version + 1, fresh))
+    autoCompactTarget(spark, path, next, SimhashIndexTables, autoCompactAt)
+      .foreach(compactSimhashIndex(spark, path, _))
   }
 
   /** Probe a signature batch against the index: every corpus item within
@@ -3437,10 +3226,10 @@ object Dedup {
 
   private val SimhashIndexTables = Seq("sigs", "chunks")
 
-  /** [[compactBatchIndex]] over [[writeSimhashIndex]]'s layout (`buckets`
-    * excluded — each append already rewrites it whole via staging+swap).
+  /** [[compactIndexTables]] over [[writeSimhashIndex]]'s layout
+    * (`buckets` excluded — each append already rewrites it whole).
     */
   def compactSimhashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int = 1): Unit =
-    compactBatchIndex(spark, path, SimhashIndexTables, targetFiles)
+    compactIndexTables(spark, path, SimhashIndexTables, targetFiles)
 }

@@ -98,16 +98,15 @@ object Frequency {
   //   Storage shape (round 13 — the original fold REWROTE the whole
   //   sketches table per batch, an O(index) cost for an O(batch) change;
   //   at host grain, 10⁸ keys, a daily fold paid the full index in I/O):
-  //   `sketches` is a MULTI-ROW-PER-KEY delta table. A fold APPENDS the
-  //   batch's per-key sketch rows (O(batch) I/O, the index is never
-  //   read); the read side folds duplicates with `hll_union_agg` per key;
-  //   compaction ([[compactHllIndex]], auto-triggered by part-file count
-  //   like every other index family) collapses the table back to one row
-  //   per key under the shared staging+marker swap — crash-safe on both
-  //   sides of the marker, and `readHllEstimates` heals an interrupted
-  //   swap first.
+  //   `sketches` is a MULTI-ROW-PER-KEY delta table. A fold commits the
+  //   batch's per-key sketch rows as one more [[IndexStore]] write dir
+  //   (O(batch) I/O, the index is never read); the read side folds
+  //   duplicates with `hll_union_agg` per key; compaction
+  //   ([[compactHllIndex]], auto-triggered by part-file count like every
+  //   other index family) collapses the table back to one row per key in
+  //   one commit.
   //
-  //   `meta.json` pins lgK: a fold or sink at a different lgK than the
+  //   The manifest pins lgK: a fold or sink at a different lgK than the
   //   index was built with would sketch the batch at the new precision
   //   and make `hll_union_agg` error (or silently degrade) later — the
   //   mirror of the simhash index's maxDist pin. NOTE the estimator
@@ -117,91 +116,70 @@ object Frequency {
   //   register-identical and compares EXACTLY (the x133 idempotence
   //   gate).
 
+  private def sketchesOf(df: DataFrame, keyCol: String, valueCol: String, lgK: Int): DataFrame =
+    df.groupBy(col(keyCol).as("key"))
+      .agg(expr(s"hll_sketch_agg($valueCol, $lgK)").as("sketch"))
+
   /** Initialize the index from a first batch: one HLL sketch per key,
-    * plus the lgK pin in `meta.json`.
+    * with lgK pinned in the manifest.
     */
   def writeHllIndex(spark: SparkSession, path: String, df: DataFrame,
       keyCol: String, valueCol: String, lgK: Int = 12): Unit = {
-    df.groupBy(col(keyCol).as("key"))
-      .agg(expr(s"hll_sketch_agg($valueCol, $lgK)").as("sketch"))
-      .write.mode("overwrite").parquet(s"$path/sketches")
-    Dedup.writeTextFile(spark, s"$path/meta.json", s"""{"lgk":$lgK}""")
+    val v = IndexStore.nextVersion(spark, path)
+    IndexStore.commit(spark, path, IndexStore.Manifest(v, Map("lgK" -> lgK),
+      Map("sketches" -> Seq(IndexStore.writeTable(path, "sketches", v,
+        sketchesOf(df, keyCol, valueCol, lgK))))))
   }
 
-  /** Reject a fold/read whose lgK differs from the one the index was
-    * built with (indexes created before the meta pin existed fail loudly
-    * too — rebuild them with [[writeHllIndex]]).
-    */
-  private def requireLgK(spark: SparkSession, path: String, lgK: Int): Unit = {
-    // a MISSING meta.json (pre-pin index, or an interrupted build) must
-    // raise the rebuild guidance, not a raw FileNotFoundException from
-    // the read below (ADVICE r13)
-    val (fs, p) = Dedup.hadoopFs(spark, s"$path/meta.json")
-    if (!fs.exists(p)) throw new IllegalStateException(
-      s"HLL index at $path has no meta.json (pre-pin index or incomplete " +
-        "build) — rebuild with writeHllIndex")
-    val stored = """"lgk"\s*:\s*([0-9]+)""".r
-      .findFirstMatchIn(Dedup.readTextFile(spark, s"$path/meta.json"))
-      .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"HLL index at $path has no lgk in meta.json — rebuild with writeHllIndex"))
-    require(stored == lgK,
-      s"HLL index at $path was built at lgK=$stored, fold/sink called with lgK=$lgK " +
-        "— mixed-precision registers do not union")
-  }
-
-  /** Fold a batch: APPEND the batch's per-key sketch rows as delta
-    * partitions (O(batch) I/O — the existing index is not read, let alone
+  /** Fold a batch: commit the batch's per-key sketch rows as a new write
+    * dir (O(batch) I/O — the existing index is not read, let alone
     * rewritten). Keys new to the index appear; untouched keys are
-    * untouched on disk. Once the table accumulates `autoCompactAt` part
-    * files the fold compacts it in place ([[compactHllIndex]]).
+    * untouched on disk. A fold whose lgK differs from the index's is
+    * rejected (mixed-precision registers do not union). Once the table
+    * holds `autoCompactAt` part files the fold compacts it
+    * ([[compactHllIndex]]).
     */
   def foldIntoHllIndex(spark: SparkSession, path: String, batch: DataFrame,
       keyCol: String, valueCol: String, lgK: Int = 12,
       autoCompactAt: Int = Dedup.AutoCompactDefault): Unit = {
-    Dedup.finishBatchCompaction(spark, path)
-    requireLgK(spark, path, lgK)
-    batch.groupBy(col(keyCol).as("key"))
-      .agg(expr(s"hll_sketch_agg($valueCol, $lgK)").as("sketch"))
-      .write.mode("append").parquet(s"$path/sketches")
-    maybeAutoCompactHll(spark, path, autoCompactAt)
+    val m = IndexStore.latest(spark, path)
+    val stored = m.long("lgK")
+    require(stored == lgK,
+      s"HLL index at $path was built at lgK=$stored, fold/sink called with lgK=$lgK " +
+        "— mixed-precision registers do not union")
+    val v = m.version + 1
+    val next = IndexStore.commit(spark, path, m.copy(version = v, tables = Map("sketches" ->
+      (m.tables("sketches") :+ IndexStore.writeTable(path, "sketches", v,
+        sketchesOf(batch, keyCol, valueCol, lgK))))))
+    // registers fold by union, not by file coalesce — a coalesce-only
+    // compaction would leave duplicate keys forever
+    Dedup.autoCompactTarget(spark, path, next, Seq("sketches"), autoCompactAt)
+      .foreach(compactHllIndex(spark, path, _))
   }
 
+  private def unionedSketches(spark: SparkSession, path: String, m: IndexStore.Manifest): DataFrame =
+    IndexStore.read(spark, path, m, "sketches")
+      .groupBy(col("key")).agg(expr("hll_union_agg(sketch)").as("sketch"))
+
   /** Collapse the delta table to one row per key (per-key register
-    * union), via the shared staging+marker swap — same crash protocol as
-    * every other index family's compaction.
+    * union), committed as one version.
     */
   def compactHllIndex(spark: SparkSession, path: String, targetFiles: Int = 1): Unit = {
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    Dedup.finishBatchCompaction(spark, path)
-    spark.read.parquet(s"$path/sketches")
-      .groupBy(col("key")).agg(expr("hll_union_agg(sketch)").as("sketch"))
-      .coalesce(targetFiles)
-      .write.mode("overwrite").parquet(s"$path/sketches.staging")
-    Dedup.publishBatchMarker(spark, path, Seq("sketches"))
-    Dedup.finishBatchCompaction(spark, path)
+    val m = IndexStore.latest(spark, path)
+    val v = m.version + 1
+    val sketches = IndexStore.writeTable(path, "sketches", v,
+      unionedSketches(spark, path, m).coalesce(targetFiles))
+    IndexStore.commit(spark, path, m.copy(version = v, tables = Map("sketches" -> Seq(sketches))))
   }
 
-  /** [[Dedup.autoCompactTarget]]'s trigger (part-file count ≥ `at`) with
-    * the HLL-specific compaction: registers fold by union, not by file
-    * coalesce — a coalesce-only compaction would leave duplicate keys
-    * forever.
+  /** Per-key approx-distinct estimates from the committed sketches
+    * (delta rows for the same key union here).
     */
-  private def maybeAutoCompactHll(spark: SparkSession, path: String, at: Int): Unit =
-    Dedup.autoCompactTarget(spark, path, Seq(Dedup.partFiles(spark, s"$path/sketches")), at)
-      .foreach(compactHllIndex(spark, path, _))
-
-  /** Per-key approx-distinct estimates from the persisted sketches
-    * (healing an interrupted compaction swap first; delta rows for the
-    * same key union here).
-    */
-  def readHllEstimates(spark: SparkSession, path: String): DataFrame = {
-    Dedup.finishBatchCompaction(spark, path)
-    spark.read.parquet(s"$path/sketches")
-      .groupBy(col("key")).agg(expr("hll_union_agg(sketch)").as("sketch"))
+  def readHllEstimates(spark: SparkSession, path: String): DataFrame =
+    unionedSketches(spark, path, IndexStore.latest(spark, path))
       .select(col("key"),
         expr("CAST(hll_sketch_estimate(sketch) AS BIGINT)").as("approx_distinct"))
-  }
 
   def heavyHitters(items: DataFrame, term: Column, minFreq: Long,
       eps: Double = 1e-3, confidence: Double = 0.99, seed: Int = 7): DataFrame = {

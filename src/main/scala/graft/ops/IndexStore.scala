@@ -9,7 +9,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * idea of table formats, on the Hadoop-FS helpers. Under an index dir:
   *   - `_manifest/<20-digit version>.json`, one per committed version: the
   *     family's typed metadata, the write dirs each table reads and the
-  *     name of the sketch file;
+  *     name of the sketch file, if the family keeps one;
   *   - `<table>/__w=<version>/`, one parquet write of a table (a family
   *     may partition inside it);
   *   - `bloom-<version>.bin`, a sketch in [[Dedup.writeBloomFile]]'s
@@ -24,9 +24,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * neither of the two newest manifests names, so a reader that loaded the
   * previous version still finds its files.
   *
-  * Single writer per index, the same assumption as
-  * [[Dedup.compactIngestIndex]]: a second writer racing for one version
-  * fails its commit, but a sweep can delete what it has not committed yet.
+  * Single writer per index: a second writer racing for one version fails
+  * its commit, but it shares that version's write dirs with the first and
+  * a sweep can delete what it has not committed yet.
   */
 object IndexStore {
 
@@ -39,7 +39,7 @@ object IndexStore {
 
   /** One committed version. `meta` values are strings or numbers. */
   final case class Manifest(version: Long, meta: Map[String, Any],
-      tables: Map[String, Seq[WriteDir]], sketch: String) {
+      tables: Map[String, Seq[WriteDir]], sketch: Option[String] = None) {
     def string(key: String): String = field(key).toString
     def long(key: String): Long = field(key).asInstanceOf[Number].longValue
     def double(key: String): Double = field(key).asInstanceOf[Number].doubleValue
@@ -106,14 +106,15 @@ object IndexStore {
 
   /** Write `bf` as the sketch of `version`; returns its file name. */
   def writeSketch(spark: SparkSession, index: String, version: Long, bf: BloomFilter,
-      expectedItems: Long, fpp: Double): String = {
+      expectedItems: Long, fpp: Double): Option[String] = {
     Dedup.writeBloomFile(spark, s"$index/bloom-$version.bin", bf, expectedItems, fpp)
-    s"bloom-$version.bin"
+    Some(s"bloom-$version.bin")
   }
 
   /** The sketch `m` names, with its creation params. */
   def readSketch(spark: SparkSession, index: String, m: Manifest): (BloomFilter, Long, Double) =
-    Dedup.readBloomFile(spark, s"$index/${m.sketch}")
+    Dedup.readBloomFile(spark, s"$index/${m.sketch.getOrElse(
+      throw new IllegalStateException(s"index manifest v${m.version} at $index names no sketch"))}")
 
   /** Make `m`, which must be at [[nextVersion]], the current version, then
     * sweep. Write dirs without part files are left out: an empty
@@ -138,7 +139,7 @@ object IndexStore {
   private def sweep(spark: SparkSession, index: String): Unit = {
     val (fs, root) = Dedup.hadoopFs(spark, index)
     val named = versions(spark, index).takeRight(2).map(manifest(spark, index, _)).flatMap { m =>
-      Seq(f"_manifest/${m.version}%020d.json", m.sketch) ++
+      Seq(f"_manifest/${m.version}%020d.json") ++ m.sketch ++
         m.tables.toSeq.flatMap { case (t, ds) => ds.map(d => s"$t/${d.dir}") }
     }.toSet
     def drop(s: org.apache.hadoop.fs.FileStatus, rel: String): Unit =

@@ -239,9 +239,10 @@ object Ivf {
       excludeSelf)
   }
 
-  /** Persist a trained index: the centroid table plus the norm-annotated
-    * assigned corpus, the latter written `partitionBy(centroid_id)` — the
-    * on-disk inverted-list layout. A query batch probing `nprobe` of the
+  /** Persist a trained index as an [[IndexStore]] version: the centroid
+    * table plus the norm-annotated assigned corpus, the latter written
+    * `partitionBy(centroid_id)` inside its write dir — the on-disk
+    * inverted-list layout. A query batch probing `nprobe` of the
     * `numCentroids` lists reads ONLY those Hive partitions (partition
     * pruning), i.e. ≈ nprobe/numCentroids of the index bytes — the
     * build-once / probe-many deployment shape that amortizes assignment
@@ -249,24 +250,35 @@ object Ivf {
     */
   def writeIndex(path: String, corpus: DataFrame, cidCol: String, cvecCol: String,
       cents: DataFrame): Unit = {
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    assign(corpus, cidCol, cvecCol, cents)
-      .withColumn("__cnorm", vec_norm(col(cvecCol)))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists")
+    val spark = corpus.sparkSession
+    val v = IndexStore.nextVersion(spark, path)
+    val centroids = IndexStore.writeTable(path, "centroids", v, cents)
+    val lists = IndexStore.writeTable(path, "lists", v, assign(corpus, cidCol, cvecCol, cents)
+      .withColumn("__cnorm", vec_norm(col(cvecCol))), Seq("centroid_id"))
+    IndexStore.commit(spark, path, IndexStore.Manifest(v, Map.empty,
+      Map("centroids" -> Seq(centroids), "lists" -> Seq(lists))))
   }
 
-  /** Load a persisted index → (centroids, assigned lists), completing an
-    * interrupted [[rebalanceIndex]] swap first (the [[Dedup]] batch-marker
-    * self-heal every index reader runs).
-    */
+  /** Load the committed index → (centroids, assigned lists). */
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): (DataFrame, DataFrame) = {
-    Dedup.finishBatchCompaction(spark, path)
-    (spark.read.parquet(s"$path/centroids"), spark.read.parquet(s"$path/lists"))
+    val m = IndexStore.latest(spark, path)
+    (IndexStore.read(spark, path, m, "centroids"), IndexStore.read(spark, path, m, "lists"))
   }
+
+  /** `fresh` assigned rows as the next write dir of `m`'s lists, committed
+    * (a batch with nothing new commits nothing).
+    */
+  private def commitListAppend(spark: SparkSession, path: String, m: IndexStore.Manifest,
+      fresh: DataFrame): Unit =
+    if (!fresh.isEmpty) {
+      val lists = IndexStore.writeTable(path, "lists", m.version + 1, fresh, Seq("centroid_id"))
+      IndexStore.commit(spark, path, m.copy(version = m.version + 1,
+        tables = m.tables.updated("lists", m.tables("lists") :+ lists)))
+    }
 
   /** Fold a new vector batch into a persisted index under the FROZEN
     * stored quantizer: assign, anti-join already-present ids (idempotent
-    * re-ingest), append as new files of the partitioned list layout.
+    * re-ingest), commit as a new write dir of the partitioned list layout.
     * Cheap (batch-sized assign, no corpus scan) but drift-blind — months
     * of appends from a distribution the quantizer never saw pile into few
     * lists, and a hot list degrades the nprobe/numCentroids pruning
@@ -275,12 +287,12 @@ object Ivf {
     */
   def appendToIndex(spark: SparkSession, path: String, newVecs: DataFrame,
       cidCol: String, cvecCol: String): Unit = {
-    val (cents, lists) = readIndex(spark, path)
-    val fresh = assign(newVecs, cidCol, cvecCol, cents)
+    val m = IndexStore.latest(spark, path)
+    val cents = IndexStore.read(spark, path, m, "centroids")
+    commitListAppend(spark, path, m, assign(newVecs, cidCol, cvecCol, cents)
       .withColumn("__cnorm", vec_norm(col(cvecCol)))
-      .join(lists.select(col(cidCol)), Seq(cidCol), "left_anti")
-      .localCheckpoint() // pin BEFORE the append rewrites the dir it reads
-    fresh.write.mode("append").partitionBy("centroid_id").parquet(s"$path/lists")
+      .join(IndexStore.read(spark, path, m, "lists").select(col(cidCol)), Seq(cidCol), "left_anti")
+      .localCheckpoint())
   }
 
   /** Quantizer maintenance for a persisted index — split-and-refine, the
@@ -298,10 +310,9 @@ object Ivf {
     *      current contents (empty clusters drop out, so a useless split
     *      costs nothing);
     *   3. repeat up to `maxRounds` times or until no list is oversized;
-    *   4. publish: refreshed centroids + reassigned lists are written to
-    *      staging dirs and swapped in behind the [[Dedup]] batch-marker
-    *      protocol — a crash at any point either leaves the old index
-    *      intact (pre-marker) or is completed by the next reader.
+    *   4. publish: refreshed centroids + reassigned lists are written as
+    *      fresh dirs and committed as one [[IndexStore]] version — a
+    *      crash before the commit leaves the old index current.
     *
     * k grows by the number of useful splits (bounded by `maxRounds ×`
     * hot-list count per round); the √N-centroid contract is the caller's
@@ -329,12 +340,12 @@ object Ivf {
       cvecCol: String, extraCols: Seq[String], iters: Int, splitFactor: Double,
       maxRounds: Int): Unit = {
     require(splitFactor > 1.0, s"splitFactor must exceed 1, got $splitFactor")
-    Dedup.finishBatchCompaction(spark, path)
+    val m = IndexStore.latest(spark, path)
     // pin: the vector set feeds every split round, every Lloyd pass and
-    // the final reassignment while the lists dir is eventually swapped
-    val vecs = spark.read.parquet(s"$path/lists")
+    // the final reassignment
+    val vecs = IndexStore.read(spark, path, m, "lists")
       .select((Seq(cidCol, cvecCol) ++ extraCols).map(col): _*).localCheckpoint()
-    var cents = spark.read.parquet(s"$path/centroids").localCheckpoint(true)
+    var cents = IndexStore.read(spark, path, m, "centroids").localCheckpoint(true)
     var rnd = 0
     var balanced = false
     while (rnd < maxRounds && !balanced) {
@@ -423,19 +434,20 @@ object Ivf {
       }
       rnd += 1
     }
-    // publish through the shared staging + marker + swap protocol
-    cents.write.mode("overwrite").parquet(s"$path/centroids.staging")
+    // publish: both tables' fresh dirs commit as one version
+    val v = m.version + 1
+    val centroids = IndexStore.writeTable(path, "centroids", v, cents)
     val reassigned = assign(vecs, cidCol, cvecCol,
-        spark.read.parquet(s"$path/centroids.staging"))
+        IndexStore.read(spark, path, "centroids", Seq(centroids)))
       .withColumn("__cnorm", vec_norm(col(cvecCol)))
     // assign() is an aggregate and drops passenger columns (PQ codes) —
     // re-attach them by id
-    val staged =
+    val lists = IndexStore.writeTable(path, "lists", v,
       if (extraCols.isEmpty) reassigned
-      else reassigned.join(vecs.select((cidCol +: extraCols).map(col): _*), Seq(cidCol))
-    staged.write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists.staging")
-    Dedup.publishBatchMarker(spark, path, Seq("centroids", "lists"))
-    Dedup.finishBatchCompaction(spark, path)
+      else reassigned.join(vecs.select((cidCol +: extraCols).map(col): _*), Seq(cidCol)),
+      Seq("centroid_id"))
+    IndexStore.commit(spark, path, m.copy(version = v,
+      tables = m.tables ++ Map("centroids" -> Seq(centroids), "lists" -> Seq(lists))))
   }
 
   /** Planted-neighbor recall of a persisted index — the x38 probe
@@ -501,9 +513,10 @@ object Ivf {
     found.toDouble / n
   }
 
-  /** Persist a trained IVF-PQ index: centroids, codebooks (as (j, k, t, c)
-    * rows), and the assigned corpus with PQ codes + norms precomputed,
-    * written `partitionBy(centroid_id)` — the on-disk inverted-list
+  /** Persist a trained IVF-PQ index as an [[IndexStore]] version:
+    * centroids, codebooks (as (j, k, t, c) rows), and the assigned corpus
+    * with PQ codes + norms precomputed, written `partitionBy(centroid_id)`
+    * inside its write dir — the on-disk inverted-list
     * layout where a probe reads ≈ nprobe/numCentroids of the index bytes
     * AND the candidate stage's code column prunes to a fraction of each
     * list's bytes (column pruning inside partition pruning — the
@@ -512,13 +525,16 @@ object Ivf {
     */
   def writePqIndex(path: String, corpus: DataFrame, cidCol: String, cvecCol: String,
       cents: DataFrame, cb: Pq.Codebooks): Unit = {
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    codebookRows(corpus.sparkSession, cb).write.mode("overwrite")
-      .parquet(s"$path/codebooks")
-    assign(corpus, cidCol, cvecCol, cents)
-      .withColumn("__codes", Pq.codesColumn(col(cvecCol), cb))
-      .withColumn("__cnorm", vec_norm(col(cvecCol)))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists")
+    val spark = corpus.sparkSession
+    val v = IndexStore.nextVersion(spark, path)
+    val tables = Map(
+      "centroids" -> IndexStore.writeTable(path, "centroids", v, cents),
+      "codebooks" -> IndexStore.writeTable(path, "codebooks", v, codebookRows(spark, cb)),
+      "lists" -> IndexStore.writeTable(path, "lists", v, assign(corpus, cidCol, cvecCol, cents)
+        .withColumn("__codes", Pq.codesColumn(col(cvecCol), cb))
+        .withColumn("__cnorm", vec_norm(col(cvecCol))), Seq("centroid_id")))
+    IndexStore.commit(spark, path,
+      IndexStore.Manifest(v, Map.empty, tables.map { case (t, d) => t -> Seq(d) }))
   }
 
   private def codebookRows(sp: SparkSession, cb: Pq.Codebooks): DataFrame = {
@@ -536,9 +552,9 @@ object Ivf {
     * quantize with uncalibrated cells and the ADC scores drift from the
     * true cosines. This retrains the codebooks over the index's CURRENT
     * contents ([[Pq.train]], Lloyd per subspace), re-encodes every row,
-    * and swaps `codebooks` + `lists` in behind the shared staging+marker
-    * protocol (readers self-heal; rows, centroids and list assignment
-    * untouched — IvfSpec pins set preservation and that the codebooks
+    * and commits `codebooks` + `lists` as one [[IndexStore]] version
+    * (rows, centroids and list assignment untouched — IvfSpec pins set
+    * preservation and that the codebooks
     * actually move). KNOWN LIMIT, measured: a refresh cannot restore ADC
     * *ranking inside* a near-dup-dense blob tighter than the PQ
     * resolution — every member still snaps to the same cells and scores
@@ -548,18 +564,18 @@ object Ivf {
     */
   def reencodePqIndex(spark: SparkSession, path: String, cidCol: String,
       cvecCol: String, iters: Int = 3): Unit = {
-    Dedup.finishBatchCompaction(spark, path)
-    val (_, lists, cb0) = readPqIndex(spark, path)
+    val m = IndexStore.latest(spark, path)
+    val (_, lists, cb0) = readPqIndex(spark, path, m)
     val dim = cb0.length * cb0(0)(0).length
-    // pin: feeds training, the re-encode AND survives the lists swap
+    // pin: feeds training AND the re-encode
     val vecs = lists.select(col(cidCol), col(cvecCol), col("__cnorm"),
       col("centroid_id")).localCheckpoint()
     val cb = Pq.train(vecs, cidCol, cvecCol, cb0.length, cb0(0).length, dim, iters)
-    codebookRows(spark, cb).write.mode("overwrite").parquet(s"$path/codebooks.staging")
-    vecs.withColumn("__codes", Pq.codesColumn(col(cvecCol), cb))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(s"$path/lists.staging")
-    Dedup.publishBatchMarker(spark, path, Seq("codebooks", "lists"))
-    Dedup.finishBatchCompaction(spark, path)
+    val v = m.version + 1
+    IndexStore.commit(spark, path, m.copy(version = v, tables = m.tables ++ Map(
+      "codebooks" -> Seq(IndexStore.writeTable(path, "codebooks", v, codebookRows(spark, cb))),
+      "lists" -> Seq(IndexStore.writeTable(path, "lists", v,
+        vecs.withColumn("__codes", Pq.codesColumn(col(cvecCol), cb)), Seq("centroid_id"))))))
   }
 
   /** Fold a new vector batch into a persisted PQ index under the FROZEN
@@ -569,30 +585,32 @@ object Ivf {
     */
   def appendToPqIndex(spark: SparkSession, path: String, newVecs: DataFrame,
       cidCol: String, cvecCol: String): Unit = {
-    val (cents, lists, cb) = readPqIndex(spark, path)
-    val fresh = assign(newVecs, cidCol, cvecCol, cents)
+    val m = IndexStore.latest(spark, path)
+    val (cents, lists, cb) = readPqIndex(spark, path, m)
+    commitListAppend(spark, path, m, assign(newVecs, cidCol, cvecCol, cents)
       .withColumn("__codes", Pq.codesColumn(col(cvecCol), cb))
       .withColumn("__cnorm", vec_norm(col(cvecCol)))
       .join(lists.select(col(cidCol)), Seq(cidCol), "left_anti")
-      .localCheckpoint() // pin BEFORE the append rewrites the dir it reads
-    fresh.write.mode("append").partitionBy("centroid_id").parquet(s"$path/lists")
+      .localCheckpoint())
   }
 
-  /** Load a persisted IVF-PQ index → (centroids, assigned lists,
-    * codebooks) — feed straight into [[searchPqAssigned]]. Completes an
-    * interrupted [[rebalancePqIndex]] swap first.
+  /** Load the committed IVF-PQ index → (centroids, assigned lists,
+    * codebooks) — feed straight into [[searchPqAssigned]].
     */
   def readPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): (DataFrame, DataFrame, Pq.Codebooks) = {
-    Dedup.finishBatchCompaction(spark, path)
-    val rows = spark.read.parquet(s"$path/codebooks")
+      path: String): (DataFrame, DataFrame, Pq.Codebooks) =
+    readPqIndex(spark, path, IndexStore.latest(spark, path))
+
+  private def readPqIndex(spark: SparkSession, path: String,
+      mf: IndexStore.Manifest): (DataFrame, DataFrame, Pq.Codebooks) = {
+    val rows = IndexStore.read(spark, path, mf, "codebooks")
       .select(col("j"), col("k"), col("t"), col("c")).collect()
     val m = rows.map(_.getInt(0)).max + 1
     val ks = rows.map(_.getInt(1)).max + 1
     val ds = rows.map(_.getInt(2)).max + 1
     val cb = Array.fill(m, ks, ds)(0.0)
     rows.foreach(r => cb(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getDouble(3))
-    (spark.read.parquet(s"$path/centroids"), spark.read.parquet(s"$path/lists"), cb)
+    (IndexStore.read(spark, path, mf, "centroids"), IndexStore.read(spark, path, mf, "lists"), cb)
   }
 
   /** The per-query probe selection SHARED by [[searchAssigned]] and the

@@ -138,10 +138,8 @@ object Lm {
 
   /** Ledger kind for folded batch ids. Rides INSIDE the counts table
     * (one row per folded batch, `term = batchId`), so the ledger and the
-    * counts can never disagree: the fold's staging+marker swap replaces
-    * ONE table atomically. Two-table designs have an unfixable crash
-    * window — swap counts first and a replayed fold double-counts; swap
-    * the ledger first and a crash loses the batch.
+    * counts can never disagree: each fold commits the whole table as one
+    * [[IndexStore]] version.
     */
   val BatchKind = "__batch"
 
@@ -153,64 +151,67 @@ object Lm {
     import spark.implicits._
     val base = counts.getOrElse(
       Seq.empty[(String, String, Long)].toDF("kind", "term", "n"))
-    base.select(col("kind"), col("term"), col("n"))
-      .write.mode("overwrite").parquet(s"$path/counts")
+    commitCounts(spark, path, IndexStore.Manifest(IndexStore.nextVersion(spark, path),
+      Map.empty, Map.empty), base.select(col("kind"), col("term"), col("n")))
   }
 
+  /** `counts` as the whole `counts` table of version `next.version`,
+    * committed. Shared by the counts-table indexes (this one and
+    * [[Sampling.foldIntoSourceTokenIndex]]'s).
+    */
+  private[graft] def commitCounts(spark: org.apache.spark.sql.SparkSession, path: String,
+      next: IndexStore.Manifest, counts: DataFrame): Unit =
+    IndexStore.commit(spark, path, next.copy(tables = Map("counts" ->
+      Seq(IndexStore.writeTable(path, "counts", next.version, counts)))))
+
+  /** The committed `counts` table, ledger rows included. */
+  private[graft] def countsTable(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    IndexStore.read(spark, path, IndexStore.latest(spark, path), "counts")
+
   /** Load the statistics from a persisted counts index (ledger rows
-    * filtered out; completes an interrupted fold first). Feed to
-    * [[modelFromCounts]] / [[modelFromCounts3]].
+    * filtered out). Feed to [[modelFromCounts]] / [[modelFromCounts3]].
     */
   def readCountsIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    Dedup.finishBatchCompaction(spark, path)
-    spark.read.parquet(s"$path/counts").filter(col("kind") =!= BatchKind)
-  }
+      path: String): DataFrame =
+    countsTable(spark, path).filter(col("kind") =!= BatchKind)
 
   /** Batch ids already folded into the index. */
   def foldedBatches(spark: org.apache.spark.sql.SparkSession,
-      path: String): Set[String] = {
-    Dedup.finishBatchCompaction(spark, path)
-    spark.read.parquet(s"$path/counts").filter(col("kind") === BatchKind)
+      path: String): Set[String] =
+    countsTable(spark, path).filter(col("kind") === BatchKind)
       .select(col("term")).collect().map(_.getString(0)).toSet
-  }
 
   /** Fold one document batch into a persisted counts index — EXACT
     * incremental retraining at production cadence: counts are additive
     * sufficient statistics, so the folded table equals
     * `trainCounts3(all folded batches' union)` row for row, whatever the
     * fold order. Idempotent under replay (`batchId` already in the
-    * ledger → no-op, returns false) and crash-safe: the merged table is
-    * staged whole, the [[Dedup]] batch marker commits it, and the swap
-    * replaces counts AND ledger in one table — a crash before the marker
-    * leaves the old index intact; after it, the next reader completes
-    * the swap. Cost per fold: the batch scan + one
+    * ledger → no-op, returns false) and crash-safe: the merged table
+    * (counts AND ledger) is written whole and committed as the next
+    * [[IndexStore]] version — a crash before the commit leaves the old
+    * index current. Cost per fold: the batch scan + one
     * distinct-term-bounded merge aggregate; nothing corpus-scale — the
     * ledger check is a pruned single-row lookup, not a driver collect of
     * every folded batch id (round 15).
     *
-    * SINGLE WRITER per index path: read-merge-swap over the one counts
-    * table with no writer lock — two concurrent folds would each stage
-    * from the same read and the second marker swap silently discards the
-    * first fold's counts. Serialize folds per path (the
-    * [[Dedup.compactIngestIndex]] contract;
-    * [[Sampling.foldIntoSourceTokenIndex]] inherits the same rule).
+    * SINGLE WRITER per index path: two concurrent folds read the same
+    * version and race to commit the next one — the second fails its
+    * commit rather than silently discarding the first fold's counts, but
+    * both wrote that version's one write dir, so serialize folds per path
+    * ([[Sampling.foldIntoSourceTokenIndex]] inherits the same rule).
     */
   def foldIntoCountsIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       batchId: String, docs: DataFrame, textCol: String = "text"): Boolean = {
     import spark.implicits._
     require(batchId.nonEmpty, "batchId must be non-empty")
-    Dedup.finishBatchCompaction(spark, path)
-    val already = spark.read.parquet(s"$path/counts")
-      .filter(col("kind") === BatchKind && col("term") === batchId)
+    val m = IndexStore.latest(spark, path)
+    val current = IndexStore.read(spark, path, m, "counts") // incl. ledger rows
+    val already = current.filter(col("kind") === BatchKind && col("term") === batchId)
       .limit(1).count() > 0
     if (already) return false
-    val current = spark.read.parquet(s"$path/counts") // incl. ledger rows
-    val merged = mergeCounts(current, trainCounts3(docs, textCol))
-      .unionByName(Seq((BatchKind, batchId, 1L)).toDF("kind", "term", "n"))
-    merged.write.mode("overwrite").parquet(s"$path/counts.staging")
-    Dedup.publishBatchMarker(spark, path, Seq("counts"))
-    Dedup.finishBatchCompaction(spark, path)
+    commitCounts(spark, path, m.copy(version = m.version + 1),
+      mergeCounts(current, trainCounts3(docs, textCol))
+        .unionByName(Seq((BatchKind, batchId, 1L)).toDF("kind", "term", "n")))
     true
   }
 

@@ -727,20 +727,6 @@ object Multimodal {
       df.select(col(idCol), pHash64(pixels, w, h).as("simhash")),
       idCol, maxDist, maxBucket)
 
-  /** Incremental image near-dup against a persisted
-    * [[Dedup.SimhashIndex]] of aHash signatures: hash the batch, probe
-    * the index — per-batch cost is batch-sized hashing plus index column
-    * scans, never a corpus re-hash ([[Dedup.probeSimhashIndex]]'s
-    * contract; the index is hash-agnostic, so dHash/pHash/audio/video
-    * signature batches probe the same way).
-    */
-  def imageNearDupIndexed(idx: Dedup.SimhashIndex, batch: DataFrame,
-      idCol: String, pixels: Column, w: Int, h: Int,
-      maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
-    Dedup.probeSimhashIndex(idx,
-      batch.select(col(idCol), aHash64(pixels, w, h).as("__sig")),
-      idCol, "__sig", maxBucket)
-
   /** Video near-duplicate pairs over opaque media byte streams — the
     * first-line video dedup shape (frame-signature set overlap): sample
     * frames ([[sampleFrames]]), digest each frame (md5 — engine-portable,

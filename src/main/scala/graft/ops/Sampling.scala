@@ -561,11 +561,10 @@ object Sampling {
   //   its own sums in. The crash/replay discipline is [[Lm
   //   .foldIntoCountsIndex]]'s VERBATIM: the batch ledger rides INSIDE
   //   the single counts table (one `__batch` row per folded batch), the
-  //   fold stages the merged table whole and commits it with the shared
-  //   batch marker — a replayed fold is a ledger-keyed no-op, a crash
-  //   before the marker leaves the old table intact, after it any reader
-  //   completes the swap. Recipe derivation is then O(|sources|), never
-  //   corpus-scale.
+  //   fold writes the merged table whole and commits it as the next
+  //   [[IndexStore]] version — a replayed fold is a ledger-keyed no-op, a
+  //   crash before the commit leaves the old table current. Recipe
+  //   derivation is then O(|sources|), never corpus-scale.
 
   /** Row kind for real per-source counts (ledger rows use
     * [[Lm.BatchKind]]).
@@ -576,17 +575,15 @@ object Sampling {
   def writeSourceTokenIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     import spark.implicits._
-    Seq.empty[(String, String, Long)].toDF("kind", "source", "n_tokens")
-      .write.mode("overwrite").parquet(s"$path/counts")
+    Lm.commitCounts(spark, path, IndexStore.Manifest(IndexStore.nextVersion(spark, path),
+      Map.empty, Map.empty), Seq.empty[(String, String, Long)].toDF("kind", "source", "n_tokens"))
   }
 
   /** Batch ids already folded (bounded by the number of folds). */
   def foldedSourceBatches(spark: org.apache.spark.sql.SparkSession,
-      path: String): Set[String] = {
-    Dedup.finishBatchCompaction(spark, path)
-    spark.read.parquet(s"$path/counts").filter(col("kind") === Lm.BatchKind)
+      path: String): Set[String] =
+    Lm.countsTable(spark, path).filter(col("kind") === Lm.BatchKind)
       .select(col("source")).collect().map(_.getString(0)).toSet
-  }
 
   /** Fold one ingest batch's per-source token sums into the index.
     * Returns false (no-op) when `batchId` is already in the ledger.
@@ -597,47 +594,40 @@ object Sampling {
     * dictionary-sized rows) and are deliberately NEVER compacted away —
     * dropping one would un-no-op its batch's replay.
     *
-    * SINGLE WRITER per index path: the fold is read-merge-swap over the
-    * one counts table with no writer lock, so two concurrent folds (two
-    * batch folds, or a batch fold racing
-    * [[graft.streaming.StreamingIngest.sourceTokenIndexSink]] on the
-    * same path) would each stage from the same read and the second
-    * marker swap silently discards the first fold's sums. Serialize
-    * folds per path — the [[Lm.foldIntoCountsIndex]] /
-    * [[Dedup.compactIngestIndex]] contract.
+    * SINGLE WRITER per index path: two concurrent folds (two batch
+    * folds, or a batch fold racing
+    * [[graft.streaming.StreamingIngest.sourceTokenIndexSink]] on the same
+    * path) read the same version and race to commit the next one — the
+    * second fails its commit rather than silently discarding the first
+    * fold's sums, but both wrote that version's one write dir, so
+    * serialize folds per path — the [[Lm.foldIntoCountsIndex]] contract.
     */
   def foldIntoSourceTokenIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batchId: String, docs: DataFrame,
       sourceCol: Column, tokenCount: Column): Boolean = {
     import spark.implicits._
     require(batchId.nonEmpty, "batchId must be non-empty")
-    Dedup.finishBatchCompaction(spark, path)
-    val already = spark.read.parquet(s"$path/counts")
-      .filter(col("kind") === Lm.BatchKind && col("source") === batchId)
+    val m = IndexStore.latest(spark, path)
+    val current = IndexStore.read(spark, path, m, "counts") // incl. ledger rows
+    val already = current.filter(col("kind") === Lm.BatchKind && col("source") === batchId)
       .limit(1).count() > 0
     if (already) return false
-    val current = spark.read.parquet(s"$path/counts") // incl. ledger rows
     val delta = docs.groupBy(sourceCol.cast("string").as("source"))
       .agg(sum(tokenCount.cast("long")).as("n_tokens"))
       .select(lit(SourceKind).as("kind"), col("source"), col("n_tokens"))
-    val merged = current.unionByName(delta)
+    Lm.commitCounts(spark, path, m.copy(version = m.version + 1), current.unionByName(delta)
       .groupBy(col("kind"), col("source")).agg(sum(col("n_tokens")).as("n_tokens"))
-      .unionByName(Seq((Lm.BatchKind, batchId, 1L)).toDF("kind", "source", "n_tokens"))
-    merged.write.mode("overwrite").parquet(s"$path/counts.staging")
-    Dedup.publishBatchMarker(spark, path, Seq("counts"))
-    Dedup.finishBatchCompaction(spark, path)
+      .unionByName(Seq((Lm.BatchKind, batchId, 1L)).toDF("kind", "source", "n_tokens")))
     true
   }
 
   /** [[domainBalance]] served from the persisted index: the same
     * water-fill card (shared tail — the two paths cannot drift) from a
-    * dictionary-sized read. Heals an interrupted fold swap first.
+    * dictionary-sized read of the committed version.
     */
   def domainBalanceFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, targets: Seq[(String, Double)]): DataFrame = {
-    Dedup.finishBatchCompaction(spark, path)
-    waterFill(spark.read.parquet(s"$path/counts")
+      path: String, targets: Seq[(String, Double)]): DataFrame =
+    waterFill(Lm.countsTable(spark, path)
       .filter(col("kind") === SourceKind)
       .select(col("source"), col("n_tokens")), targets)
-  }
 }

@@ -1126,8 +1126,8 @@ object TextStats {
       meta.copy(nDocs = meta.nDocs + dn, sumDl = meta.sumDl + dsum).toMap,
       Map("postings" -> (m.tables("postings") :+ postings), "doclen" -> (m.tables("doclen") :+ doclen)),
       IndexStore.writeSketch(spark, path, v, bloom, items, fpp)))
-    Dedup.autoCompactTarget(spark, path, Seq((next.files("doclen"), next.bytes("doclen"))),
-      autoCompactAt).foreach(compactBm25Index(spark, path, _))
+    Dedup.autoCompactTarget(spark, path, next, Seq("doclen"), autoCompactAt)
+      .foreach(compactBm25Index(spark, path, _))
   }
 
   /** Collapse accumulated fold dirs: rewrite both tables and commit an

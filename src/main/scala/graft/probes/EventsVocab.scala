@@ -138,7 +138,4 @@ object EventsVocab {
     else
       "sha256(concat_ws('§', " +
         cols.map(c => s"coalesce(CAST($c AS VARCHAR), '␀')").mkString(", ") + "))"
-
-  /** DuckDB twin of the canonical timestamp format [[Schemas.TsFmt]]. */
-  def fmtTsSql(c: String): String = s"strftime($c, '%Y-%m-%d %H:%M:%S.%f')"
 }

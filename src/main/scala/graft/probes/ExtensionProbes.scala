@@ -1378,8 +1378,8 @@ object ExtensionProbes {
   //   the DRIFT lifecycle the r11 verdict flagged — appendToIndex under
   //   frozen centroids piles a never-seen distribution into one inverted
   //   list (pruning collapses toward a full scan), rebalanceIndex
-  //   (hierarchical quantile-seed split + local Lloyd, staged behind the
-  //   batch marker) restores balance, and plantedRecall re-gates ≥ 0.9
+  //   (hierarchical quantile-seed split + local Lloyd, committed as one
+  //   index version) restores balance, and plantedRecall re-gates ≥ 0.9
   //   afterward. Value oracle: corpus/batch counts replay in SQL; the
   //   skew/balance/recall claims are Spark-side gates (TRUE literals,
   //   the x38 convention — DuckDB cannot cheaply replay Lloyd).
@@ -1613,29 +1613,18 @@ object ExtensionProbes {
   //   [[Decontaminate.BenchIndex]] built in TWO steps (write half the
   //   suite, append the other half) — the indexed path, append fold
   //   included, must be indistinguishable from the live operator. The
-  //   index is marker-cached per sf dir + source token (the x57 idiom);
-  //   `_x103_done` rather than meta.json marks the cache because the
-  //   build is write+append, and meta.json lands after step one.
-  private val X103IndexV = "v1"
-  private def x103Index(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val srcTok = graft.TmpDir.sourceToken(s"$dir/documents.parquet")
-    val path = s"${graft.TmpDir.root}/tmp/x103_benchidx_${X103IndexV}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcTok"
-    val done = new java.io.File(s"$path/_x103_done")
-    if (!done.exists()) synchronized {
-      if (!done.exists()) {
-        val docs = Readers.fanOut(t(s, dir, "documents"))
-        Decontaminate.writeBenchIndex(
-          docs.filter(col("doc_id") % 74 === 0),
-          "doc_id", col("text"), n = 3, path, expectedItems = 100000L)
-        Decontaminate.appendToBenchIndex(s, path,
-          docs.filter(col("doc_id") % 37 === 0 && col("doc_id") % 74 =!= 0),
-          "doc_id", col("text"))
-        if (!done.createNewFile())
-          throw new java.io.IOException(s"x103 cache marker create failed at $done")
-      }
+  //   index is cached per sf dir + source token ([[graft.TmpDir.cached]],
+  //   which marks the cache done only after the append).
+  private def x103Index(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.TmpDir.cached("x103_benchidx", "v2", dir, s"$dir/documents.parquet") { path =>
+      val docs = Readers.fanOut(t(s, dir, "documents"))
+      Decontaminate.writeBenchIndex(
+        docs.filter(col("doc_id") % 74 === 0),
+        "doc_id", col("text"), n = 3, path, expectedItems = 100000L)
+      Decontaminate.appendToBenchIndex(s, path,
+        docs.filter(col("doc_id") % 37 === 0 && col("doc_id") % 74 =!= 0),
+        "doc_id", col("text"))
     }
-    path
-  }
   private val x103 = Probe(
     "x103_decontaminate_indexed",
     (s, dir) => {

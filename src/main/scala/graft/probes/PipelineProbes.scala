@@ -121,27 +121,20 @@ object PipelineProbes {
 
   // — persisted hash index (daily-ingest deployment shape) ————————————————
   //   Same fixture and classification contract as x51, but the corpus
-  //   index is BUILT ONCE into a marker-cached on-disk [[Dedup.HashIndex]]
+  //   index is BUILT ONCE into a cached on-disk [[Dedup.HashIndex]]
   //   (parquet hash table + serialized Bloom sketch) and the batch
   //   classifies against the PERSISTED artifacts — the x51 semantics with
   //   zero corpus scans on the batch path. The oracle is deliberately the
   //   same content-join SQL as x51: the persisted path must be
   //   indistinguishable from the live path, false-positive pruning and
-  //   all. Index version token + source token key the cache dir, so a
-  //   formula change or an in-place fixture regen rebuilds the index.
-  private val X57IndexV = "v2"
-  private def x57Index(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val srcTok = graft.TmpDir.sourceToken(s"$dir/documents.parquet")
-    val path = s"${graft.TmpDir.root}/tmp/x57_hashidx_${X57IndexV}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcTok"
-    // writeHashIndex commits last, so a committed version marks a
-    // complete index
-    if (!IndexStore.committed(s, path)) synchronized {
-      if (!IndexStore.committed(s, path))
-        Dedup.writeHashIndex(Readers.fanOut(t(s, dir, "documents")), "doc_id", "text",
-          path, expectedItems = 1000L)
+  //   all. Index version token + source token key the cache dir
+  //   ([[graft.TmpDir.cached]]), so a formula change or an in-place
+  //   fixture regen rebuilds the index.
+  private def x57Index(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.TmpDir.cached("x57_hashidx", "v2", dir, s"$dir/documents.parquet") { path =>
+      Dedup.writeHashIndex(Readers.fanOut(t(s, dir, "documents")), "doc_id", "text",
+        path, expectedItems = 1000L)
     }
-    path
-  }
   private val x57 = Probe(
     "x57_persisted_hash_index",
     (s, dir) => {
@@ -170,27 +163,19 @@ object PipelineProbes {
 
   // — persisted band index (near-dup daily-ingest shape) ——————————————————
   //   The banding twin of x57: x21's exact fixture and oracle, but the
-  //   corpus side comes entirely from a marker-cached on-disk
+  //   corpus side comes entirely from a cached on-disk
   //   [[Dedup.BandIndex]] (+ the hash index for the exact stage) — the
   //   persisted near-dup path must classify every batch row identically
   //   to the live operator, so it shares x21's full per-row value oracle
   //   (banding recall is exactly 1.0 on this fixture, same pin as x21).
-  private val X59IndexV = "v2"
-  private def x59Index(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val srcTok = graft.TmpDir.sourceToken(s"$dir/documents.parquet")
-    val base = s"${graft.TmpDir.root}/tmp/x59_bandidx_${X59IndexV}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcTok"
-    val marker = new java.io.File(s"$base/band/meta.json") // written LAST
-    if (!marker.exists()) synchronized {
-      if (!marker.exists()) {
-        val corpus = Readers.fanOut(t(s, dir, "documents"))
-          .select(col("doc_id"), col("text")).filter(col("doc_id") % 5 =!= 0)
-        Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 1000L)
-        Dedup.writeBandIndex(corpus, "doc_id", col("text"), s"$base/band",
-          n = 3, numPerm = 64, numBands = 16, rowsPerBand = 4)
-      }
+  private def x59Index(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.TmpDir.cached("x59_bandidx", "v3", dir, s"$dir/documents.parquet") { base =>
+      val corpus = Readers.fanOut(t(s, dir, "documents"))
+        .select(col("doc_id"), col("text")).filter(col("doc_id") % 5 =!= 0)
+      Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 1000L)
+      Dedup.writeBandIndex(corpus, "doc_id", col("text"), s"$base/band",
+        n = 3, numPerm = 64, numBands = 16, rowsPerBand = 4)
     }
-    base
-  }
   private val x59 = Probe(
     "x59_incremental_dedup_indexed",
     (s, dir) => {
@@ -492,7 +477,7 @@ object PipelineProbes {
 
   // — persisted SPAN index (x105): the x56 grain, incrementally ————————————
   //   The corpus is the x56 fixture (SharedSpan planted on doc_id % 3 = 0)
-  //   indexed ONCE (marker-cached, the x57 idiom); the batch plants five
+  //   indexed ONCE (cached, the x57 idiom); the batch plants five
   //   classes: exact corpus copies (fully covered → drop), corpus text +
   //   SharedSpan (all windows corpus-known → drop), token-prefixed text
   //   (wholly new → kept), prefixed + a batch-only span (in-batch
@@ -503,23 +488,15 @@ object PipelineProbes {
   //   the surviving TEXT of every batch document is value-checked.
   private val BatchSpan =
     "batch shared boilerplate sentence tokens appear here verbatim too"
-  private val X105IndexV = "v1"
-  private def x105Index(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val srcTok = graft.TmpDir.sourceToken(s"$dir/documents.parquet")
-    val path = s"${graft.TmpDir.root}/tmp/x105_spanidx_${X105IndexV}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcTok"
-    // meta.json is written LAST by writeSpanIndex → presence = complete
-    if (!new java.io.File(s"$path/meta.json").exists()) synchronized {
-      if (!new java.io.File(s"$path/meta.json").exists()) {
-        val docs = Readers.fanOut(t(s, dir, "documents"))
-        val fix = docs.select(col("doc_id"),
-          when(col("doc_id") % 3 === 0, concat(col("text"), lit(" " + SharedSpan)))
-            .otherwise(col("text")).as("text"))
-        Dedup.writeSpanIndex(fix, "doc_id", "text", path,
-          expectedItems = 1000000L, k = 8)
-      }
+  private def x105Index(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.TmpDir.cached("x105_spanidx", "v2", dir, s"$dir/documents.parquet") { path =>
+      val docs = Readers.fanOut(t(s, dir, "documents"))
+      val fix = docs.select(col("doc_id"),
+        when(col("doc_id") % 3 === 0, concat(col("text"), lit(" " + SharedSpan)))
+          .otherwise(col("text")).as("text"))
+      Dedup.writeSpanIndex(fix, "doc_id", "text", path,
+        expectedItems = 1000000L, k = 8)
     }
-    path
-  }
   private val x105 = Probe(
     "x105_substring_dedup_indexed",
     (s, dir) => {
@@ -587,42 +564,28 @@ object PipelineProbes {
             |WHERE c.doc_id IS NULL OR c.ncov < len(t.tk)
             |ORDER BY t.doc_id ASC NULLS FIRST""".stripMargin))
 
-  /** Formula version of [[pairedParagraphFixture]] — part of the cache dir
-    * name, so editing the fixture SQL below and bumping this token
-    * self-invalidates every stale on-disk copy (round-5 advice: a silent
-    * stale fixture breaks the DuckDB oracle, which recomputes from the
-    * live documents table).
-    */
-  private val X49FixtureV = "v2"
-
-  /** Build-once paired-paragraph fixture for x49 (see the probe comment).
-    * Marker-cached on disk per (formula version, sf dir, SOURCE CONTENT
-    * TOKEN); bump [[X49FixtureV]] on any formula change. The
-    * [[graft.TmpDir.sourceToken]] component makes an in-place regeneration
-    * of the documents table (same path, new bytes — the round-6 driver
-    * fixture regen) land in a fresh cache dir instead of silently reusing
-    * the stale fixture.
+  /** Build-once paired-paragraph fixture for x49 (see the probe comment),
+    * cached on disk per (formula version, sf dir, SOURCE CONTENT TOKEN)
+    * through [[graft.TmpDir.cached]]; bump the version on any formula
+    * change (round-5 advice: a silent stale fixture breaks the DuckDB
+    * oracle, which recomputes from the live documents table). The source
+    * token makes an in-place regeneration of the documents table (same
+    * path, new bytes — the round-6 fixture regeneration) land in a fresh
+    * cache dir instead of silently reusing the stale fixture.
     */
   private def pairedParagraphFixture(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
-    val srcTok = graft.TmpDir.sourceToken(s"$dir/documents.parquet")
-    val tmp = s"${graft.TmpDir.root}/tmp/x49_fix_${X49FixtureV}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcTok"
-    val marker = new java.io.File(tmp, "_SUCCESS")
-    if (!marker.exists()) synchronized {
-      if (!marker.exists()) {
-        val docs = Readers.fanOut(t(s, dir, "documents"))
-        val n = docs.count()
-        val succ = docs.select(col("doc_id").as("__sid"), col("text").as("__stext"))
-        docs
-          .join(succ, pmod(col("doc_id") + 1, lit(n)) === col("__sid"), "left")
-          .select(col("doc_id"),
-            concat_ws("\n", col("text"), coalesce(col("__stext"), col("text")))
-              .as("text"))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    }
-    s.read.parquet(tmp)
-  }
+      dir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(graft.TmpDir.cached("x49_fix", "v2", dir, s"$dir/documents.parquet") { tmp =>
+      val docs = Readers.fanOut(t(s, dir, "documents"))
+      val n = docs.count()
+      val succ = docs.select(col("doc_id").as("__sid"), col("text").as("__stext"))
+      docs
+        .join(succ, pmod(col("doc_id") + 1, lit(n)) === col("__sid"), "left")
+        .select(col("doc_id"),
+          concat_ws("\n", col("text"), coalesce(col("__stext"), col("text")))
+            .as("text"))
+        .write.mode("overwrite").parquet(tmp)
+    })
 
   // — C4-style line cleaning ——————————————————————————————————————————————
   //   Fixture: every document becomes 5 lines planted to hit each rule
@@ -2310,21 +2273,14 @@ object PipelineProbes {
   //   The embedding twin of x59: x47's exact fixture and oracle (exact
   //   copies / 2×-scaled copies / reversed vectors — LSH recall is
   //   provably 1.0, see ExtensionProbes.x47), but the corpus side comes
-  //   entirely from a marker-cached on-disk [[Dedup.VecIndex]]. The
+  //   entirely from a cached on-disk [[Dedup.VecIndex]]. The
   //   persisted semantic path must classify every batch row identically
   //   to the live operator, so it shares x47's full per-row value oracle.
-  private val X84IndexV = "v1"
-  private def x84Index(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val srcTok = graft.TmpDir.sourceToken(s"$dir/embeddings.parquet")
-    val base = s"${graft.TmpDir.root}/tmp/x84_vecidx_${X84IndexV}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcTok"
-    val marker = new java.io.File(s"$base/vec/meta.json") // written LAST
-    if (!marker.exists()) synchronized {
-      if (!marker.exists())
-        Dedup.writeVecIndex(Readers.fanOut(t(s, dir, "embeddings")), "vec_id", "embedding",
-          s"$base/vec", numPlanes = 8, dim = 64, expectedItems = 1000000L)
+  private def x84Index(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.TmpDir.cached("x84_vecidx", "v2", dir, s"$dir/embeddings.parquet") { base =>
+      Dedup.writeVecIndex(Readers.fanOut(t(s, dir, "embeddings")), "vec_id", "embedding",
+        s"$base/vec", numPlanes = 8, dim = 64, expectedItems = 1000000L)
     }
-    base
-  }
   private val x84 = Probe(
     "x84_incremental_semantic_indexed",
     (s, dir) => {
@@ -3080,7 +3036,7 @@ object PipelineProbes {
 
   // — incremental paragraph dedup against a persisted paragraph index —————
   //   The FineWeb deployment shape x49 only covers corpus-wide: today's
-  //   crawl batch dedups paragraph-by-paragraph against a marker-cached
+  //   crawl batch dedups paragraph-by-paragraph against a cached
   //   on-disk [[Dedup.ParagraphIndex]] (digest→min-corpus-id parquet +
   //   Bloom sketch) — the corpus is never re-exploded per batch. Fixture
   //   plants every election arm: corpus = even docs with a shared
@@ -3092,21 +3048,13 @@ object PipelineProbes {
   //   all-corpus-paragraph doc that must drop out entirely. The oracle
   //   replays the whole classification — index semantics must be
   //   indistinguishable from first-principles SQL over the same frames.
-  private val X94IndexV = "v1"
-  private def x94Index(s: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val srcTok = graft.TmpDir.sourceToken(s"$dir/documents.parquet")
-    val path = s"${graft.TmpDir.root}/tmp/x94_paraidx_${X94IndexV}_${dir.replaceAll("[^A-Za-z0-9]", "_")}_$srcTok"
-    val marker = new java.io.File(s"$path/meta.json") // written LAST
-    if (!marker.exists()) synchronized {
-      if (!marker.exists()) {
-        val corpus = Readers.fanOut(t(s, dir, "documents"))
-          .filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), concat(col("text"), lit("\nCORP FOOTER")).as("text"))
-        Dedup.writeParagraphIndex(corpus, "doc_id", "text", path, expectedItems = 10000L)
-      }
+  private def x94Index(s: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.TmpDir.cached("x94_paraidx", "v2", dir, s"$dir/documents.parquet") { path =>
+      val corpus = Readers.fanOut(t(s, dir, "documents"))
+        .filter(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), concat(col("text"), lit("\nCORP FOOTER")).as("text"))
+      Dedup.writeParagraphIndex(corpus, "doc_id", "text", path, expectedItems = 10000L)
     }
-    path
-  }
   private val x94 = Probe(
     "x94_incremental_paragraph_dedup",
     (s, dir) => {

@@ -488,9 +488,9 @@ object StreamingIngest {
     * from the rewritten corpus partition, and leave the index holding
     * signatures the corpus no longer contains. A crash mid-append
     * (sigs written, chunks not) is also safe: the batch's own rows are
-    * invisible to the replay's probe (chunks drive candidates) and the
-    * replayed append's per-table guard completes exactly the missing
-    * table. Corpus partitions are batch-owned OVERWRITE writes — a
+    * invisible to the replay's probe (an uncommitted append is invisible
+    * to every reader) and the replayed append commits it whole.
+    * Corpus partitions are batch-owned OVERWRITE writes — a
     * poisoned stale partial is simply rewritten (drilled in
     * StreamingSpec).
     */
@@ -509,9 +509,7 @@ object StreamingIngest {
         val drop = graft.ops.Dedup.components(pairs)
           .filter(col("id") =!= col("comp")).select(col("id").as(idCol))
         val intra = sigs.join(drop, Seq(idCol), "left_anti").localCheckpoint()
-        val metaP = new org.apache.hadoop.fs.Path(s"$indexPath/meta.json")
-        val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(metaP))
+        if (!graft.ops.IndexStore.committed(spark, indexPath))
           graft.ops.Dedup.writeSimhashIndex(sigs.limit(0), idCol, sigCol,
             indexPath, maxDist)
         val idx = graft.ops.Dedup.readSimhashIndex(spark, indexPath)
@@ -538,9 +536,9 @@ object StreamingIngest {
     * uni/bi/tri-gram sufficient statistics fold into the index under the
     * batch id. Exactly-once WITHOUT sink-side coordination: the fold's
     * in-table replay ledger makes a crash-replayed micro-batch a no-op
-    * (same `stream-<id>` key ⇒ ledger hit ⇒ skip), and the single-table
-    * staging+marker swap means a kill mid-fold leaves either the old
-    * counts or the complete new counts — never a torn merge. The model
+    * (same `stream-<id>` key ⇒ ledger hit ⇒ skip), and the fold's single
+    * commit means a kill mid-fold leaves either the old counts or the
+    * complete new counts — never a torn merge. The model
     * itself is NOT rebuilt per batch (that is a reader-side
     * `lmFromCounts` call on whatever cadence scoring wants); the stream
     * only maintains statistics, so its per-batch cost is one batch scan
@@ -567,16 +565,10 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        // heal any marker-staged fold a previous incarnation left behind
-        // BEFORE probing for existence (the staged swap owns `counts`)
-        graft.ops.Dedup.finishBatchCompaction(spark, indexPath)
         requireCheckpointIdentity(spark, indexPath, checkpoint)
-        val cp = new org.apache.hadoop.fs.Path(s"$indexPath/counts/_SUCCESS")
-        val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // _SUCCESS, not the dir: a kill mid-init leaves a torn parquet dir
-        // with no marker protocol to heal it — re-init (overwrite) is safe
-        // exactly while no fold has completed
-        if (!fs.exists(cp)) graft.ops.Lm.writeCountsIndex(spark, indexPath)
+        // a kill mid-init commits nothing, so the replay re-inits
+        if (!graft.ops.IndexStore.committed(spark, indexPath))
+          graft.ops.Lm.writeCountsIndex(spark, indexPath)
         graft.ops.Lm.foldIntoCountsIndex(spark, indexPath, s"stream-$batchId",
           batch.toDF(), textCol)
         ()
@@ -588,7 +580,7 @@ object StreamingIngest {
     * folds its per-source exact token sums under the `stream-<id>`
     * ledger key — the daily domain-balance recipe refresh without a
     * corpus rescan. Same exactly-once/crash contract as
-    * [[lmCountsIndexSink]] (in-table ledger, staging+marker swap,
+    * [[lmCountsIndexSink]] (in-table ledger, one commit per fold,
     * checkpoint-identity stamp enforced), because it IS the same
     * single-table counts discipline at source grain. Initializes an
     * empty index on first touch; readers call
@@ -603,11 +595,9 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        graft.ops.Dedup.finishBatchCompaction(spark, indexPath)
         requireCheckpointIdentity(spark, indexPath, checkpoint)
-        val cp = new org.apache.hadoop.fs.Path(s"$indexPath/counts/_SUCCESS")
-        val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(cp)) graft.ops.Sampling.writeSourceTokenIndex(spark, indexPath)
+        if (!graft.ops.IndexStore.committed(spark, indexPath))
+          graft.ops.Sampling.writeSourceTokenIndex(spark, indexPath)
         graft.ops.Sampling.foldIntoSourceTokenIndex(spark, indexPath,
           s"stream-$batchId", batch.toDF(), col(sourceCol), tokenCount)
         ()
@@ -655,9 +645,9 @@ object StreamingIngest {
     * near-dup PAIRS folds into the labels. Exactly-once falls out of
     * algebra rather than bookkeeping: a fold is IDEMPOTENT (the same
     * delta re-folded is a fixpoint), so a crash-replayed micro-batch
-    * converges to the identical labels with no ledger; the single-table
-    * staging+marker swap closes the torn-write window and readers heal.
-    * Initializes empty labels on first touch (every id in the first
+    * converges to the identical labels with no ledger; each fold's single
+    * commit closes the torn-write window. Initializes empty labels on
+    * first touch (every id in the first
     * delta labels itself through the fold).
     */
   def ccIndexSink(pairs: DataFrame, indexPath: String, checkpoint: String,
@@ -667,10 +657,7 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        graft.ops.Dedup.finishBatchCompaction(spark, indexPath)
-        val lp = new org.apache.hadoop.fs.Path(s"$indexPath/labels/_SUCCESS")
-        val fs = lp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(lp))
+        if (!graft.ops.IndexStore.committed(spark, indexPath))
           graft.ops.Dedup.writeCcIndex(spark, indexPath,
             batch.toDF().select(col("id_a").as("id"), col("id_a").as("comp")).limit(0))
         graft.ops.Dedup.appendToCcIndex(spark, indexPath, batch.toDF(), maxIter)
@@ -685,9 +672,9 @@ object StreamingIngest {
     * Exactly-once by ALGEBRA (the ccIndexSink argument in sketch form):
     * HLL registers merge by elementwise max, so a crash-replayed
     * micro-batch's re-appended delta rows re-max registers with
-    * themselves at read time — no ledger, no partition exclusion; the
-    * compaction staging+marker swap heals on read. `lgK` must match the
-    * index's `meta.json` pin (the fold rejects a mismatch — mixed-
+    * themselves at read time — no ledger, no partition exclusion; every
+    * fold and compaction is one commit. `lgK` must match the lgK pinned
+    * in the index's manifest (the fold rejects a mismatch — mixed-
     * precision registers do not union). Initializes an empty index on
     * first touch.
     */
@@ -699,10 +686,7 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val spark = batch.sparkSession
-        graft.ops.Dedup.finishBatchCompaction(spark, indexPath)
-        val sp = new org.apache.hadoop.fs.Path(s"$indexPath/sketches/_SUCCESS")
-        val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(sp))
+        if (!graft.ops.IndexStore.committed(spark, indexPath))
           graft.ops.Frequency.writeHllIndex(spark, indexPath,
             batch.toDF().limit(0), keyCol, valueCol, lgK)
         graft.ops.Frequency.foldIntoHllIndex(spark, indexPath, batch.toDF(),

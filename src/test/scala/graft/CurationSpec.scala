@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Curate, Decontaminate, Dedup, Ivf, Repetition, Similarity, TextStats}
+import graft.ops.{Curate, Decontaminate, Dedup, IndexStore, Ivf, Repetition, Similarity, TextStats}
 
 /** Corpus-curation operators: benchmark decontamination, Gopher-style
   * repetition stats, and end-to-end semantic dedup.
@@ -386,8 +386,7 @@ class CurationSpec extends SparkSpec {
       (11L, Array(3.0f, 0.0f, 0.0f, 0.0f)),  // same direction → near_dup of 1
       (12L, Array(0.0f, 0.0f, 1.0f, 0.0f))   // orthogonal → new
     ).toDF("vec_id", "embedding")
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "vecIdx").toString
+    val base = scratch("vecIdx").toString
     Dedup.writeVecIndex(corpus, "vec_id", "embedding", s"$base/vec",
       numPlanes = 4, dim = 4, expectedItems = 100L)
     val live = Dedup.incrementalSemanticDedup(corpus, batch, "vec_id", "embedding",
@@ -411,8 +410,7 @@ class CurationSpec extends SparkSpec {
     // found via the PERSISTED min-id hub (+ hub vector), not classified new
     val corpus = (1L to 20L).map(i => (i, Array(i.toFloat, 0.0f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "vecIdxApp").toString
+    val base = scratch("vecIdxApp").toString
     Dedup.writeVecIndex(corpus, "vec_id", "embedding", s"$base/vec",
       numPlanes = 4, dim = 4, expectedItems = 1000L)
     def classify(b: org.apache.spark.sql.DataFrame, maxBucket: Int = Dedup.DefaultMaxBucket) =
@@ -456,21 +454,24 @@ class CurationSpec extends SparkSpec {
     val corpus = Seq(
       (1L, Array(1.0f, 0.0f)),
       (2L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "vecIdxCrash").toString
+    val base = scratch("vecIdxCrash").toString
     Dedup.writeVecIndex(corpus, "vec_id", "embedding", s"$base/vec",
       numPlanes = 2, dim = 2, expectedItems = 10L)
     assert(Dedup.readVecIndex(spark, s"$base/vec").dim == 2)
+    val committed = IndexStore.latest(spark, s"$base/vec")
     // rebuild whose corpus evaluation throws inside the FIRST table write:
-    // meta.json must already be invalidated, so a later reader fails loudly
-    // instead of loading the old marker over mutually inconsistent tables
+    // no manifest may vouch for its tables — readers keep loading the
+    // previous version, whose tables are mutually consistent
     val poison = corpus.withColumn("embedding",
       when(assert_true(col("vec_id") =!= 1L).isNull, col("embedding")))
     intercept[Exception] {
       Dedup.writeVecIndex(poison, "vec_id", "embedding", s"$base/vec",
         numPlanes = 2, dim = 2, expectedItems = 10L)
     }
-    intercept[Exception] { Dedup.readVecIndex(spark, s"$base/vec") }
+    assert(IndexStore.latest(spark, s"$base/vec") == committed)
+    val idx = Dedup.readVecIndex(spark, s"$base/vec")
+    assert(idx.vecs.count() == 2L && idx.hashes.count() == 2L &&
+      idx.buckets.agg(sum("__ccnt")).head().getLong(0) == 2L)
   }
 
   test("incrementalSemanticIndexed: corpus-scale index frames never broadcast-build") {
@@ -480,8 +481,7 @@ class CurationSpec extends SparkSpec {
     val corpus = (1L to 50L).map(i => (i, Array(i.toFloat, 1.0f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
     val batch = Seq((100L, Array(0.5f, -1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "vecIdxBx").toString
+    val base = scratch("vecIdxBx").toString
     Dedup.writeVecIndex(corpus, "vec_id", "embedding", s"$base/vec",
       numPlanes = 2, dim = 4, expectedItems = 100L)
     def bxSubtreeHeads(df: org.apache.spark.sql.DataFrame): Seq[String] = {

@@ -29,7 +29,7 @@ class EtlGoldenSpec extends SparkSpec {
   }
 
   private lazy val (warehouseDir, goldenChecks, goldenParseFailures) = {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "golden").toString
+    val base = scratch("golden").toString
     val rows = Seq(
       // SH1 complete: sent d1, delivered d3, picked d6 (+ a LATER duplicate
       // delivery on d4 that min(when) must ignore)
@@ -150,7 +150,7 @@ class EtlGoldenSpec extends SparkSpec {
   }
 
   test("a run that fails after its staging write leaves no stage files and no stage table") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "failedrun").toString
+    val base = scratch("failedrun").toString
     val csvDir = warehouseDir.replace("/warehouse", "/input")
     // the first two calls stamp the pre-parse checkpoints; the third is the
     // first table's checkpoint, built after the stage is written
@@ -175,7 +175,7 @@ class EtlGoldenSpec extends SparkSpec {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     val input = warehouseDir.replace("/warehouse", "/input")
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "dqjobs").toString
+    val base = scratch("dqjobs").toString
     val tag = "graft.test.dqjobs"
     // a job's call site is its stage's, or (for the stages adaptive execution
     // submits from a pool thread) that of the SQL execution it runs for
@@ -215,7 +215,7 @@ class EtlGoldenSpec extends SparkSpec {
   test("header-only input runs to completion and every checkpoint reports an empty frame") {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "emptyetl").toString
+    val base = scratch("emptyetl").toString
     Files.createDirectories(Paths.get(s"$base/input"))
     Files.write(Paths.get(s"$base/input/part-0.csv"), "event,row_id,ingest_file\n".getBytes("UTF-8"))
     val cfg = EtlJob.Config(s"$base/input", s"$base/warehouse",
@@ -249,7 +249,7 @@ class EtlGoldenSpec extends SparkSpec {
   }
 
   test("DQ report: a fresh path gets the new checks, an existing report is appended to, newest first") {
-    val path = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "dqreport").toString + "/dq_report"
+    val path = scratch("dqreport").toString + "/dq_report"
     val df = Seq((Some(1), Some("a"))).toDF("k", "v")
     def report() = spark.read.option("header", "true").csv(path)
       .select("check_point", "timestamp").collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -261,7 +261,7 @@ class EtlGoldenSpec extends SparkSpec {
   }
 
   test("re-run into the same warehouse: first run's frames stay live; release() sweeps its stage") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "rerunwh").toString
+    val base = scratch("rerunwh").toString
     val csvDir = warehouseDir.replace("/warehouse", "/input")
     val cfg = EtlJob.Config(csvDir, s"$base/warehouse", clock = () => "2026-01-01 00:00:00")
     val first = EtlJob.run(spark, cfg)
@@ -285,7 +285,7 @@ class EtlGoldenSpec extends SparkSpec {
   }
 
   test("uuid parity mode keeps FK closure via pinned evaluation") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "uuidwh").toString
+    val base = scratch("uuidwh").toString
     val csvDir = warehouseDir.replace("/warehouse", "/input")
     val cfg = EtlJob.Config(csvDir, s"$base/warehouse",
       keyMode = SurrogateKeys.UuidParity, parityDedup = true,

@@ -66,7 +66,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("persisted index: searchAssigned over readIndex equals live search; probes prune lists") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_index").toString
+    val dir = scratch("ivf_index").toString
     val queries = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".as("qvec"))
     val cents = Ivf.seedCentroids(emb, "vec_id", "embedding", 8)
@@ -92,7 +92,7 @@ class IvfSpec extends SparkSpec {
 
   test("searchIndex: pruned persisted-index search equals searchAssigned on the full lists, " +
       "the scan prunes to probed centroid partitions, and excludeSelf=false keeps the self hit") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_searchindex").toString
+    val dir = scratch("ivf_searchindex").toString
     val queries = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".as("qvec"))
     val cents = Ivf.seedCentroids(emb, "vec_id", "embedding", 8)
@@ -125,7 +125,7 @@ class IvfSpec extends SparkSpec {
 
   test("persisted IVF-PQ index: searchPqAssigned over readPqIndex equals the live path, " +
       "codebooks roundtrip exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_index").toString
+    val dir = scratch("ivfpq_index").toString
     val queries = emb.filter($"vec_id" < 3)
       .select($"vec_id".as("query_id"), $"embedding".as("qvec"))
     val cents = Ivf.seedCentroids(emb, "vec_id", "embedding", 8)
@@ -144,8 +144,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("index maintenance: drifted append skews one list; rebalance splits it; recall re-gates ≥ 0.9") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "ivf_maint").toString
+    val dir = scratch("ivf_maint").toString
     val a = emb.filter($"vec_id" % 3 =!= 0)
     // drifted batch: a positive-orthant blob the quantizer never saw,
     // with 8 coordinate-rotation sub-blobs — under the FROZEN centroids
@@ -170,7 +169,7 @@ class IvfSpec extends SparkSpec {
       .groupBy($"centroid_id").count().as[(Long, Long)].collect().toMap
     assert(bListSizes.values.max >= (bCount * 0.9).toLong,
       s"drift fixture must skew into one list, got $bListSizes")
-    // rebalance: split-and-refine behind the marker protocol
+    // rebalance: split-and-refine, committed as one version
     Ivf.rebalanceIndex(spark, dir, "vec_id", "embedding")
     val (cents2, lists2) = Ivf.readIndex(spark, dir)
     assert(lists2.count() == n, "rebalance must preserve the vector set")
@@ -196,25 +195,10 @@ class IvfSpec extends SparkSpec {
         lists2.select($"vec_id", $"embedding"), "vec_id", "embedding", 5)
       .select("query_id", "vec_id", "cosine_sim").as[(Long, Long, Double)].collect().toSet
     assert(full == brute, "full probing of the rebalanced index = exact search")
-    // crash drill: a rebalance that died AFTER publishing its marker (staging
-    // dirs committed, swap never ran) must be completed by the next reader
-    val before = lists2.orderBy("vec_id").as[(Long, Seq[Float], Double, Long)].collect().toSeq
-    spark.read.parquet(s"$dir/centroids").write.parquet(s"$dir/centroids.staging")
-    spark.read.parquet(s"$dir/lists")
-      .write.partitionBy("centroid_id").parquet(s"$dir/lists.staging")
-    graft.ops.Dedup.publishBatchMarker(spark, dir, Seq("centroids", "lists"))
-    val (_, healed) = Ivf.readIndex(spark, dir) // must finish the swap
-    assert(!new java.io.File(s"$dir/_compacting_batch.json").exists(),
-      "the reader must consume the marker")
-    assert(!new java.io.File(s"$dir/lists.staging").exists())
-    assert(healed.orderBy("vec_id").as[(Long, Seq[Float], Double, Long)].collect().toSeq
-      .map(r => (r._1, r._4)) == before.map(r => (r._1, r._4)),
-      "the healed index must carry the staged assignment")
   }
 
   test("PQ index lifecycle: append keeps codes exact; rebalance carries codes through; recall re-gates") {
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "ivfpq_maint").toString
+    val dir = scratch("ivfpq_maint").toString
     val a = emb.filter($"vec_id" % 3 =!= 0)
     val b = emb.filter($"vec_id" % 3 === 0)
       .select($"vec_id",

@@ -357,8 +357,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("binaryFile source: glob-filtered files arrive as binary rows, bytes intact") {
-    val dir = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(graft.TmpDir.root), "media")
+    val dir = scratch("media")
     val payloads = Map("a.img" -> "alpha-bytes", "b.img" -> "beta", "skip.txt" -> "nope")
     payloads.foreach { case (name, content) =>
       java.nio.file.Files.write(dir.resolve(name), content.getBytes("UTF-8"))
@@ -580,8 +579,7 @@ class OpsSpec extends SparkSpec {
       (100L, "a b c d e f g h"), // exact dup of 10
       (101L, "a b c d e f g X"), // near dup of 10
       (102L, "nothing in common with anything else at all")).toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "bandIdx").toString
+    val base = scratch("bandIdx").toString
     Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 100L)
     Dedup.writeBandIndex(corpus, "doc_id", $"text", s"$base/band",
       n = 3, numPerm = 64, numBands = 16, rowsPerBand = 4)
@@ -603,8 +601,7 @@ class OpsSpec extends SparkSpec {
   test("incrementalDedupIndexed: append folds accepted docs in; hot bucket star-degrades via persisted hub") {
     val corpus = (1L to 30L).map(i => (i, s"common shared boilerplate tail here x$i"))
       .toDF("doc_id", "text") // every doc shares most 3-grams → one hot-ish cluster
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "bandIdxApp").toString
+    val base = scratch("bandIdxApp").toString
     Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 1000L)
     Dedup.writeBandIndex(corpus, "doc_id", $"text", s"$base/band",
       n = 3, numPerm = 64, numBands = 16, rowsPerBand = 4)
@@ -654,8 +651,7 @@ class OpsSpec extends SparkSpec {
       (100L, "a b c d e f g h"), // exact dup of 10
       (101L, "a b c d e f g X"), // near dup of 10
       (102L, "nothing in common with anything else at all")).toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "ingestIdx").toString
+    val base = scratch("ingestIdx").toString
     Dedup.initIngestIndex(spark, base, n = 3, numPerm = 64, numBands = 16,
       rowsPerBand = 4, expectedItems = 1000L)
     def idx() = Dedup.readIngestIndex(spark, base, org.apache.spark.sql.types.LongType)
@@ -705,8 +701,7 @@ class OpsSpec extends SparkSpec {
   test("ingest index: hot bucket star-degrades via the indexed hub; bloom self-heals; append overwrite is replay-idempotent") {
     val corpus = (1L to 30L).map(i => (i, s"common shared boilerplate tail here x$i"))
       .toDF("doc_id", "text")
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "ingestHot").toString
+    val base = scratch("ingestHot").toString
     Dedup.initIngestIndex(spark, base, n = 3, numPerm = 64, numBands = 16,
       rowsPerBand = 4, expectedItems = 1000L)
     Dedup.appendToIngestIndex(spark, base, corpus, "doc_id", "text", ingestId = 0L)
@@ -754,8 +749,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ingest index compaction: partitions fold into the base; a crash after the marker self-heals on read") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "ingestCompact").toString
+    val base = scratch("ingestCompact").toString
     Dedup.initIngestIndex(spark, base, n = 3, numPerm = 64, numBands = 16,
       rowsPerBand = 4, expectedItems = 1000L)
     def append(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
@@ -816,8 +810,7 @@ class OpsSpec extends SparkSpec {
     // dirs behind; a later run whose source list for that table is empty
     // must not let finishIngestCompaction rename the orphan over live base
     // rows (stageIngestCompaction sweeps every table's staging up front)
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "ingestOrphan").toString
+    val base = scratch("ingestOrphan").toString
     Dedup.initIngestIndex(spark, base, n = 3, numPerm = 64, numBands = 16,
       rowsPerBand = 4, expectedItems = 1000L)
     Dedup.appendToIngestIndex(spark, base,
@@ -842,13 +835,9 @@ class OpsSpec extends SparkSpec {
   }
 
   test("batch index compaction: hash/band/vec/paragraph appends fold to few files, probes classify identically") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "batchCompact").toString
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def partFiles(dir: String): Int =
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$dir/part-*")))
-        .map(_.length).getOrElse(0)
+    val base = scratch("batchCompact").toString
+    // a table's part files, as its committed manifest names them
+    def partFiles(index: String, table: String): Int = IndexStore.latest(spark, index).files(table)
 
     // hash + band (text) — corpus write + two appends accumulate parts
     val corpus = Seq((10L, "a b c d e f g h"), (11L, "p q r s t u v w"))
@@ -875,12 +864,12 @@ class OpsSpec extends SparkSpec {
     }
     val textBefore = classifyText()
     // the hash table's part files, as its committed manifest names them
-    def hashFiles(): Int = IndexStore.latest(spark, s"$base/hash").files("hashes")
+    def hashFiles(): Int = partFiles(s"$base/hash", "hashes")
     assert(hashFiles() >= 3, "appends must have accumulated parts")
     Dedup.compactHashIndex(spark, s"$base/hash")
     Dedup.compactBandIndex(spark, s"$base/band")
     assert(hashFiles() == 1, "hash table must fold to one file")
-    assert(partFiles(s"$base/band/shingles") == 1 && partFiles(s"$base/band/bands") == 1,
+    assert(partFiles(s"$base/band", "shingles") == 1 && partFiles(s"$base/band", "bands") == 1,
       "band tables must fold to one file")
     assert(classifyText() == textBefore, "text classification changed after compaction")
 
@@ -903,7 +892,7 @@ class OpsSpec extends SparkSpec {
     assert(vecBefore == Seq((100L, "exact_dup", Some(3L)), (101L, "near_dup", Some(2L)),
       (102L, "new", None)), s"got $vecBefore")
     Dedup.compactVecIndex(spark, s"$base/vec")
-    assert(partFiles(s"$base/vec/vecs") == 1 && partFiles(s"$base/vec/hashes") == 1)
+    assert(partFiles(s"$base/vec", "vecs") == 1 && partFiles(s"$base/vec", "hashes") == 1)
     assert(classifyVec() == vecBefore, "vec classification changed after compaction")
 
     // paragraph — write + append, then compact
@@ -920,13 +909,12 @@ class OpsSpec extends SparkSpec {
     val paraBefore = classifyPara()
     assert(paraBefore == Seq((100L, "fresh para")), s"got $paraBefore")
     Dedup.compactParagraphIndex(spark, s"$base/para")
-    assert(partFiles(s"$base/para/paras") == 1)
+    assert(partFiles(s"$base/para", "paras") == 1)
     assert(classifyPara() == paraBefore, "paragraph dedup changed after compaction")
   }
 
   test("auto-compaction: appends past the part-file trigger fold in place; classification unchanged") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "autoCompact").toString
+    val base = scratch("autoCompact").toString
     // the hash table's part files and write dirs, as its committed
     // manifest names them
     def partFiles(): Int = IndexStore.latest(spark, s"$base/hash").files("hashes")
@@ -971,79 +959,6 @@ class OpsSpec extends SparkSpec {
     assert(partFiles() > after, "autoCompactAt=0 must not fold")
   }
 
-  test("batch index compaction crash drills: pre-marker staging never publishes; post-marker swap self-heals on read") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "batchCrash").toString
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    // hash index (manifest-committed, IndexStore): a write dir no manifest
-    // names — what a crash before the commit leaves — is never read, and
-    // the next commit at that version replaces it
-    val corpus = Seq((10L, "a b c d e f g h")).toDF("doc_id", "text")
-    Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 100L)
-    Dedup.appendToHashIndex(spark, s"$base/hash",
-      Seq((20L, "k l m n o p q r")).toDF("doc_id", "text"), "doc_id", "text")
-    val batch = Seq((100L, "a b c d e f g h"), (101L, "k l m n o p q r"))
-      .toDF("doc_id", "text")
-    def classify() = {
-      val r = Dedup.incrementalExactIndexed(
-        Dedup.readHashIndex(spark, s"$base/hash"), batch, "doc_id", "text")
-      val rows = r.orderBy("doc_id").as[(Long, String, Option[Long])].collect().toSeq
-      r.unpersist(); rows
-    }
-    val expect = Seq((100L, "exact_dup", Some(10L)), (101L, "exact_dup", Some(20L)))
-    assert(classify() == expect)
-    val orphan = s"$base/hash/hashes/__w=${IndexStore.nextVersion(spark, s"$base/hash")}"
-    Seq(("POISON", 999L)).toDF("__h", "__exact_of").write.parquet(orphan)
-    assert(classify() == expect, "an uncommitted write dir leaked into a read")
-    Dedup.compactHashIndex(spark, s"$base/hash")
-    assert(classify() == expect, "compaction over an orphan write dir corrupted the table")
-    assert(IndexStore.read(spark, s"$base/hash", IndexStore.latest(spark, s"$base/hash"), "hashes")
-      .filter($"__h" === "POISON").isEmpty, "the orphan's rows must not survive the next commit")
-
-    // paragraph index (staging + marker swap, Dedup.compactBatchIndex)
-    val para = s"$base/para"
-    Dedup.writeParagraphIndex(Seq((1L, "alpha\nshared line"), (2L, "beta\nother"))
-      .toDF("doc_id", "text"), "doc_id", "text", para, expectedItems = 100L)
-    Dedup.appendToParagraphIndex(spark, para,
-      Seq((3L, "gamma\nmore")).toDF("doc_id", "text"), "doc_id", "text")
-    val pbatch = Seq((100L, "shared line\ngamma\nfresh para")).toDF("doc_id", "text")
-    def classifyPara() =
-      Dedup.incrementalParagraphIndexed(Dedup.readParagraphIndex(spark, para), pbatch,
-        "doc_id", "text").orderBy("doc_id").as[(Long, String)].collect().toSeq
-    val pexpect = Seq((100L, "fresh para"))
-    assert(classifyPara() == pexpect)
-    // pre-marker crash: poison staging (an EMPTY table: published, every
-    // paragraph would read new), NO marker — a plain read must not see
-    // it, and the next compaction must sweep (not publish) it
-    spark.read.parquet(s"$para/paras").limit(0).write.parquet(s"$para/paras.staging")
-    assert(classifyPara() == pexpect, "an unpublished staging dir leaked into a read")
-    Dedup.compactParagraphIndex(spark, para)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$para/paras.staging")))
-    assert(classifyPara() == pexpect, "compaction after a pre-marker crash corrupted the table")
-    // post-marker crash: stage (marker published), swap never ran — the
-    // next READER must complete the swap before scanning
-    Dedup.appendToParagraphIndex(spark, para,
-      Seq((4L, "delta\nepsilon")).toDF("doc_id", "text"), "doc_id", "text")
-    Dedup.stageBatchCompaction(spark, para, Seq("paras"), targetFiles = 1)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$para/_compacting_batch.json")))
-    assert(classifyPara() == pexpect, "self-heal read after a post-marker crash misclassified")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$para/_compacting_batch.json")),
-      "the reader must consume the marker")
-    assert(Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(s"$para/paras/part-*"))).map(_.length).getOrElse(0) == 1,
-      "the healed table must be the compacted copy")
-    // and a re-staged run over a published marker completes the prior swap
-    // first (the invalidate-marker-first discipline, ingest-protocol twin)
-    Dedup.appendToParagraphIndex(spark, para,
-      Seq((5L, "zeta\neta")).toDF("doc_id", "text"), "doc_id", "text")
-    Dedup.stageBatchCompaction(spark, para, Seq("paras"), targetFiles = 1)
-    Dedup.stageBatchCompaction(spark, para, Seq("paras"), targetFiles = 1)
-    Dedup.finishBatchCompaction(spark, para)
-    assert(classifyPara() == pexpect, "double-stage over a live marker corrupted the table")
-  }
-
   test("ingest index compaction: a re-run over a published marker completes the prior fold before sweeping staging") {
     // hazard (round-11 advisor): run #1 crashes AFTER publishing its
     // marker — staging holds the only complete copy of the listed source
@@ -1054,8 +969,7 @@ class OpsSpec extends SparkSpec {
     // published marker completes the prior fold (sources → base) before it
     // touches any staging dir, so the marker and staging are never stale
     // relative to each other.
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "ingestRerun").toString
+    val base = scratch("ingestRerun").toString
     Dedup.initIngestIndex(spark, base, n = 3, numPerm = 64, numBands = 16,
       rowsPerBand = 4, expectedItems = 1000L)
     Dedup.appendToIngestIndex(spark, base,
@@ -2158,8 +2072,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("span index: indexed substring dedup = live on combined corpus; append indexes new spans") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "spanIdx").toString
+    val base = scratch("spanIdx").toString
     def span(prefix: String, n: Int): String =
       (1 to n).map(i => f"$prefix$i%02d").mkString(" ")
     val shared = span("s", 9)
@@ -2208,8 +2121,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("bench index: indexed decontamination = live path; append folds; phantom sketch keys harmless") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "benchIdx").toString
+    val base = scratch("benchIdx").toString
     val corpus = Seq(
       (1L, "aa bb cc dd ee"),         // 2 shared 3-grams with bench 100
       (2L, "xx yy zz ww vv"),         // clean
@@ -2241,34 +2153,21 @@ class OpsSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(live == expected)
 
-    // crash window of the sketch-BEFORE-table append ordering: keys in
-    // the sketch without pair rows (a crash between the bloom write and
-    // the table append) must be harmless — the join verifies exactly
+    // keys in the sketch without pair rows (committed on purpose) must be
+    // harmless — the join verifies exactly
     val idx = Decontaminate.readBenchIndex(spark, s"$base/bench")
     idx.bloom.mergeInPlace(
       spark.range(500).select(xxhash64(concat(lit("phantom "), col("id"))).as("__k"))
         .stat.bloomFilter("__k", idx.expectedItems, idx.fpp))
-    Dedup.writeBloomFileAtomic(spark, s"$base/bench", idx.bloom,
-      idx.expectedItems, idx.fpp)
+    val m = IndexStore.latest(spark, s"$base/bench")
+    IndexStore.commit(spark, s"$base/bench", m.copy(version = m.version + 1,
+      sketch = IndexStore.writeSketch(spark, s"$base/bench", m.version + 1, idx.bloom,
+        idx.expectedItems, idx.fpp)))
     assert(probe() == expected)
-
-    // crash window of the append's dfs swap: delete done, rename not —
-    // dfs missing, replacement stranded at dfs.staging. The reader must
-    // finish the rename (not fail on the missing parquet path).
-    locally {
-      val dfsDir = java.nio.file.Paths.get(s"$base/bench/dfs")
-      val stagingDir = java.nio.file.Paths.get(s"$base/bench/dfs.staging")
-      java.nio.file.Files.move(dfsDir, stagingDir)
-      assert(!java.nio.file.Files.exists(dfsDir))
-      assert(probe() == expected) // readBenchIndex self-heals
-      assert(java.nio.file.Files.exists(dfsDir) &&
-        !java.nio.file.Files.exists(stagingDir))
-    }
 
     // compaction: pair parts fold to one file, classification unchanged
     Decontaminate.compactBenchIndex(spark, s"$base/bench")
-    val parts = new java.io.File(s"$base/bench/pairs").listFiles()
-      .count(_.getName.startsWith("part-"))
+    val parts = IndexStore.latest(spark, s"$base/bench").files("pairs")
     assert(parts == 1, s"expected 1 compacted part file, got $parts")
     assert(probe() == expected)
 
@@ -2284,8 +2183,7 @@ class OpsSpec extends SparkSpec {
     // keys in the sketch without rows (here: committed on purpose, the
     // exact digests a batch WOULD add) are false positives: the probe
     // still classifies through the exact verify join
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "hashIdxCrash").toString
+    val base = scratch("hashIdxCrash").toString
     val corpus = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
     Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 100L)
     val idx = Dedup.readHashIndex(spark, s"$base/hash")
@@ -2456,8 +2354,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("persisted LM counts index: folds exact, replay no-op, single-table-atomic crash swap") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "lmCounts").toString
+    val base = scratch("lmCounts").toString
     val a = Seq("the cat sat on the mat").toDF("text")
     val b = Seq.fill(2)("the dog sat on the rug").toDF("text")
     Lm.writeCountsIndex(spark, s"$base/lm")
@@ -2478,17 +2375,18 @@ class OpsSpec extends SparkSpec {
         minBigramCount = 1L, minTrigramCount = 1L))
       == model(Lm.train3(a.unionByName(b), vocabSize = 16, bigramSize = 32,
         trigramSize = 32, minBigramCount = 1L, minTrigramCount = 1L)))
-    // post-marker crash: a fully staged fold whose swap never ran must be
-    // completed by the next reader — ledger and counts move TOGETHER
-    val staged = spark.read.parquet(s"$base/lm/counts")
-      .unionByName(Seq((Lm.BatchKind, "day3", 1L)).toDF("kind", "term", "n"))
-    staged.write.mode("overwrite").parquet(s"$base/lm/counts.staging")
-    graft.ops.Dedup.publishBatchMarker(spark, s"$base/lm", Seq("counts"))
-    assert(Lm.foldedBatches(spark, s"$base/lm").contains("day3"),
-      "the reader must complete the staged swap")
-    assert(!new java.io.File(s"$base/lm/_compacting_batch.json").exists())
+    // crash before the commit: a fold that wrote its table and never
+    // committed is invisible — ledger and counts move TOGETHER — and its
+    // replay lands once, then is replay-protected like any other
+    val folded = rows(Lm.readCountsIndex(spark, s"$base/lm"))
+    assert(Lm.foldIntoCountsIndex(spark, s"$base/lm", "day3", a))
+    IndexStoreSpec.uncommit(spark, s"$base/lm")
+    assert(!Lm.foldedBatches(spark, s"$base/lm").contains("day3") &&
+      rows(Lm.readCountsIndex(spark, s"$base/lm")) == folded, "an uncommitted fold leaked into a read")
+    assert(Lm.foldIntoCountsIndex(spark, s"$base/lm", "day3", a))
+    assert(Lm.foldedBatches(spark, s"$base/lm").contains("day3"))
     assert(!Lm.foldIntoCountsIndex(spark, s"$base/lm", "day3", a),
-      "a healed fold must be replay-protected like any other")
+      "a retried fold must be replay-protected like any other")
   }
 
   test("lm separation: trained gate ranks disfluent twins below fluent; bigram structure is the signal") {
@@ -2728,8 +2626,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("simhash index: probe ≡ live cold pairs, append idempotent, hot star-degrades, post-marker crash heals") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "shidx").toString
+    val base = scratch("shidx").toString
     val path = s"$base/idx"
     // engine-portable mixed signatures + planted xor twins (the x119 grain)
     val sig = docs.select($"doc_id".as("d"))
@@ -2762,9 +2659,9 @@ class OpsSpec extends SparkSpec {
     // append idempotence: replaying an append must not duplicate rows
     val extra = sig.filter($"d" % 7 === 3).select(($"d" * 10 + 5).as("id"), $"s")
     Dedup.appendToSimhashIndex(spark, path, extra, "id", "s")
-    val afterOnce = spark.read.parquet(s"$path/sigs").count()
+    val afterOnce = Dedup.readSimhashIndex(spark, path).sigs.count()
     Dedup.appendToSimhashIndex(spark, path, extra, "id", "s")
-    assert(spark.read.parquet(s"$path/sigs").count() == afterOnce,
+    assert(Dedup.readSimhashIndex(spark, path).sigs.count() == afterOnce,
       "replayed append must be an anti-join no-op")
     // hot bucket: maxBucket = 0 forces EVERY touched bucket hot — pairs
     // must degrade to hub stars but planted twins of the hub still verify
@@ -2772,35 +2669,18 @@ class OpsSpec extends SparkSpec {
       Dedup.readSimhashIndex(spark, path), batch, "id", "s", maxBucket = 0)
       .as[(Long, Long, Int)].collect()
     assert(hotPairs.forall(_._3 <= 2), "star pairs must stay Hamming-verified")
-    // crash drill: compaction staged + marker published, then "crash" —
-    // the next reader heals the swap and the probe result is unchanged
-    // (baseline re-captured AFTER the appends: `extra` shares signatures
-    // with odd d ≡ 3 mod 7 batch rows, so the cross pair set grew)
+    // crash after the commit (the manifest is the marker), before the
+    // sweep: the superseded dirs come back, and the reader still sees
+    // exactly the committed compaction (baseline re-captured AFTER the
+    // appends: `extra` shares signatures with odd d ≡ 3 mod 7 batch rows,
+    // so the cross pair set grew)
     val got2 = probe()
-    Dedup.stageBatchCompaction(spark, path, Seq("sigs", "chunks"), targetFiles = 1)
-    val (fs, _) = (new org.apache.hadoop.fs.Path(path))
-      .getFileSystem(spark.sparkContext.hadoopConfiguration) -> ()
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path/_compacting_batch.json")))
-    assert(probe() == got2, "self-heal read after a post-marker crash changed the pairs")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_compacting_batch.json")),
-      "the reader must consume the marker")
-
-    // buckets-swap crash drill (ADVICE r12: the old delete-then-rename
-    // had a window that left NO buckets dir and bricked every later
-    // read): staging + marker present, buckets dir gone — the next
-    // reader must heal the swap and probe identically
-    val fs2 = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bp = new org.apache.hadoop.fs.Path(s"$path/buckets")
-    org.apache.hadoop.fs.FileUtil.copy(fs2, bp, fs2,
-      new org.apache.hadoop.fs.Path(s"$path/buckets.staging"), false,
-      spark.sparkContext.hadoopConfiguration)
-    Dedup.publishBatchMarker(spark, path, Seq("buckets"))
-    fs2.delete(bp, true) // the crash point: marker committed, target gone
-    assert(probe() == got2,
-      "read after a mid-bucket-swap crash must heal from staging")
-    assert(fs2.exists(bp) && !fs2.exists(new org.apache.hadoop.fs.Path(s"$path/buckets.staging")),
-      "heal must complete the swap")
+    val before = scratch("simhashUnswept")
+    IndexStoreSpec.copyTree(java.nio.file.Paths.get(path), before)
+    Dedup.compactSimhashIndex(spark, path)
+    IndexStoreSpec.copyTree(before, java.nio.file.Paths.get(path))
+    assert(IndexStore.latest(spark, path).tables.values.forall(_.size == 1))
+    assert(probe() == got2, "a read after a post-commit crash changed the pairs")
   }
 
   test("componentsIncremental: delta merges to the global min, singletons survive, staged crash heals") {
@@ -2815,16 +2695,18 @@ class OpsSpec extends SparkSpec {
     val again = Dedup.componentsIncremental(merged, delta)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(again == m, "replaying the delta must be a fixpoint")
-    // persisted form + the staged-but-unswapped crash window
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "ccidx").toString
+    // persisted form + the staged-but-uncommitted crash window: the fold
+    // wrote its labels and never committed; readers see the old labels
+    // and the replayed fold lands
+    val path = scratch("ccidx").toString
     Dedup.writeCcIndex(spark, path, labels)
-    Dedup.componentsIncremental(labels, delta)
-      .write.mode("overwrite").parquet(s"$path/labels.staging")
-    Dedup.publishBatchMarker(spark, path, Seq("labels"))
-    val healed = Dedup.readCcIndex(spark, path)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(healed == m, "read after a post-marker crash must heal to the folded labels")
+    def persisted() = Dedup.readCcIndex(spark, path).orderBy("id").as[(Long, Long)].collect().toSeq
+    val before = persisted()
+    Dedup.appendToCcIndex(spark, path, delta)
+    IndexStoreSpec.uncommit(spark, path)
+    assert(persisted() == before, "an uncommitted fold leaked into a read")
+    Dedup.appendToCcIndex(spark, path, delta)
+    assert(persisted() == m, "the replayed fold must land the folded labels")
   }
 
   test("compressionRatio: repetition deflates below prose, empty reads 1, null stays null, codegen stable") {
@@ -2886,8 +2768,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("HLL index: small-cardinality estimates exact, new keys appear on fold, staged crash heals") {
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "hllidx").toString
+    val path = scratch("hllidx").toString
     val a = Seq(("h1", 1L), ("h1", 2L), ("h1", 2L), ("h2", 5L)).toDF("host", "uid")
     val b = Seq(("h1", 3L), ("h3", 9L)).toDF("host", "uid")
     ops.Frequency.writeHllIndex(spark, path, a, "host", "uid")
@@ -2898,31 +2779,29 @@ class OpsSpec extends SparkSpec {
       .orderBy("key").as[(String, Long)].collect().toSeq
     assert(est == Seq(("h1", 3L), ("h2", 1L), ("h3", 1L)),
       s"small-set estimates must be exact: $est")
-    // staged-but-unswapped crash: the next read heals the swap
-    val cur = spark.read.parquet(s"$path/sketches")
+    // staged-but-uncommitted crash: the fold's delta is invisible until
+    // its replay commits it
     val extra = Seq(("h2", 6L)).toDF("host", "uid")
-      .groupBy($"host".as("key"))
-      .agg(expr("hll_sketch_agg(uid, 12)").as("sketch"))
-    cur.unionByName(extra).groupBy($"key")
-      .agg(expr("hll_union_agg(sketch)").as("sketch"))
-      .write.mode("overwrite").parquet(s"$path/sketches.staging")
-    ops.Dedup.publishBatchMarker(spark, path, Seq("sketches"))
-    val healed = ops.Frequency.readHllEstimates(spark, path)
+    ops.Frequency.foldIntoHllIndex(spark, path, extra, "host", "uid")
+    IndexStoreSpec.uncommit(spark, path)
+    def estimates() = ops.Frequency.readHllEstimates(spark, path)
       .orderBy("key").as[(String, Long)].collect().toSeq
-    assert(healed == Seq(("h1", 3L), ("h2", 2L), ("h3", 1L)),
-      s"read after a post-marker crash must heal to the folded sketches: $healed")
+    assert(estimates() == est, "an uncommitted fold leaked into a read")
+    ops.Frequency.foldIntoHllIndex(spark, path, extra, "host", "uid")
+    assert(estimates() == Seq(("h1", 3L), ("h2", 2L), ("h3", 1L)),
+      s"the replayed fold must land the folded sketches: ${estimates()}")
   }
 
   test("HLL index: folds append deltas (no index rewrite), compaction unions per key, lgK pin rejects mismatch") {
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "hllidx2").toString
+    val path = scratch("hllidx2").toString
     val a = Seq(("h1", 1L), ("h2", 5L)).toDF("host", "uid")
     val b = Seq(("h1", 2L), ("h3", 9L)).toDF("host", "uid")
     ops.Frequency.writeHllIndex(spark, path, a, "host", "uid")
     ops.Frequency.foldIntoHllIndex(spark, path, b, "host", "uid")
     // the fold APPENDED delta rows — h1 is present twice on disk (the
     // O(batch) shape; the old fold would have rewritten to 1 row per key)
-    val rows = spark.read.parquet(s"$path/sketches")
+    def sketches() = IndexStore.read(spark, path, IndexStore.latest(spark, path), "sketches")
+    val rows = sketches()
     assert(rows.count() == 4 && rows.select("key").distinct().count() == 3,
       "fold must append delta rows, not rewrite the table")
     val est = ops.Frequency.readHllEstimates(spark, path)
@@ -2930,23 +2809,12 @@ class OpsSpec extends SparkSpec {
     assert(est == Seq(("h1", 2L), ("h2", 1L), ("h3", 1L)))
     // compaction collapses to one row per key; estimates unchanged
     ops.Frequency.compactHllIndex(spark, path)
-    val compacted = spark.read.parquet(s"$path/sketches")
-    assert(compacted.count() == 3, "compaction must union deltas to one row per key")
-    assert(ops.Frequency.readHllEstimates(spark, path)
-      .orderBy("key").as[(String, Long)].collect().toSeq == est)
-    // pre-marker crash: a staged-but-unpublished compaction is invisible
-    // to readers and harmlessly overwritten by the next compaction
-    spark.read.parquet(s"$path/sketches")
-      .write.mode("overwrite").parquet(s"$path/sketches.staging")
-    assert(ops.Frequency.readHllEstimates(spark, path)
-      .orderBy("key").as[(String, Long)].collect().toSeq == est,
-      "unpublished staging must not be visible")
-    ops.Frequency.compactHllIndex(spark, path) // sweeps/overwrites the stale staging
+    assert(sketches().count() == 3, "compaction must union deltas to one row per key")
     assert(ops.Frequency.readHllEstimates(spark, path)
       .orderBy("key").as[(String, Long)].collect().toSeq == est)
     // auto-compact trigger: threshold 1 part file → fold compacts in place
     ops.Frequency.foldIntoHllIndex(spark, path, b, "host", "uid", autoCompactAt = 1)
-    assert(spark.read.parquet(s"$path/sketches").count() == 3,
+    assert(sketches().count() == 3,
       "auto-compact at threshold must leave one row per key")
     // lgK mismatch fails loudly (ADVICE r12: a mixed-precision fold would
     // silently degrade or error at union time)
@@ -2990,8 +2858,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("BM25 postings index: probe ≡ live, replayed append is a no-op, probe prunes term partitions, crash heals") {
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "bm25idx").toString
+    val path = scratch("bm25idx").toString
     val corpus = docs.select($"doc_id".as("id"), $"text")
     val a = corpus.filter($"id" % 2 === 0)
     val b = corpus.filter($"id" % 2 === 1)
@@ -3043,7 +2910,7 @@ class OpsSpec extends SparkSpec {
       s"probe plan must not scan doclen (meta counters):\n${plan.take(2000)}")
     // the id sketch exists and the manifest's counters equal the table's
     val m = IndexStore.latest(spark, path)
-    assert(new java.io.File(s"$path/${m.sketch}").exists(), "fold sketch must persist")
+    assert(new java.io.File(s"$path/${m.sketch.get}").exists(), "fold sketch must persist")
     val agg = table("doclen")
       .agg(org.apache.spark.sql.functions.count(lit(1)),
         org.apache.spark.sql.functions.sum($"__dl".cast("long")))
@@ -3052,8 +2919,7 @@ class OpsSpec extends SparkSpec {
       s"manifest counters (${m.long("n_docs")},${m.long("sum_dl")}) must equal doclen $agg")
     // building an EMPTY index fails loud (an empty partitionBy dir would
     // be unreadable forever) and commits no manifest
-    val path2 = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "bm25empty").toString
+    val path2 = scratch("bm25empty").toString
     val e2 = intercept[IllegalArgumentException] {
       ops.TextStats.writeBm25Index(corpus.filter($"id" < 0), "id", $"text", path2)
     }
@@ -3063,8 +2929,7 @@ class OpsSpec extends SparkSpec {
 
   test("BM25 index round-15 contract drills: the fold's sketch keeps the build's pinned params, " +
       "duplicate-id batch fails loud") {
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "bm25r15").toString
+    val path = scratch("bm25r15").toString
     val corpus = docs.select($"doc_id".as("id"), $"text")
     val a = corpus.filter($"id" % 2 === 0)
     val b = corpus.filter($"id" % 2 === 1)
@@ -3088,7 +2953,7 @@ class OpsSpec extends SparkSpec {
     val folded = IndexStore.latest(spark, path)
     assert(folded.sketch != built.sketch, "the fold must commit a fresh sketch")
     val (fs, _) = ops.Dedup.hadoopFs(spark, path)
-    val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/${folded.sketch}"))
+    val in = fs.open(new org.apache.hadoop.fs.Path(s"$path/${folded.sketch.get}"))
     val dis = new java.io.DataInputStream(in)
     val (items, fpp) = try (dis.readLong(), dis.readDouble()) finally in.close()
     assert((items, fpp) == ((1234L, 0.05)),
@@ -3148,8 +3013,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("source-token index: folds sum exactly, replay is a ledger no-op, staged crash heals, recipe ≡ live") {
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "srctok").toString
+    val path = scratch("srctok").toString
     val rows = Seq(("a", 60L), ("a", 40L), ("b", 100L), ("c", 800L)).toDF("src", "tk")
     val targets = Seq("a" -> 0.25, "b" -> 0.25, "c" -> 0.5)
     ops.Sampling.writeSourceTokenIndex(spark, path)
@@ -3165,13 +3029,16 @@ class OpsSpec extends SparkSpec {
       .orderBy("source").as[(String, Long, Double, Long, Double)].collect().toSeq
     assert(card() == live, s"indexed recipe must equal live: ${card()} vs $live")
     assert(card().map(r => (r._1, r._2)) == Seq(("a", 100L), ("b", 100L), ("c", 800L)))
-    // crash drill: a fold staged its merged table + marker, then died —
-    // the next reader completes the swap and the recipe is unchanged
-    spark.read.parquet(s"$path/counts")
-      .write.mode("overwrite").parquet(s"$path/counts.staging")
-    ops.Dedup.publishBatchMarker(spark, path, Seq("counts"))
-    assert(card() == live, "post-marker crash must heal to the identical recipe")
+    // crash drill: a fold wrote its merged table, then died before its
+    // commit — readers keep the committed recipe, and the replay lands
+    assert(ops.Sampling.foldIntoSourceTokenIndex(spark, path, "d3",
+      rows.filter($"src" === "b"), $"src", $"tk"))
+    IndexStoreSpec.uncommit(spark, path)
+    assert(card() == live, "an uncommitted fold must leave the identical recipe")
     assert(ops.Sampling.foldedSourceBatches(spark, path) == Set("d1", "d2"))
+    assert(ops.Sampling.foldIntoSourceTokenIndex(spark, path, "d3",
+      rows.filter($"src" === "b"), $"src", $"tk"))
+    assert(ops.Sampling.foldedSourceBatches(spark, path) == Set("d1", "d2", "d3"))
   }
 
   test("rrfFuse: hand-checked contribution sums, single-list items score, ties break on id") {

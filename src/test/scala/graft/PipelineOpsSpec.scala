@@ -184,8 +184,7 @@ class PipelineOpsSpec extends SparkSpec {
       (103L, "brand new content a"),
       (104L, null: String)  // null text: tagged identity, classifies vs corpus nulls
     ).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "hashIdx").toString
+    val path = scratch("hashIdx").toString
     Dedup.writeHashIndex(corpus, "doc_id", "text", path, expectedItems = 50L)
     val live = Dedup.incrementalExactBloom(corpus, batch, "doc_id", "text", expectedItems = 50L)
     val idx = Dedup.incrementalExactIndexed(Dedup.readHashIndex(spark, path), batch, "doc_id", "text")
@@ -198,8 +197,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("persisted hash index: append folds new docs in without a corpus rebuild") {
     val corpus = (1L to 20L).map(i => (i, s"base doc $i")).toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "hashIdxApp").toString
+    val path = scratch("hashIdxApp").toString
     Dedup.writeHashIndex(corpus, "doc_id", "text", path, expectedItems = 1000L)
     // batch 1: one dup of the corpus, two new docs (one duplicated intra-batch)
     val b1 = Seq((101L, "base doc 5"), (102L, "fresh a"), (103L, "fresh a"), (104L, "fresh b"))
@@ -230,8 +228,7 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("persisted hash index: empty corpus round-trips and classifies all-new") {
     val cDf = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    val path = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "hashIdxEmpty").toString
+    val path = scratch("hashIdxEmpty").toString
     Dedup.writeHashIndex(cDf, "doc_id", "text", path, expectedItems = 10L)
     val res = Dedup.incrementalExactIndexed(Dedup.readHashIndex(spark, path),
       Seq((101L, "a")).toDF("doc_id", "text"), "doc_id", "text")

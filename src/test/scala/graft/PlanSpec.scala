@@ -123,8 +123,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ORC scan: predicate pushdown fires for the second columnar format") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory(java.nio.file.Paths.get(graft.TmpDir.root), "orc").toString
+    val tmp = scratch("orc").toString
     Readers.table(spark, sf0001, "lineitem")
       .select("l_orderkey", "l_quantity", "l_returnflag").write.mode("overwrite").orc(tmp)
     val plan = physical(
@@ -415,8 +414,7 @@ class PlanSpec extends SparkSpec {
     // plans), so the audit captures every executed plan through a
     // QueryExecutionListener and sweeps the whole set — the same
     // no-quadratic-pocket contract PlanAuditSpec enforces per probe
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "ingestPlan").toString
+    val base = scratch("ingestPlan").toString
     val docs = Readers.table(spark, sf0001, "documents").select(col("doc_id"), col("text"))
     graft.ops.Dedup.initIngestIndex(spark, base, n = 3, numPerm = 64, numBands = 16,
       rowsPerBand = 4, expectedItems = 10000L)
@@ -464,8 +462,7 @@ class PlanSpec extends SparkSpec {
     // executed plans through a listener, the ingest-index audit's shape.
     // The fixture is deterministic (xxhash64 + fixed ids), so the
     // bloom-negative precondition either always holds or never does.
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "bm25Plan").toString
+    val base = scratch("bm25Plan").toString
     val docs = Readers.table(spark, sf0001, "documents").select(col("doc_id"), col("text"))
     graft.ops.TextStats.writeBm25Index(
       docs.filter(col("doc_id") % 5 =!= 0), "doc_id", col("text"), base)
@@ -506,8 +503,7 @@ class PlanSpec extends SparkSpec {
 
   test("composed indexed sweeps: decon prunes term partitions and never scans doclen; " +
       "hybrid additionally prunes centroid partitions (round-15 deployment shapes)") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "r15sweep").toString
+    val base = scratch("r15sweep").toString
     val docs = Readers.table(spark, sf0001, "documents").select(col("doc_id"), col("text"))
     val emb = Readers.table(spark, sf0001, "embeddings")
     graft.ops.TextStats.writeBm25Index(docs, "doc_id", col("text"), s"$base/bm25")
@@ -563,8 +559,7 @@ class PlanSpec extends SparkSpec {
     // (localCheckpoint), so across EVERY plan the probe executes —
     // checkpoint job + final assembly, swept through a listener exactly
     // like the ingest-index audit above — partial_min must appear ONCE.
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "paraPlan").toString
+    val base = scratch("paraPlan").toString
     val docs = Readers.table(spark, sf0001, "documents")
       .select(col("doc_id"), col("text"))
     graft.ops.Dedup.writeParagraphIndex(docs.filter(col("doc_id") % 5 =!= 0),
@@ -620,8 +615,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("indexed decontamination: sketch prune rides the batch side; pair join broadcasts") {
-    val base = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.TmpDir.root), "planBenchIdx").toString
+    val base = scratch("planBenchIdx").toString
     val docs = Readers.table(spark, sf0001, "documents")
     graft.ops.Decontaminate.writeBenchIndex(
       docs.filter(col("doc_id") % 37 === 0), "doc_id", col("text"),

@@ -27,7 +27,7 @@ class ReadersSpec extends SparkSpec {
 
   test("TIMESTAMP(NANOS) events read as µs timestamps, truncated toward zero") {
     val s = spark.newSession()
-    val dir = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "nanos").toString
+    val dir = scratch("nanos").toString
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int32 k; required int64 ts (TIMESTAMP(NANOS,true)); }")
     val writer = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))

@@ -45,8 +45,8 @@ class ScaleSpec extends SparkSpec {
     // SAME path mid-round, and every path-keyed marker cache kept serving
     // dead data. The source token folds (path, length, mtime) metadata
     // into the marker name, so an in-place regen lands on a fresh marker.
-    val src = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "tokSrc").toString
-    val out = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "tokOut").toString
+    val src = scratch("tokSrc").toString
+    val out = scratch("tokOut").toString
     Seq((1L, "one"), (2L, "two")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$src/documents.parquet")
     val tok1 = TmpDir.sourceToken(s"$src/documents.parquet")
@@ -70,7 +70,7 @@ class ScaleSpec extends SparkSpec {
     // round-7 advice: with path as a sort key only, a content swap
     // between same-size files within mtime granularity kept the token —
     // and silently served a stale cache. Path now folds into the mix.
-    val d = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "tokPath")
+    val d = scratch("tokPath")
     val t = 1700000000000L
     val f1 = d.resolve("a.bin"); val f2 = d.resolve("b.bin")
     Files.write(f1, Array[Byte](1, 2, 3)); f1.toFile.setLastModified(t)
@@ -81,7 +81,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("partitioned fact write produces event_year/event_month dirs and prunes on read") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "partwh").toString
+    val base = scratch("partwh").toString
     val flat = Flatten(EventsVocab.synth(Readers.table(spark, sf0001, "events"))).cache()
     flat.count()
     val wh = EtlJob.buildFromFlat(flat, EtlJob.Config("", base, clock = () => "2026-01-01 00:00:00"))
@@ -102,7 +102,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("range-partitioned sorted store: a narrow value filter reads only overlapping files") {
-    val tmp = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "sorted").toString
+    val tmp = scratch("sorted").toString
     Readers.table(spark, sf0001, "events")
       .select($"event_id", $"event_type", $"value")
       .repartitionByRange(8, $"value")
@@ -121,7 +121,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("compaction shrinks a 64-file shed to ~4 even files, content intact") {
-    val tmp = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "compact").toString + "/t"
+    val tmp = scratch("compact").toString + "/t"
     val src = Readers.table(spark, sf0001, "events")
       .select($"event_id", $"event_type", $"value")
     src.repartition(64).write.parquet(tmp)

@@ -16,7 +16,7 @@ class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val jsonlDir = {
-    val dir = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "stream").toString
+    val dir = scratch("stream").toString
     Readers.table(spark, sf0001, "events")
       .select(EventsVocab.eventJson.as("value"))
       .coalesce(2)
@@ -114,7 +114,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming SCD2 dim maintenance equals batch fromHistory after two CDC batches") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "scd2s").toString
+    val base = scratch("scd2s").toString
     val (in, dim, ckp) = (s"$base/in", s"$base/dim", s"$base/ckp")
     val full = Readers.table(spark, sf0001, "events")
       .select($"user_id", $"ts", $"event_type")
@@ -136,7 +136,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming curated corpus ingest: cross-batch dedup, append-only batch partitions") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "curateds").toString
+    val base = scratch("curateds").toString
     val (in, corpus, ckp) = (s"$base/in", s"$base/corpus", s"$base/ckp")
     def doc(prefix: String, n: Int, lastOverride: String = ""): String = {
       val toks = (1 to n).map(i => f"$prefix$i%02d")
@@ -165,7 +165,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("curated corpus sink: kill + checkpoint resume over a stale partial ≡ uninterrupted run") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "curatedkr").toString
+    val base = scratch("curatedkr").toString
     def doc(prefix: String, n: Int): String = (1 to n).map(i => f"$prefix$i%02d").mkString(" ")
     val b1 = Seq((1L, doc("w", 20)), (2L, doc("x", 20))).toDF("doc_id", "text")
     val b2 = Seq(
@@ -212,7 +212,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("indexed curated corpus sink: cross-batch dedup through the persisted index equals the live sink") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "curatedix").toString
+    val base = scratch("curatedix").toString
     def doc(prefix: String, n: Int, lastOverride: String = ""): String = {
       val toks = (1 to n).map(i => f"$prefix$i%02d")
       (if (lastOverride.isEmpty) toks else toks.init :+ lastOverride).mkString(" ")
@@ -271,7 +271,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("indexed sink with in-stream compaction: corpus unchanged, index partitions stay bounded") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "curatedixc").toString
+    val base = scratch("curatedixc").toString
     def doc(prefix: String, n: Int, lastOverride: String = ""): String = {
       val toks = (1 to n).map(i => f"$prefix$i%02d")
       (if (lastOverride.isEmpty) toks else toks.init :+ lastOverride).mkString(" ")
@@ -306,7 +306,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("indexed sink: kill + resume over a poisoned partial INCLUDING a stale index partition ≡ uninterrupted run") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "curatedixkr").toString
+    val base = scratch("curatedixkr").toString
     def doc(prefix: String, n: Int): String = (1 to n).map(i => f"$prefix$i%02d").mkString(" ")
     val b1 = Seq((1L, doc("w", 20)), (2L, doc("x", 20))).toDF("doc_id", "text")
     val b2 = Seq(
@@ -365,7 +365,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("semantic sink: kill + resume over a poisoned partial INCLUDING a stale vec-index partition ≡ uninterrupted run") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "semix").toString
+    val base = scratch("semix").toString
     // one-hot directions: cross-class cosine is exactly 0, a positive
     // scaling is exactly 1 (same sign bucket by construction — LSH recall
     // is provably 1.0 on this fixture, same discipline as the x47 oracle)
@@ -434,7 +434,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("semantic sink with in-stream compaction: corpus unchanged, vec-index partitions stay bounded") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "semixc").toString
+    val base = scratch("semixc").toString
     def e(k: Int, scale: Float = 1f): Array[Float] =
       Array.tabulate(8)(i => if (i == k) scale else 0f)
     val b1 = Seq((1L, e(0)), (2L, e(1))).toDF("vec_id", "embedding")
@@ -466,7 +466,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("indexed sink with bench index: contaminated docs never enter the corpus") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "curatedixb").toString
+    val base = scratch("curatedixb").toString
     def doc(prefix: String, from: Int, n: Int, lastOverride: String = ""): String = {
       val toks = (from until from + n).map(i => f"$prefix$i%02d")
       (if (lastOverride.isEmpty) toks else toks.init :+ lastOverride).mkString(" ")
@@ -511,7 +511,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("source-token sink: streamed recipe ≡ live domainBalance; crash replay is a ledger no-op; fresh checkpoint fails fast") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "srctoksink").toString
+    val base = scratch("srctoksink").toString
     val b1 = Seq(("a", 60L), ("b", 100L)).toDF("src", "tk")
     val b2 = Seq(("a", 40L), ("c", 800L)).toDF("src", "tk")
     val targets = Seq("a" -> 0.25, "b" -> 0.25, "c" -> 0.5)
@@ -559,7 +559,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("LM counts sink: folds equal one-shot counts; kill mid-fold (staged, unswapped) + resume ≡ uninterrupted") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "lmcs").toString
+    val base = scratch("lmcs").toString
     val b1 = Seq((1L, "the cat sat on the mat"), (2L, "a dog in a fog"))
       .toDF("doc_id", "text")
     val b2 = Seq((3L, "the cat ate the dog treat"), (4L, null.asInstanceOf[String]))
@@ -567,26 +567,22 @@ class StreamingSpec extends SparkSpec {
     val schema = b1.schema
 
     // killed-and-resumed leg: batch 0 commits, batch 1's FIRST attempt
-    // dies between staging+marker and the swap (the exact crash window
-    // the single-table ledger design exists for)
+    // staged its whole fold (counts + ledger row) and died before the
+    // commit (the exact crash window the single-table ledger design
+    // exists for)
     val (in, idx, ckp) = (s"$base/in", s"$base/idx", s"$base/ckp")
     b1.write.mode("append").parquet(in)
     val q1 = StreamingIngest.lmCountsIndexSink(
       spark.readStream.schema(schema).parquet(in), idx, ckp, "text")
     try q1.processAllAvailable() finally q1.stop()
     b2.write.mode("append").parquet(in) // arrives while the query is down
-    // simulate the crashed attempt: the complete merged counts (incl. the
-    // stream-1 ledger row) are staged and the marker is published, but
-    // finishBatchCompaction never ran
-    val merged = ops.Lm.mergeCounts(
-      spark.read.parquet(s"$idx/counts"),
-      ops.Lm.trainCounts3(b2, "text"))
-      .unionByName(Seq((ops.Lm.BatchKind, "stream-1", 1L)).toDF("kind", "term", "n"))
-    merged.write.mode("overwrite").parquet(s"$idx/counts.staging")
-    ops.Dedup.publishBatchMarker(spark, idx, Seq("counts"))
+    // simulate the crashed attempt: the fold ran, its commit did not
+    assert(ops.Lm.foldIntoCountsIndex(spark, idx, "stream-1", b2, "text"))
+    IndexStoreSpec.uncommit(spark, idx)
+    assert(!ops.Lm.foldedBatches(spark, idx).contains("stream-1"))
     val q2 = StreamingIngest.lmCountsIndexSink(
       spark.readStream.schema(schema).parquet(in), idx, ckp, "text")
-    try q2.processAllAvailable() finally q2.stop() // heals the swap, ledger no-ops the replay
+    try q2.processAllAvailable() finally q2.stop() // the replayed fold commits
 
     // uninterrupted twin, same batch boundaries
     val (in2, idx2, ckp2) = (s"$base/in2", s"$base/idx2", s"$base/ckp2")
@@ -632,7 +628,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("media sink: intra + cross-batch Hamming dedup; kill + resume over a poisoned partial ≡ uninterrupted") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "mediakr").toString
+    val base = scratch("mediakr").toString
     // well-separated base signatures (distinct high bit-blocks), planted
     // exact/near twins: hamming(s, s^1bit) = 1 ≤ 2; distinct bases differ
     // in ≥ 8 bits
@@ -682,7 +678,7 @@ class StreamingSpec extends SparkSpec {
     assert(resumed.select("media_id").as[Long].collect().toSet == Set(1L, 2L, 6L),
       "intra near (3), cross exact (4), cross near (5), and the poison (99) must all be gone")
     // index state matches the corpus survivors
-    assert(spark.read.parquet(s"$idx/sigs").select("corpus_id").as[Long]
+    assert(ops.Dedup.readSimhashIndex(spark, idx).sigs.select("corpus_id").as[Long]
       .collect().toSet == Set(1L, 2L, 6L))
   }
 
@@ -703,7 +699,7 @@ class StreamingSpec extends SparkSpec {
     // index rows, u is dropped from the rewritten corpus partition while
     // the index keeps its signature. The drill deletes the checkpoint's
     // commits/0 so batch 0 genuinely replays over the committed state.
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "mediareplay").toString
+    val base = scratch("mediareplay").toString
     val heavy1 = 0x155555L // 11 bits in chunk1
     val heavy2 = 0x0AAAAAL // 10 bits in chunk2
     val hSig = (heavy1 << 22) | (heavy2 << 44)
@@ -717,7 +713,7 @@ class StreamingSpec extends SparkSpec {
       spark.readStream.schema(b.schema).parquet(in), corpus, idx, ckp, "media_id", "sig")
     try q1.processAllAvailable() finally q1.stop()
     val firstCorpus = spark.read.parquet(corpus).select("media_id").as[Long].collect().toSet
-    val firstIndex = spark.read.parquet(s"$idx/sigs").select("corpus_id").as[Long].collect().toSet
+    val firstIndex = ops.Dedup.readSimhashIndex(spark, idx).sigs.select("corpus_id").as[Long].collect().toSet
     assert(!firstCorpus.contains(10L), "h must be dropped intra (twin of h2)")
     assert(Set(5L, 20L, 5000L).subsetOf(firstCorpus),
       s"h2, v, and the missed twin u must all survive attempt 1: ${firstCorpus.size}")
@@ -739,14 +735,14 @@ class StreamingSpec extends SparkSpec {
       spark.readStream.schema(b.schema).parquet(in), corpus, idx, ckp, "media_id", "sig")
     try q2.processAllAvailable() finally q2.stop()
     val replayCorpus = spark.read.parquet(corpus).select("media_id").as[Long].collect().toSet
-    val replayIndex = spark.read.parquet(s"$idx/sigs").select("corpus_id").as[Long].collect().toSet
+    val replayIndex = ops.Dedup.readSimhashIndex(spark, idx).sigs.select("corpus_id").as[Long].collect().toSet
     assert(replayCorpus == firstCorpus,
       s"replay must rewrite the identical corpus partition (lost: ${firstCorpus -- replayCorpus})")
     assert(replayIndex == firstIndex, "replay must leave the index unchanged")
   }
 
   test("BM25 sink: streamed folds ≡ one-shot index; same-batch crash replay is an anti-join no-op") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "bm25sink").toString
+    val base = scratch("bm25sink").toString
     val b1 = Seq((1L, "the cat sat"), (2L, "a dog in a fog")).toDF("doc_id", "text")
     val b2 = Seq((3L, "the cat ate the dog"), (4L, "fox box")).toDF("doc_id", "text")
     val schema = b1.schema
@@ -791,7 +787,7 @@ class StreamingSpec extends SparkSpec {
     // ADVICE r13: an empty first batch used to write an empty
     // partitionBy postings dir (no part files, schema uninferable) and
     // then mark the index built — permanently bricking every later fold
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "bm25empty").toString
+    val base = scratch("bm25empty").toString
     val docs = Seq((1L, "cat sat"), (2L, "dog fog")).toDF("doc_id", "text")
     val schema = docs.schema
     val (in, idx, ckp) = (s"$base/in", s"$base/idx", s"$base/ckp")
@@ -812,7 +808,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("CC label sink: streamed pair deltas fold to one-shot components; kill mid-fold + resume heals") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "ccsink").toString
+    val base = scratch("ccsink").toString
     val b1 = Seq((1L, 2L), (5L, 6L)).toDF("id_a", "id_b")
     val b2 = Seq((2L, 5L), (8L, 9L)).toDF("id_a", "id_b") // bridges {1,2} and {5,6}
     val schema = b1.schema
@@ -822,14 +818,12 @@ class StreamingSpec extends SparkSpec {
       spark.readStream.schema(schema).parquet(in), idx, ckp)
     try q1.processAllAvailable() finally q1.stop()
     b2.write.mode("append").parquet(in)
-    // poison: batch 1's first attempt staged its fold + marker, then died
-    val staged = ops.Dedup.componentsIncremental(
-      ops.Dedup.readCcIndex(spark, idx), b2)
-    staged.write.mode("overwrite").parquet(s"$idx/labels.staging")
-    ops.Dedup.publishBatchMarker(spark, idx, Seq("labels"))
+    // poison: batch 1's first attempt wrote its fold, then died before the commit
+    ops.Dedup.appendToCcIndex(spark, idx, b2)
+    IndexStoreSpec.uncommit(spark, idx)
     val q2 = StreamingIngest.ccIndexSink(
       spark.readStream.schema(schema).parquet(in), idx, ckp)
-    try q2.processAllAvailable() finally q2.stop() // heals, then refolds (fixpoint)
+    try q2.processAllAvailable() finally q2.stop() // the replayed fold commits
     val got = ops.Dedup.readCcIndex(spark, idx)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     val oneShot = ops.Dedup.components(b1.unionByName(b2))
@@ -839,7 +833,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("HLL sink: streamed folds equal one batch-built index; kill mid-fold + resume heals") {
-    val base = Files.createTempDirectory(Paths.get(graft.TmpDir.root), "hllsink").toString
+    val base = scratch("hllsink").toString
     val b1 = Seq(("h1", 1L), ("h1", 2L), ("h2", 5L)).toDF("host", "uid")
     val b2 = Seq(("h1", 3L), ("h3", 9L), ("h1", 2L)).toDF("host", "uid")
     val schema = b1.schema
@@ -849,16 +843,12 @@ class StreamingSpec extends SparkSpec {
       spark.readStream.schema(schema).parquet(in), idx, ckp, "host", "uid")
     try q1.processAllAvailable() finally q1.stop()
     b2.write.mode("append").parquet(in)
-    // poison: batch 1's first attempt staged its fold + marker, then died
-    val cur = spark.read.parquet(s"$idx/sketches")
-    cur.unionByName(b2.groupBy($"host".as("key"))
-        .agg(expr("hll_sketch_agg(uid, 12)").as("sketch")))
-      .groupBy($"key").agg(expr("hll_union_agg(sketch)").as("sketch"))
-      .write.mode("overwrite").parquet(s"$idx/sketches.staging")
-    ops.Dedup.publishBatchMarker(spark, idx, Seq("sketches"))
+    // poison: batch 1's first attempt wrote its fold, then died before the commit
+    ops.Frequency.foldIntoHllIndex(spark, idx, b2, "host", "uid")
+    IndexStoreSpec.uncommit(spark, idx)
     val q2 = StreamingIngest.hllIndexSink(
       spark.readStream.schema(schema).parquet(in), idx, ckp, "host", "uid")
-    try q2.processAllAvailable() finally q2.stop() // heals, then refolds (register no-op)
+    try q2.processAllAvailable() finally q2.stop() // the replayed fold commits
     val got = ops.Frequency.readHllEstimates(spark, idx)
       .orderBy("key").as[(String, Long)].collect().toSeq
     // small-cardinality estimates are exact (HLL list/set mode)

@@ -37,7 +37,7 @@ class ToolingSpec extends SparkSpec {
   }
 
   test("Profile on a catalog query prints its jobs, writes its plan and leaves the session running") {
-    val out = Files.createTempDirectory(Paths.get(TmpDir.root), "profile").toString
+    val out = scratch("profile").toString
     val lines = Profile.profile(spark, sf0001, Seq("q16_kpi_headline", "q17_parcel_etl_fact"), out)
     assert(!lines.exists(_.contains("\"error\"")), lines.mkString("\n"))
     assert(lines.count(_.contains("\"job\":")) >= 1, lines.mkString("\n"))
@@ -101,7 +101,8 @@ class ToolingSpec extends SparkSpec {
     assert(offenders.isEmpty, s"files building the star schema or its stage outside graft.etl: $offenders")
   }
 
-  test("the BM25 and hash index families keep no marker, intent file, layout file or heal path") {
+  test("the batch index families keep no marker, staging swap, meta.json, intent file, " +
+      "layout file or heal path") {
     val sources = Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toVector
     assert(sources.nonEmpty)
@@ -109,11 +110,29 @@ class ToolingSpec extends SparkSpec {
       sources.filter(p => Files.readString(p).contains(word)).map(_.getFileName.toString).sorted
     assert(naming("_manifest") == Vector("IndexStore.scala"),
       s"only the index store may know its manifest dir: ${naming("_manifest")}")
-    assert(naming("stats.dirty").isEmpty && naming("layout.json").isEmpty,
-      s"intent or layout files: ${naming("stats.dirty") ++ naming("layout.json")}")
-    val textStats = Files.readString(Paths.get("src/main/scala/graft/ops/TextStats.scala"))
-    val swaps = Seq("finishBatchCompaction", "publishBatchMarker", "writeBloomFileAtomic",
-      "writeTextFile").filter(textStats.contains)
-    assert(swaps.isEmpty, s"TextStats still uses the marker/swap protocol: $swaps")
+    val retired = Seq("_compacting_batch", "publishBatchMarker", "finishBatchCompaction",
+      "stageBatchCompaction", "compactBatchIndex", "maybeAutoCompact", "stats.dirty", "layout.json")
+    val named = retired.flatMap(w => naming(w).map(f => s"$f: $w"))
+    assert(named.isEmpty, s"src/main still names the retired batch-marker protocol: $named")
+    // the two streaming ingest families and their sinks (plus the SCD2
+    // dim sink's own dir swap) are the last users of meta.json, staging
+    // swaps and the tmp-swapped sketch
+    val ingest = Map(
+      "Dedup.scala" -> ("// — streaming-maintained ingest index", "// — persisted SIMHASH index"),
+      "StreamingIngest.scala" -> ("def scd2DimSink(", "def mediaCorpusIndexedSink("))
+    val offenders = sources.flatMap { p =>
+      val name = p.getFileName.toString
+      val lines = Files.readAllLines(p).asScala.toVector
+      val (from, to) = ingest.get(name).map { case (a, b) =>
+        (lines.indexWhere(_.contains(a)), lines.indexWhere(_.contains(b)))
+      }.getOrElse((-1, -1))
+      assert(ingest.get(name).isEmpty || (from >= 0 && to > from), s"$name: ingest region markers moved")
+      lines.zipWithIndex.collect {
+        case (l, i) if Seq("meta.json", ".staging\"", "writeBloomFileAtomic").exists(l.contains) &&
+            !(i > from && i < to) => s"$name:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"only the streaming ingest families may keep meta.json or a staging swap:\n${offenders.mkString("\n")}")
   }
 }
