@@ -44,13 +44,14 @@ object SparkEntry {
 
   /** Frees what a catalog query leaves behind, for the tools that run
     * them in turn: cached frames, every persisted RDD (blocking; with the
-    * `localCheckpoint` blocks `clearCache` misses) and the parcel probes'
-    * stages with their catalog tables.
+    * `localCheckpoint` blocks `clearCache` misses), the parcel probes'
+    * stages with their catalog tables and the probes' scratch dirs.
     */
   def release(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     ParityProbes.dropStages(spark)
+    TmpDir.dropScratch()
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -8,8 +8,7 @@ package graft
   * `-Dgraft.tmp.dir=<path>` — so a checkout at any location works; the
   * probes previously hardcoded `/root/repo/target` and broke anywhere
   * else (round-5 advice). The directory is created on first use so
-  * `Files.createTempDirectory(Paths.get(TmpDir.root), …)` callers never
-  * race a missing parent.
+  * [[scratch]] and the spec temp dirs never race a missing parent.
   */
 object TmpDir {
   lazy val root: String = {
@@ -64,10 +63,6 @@ object TmpDir {
         build(path)
         done.getParentFile.mkdirs()
         if (!done.createNewFile()) throw new java.io.IOException(s"cache marker create failed at $done")
-        def delete(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(delete))
-          f.delete()
-        }
         Option(new java.io.File(s"$root/tmp").listFiles()).toSeq.flatten
           .filter(f => f.getName.startsWith(s"${name}_") &&
             !f.getName.startsWith(s"${name}_${version}_"))
@@ -75,5 +70,26 @@ object TmpDir {
       }
     }
     path
+  }
+
+  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh dir `<root>/<name>_<random>` for one probe run's scratch
+    * state, deleted by [[dropScratch]]. The probe cannot delete it
+    * itself: the frame it returns still reads from it lazily.
+    */
+  def scratch(name: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(root), s"${name}_").toFile
+    scratchDirs.add(d)
+    d.getPath
+  }
+
+  /** Delete every dir [[scratch]] made in this JVM so far. */
+  def dropScratch(): Unit =
+    Iterator.continually(scratchDirs.poll()).takeWhile(_ != null).foreach(delete)
+
+  private def delete(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(delete))
+    f.delete()
   }
 }

@@ -2346,15 +2346,16 @@ object Dedup {
   //   sink that must be exactly-once under micro-batch replay. Two deltas
   //   from [[writeHashIndex]]/[[writeBandIndex]]:
   //
-  //   1. BATCH PROVENANCE. Every table row lives in a Hive-style
-  //      `__ingest=<batchId>` partition owned by the batch that appended
-  //      it, so (a) an append is a plain partition OVERWRITE — a replayed
-  //      batch rewrites its own partition byte-for-byte, no anti-join
-  //      guards needed — and (b) a probe can EXCLUDE the current batch id,
-  //      so a replay that crashed after its index append still classifies
-  //      against exactly the pre-append corpus and reproduces the original
-  //      decision. Without the exclusion, a replayed batch would find its
-  //      own first-attempt rows and classify every doc as a duplicate of
+  //   1. BATCH PROVENANCE. Each append commits one [[IndexStore]] version
+  //      whose write dirs hold the batch's rows under an
+  //      `__ingest=<batchId>` partition, and the manifest records which
+  //      batch each write dir holds. So (a) a replayed append replaces the
+  //      dirs its earlier attempt committed — no anti-join guards — and
+  //      (b) a probe can EXCLUDE the current batch id, so a replay that
+  //      crashed after its index append still classifies against exactly
+  //      the pre-append corpus and reproduces the original decision.
+  //      Without the exclusion, a replayed batch would find its own
+  //      first-attempt rows and classify every doc as a duplicate of
   //      itself, emptying the corpus partition it is about to rewrite.
   //   2. NO PERSISTED BUCKET AGGREGATE. [[appendToBandIndex]] recomputes
   //      the bucket table from the FULL band table per append — a
@@ -2366,16 +2367,15 @@ object Dedup {
   //      (occupancy + candidates) instead of one scan each of buckets and
   //      bands, and the append drops to pure parquet partition writes.
   //
-  //   Bloom lifecycle: the sketch accumulates every appended content key
-  //   (merge = bitwise OR — replay-idempotent) and is rewritten via
-  //   tmp+rename; a crash in the rename window self-heals on the next
-  //   read by rebuilding from the hash table (a compact re-read). A
-  //   replayed batch's own keys being present is harmless: positives
-  //   always verify against the provenance-FILTERED hash table.
+  //   Sketch: every append commits a fresh sketch, the previous one
+  //   OR-ed with the batch's content keys. A replaced attempt's keys stay
+  //   in it, which is harmless: positives always verify against the
+  //   provenance-FILTERED hash table.
 
   /** A loaded streaming ingest index. Frames are lazy parquet scans
-    * carrying the `__ingest` partition column (empty-schema frames before
-    * the first append); only the Bloom sketch is driver-held.
+    * carrying the `__ingest` partition column (empty frames with that
+    * schema for a table no write has reached yet); only the Bloom sketch
+    * is driver-held.
     */
   final case class IngestIndex(
       hashes: DataFrame,   // (__h sha256 hex, __exact_of min id, __ingest)
@@ -2385,100 +2385,123 @@ object Dedup {
       expectedItems: Long, fpp: Double,
       n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int)
 
-  /** Rewrite `path/bloom.bin` via tmp + rename so a crash mid-write never
-    * leaves a truncated sketch: the worst case (crash between delete and
-    * rename) leaves the file MISSING, which [[readIngestIndex]] self-heals
-    * by rebuilding from the persisted hash table.
+  /** Commit version 1 of an EMPTY ingest index: the `geometry`, the
+    * sketch params and an empty sketch. Probing it classifies everything
+    * `new`, so the first batch needs no special casing.
     */
-  private[graft] def writeBloomFileAtomic(spark: org.apache.spark.sql.SparkSession, dir: String,
-      bf: org.apache.spark.util.sketch.BloomFilter, expectedItems: Long, fpp: Double): Unit = {
-    writeBloomFile(spark, s"$dir/bloom.bin.tmp", bf, expectedItems, fpp)
-    val (fs, dst) = hadoopFs(spark, s"$dir/bloom.bin")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/bloom.bin.tmp")
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"bloom swap $tmp -> $dst failed")
+  private def initIngest(spark: org.apache.spark.sql.SparkSession, path: String,
+      geometry: Map[String, Any], expectedItems: Long, fpp: Double): Unit = {
+    require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
+    val v = IndexStore.nextVersion(spark, path)
+    IndexStore.commit(spark, path, IndexStore.Manifest(v,
+      geometry ++ Map("expectedItems" -> expectedItems, "fpp" -> fpp), Map.empty,
+      IndexStore.writeSketch(spark, path, v, emptyBloom(spark, expectedItems, fpp), expectedItems, fpp)))
   }
 
-  /** Create an EMPTY ingest index: sketch + `meta.json` (geometry and
-    * sketch params — written LAST, so its presence marks a usable index).
-    * Tables materialize on first [[appendToIngestIndex]]; probing the
-    * empty index classifies everything `new`, so the first batch needs no
-    * special casing.
+  /** The ingest batch the manifest `m` records for write dir `dir`
+    * (`-1` for a compaction's base dir).
+    */
+  private[graft] def ingestOf(m: IndexStore.Manifest, dir: String): Long = m.long(s"ingest:$dir")
+
+  /** `table` of the ingest index `m` names, or an empty frame of
+    * `fields` + `__ingest` when no write has reached it yet.
+    */
+  private def ingestTable(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, table: String,
+      fields: org.apache.spark.sql.types.StructField*): DataFrame = {
+    import org.apache.spark.sql.types._
+    if (m.tables.getOrElse(table, Nil).nonEmpty) IndexStore.read(spark, path, m, table)
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(fields :+ StructField("__ingest", IntegerType)))
+  }
+
+  /** Commit `m` as version `v` naming `tables` (dirs without part files
+    * left out) and `sketch`, with one batch entry per named dir: `batch`
+    * for version `v`'s own dirs, the entry `m` has for the others.
+    */
+  private def commitIngest(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, v: Long, tables: Map[String, Seq[IndexStore.WriteDir]],
+      batch: Long, sketch: Option[String]): Unit = {
+    val live = tables.map { case (t, ds) => t -> ds.filter(_.files > 0) }
+    IndexStore.commit(spark, path, m.copy(version = v,
+      meta = m.meta.filterNot(_._1.startsWith("ingest:")) ++ live.values.flatten.map(d =>
+        s"ingest:${d.dir}" -> (if (d.dir == s"__w=$v") batch else ingestOf(m, d.dir))),
+      tables = live, sketch = sketch))
+  }
+
+  /** The shared append of both ingest families: write each of `tables`
+    * as the next version's dir partitioned by `__ingest = ingestId`, drop
+    * the dirs an earlier attempt committed for `ingestId`, merge the
+    * `key`s of `keyed` into `bloom` and commit all of it as one version.
+    */
+  private def appendIngest(spark: org.apache.spark.sql.SparkSession, path: String,
+      ingestId: Long, tables: Seq[(String, DataFrame)],
+      bloom: org.apache.spark.util.sketch.BloomFilter, keyed: DataFrame, key: Column): Unit = {
+    require(ingestId >= 0,
+      s"ingestId must be non-negative (got $ingestId): negative ids are reserved " +
+        "for compaction base partitions")
+    val m = IndexStore.latest(spark, path)
+    val v = m.version + 1
+    val (items, fpp) = (m.long("expectedItems"), m.double("fpp"))
+    bloom.mergeInPlace(bloomOf(keyed, key, items, fpp))
+    commitIngest(spark, path, m, v, tables.map { case (t, df) =>
+      t -> (m.tables.getOrElse(t, Nil).filterNot(d => ingestOf(m, d.dir) == ingestId) :+
+        IndexStore.writeTable(path, t, v, df.withColumn("__ingest", lit(ingestId)), Seq("__ingest")))
+    }.toMap, ingestId, IndexStore.writeSketch(spark, path, v, bloom, items, fpp))
+  }
+
+  /** The shared compaction of both ingest families: fold every committed
+    * write dir except those holding `keepIngest` into one `__ingest=-1`
+    * dir per table and commit that as one version (the sketch stays).
+    * Nothing is committed when the fold would only rewrite the base.
+    */
+  private def compactIngest(spark: org.apache.spark.sql.SparkSession, path: String,
+      keepIngest: Option[Long]): Unit = {
+    val m = IndexStore.latest(spark, path)
+    val v = m.version + 1
+    val folds = m.tables.map { case (t, ds) =>
+      t -> ds.filterNot(d => keepIngest.contains(ingestOf(m, d.dir)))
+    }
+    if (folds.values.forall(f => f.size <= 1 && f.forall(d => ingestOf(m, d.dir) == -1L))) return
+    commitIngest(spark, path, m, v, m.tables.map { case (t, ds) =>
+      val f = folds(t)
+      val base = if (f.isEmpty) Nil else Seq(IndexStore.writeTable(path, t, v,
+        IndexStore.read(spark, path, t, f).withColumn("__ingest", lit(-1L)), Seq("__ingest")))
+      t -> (base ++ ds.diff(f))
+    }, -1L, m.sketch)
+  }
+
+  /** Create an EMPTY ingest index: version 1 holds the banding geometry,
+    * the sketch params and an empty sketch. Tables materialize on the
+    * first [[appendToIngestIndex]].
     */
   def initIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int,
       expectedItems: Long, fpp: Double = 0.01): Unit = {
     require(numBands * rowsPerBand == numPerm,
       s"numBands ($numBands) × rowsPerBand ($rowsPerBand) must equal numPerm ($numPerm)")
-    require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
-    writeBloomFileAtomic(spark, path,
-      emptyBloom(spark, expectedItems, fpp), expectedItems, fpp)
-    writeTextFile(spark, s"$path/meta.json",
-      s"""{"n":$n,"numPerm":$numPerm,"numBands":$numBands,"rowsPerBand":$rowsPerBand,""" +
-        s""""expectedItems":$expectedItems,"fpp":$fpp}""")
+    initIngest(spark, path,
+      Map("n" -> n, "numPerm" -> numPerm, "numBands" -> numBands, "rowsPerBand" -> rowsPerBand),
+      expectedItems, fpp)
   }
 
-  /** Load a streaming ingest index. `idType` supplies the id column type
-    * for the empty-frame fallback (before the first append the table
-    * directories have no files to infer a schema from). A missing
-    * `bloom.bin` (crash inside [[writeBloomFileAtomic]]'s rename window)
-    * is rebuilt from the persisted hash table and rewritten — the rebuilt
-    * sketch contains at least every key the lost one did, so
-    * classification is unaffected.
+  /** Load the committed ingest index. `idType` supplies the id column
+    * type of a table no write has reached yet (an empty frame).
     */
   def readIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       idType: org.apache.spark.sql.types.DataType): IngestIndex = {
     import org.apache.spark.sql.types._
-    // a published-but-unfinished compaction marker means the staged data
-    // is complete and some source partitions may still exist — finish it
-    // before reading, or the scan would double-count compacted rows
-    finishIngestCompaction(spark, path)
-    val meta = readTextFile(spark, s"$path/meta.json")
-    def numOf(k: String): String =
-      s""""$k":\\s*([0-9.eE+-]+)""".r.findFirstMatchIn(meta)
-        .getOrElse(throw new IllegalArgumentException(s"ingest index meta missing $k: $meta"))
-        .group(1)
-    val (n, numPerm) = (numOf("n").toInt, numOf("numPerm").toInt)
-    val (numBands, rowsPerBand) = (numOf("numBands").toInt, numOf("rowsPerBand").toInt)
-    val expectedItems = numOf("expectedItems").toLong
-    val fpp = numOf("fpp").toDouble
-    val ing = StructField("__ingest", IntegerType)
-    def tbl(sub: String, schema: StructType): DataFrame = {
-      val (fs, _) = hadoopFs(spark, path)
-      val parts = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$path/$sub/__ingest=*/part-*")))
-      if (parts.exists(_.nonEmpty)) spark.read.parquet(s"$path/$sub")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    val hashes = tbl("hashes", StructType(Seq(
-      StructField("__h", StringType), StructField("__exact_of", idType), ing)))
-    val shingles = tbl("shingles", StructType(Seq(
-      StructField("id", idType), StructField("shingle", StringType), ing)))
-    val bands = tbl("bands", StructType(Seq(
-      StructField("corpus_id", idType), StructField("band_idx", IntegerType),
-      StructField("band_hash", LongType), ing)))
-    val (fs, bp) = hadoopFs(spark, s"$path/bloom.bin")
-    val bloom =
-      if (fs.exists(bp)) {
-        val in = fs.open(bp)
-        try {
-          val dis = new java.io.DataInputStream(in)
-          dis.readLong(); dis.readDouble() // creation params: meta is authoritative here
-          org.apache.spark.util.sketch.BloomFilter.readFrom(dis)
-        } finally in.close()
-      } else { // self-heal the rename window: rebuild from the hash table
-        val bf =
-          if (hashes.isEmpty)
-            emptyBloom(spark, expectedItems, fpp)
-          else hashes.select(xxhash64(col("__h")).as("__k"))
-            .stat.bloomFilter("__k", expectedItems, fpp)
-        writeBloomFileAtomic(spark, path, bf, expectedItems, fpp)
-        bf
-      }
-    IngestIndex(hashes, shingles, bands, bloom, expectedItems, fpp,
-      n, numPerm, numBands, rowsPerBand)
+    val m = IndexStore.latest(spark, path)
+    IngestIndex(
+      ingestTable(spark, path, m, "hashes",
+        StructField("__h", StringType), StructField("__exact_of", idType)),
+      ingestTable(spark, path, m, "shingles",
+        StructField("id", idType), StructField("shingle", StringType)),
+      ingestTable(spark, path, m, "bands", StructField("corpus_id", idType),
+        StructField("band_idx", IntegerType), StructField("band_hash", LongType)),
+      IndexStore.readSketch(spark, path, m)._1, m.long("expectedItems"), m.double("fpp"),
+      m.long("n").toInt, m.long("numPerm").toInt, m.long("numBands").toInt,
+      m.long("rowsPerBand").toInt)
   }
 
   /** [[incrementalDedup]] against a streaming [[IngestIndex]], excluding
@@ -2593,205 +2616,71 @@ object Dedup {
     result
   }
 
-  /** Compact the ingest index's per-batch partitions into the reserved
-    * base partition `__ingest=-1`. Appends accumulate one partition per
+  /** Compact the ingest index's per-batch write dirs into one reserved
+    * base dir per table, `__ingest=-1`. Appends accumulate one dir per
     * micro-batch; after months of daily batches the index is a
     * small-file swamp and file listing itself dominates the probe. The
     * reserved id is negative because stream batch ids are non-negative:
-    * no probe's own-batch exclusion can ever hide the base partition,
-    * and no future append can collide with it.
+    * no probe's own-batch exclusion can ever hide the base, and no
+    * future append can collide with it. The fold commits as one
+    * [[IndexStore]] version, so a crash before its commit leaves the
+    * previous version current and the next compaction redoes it.
     *
-    * Run while no stream is writing the index (between restarts, or
-    * from a maintenance window). Crash-safe in two stages:
-    *
-    *   1. [[stageIngestCompaction]] — rewrite every table (ALL current
-    *      partitions, base included) into invisible `<table>.staging`
-    *      dirs (readers only see `__ingest=*`), then publish the
-    *      `_compacting.json` marker (tmp+rename, so it is never
-    *      partial) listing the source partition ids;
-    *   2. [[finishIngestCompaction]] — delete the listed source
-    *      partitions, rename each staging dir to `__ingest=-1`, remove
-    *      the marker.
-    *
-    * A crash before the marker leaves only invisible staging dirs (the
-    * next compaction overwrites them); a crash after the marker is
-    * completed by [[finishIngestCompaction]], which [[readIngestIndex]]
-    * runs automatically when it sees the marker — so a stream restart
-    * after a mid-compaction crash self-heals instead of reading
-    * duplicated (source + compacted) rows, which would fan out the
-    * exact verify join and inflate every Jaccard intersection.
-    */
-  /** `keepIngest`: leave that batch's partitions OUT of the fold — the
+    * `keepIngest`: leave that batch's dirs OUT of the fold — the
     * in-stream compaction contract. A sink compacting inside its own
     * micro-batch must not fold the CURRENT batch: the exactly-once replay
     * story hides a replayed batch's first-attempt rows by excluding its
     * `__ingest=<id>` partition, and a fold would move those rows into the
-    * base partition where the exclusion cannot see them.
+    * base where the exclusion cannot see them.
     */
   def compactIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      keepIngest: Option[Long] = None): Unit = {
-    stageIngestCompaction(spark, path, keepIngest)
-    finishIngestCompaction(spark, path)
-  }
+      keepIngest: Option[Long] = None): Unit =
+    compactIngest(spark, path, keepIngest)
 
-  private val IngestTables = Seq("hashes", "shingles", "bands")
-
-  /** Stage 1 of [[compactIngestIndex]]: staging dirs + marker. Exposed
-    * `private[graft]` so the crash drill can stop exactly here. `tables`
-    * parameterizes the protocol over any `__ingest`-partitioned table set
-    * (the text index's hashes/shingles/bands, the vec index's
-    * hashes/vecs); [[finishIngestCompaction]] needs no matching list — it
-    * reads the table names back from the marker itself.
-    */
-  private[graft] def stageIngestCompaction(spark: org.apache.spark.sql.SparkSession,
-      path: String, keepIngest: Option[Long] = None,
-      tables: Seq[String] = IngestTables): Unit = {
-    val (fs, _) = hadoopFs(spark, path)
-    // Complete any compaction a prior run crashed AFTER publishing its
-    // marker, BEFORE sweeping staging dirs: the marker lists source
-    // partitions whose data may by now live only in staging, so sweeping
-    // first and then crashing pre-republish would let a later self-heal
-    // delete those sources with nothing to rename over them — data loss.
-    // finishIngestCompaction is idempotent and a no-op without a marker.
-    finishIngestCompaction(spark, path)
-    // Clear EVERY table's staging dir up front — including tables whose
-    // sources turn out empty this run. A compaction that crashed before its
-    // marker leaves orphan staging dirs; without this sweep, a later run
-    // that stages only some tables would let finishIngestCompaction publish
-    // the stale orphans over live base partitions.
-    tables.foreach { tbl =>
-      val stale = new org.apache.hadoop.fs.Path(s"$path/$tbl.staging")
-      if (fs.exists(stale)) fs.delete(stale, true)
-    }
-    val kept = keepIngest.map(id => s"__ingest=$id")
-    // source partitions per table, recorded BEFORE writing staging so the
-    // marker can only ever name dirs the staged data actually contains
-    val sources: Map[String, Seq[String]] = tables.map { tbl =>
-      val dirs = Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$path/$tbl/__ingest=*")))
-        .map(_.toSeq).getOrElse(Seq.empty)
-        .filter(_.isDirectory).map(_.getPath.getName)
-        .filterNot(kept.contains).sorted
-      tbl -> dirs
-    }.toMap
-    if (sources.values.forall(_.isEmpty)) return // nothing to compact
-    tables.foreach { tbl =>
-      if (sources(tbl).nonEmpty)
-        // read ONLY the source partitions (the kept batch stays out)
-        spark.read.option("basePath", s"$path/$tbl")
-          .parquet(sources(tbl).map(d => s"$path/$tbl/$d"): _*)
-          .drop("__ingest")
-          .write.mode("overwrite").parquet(s"$path/$tbl.staging")
-    }
-    val marker = sources.map { case (tbl, dirs) =>
-      s""""$tbl":[${dirs.map(d => s""""$d"""").mkString(",")}]"""
-    }.mkString("{", ",", "}")
-    writeTextFile(spark, s"$path/_compacting.json.tmp", marker)
-    val dst = new org.apache.hadoop.fs.Path(s"$path/_compacting.json")
-    if (fs.exists(dst)) fs.delete(dst, false)
-    if (!fs.rename(new org.apache.hadoop.fs.Path(s"$path/_compacting.json.tmp"), dst))
-      throw new java.io.IOException(s"compaction marker publish failed at $dst")
-  }
-
-  /** Stage 2 of [[compactIngestIndex]] and the self-heal
-    * [[readIngestIndex]] runs when the marker is present. Idempotent:
-    * every step skips what a previous attempt already did.
-    */
-  private[graft] def finishIngestCompaction(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val (fs, markerP) = hadoopFs(spark, s"$path/_compacting.json")
-    if (!fs.exists(markerP)) return
-    val marker = readTextFile(spark, s"$path/_compacting.json")
-    // the marker is self-describing: iterate ITS table keys, so one finish
-    // implementation serves every __ingest-partitioned index layout
-    val tables = """\"([A-Za-z0-9_]+)\":\[""".r.findAllMatchIn(marker).map(_.group(1)).toSeq
-    tables.foreach { tbl =>
-      val dirs = s""""$tbl":\\[([^\\]]*)\\]""".r.findFirstMatchIn(marker)
-        .map(_.group(1)).getOrElse("")
-        .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
-      dirs.foreach { d =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/$tbl/$d")
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      val staging = new org.apache.hadoop.fs.Path(s"$path/$tbl.staging")
-      val target = new org.apache.hadoop.fs.Path(s"$path/$tbl/__ingest=-1")
-      if (fs.exists(staging)) {
-        if (fs.exists(target)) fs.delete(target, true) // old base was a listed source
-        fs.mkdirs(target.getParent)
-        if (!fs.rename(staging, target))
-          throw new java.io.IOException(s"compaction publish $staging -> $target failed")
-      }
-    }
-    fs.delete(markerP, false)
-  }
-
-  /** Fold a batch's accepted documents into the ingest index under their
-    * batch's own `__ingest=<ingestId>` partitions, mode OVERWRITE — the
+  /** Fold a batch's accepted documents into the ingest index as batch
+    * `ingestId`'s write dirs, committed as one version that replaces
+    * whatever an earlier attempt committed for the same batch — the
     * idempotence story in one move: a replayed or crash-retried batch
-    * rewrites exactly its own partitions (any subset of the tables a
-    * previous attempt managed to write is simply replaced), and no other
-    * batch's rows are readable from them. The caller must append only
+    * leaves its rows in exactly one dir. The caller must append only
     * PROBE SURVIVORS (`status = new`), which keeps content hashes unique
-    * across partitions — the invariant the exact verify join's fan-out
-    * relies on. Pure parquet partition writes: no corpus-scale aggregate
-    * per append (contrast [[appendToBandIndex]]'s bucket recompute).
-    *
-    * Sketch update: for a batch within `deltaCollectCap` distinct hashes
-    * the keys are collected (batch-bounded — the same evidence the probe
-    * uses to broadcast the batch side) and inserted driver-side, which
-    * costs one tiny job; past the cap it degrades to a distributed
-    * `stat.bloomFilter` delta + `mergeInPlace` (bitwise OR). Both arms
-    * are replay-idempotent, and the rewrite is crash-safe via
-    * [[writeBloomFileAtomic]]. `index` may pass the already-loaded
-    * [[IngestIndex]] (the sink loads it for the probe) to skip a
-    * redundant meta+sketch read.
+    * across dirs — the invariant the exact verify join's fan-out relies
+    * on. Pure parquet writes: no corpus-scale aggregate per append
+    * (contrast [[appendToBandIndex]]'s bucket recompute). `index` may
+    * pass the already-loaded [[IngestIndex]] (the sink loads it for the
+    * probe) to skip a redundant sketch read.
     */
   def appendToIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String, ingestId: Long,
-      index: Option[IngestIndex] = None,
-      deltaCollectCap: Long = BatchBroadcastCap): Unit = {
-    require(ingestId >= 0,
-      s"ingestId must be non-negative (got $ingestId): negative ids are reserved " +
-        "for compaction base partitions")
+      index: Option[IngestIndex] = None): Unit = {
     val idx = index.getOrElse(readIngestIndex(spark, path, newDocs.schema(idCol).dataType))
     val docs = newDocs.select(col(idCol), col(textCol)).localCheckpoint()
     val hashRows = docs
       .select(sha2(tagged(col(textCol)), 256).as("__h"), col(idCol).as("__cid"))
       .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of"))
       .localCheckpoint()
-    val nHashes = hashRows.count()
-    hashRows.write.mode("overwrite").parquet(s"$path/hashes/__ingest=$ingestId")
     // one shingle table feeds shingles AND bands (set sizes derive from
     // the shingle scan at probe time — no sizes table)
     val sh = shingleTable(docs, idCol, col(textCol), idx.n).localCheckpoint()
-    sh.write.mode("overwrite").parquet(s"$path/shingles/__ingest=$ingestId")
-    minhashFromShingles(sh, idx.numPerm)
+    val bands = minhashFromShingles(sh, idx.numPerm)
       .select(col("id").as("corpus_id"),
         explode(array(bandExprs(idx.numBands, idx.rowsPerBand): _*)).as("band"))
       .select(col("corpus_id"), col("band.band_idx"), col("band.band_hash"))
-      .write.mode("overwrite").parquet(s"$path/bands/__ingest=$ingestId")
-    if (nHashes > 0 && nHashes <= deltaCollectCap) {
-      hashRows.select(xxhash64(col("__h")).as("__k")).collect()
-        .foreach(r => idx.bloom.putLong(r.getLong(0)))
-    } else if (nHashes > 0) {
-      idx.bloom.mergeInPlace(
-        hashRows.select(xxhash64(col("__h")).as("__k"))
-          .stat.bloomFilter("__k", idx.expectedItems, idx.fpp))
-    }
-    writeBloomFileAtomic(spark, path, idx.bloom, idx.expectedItems, idx.fpp)
+    appendIngest(spark, path, ingestId,
+      Seq("hashes" -> hashRows, "shingles" -> sh, "bands" -> bands),
+      idx.bloom, hashRows, xxhash64(col("__h")))
   }
 
   // — streaming VEC ingest index (the EMBEDDING arm of the IngestIndex) ————
   //   [[curatedCorpusIndexedSink]]-shaped streams that carry an embedding
   //   column need the same exactly-once discipline for SEMANTIC dedup
-  //   state: batch-owned `__ingest=<id>` partitions written with
-  //   OVERWRITE, probe-side exclusion of the current batch id (a crash
-  //   replay must not find its own first-attempt appends), a bitwise-OR
-  //   Bloom sketch, and the same marker-protocol compaction. The batch
-  //   probe mirrors [[incrementalSemanticIndexed]]'s classification
-  //   (exact via content-hash + rep-vector verify, near via sign-bucket
-  //   candidates + exact-cosine verify) but derives touched-bucket
-  //   occupancy per batch from the vector table — appends stay pure
-  //   partition writes, no corpus-scale bucket aggregate per append
+  //   state: batch-owned write dirs that a replay replaces, probe-side
+  //   exclusion of the current batch id (a crash replay must not find its
+  //   own first-attempt appends), a bitwise-OR Bloom sketch, and the same
+  //   compaction. The batch probe mirrors [[incrementalSemanticIndexed]]'s
+  //   classification (exact via content-hash + rep-vector verify, near via
+  //   sign-bucket candidates + exact-cosine verify) but derives
+  //   touched-bucket occupancy per batch from the vector table — appends
+  //   stay pure writes, no corpus-scale bucket aggregate per append
   //   (contrast [[appendToVecIndex]]'s full-table recompute).
 
   /** A loaded streaming vec ingest index. Both frames are lazy parquet
@@ -2805,30 +2694,19 @@ object Dedup {
       expectedItems: Long, fpp: Double,
       numPlanes: Int, dim: Int, seed: Long)
 
-  private val VecIngestTables = Seq("hashes", "vecs")
-
-  /** Create an EMPTY vec ingest index: sketch + `meta.json` (hyperplane
-    * geometry + sketch params — written LAST, so its presence marks a
-    * usable index). Tables materialize on first
-    * [[appendToVecIngestIndex]]; probing the empty index classifies
-    * everything `new`.
+  /** Create an EMPTY vec ingest index: version 1 holds the hyperplane
+    * geometry, the sketch params and an empty sketch. Tables materialize
+    * on the first [[appendToVecIngestIndex]]; probing the empty index
+    * classifies everything `new`.
     */
   def initVecIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       numPlanes: Int, dim: Int, expectedItems: Long, fpp: Double = 0.01,
-      seed: Long = 42L): Unit = {
-    require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
-    writeBloomFileAtomic(spark, path,
-      emptyBloom(spark, expectedItems, fpp), expectedItems, fpp)
-    writeTextFile(spark, s"$path/meta.json",
-      s"""{"numPlanes":$numPlanes,"dim":$dim,"seed":$seed,""" +
-        s""""expectedItems":$expectedItems,"fpp":$fpp}""")
-  }
+      seed: Long = 42L): Unit =
+    initIngest(spark, path, Map("numPlanes" -> numPlanes, "dim" -> dim, "seed" -> seed),
+      expectedItems, fpp)
 
-  /** Load a streaming vec ingest index. `idType` supplies the id type for
-    * the pre-first-append empty-frame fallback. A published-but-unfinished
-    * compaction marker is completed first (same self-heal as
-    * [[readIngestIndex]]); a missing `bloom.bin` rebuilds from the hash
-    * table.
+  /** Load the committed vec ingest index. `idType` and `vecType` supply
+    * the column types of a table no write has reached yet.
     */
   def readVecIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       idType: org.apache.spark.sql.types.DataType,
@@ -2836,48 +2714,14 @@ object Dedup {
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
       : VecIngestIndex = {
     import org.apache.spark.sql.types._
-    finishIngestCompaction(spark, path)
-    val meta = readTextFile(spark, s"$path/meta.json")
-    def numOf(k: String): String =
-      s""""$k":\\s*([0-9.eE+-]+)""".r.findFirstMatchIn(meta)
-        .getOrElse(throw new IllegalArgumentException(s"vec ingest index meta missing $k: $meta"))
-        .group(1)
-    val (numPlanes, dim) = (numOf("numPlanes").toInt, numOf("dim").toInt)
-    val seed = numOf("seed").toLong
-    val expectedItems = numOf("expectedItems").toLong
-    val fpp = numOf("fpp").toDouble
-    val ing = StructField("__ingest", IntegerType)
-    def tbl(sub: String, schema: StructType): DataFrame = {
-      val (fs, _) = hadoopFs(spark, path)
-      val parts = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$path/$sub/__ingest=*/part-*")))
-      if (parts.exists(_.nonEmpty)) spark.read.parquet(s"$path/$sub")
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    val hashes = tbl("hashes", StructType(Seq(
-      StructField("__h", LongType), StructField("__exact_of", idType),
-      StructField("__rvec", vecType), ing)))
-    val vecs = tbl("vecs", StructType(Seq(
-      StructField("corpus_id", idType), StructField("__cvec", vecType),
-      StructField("__bucket", LongType), ing)))
-    val (fs, bp) = hadoopFs(spark, s"$path/bloom.bin")
-    val bloom =
-      if (fs.exists(bp)) {
-        val in = fs.open(bp)
-        try {
-          val dis = new java.io.DataInputStream(in)
-          dis.readLong(); dis.readDouble() // creation params: meta is authoritative
-          org.apache.spark.util.sketch.BloomFilter.readFrom(dis)
-        } finally in.close()
-      } else { // self-heal the rename window: rebuild from the hash table
-        val bf =
-          if (hashes.isEmpty) emptyBloom(spark, expectedItems, fpp)
-          else hashes.stat.bloomFilter("__h", expectedItems, fpp)
-        writeBloomFileAtomic(spark, path, bf, expectedItems, fpp)
-        bf
-      }
-    VecIngestIndex(hashes, vecs, bloom, expectedItems, fpp, numPlanes, dim, seed)
+    val m = IndexStore.latest(spark, path)
+    VecIngestIndex(
+      ingestTable(spark, path, m, "hashes", StructField("__h", LongType),
+        StructField("__exact_of", idType), StructField("__rvec", vecType)),
+      ingestTable(spark, path, m, "vecs", StructField("corpus_id", idType),
+        StructField("__cvec", vecType), StructField("__bucket", LongType)),
+      IndexStore.readSketch(spark, path, m)._1, m.long("expectedItems"), m.double("fpp"),
+      m.long("numPlanes").toInt, m.long("dim").toInt, m.long("seed"))
   }
 
   /** [[incrementalSemanticIndexed]] against a streaming [[VecIngestIndex]],
@@ -2971,21 +2815,17 @@ object Dedup {
     result
   }
 
-  /** Fold a batch's accepted vectors into the vec ingest index under their
-    * batch's own `__ingest=<ingestId>` partitions, mode OVERWRITE — the
-    * [[appendToIngestIndex]] idempotence story verbatim: a replay rewrites
-    * exactly its own partitions. The caller must append only PROBE
-    * SURVIVORS (`status = new`), which keeps content hashes unique across
-    * partitions. Pure partition writes: no corpus-scale bucket aggregate
-    * per append (the probe derives touched-bucket occupancy instead).
+  /** Fold a batch's accepted vectors into the vec ingest index as batch
+    * `ingestId`'s write dirs — the [[appendToIngestIndex]] idempotence
+    * story verbatim: a replay replaces exactly its own earlier dirs. The
+    * caller must append only PROBE SURVIVORS (`status = new`), which
+    * keeps content hashes unique across dirs. Pure writes: no
+    * corpus-scale bucket aggregate per append (the probe derives
+    * touched-bucket occupancy instead).
     */
   def appendToVecIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, vecCol: String, ingestId: Long,
-      index: Option[VecIngestIndex] = None,
-      deltaCollectCap: Long = BatchBroadcastCap): Unit = {
-    require(ingestId >= 0,
-      s"ingestId must be non-negative (got $ingestId): negative ids are reserved " +
-        "for compaction base partitions")
+      index: Option[VecIngestIndex] = None): Unit = {
     val idx = index.getOrElse(
       readVecIngestIndex(spark, path, newDocs.schema(idCol).dataType,
         newDocs.schema(vecCol).dataType))
@@ -2997,31 +2837,16 @@ object Dedup {
       .groupBy(col("__h"))
       .agg(min(col("__cid")).as("__exact_of"), min_by(col("__v"), col("__cid")).as("__rvec"))
       .localCheckpoint()
-    val nHashes = hashRows.count()
-    hashRows.write.mode("overwrite").parquet(s"$path/hashes/__ingest=$ingestId")
-    docs.select(col(idCol).as("corpus_id"), col(vecCol).as("__cvec"),
-        Similarity.bucketId(col(vecCol), planes).as("__bucket"))
-      .write.mode("overwrite").parquet(s"$path/vecs/__ingest=$ingestId")
-    if (nHashes > 0 && nHashes <= deltaCollectCap) {
-      hashRows.select(col("__h")).collect().foreach(r => idx.bloom.putLong(r.getLong(0)))
-    } else if (nHashes > 0) {
-      idx.bloom.mergeInPlace(
-        hashRows.stat.bloomFilter("__h", idx.expectedItems, idx.fpp))
-    }
-    writeBloomFileAtomic(spark, path, idx.bloom, idx.expectedItems, idx.fpp)
+    appendIngest(spark, path, ingestId,
+      Seq("hashes" -> hashRows, "vecs" -> docs.select(col(idCol).as("corpus_id"),
+        col(vecCol).as("__cvec"), Similarity.bucketId(col(vecCol), planes).as("__bucket"))),
+      idx.bloom, hashRows, col("__h"))
   }
 
-  /** [[compactIngestIndex]] for the vec ingest index: fold per-batch
-    * partitions into the reserved `__ingest=-1` base via the same two-
-    * stage marker protocol (the marker is self-describing, so the shared
-    * [[finishIngestCompaction]] — and [[readVecIngestIndex]]'s automatic
-    * self-heal — complete it regardless of table layout).
-    */
+  /** [[compactIngestIndex]] for the vec ingest index. */
   def compactVecIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      keepIngest: Option[Long] = None): Unit = {
-    stageIngestCompaction(spark, path, keepIngest, tables = VecIngestTables)
-    finishIngestCompaction(spark, path)
-  }
+      keepIngest: Option[Long] = None): Unit =
+    compactIngest(spark, path, keepIngest)
 
   /** 63-bit SimHash per id (bit 63 unused to stay in positive Long range
     * under ANSI overflow checks): per-token `xxhash64`, ±1 vote per bit,

@@ -1395,8 +1395,7 @@ object ExtensionProbes {
             abs(element_at(col("embedding"),
               pmod(j + pmod(col("vec_id"), lit(8L)).cast("int"), size(col("embedding"))) + 1))
               + lit(1.0f)).as("embedding"))
-      val idx = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x108_ivf").toString
+      val idx = graft.TmpDir.scratch("x108_ivf")
       Ivf.writeIndex(idx, a, "vec_id", "embedding",
         Ivf.train(a, "vec_id", "embedding", k = 16, iters = 2))
       Ivf.appendToIndex(s, idx, b, "vec_id", "embedding")
@@ -2280,8 +2279,7 @@ object ExtensionProbes {
   private val x119 = Probe(
     "x119_simhash_index",
     (s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x119_sim").toString
+      val path = graft.TmpDir.scratch("x119_sim")
       val sig = Readers.fanOut(t(s, dir, "documents")).select(col("doc_id").as("d"))
         .select(col("d"),
           (((col("d") * 48271L) % 2147483647L) * 4194301L +
@@ -2485,8 +2483,7 @@ object ExtensionProbes {
   private val x125 = Probe(
     "x125_components_incremental",
     (s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x125_cc").toString
+      val path = graft.TmpDir.scratch("x125_cc")
       val edges = Readers.fanOut(t(s, dir, "documents"))
         .select(col("doc_id").as("id_a"), (col("doc_id") + 17).as("id_b"))
       val a = edges.filter(pmod(col("id_a"), lit(2L)) === 0L)
@@ -2824,8 +2821,7 @@ object ExtensionProbes {
   private val x133 = Probe(
     "x133_hll_index",
     (s, dir) => {
-      val path = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x133_hll").toString
+      val path = graft.TmpDir.scratch("x133_hll")
       val ev = t(s, dir, "events").select(col("event_type"), col("user_id"), col("event_id"))
       val a = ev.filter(pmod(col("event_id"), lit(2L)) === 0L)
       val b = ev.filter(pmod(col("event_id"), lit(2L)) === 1L)
@@ -2947,8 +2943,7 @@ object ExtensionProbes {
     "x137_bm25_indexed",
     (s, dir) => {
       val docs = Readers.fanOut(t(s, dir, "documents"))
-      val path = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x137_bm25").toString
+      val path = graft.TmpDir.scratch("x137_bm25")
       val a = docs.filter(pmod(col("doc_id"), lit(2L)) === 0L)
       val b = docs.filter(pmod(col("doc_id"), lit(2L)) === 1L)
       TextStats.writeBm25Index(a, "doc_id", col("text"), path)
@@ -3001,8 +2996,7 @@ object ExtensionProbes {
   private val x138 = Probe(
     "x138_streaming_bm25_index",
     (s, dir) => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"${graft.TmpDir.root}/tmp/x138_${tag}_${System.nanoTime()}"
+      val base = graft.TmpDir.scratch("x138")
       val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val schema = docs.schema
       val (in, idx, ckp) = (s"$base/in", s"$base/idx", s"$base/ckp")
@@ -3137,8 +3131,7 @@ object ExtensionProbes {
     "x146_bm25_decontaminate_indexed",
     (s, dir) => {
       val docs = Readers.fanOut(t(s, dir, "documents"))
-      val path = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x146_bm25").toString
+      val path = graft.TmpDir.scratch("x146_bm25")
       TextStats.writeBm25Index(docs, "doc_id", col("text"), path)
       val queries = docs.filter(pmod(col("doc_id"), lit(97L)) === 1L)
         .select((col("doc_id") * 1000L).as("query_id"),
@@ -3160,8 +3153,7 @@ object ExtensionProbes {
     "x143_hybrid_rrf_indexed",
     (s, dir) => {
       val docs = Readers.fanOut(t(s, dir, "documents"))
-      val path = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x143_bm25").toString
+      val path = graft.TmpDir.scratch("x143_bm25")
       TextStats.writeBm25Index(docs, "doc_id", col("text"), path)
       val queries = docs.filter(pmod(col("doc_id"), lit(97L)) === 1L)
         .select((col("doc_id") * 1000L).as("query_id"),
@@ -3199,10 +3191,8 @@ object ExtensionProbes {
       // the probe arms otherwise tokenize/score on one scan task
       val docs = Readers.fanOut(t(s, dir, "documents"))
       val emb = Readers.fanOut(t(s, dir, "embeddings"))
-      val bmPath = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x147_bm25").toString
-      val ivfPath = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x147_ivf").toString
+      val bmPath = graft.TmpDir.scratch("x147_bm25")
+      val ivfPath = graft.TmpDir.scratch("x147_ivf")
       // the two builds are independent (different inputs, different
       // paths): overlap them (guide §2.6) instead of serializing ~a dozen
       // driver-submitted build jobs end to end
@@ -3240,10 +3230,8 @@ object ExtensionProbes {
     (s, dir) => {
       val docs = Readers.fanOut(t(s, dir, "documents"))
       val emb = Readers.fanOut(t(s, dir, "embeddings"))
-      val bmPath = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x149_bm25").toString
-      val ivfPath = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x149_ivf").toString
+      val bmPath = graft.TmpDir.scratch("x149_bm25")
+      val ivfPath = graft.TmpDir.scratch("x149_ivf")
       // independent builds overlapped (guide §2.6) — the x147 discipline
       graft.Concurrent.par(
         TextStats.writeBm25Index(docs, "doc_id", col("text"), bmPath),
@@ -3321,8 +3309,7 @@ object ExtensionProbes {
     (s, dir) => {
       val docs = Readers.fanOut(t(s, dir, "documents"))
         .withColumn("grp", concat(lit("g"), pmod(col("doc_id"), lit(4L))))
-      val path = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x144_srctok").toString
+      val path = graft.TmpDir.scratch("x144_srctok")
       Sampling.writeSourceTokenIndex(s, path)
       val tk = size(TextStats.tokens(col("text")))
       Sampling.foldIntoSourceTokenIndex(s, path, "a",
@@ -3346,8 +3333,7 @@ object ExtensionProbes {
   private val x145 = Probe(
     "x145_streaming_domain_balance",
     (s, dir) => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"${graft.TmpDir.root}/tmp/x145_${tag}_${System.nanoTime()}"
+      val base = graft.TmpDir.scratch("x145")
       val docs = t(s, dir, "documents")
         .withColumn("grp", concat(lit("g"), pmod(col("doc_id"), lit(4L))))
         .select(col("doc_id"), col("grp"), col("text"))

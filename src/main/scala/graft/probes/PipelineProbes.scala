@@ -1264,8 +1264,7 @@ object PipelineProbes {
         .select(col("doc_id"),
           when(pmod(col("doc_id"), lit(101L)) === 1L, lit(null: String))
             .otherwise(col("text")).as("text"))
-      val path = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(graft.TmpDir.root), "x113_lm").toString
+      val path = graft.TmpDir.scratch("x113_lm")
       Lm.writeCountsIndex(s, path)
       Lm.foldIntoCountsIndex(s, path, "b1",
         docs.filter(pmod(col("doc_id"), lit(3L)) === 1L), "text")
@@ -1307,8 +1306,7 @@ object PipelineProbes {
   private val x115 = Probe(
     "x115_streaming_lm_counts",
     (s, dir) => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"${graft.TmpDir.root}/tmp/x115_${tag}_${System.nanoTime()}"
+      val base = graft.TmpDir.scratch("x115")
       val docs = Readers.fanOut(t(s, dir, "documents")).select(col("doc_id"), col("text"))
       val schema = docs.schema
       val (in, idx, ckp) = (s"$base/in", s"$base/idx", s"$base/ckp")
@@ -1370,8 +1368,7 @@ object PipelineProbes {
   private val x120 = Probe(
     "x120_streaming_media_dedup",
     (s, dir) => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"${graft.TmpDir.root}/tmp/x120_${tag}_${System.nanoTime()}"
+      val base = graft.TmpDir.scratch("x120")
       val sig = Readers.fanOut(t(s, dir, "documents")).select(col("doc_id").as("d"))
         .select(col("d"),
           (((col("d") * 48271L) % 2147483647L) * 4194301L +
@@ -2673,8 +2670,7 @@ object PipelineProbes {
   private val x89 = Probe(
     "x89_streaming_indexed_ingest",
     (s, dir) => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"${graft.TmpDir.root}/tmp/x89_${tag}_${System.nanoTime()}"
+      val base = graft.TmpDir.scratch("x89")
       val docs = Readers.fanOut(t(s, dir, "documents")).select(col("doc_id"), col("text"))
       def slice(k: Int) = docs.filter(col("doc_id") % 3 === k)
       val b0 = slice(0)
@@ -3155,8 +3151,7 @@ object PipelineProbes {
   private val x95 = Probe(
     "x95_streaming_semantic_ingest",
     (s, dir) => {
-      val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val base = s"${graft.TmpDir.root}/tmp/x95_${tag}_${System.nanoTime()}"
+      val base = graft.TmpDir.scratch("x95")
       val emb = Readers.fanOut(t(s, dir, "embeddings")).select(col("vec_id"), col("embedding"))
       def shifted(pred: org.apache.spark.sql.Column, off: Long,
           f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =

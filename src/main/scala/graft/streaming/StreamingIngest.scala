@@ -288,37 +288,36 @@ object StreamingIngest {
     *
     * Exactly-once under replay, without a swap, THROUGH the index:
     *
-    *   - the corpus partition (`__batch=<id>`) and every index partition
-    *     (`__ingest=<id>`) are owned by their batch and written with
-    *     OVERWRITE, so any replay rewrites only its own output;
+    *   - the corpus partition (`__batch=<id>`) is owned by its batch and
+    *     written with OVERWRITE, and the index append commits the batch's
+    *     rows (`__ingest=<id>`) as one version that replaces whatever an
+    *     earlier attempt of the same batch committed, so any replay
+    *     rewrites only its own output;
     *   - the probe EXCLUDES `__ingest=<batchId>`: a replay whose first
     *     attempt crashed after the index append classifies against
     *     exactly the pre-append corpus and reproduces the original
     *     survivor set (without the exclusion it would find its own
     *     first-attempt rows and dedup itself away);
-    *   - the Bloom sketch merge is a bitwise OR (replay-idempotent), its
-    *     rewrite is tmp+rename crash-safe, and a replayed batch's keys
-    *     already in the sketch are harmless — positives verify against
-    *     the provenance-filtered hash table.
+    *   - the Bloom sketch merge is a bitwise OR (replay-idempotent), and
+    *     a replayed batch's keys already in the sketch are harmless —
+    *     positives verify against the provenance-filtered hash table.
     *
     * Crash windows, all recovered by the replay: before the corpus write
     * (nothing happened), between corpus write and index append (replay
     * reclassifies identically — the index has no `__ingest=<id>` rows —
-    * and rewrites both), mid-append (replay overwrites every table
-    * partition, complete or not), after append but before checkpoint
-    * commit (the exclusion makes the replay's classification identical).
+    * and rewrites both), mid-append (nothing of it is committed), after
+    * append but before checkpoint commit (the exclusion makes the
+    * replay's classification identical).
     *
-    * The index geometry is pinned in `meta.json` at first use; a restart
+    * The index geometry is pinned in the index's first version; a restart
     * with different `cfg.dedupNgram`/`numPerm`/`bands` fails loudly
     * rather than silently probing with mismatched banding.
     *
-    * `compactEvery = n` folds the index's per-batch partitions into the
-    * reserved base partition after every n-th batch (keeping the current
-    * batch's partition, so replay exclusion still works) — without it a
-    * long-lived stream accretes one partition per micro-batch and file
-    * listing eventually dominates the probe. Compaction crash windows
-    * self-heal on the next index read (marker protocol in
-    * [[graft.ops.Dedup.compactIngestIndex]]).
+    * `compactEvery = n` folds the index's per-batch write dirs into the
+    * reserved base after every n-th batch (keeping the current batch's,
+    * so replay exclusion still works) — without it a long-lived stream
+    * accretes one dir per micro-batch and file listing eventually
+    * dominates the probe ([[graft.ops.Dedup.compactIngestIndex]]).
     */
   def curatedCorpusIndexedSink(
       docs: DataFrame,
@@ -353,9 +352,7 @@ object StreamingIngest {
             bi, curated0, idCol, col(textCol), cfg.decontamMinHits)
           case None => curated0
         }
-        val metaP = new org.apache.hadoop.fs.Path(s"$indexPath/meta.json")
-        val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(metaP))
+        if (!graft.ops.IndexStore.committed(spark, indexPath))
           graft.ops.Dedup.initIngestIndex(spark, indexPath, cfg.dedupNgram,
             numPerm, bands, numPerm / bands, expectedItems, fpp)
         val idx = graft.ops.Dedup.readIngestIndex(spark, indexPath,
@@ -374,11 +371,11 @@ object StreamingIngest {
         graft.ops.Dedup.appendToIngestIndex(spark, indexPath,
           survivors.select(col(idCol), col(textCol)), idCol, textCol, batchId,
           index = Some(idx))
-        // periodic small-file maintenance: fold prior batches' partitions
+        // periodic small-file maintenance: fold prior batches' write dirs
         // into the base, KEEPING the current batch's — a replay of this
         // batch must still be able to hide its own first-attempt rows by
-        // partition exclusion. A crash mid-compaction self-heals on the
-        // replay's readIngestIndex (marker protocol).
+        // partition exclusion. A crash mid-compaction leaves the previous
+        // version current.
         if (compactEvery > 0 && batchId % compactEvery == compactEvery - 1)
           graft.ops.Dedup.compactIngestIndex(spark, indexPath,
             keepIngest = Some(batchId))
@@ -398,19 +395,20 @@ object StreamingIngest {
     * partitions.
     *
     * Exactly-once under replay, the [[curatedCorpusIndexedSink]] contract
-    * verbatim: corpus (`__batch=<id>`) and index (`__ingest=<id>`)
-    * partitions are batch-owned OVERWRITE writes; the probe EXCLUDES
-    * `__ingest=<batchId>` so a replay whose first attempt crashed after
-    * the index append classifies against exactly the pre-append corpus;
-    * the Bloom merge is a bitwise OR; the sketch rewrite is tmp+rename.
-    * A stale first-attempt index partition is therefore invisible to the
-    * replay and simply rewritten — the kill+resume drill in StreamingSpec
-    * plants one and asserts the final corpus is byte-identical.
+    * verbatim: the corpus partition (`__batch=<id>`) is a batch-owned
+    * OVERWRITE write and the index append (`__ingest=<id>`) replaces the
+    * batch's earlier attempt; the probe EXCLUDES `__ingest=<batchId>` so
+    * a replay whose first attempt crashed after the index append
+    * classifies against exactly the pre-append corpus; the Bloom merge is
+    * a bitwise OR. A stale first-attempt index append is therefore
+    * invisible to the replay and replaced — the kill+resume drill in
+    * StreamingSpec plants one and asserts the final corpus is
+    * byte-identical.
     *
-    * The hyperplane geometry is pinned in `meta.json` at first use; a
+    * The hyperplane geometry is pinned in the index's first version; a
     * restart with different `numPlanes`/`dim` fails loudly rather than
     * silently bucketing batches differently than the indexed corpus.
-    * `compactEvery = n` folds prior batches' index partitions into the
+    * `compactEvery = n` folds prior batches' index dirs into the
     * `__ingest=-1` base after every n-th batch (keeping the current
     * batch's, so replay exclusion still works).
     */
@@ -436,9 +434,7 @@ object StreamingIngest {
         // reproduces the same survivor set from the same batch)
         val intra = graft.ops.Dedup.dedupCorpusSemantic(
           batch.toDF(), idCol, vecCol, threshold, numPlanes, dim)
-        val metaP = new org.apache.hadoop.fs.Path(s"$indexPath/meta.json")
-        val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(metaP))
+        if (!graft.ops.IndexStore.committed(spark, indexPath))
           graft.ops.Dedup.initVecIngestIndex(spark, indexPath, numPlanes, dim,
             expectedItems, fpp)
         val idx = graft.ops.Dedup.readVecIngestIndex(spark, indexPath,

@@ -22,7 +22,8 @@ class IndexStoreSpec extends SparkSpec {
     * families rewrite their one table on every fold), and the answer a
     * reader gets from the committed index. `replayNoop`: a replayed
     * append commits nothing (the cc and HLL folds are idempotent by
-    * algebra instead, so their replay commits an equal answer).
+    * algebra, and an ingest append replaces its batch's earlier dirs, so
+    * their replay commits an equal answer instead).
     */
   private final case class Family(name: String, build: String => Unit,
       append: (String, Seq[Long]) => Unit, compact: Option[String => Unit],
@@ -203,8 +204,64 @@ class IndexStoreSpec extends SparkSpec {
       p => rows(Decontaminate.overlapsIndexed(Decontaminate.readBenchIndex(spark, p), corpus, "id", $"text")))
   }
 
+  /** Appends as the streaming sinks do: the batch of `ids` is ingest
+    * `ids.head`, probed with its own id excluded, and only its survivors
+    * are appended under that id — so a replay after a fold finds its rows
+    * in the base and appends none.
+    */
+  private def ingestAppend(probe: (String, DataFrame, Long) => DataFrame,
+      append: (String, DataFrame, Long) => Unit, rowsOf: Seq[Long] => DataFrame)(
+      p: String, ids: Seq[Long]): Unit = {
+    val b = rowsOf(ids)
+    val r = probe(p, b, ids.head)
+    val survivors = b.join(r.filter($"status" === "new").select("id"), Seq("id"), "left_semi")
+      .localCheckpoint()
+    r.unpersist()
+    append(p, survivors, ids.head)
+  }
+
+  private def probeIngest(p: String, b: DataFrame, exclude: Long): DataFrame =
+    Dedup.probeIngestIndex(Dedup.readIngestIndex(spark, p, org.apache.spark.sql.types.LongType),
+      b, "id", "text", threshold = 0.5, excludeIngest = exclude)
+
+  private val ingestBatch = {
+    def near(i: Long) = udoc(i).split(" ").dropRight(1).mkString(" ") + " changed"
+    Seq((105L, udoc(5)), (125L, near(25)), (135L, near(35)), (199L, udoc(199))).toDF("id", "text")
+  }
+
+  private val ingest = {
+    val append = ingestAppend(probeIngest,
+      (p, df, b) => Dedup.appendToIngestIndex(spark, p, df, "id", "text", b), udocs) _
+    Family("ingest",
+      p => {
+        Dedup.initIngestIndex(spark, p, n = 3, numPerm = 32, numBands = 16, rowsPerBand = 2,
+          expectedItems = 100L)
+        append(p, 1L to 20L)
+      },
+      append, Some(p => Dedup.compactIngestIndex(spark, p)),
+      p => classified(probeIngest(p, ingestBatch, 999L)), replayNoop = false)
+  }
+
+  private def probeVecIngest(p: String, b: DataFrame, exclude: Long): DataFrame =
+    Dedup.probeVecIngestIndex(Dedup.readVecIngestIndex(spark, p, org.apache.spark.sql.types.LongType),
+      b, "id", "v", threshold = 0.99, excludeIngest = exclude)
+
+  private val vecIngest = {
+    val batch = Seq((105L, vec(5)), (125L, vec(25)), (135L, vec(35).map(_ * 2f)), (199L, vec(199)))
+      .toDF("id", "v")
+    val append = ingestAppend(probeVecIngest,
+      (p, df, b) => Dedup.appendToVecIngestIndex(spark, p, df, "id", "v", b), vecs) _
+    Family("vec-ingest",
+      p => {
+        Dedup.initVecIngestIndex(spark, p, numPlanes = 4, dim = 8, expectedItems = 100L)
+        append(p, 1L to 20L)
+      },
+      append, Some(p => Dedup.compactVecIngestIndex(spark, p)),
+      p => classified(probeVecIngest(p, batch, 999L)), replayNoop = false)
+  }
+
   private val families = Seq(bm25, hash, paragraph, span, band, vecFamily, simhash, cc,
-    ivf, ivfPq, lm, sourceToken, hll, bench)
+    ivf, ivfPq, lm, sourceToken, hll, bench, ingest, vecIngest)
 
   /** A fresh index path inside a scratch dir (so a family may keep a
     * fixture beside it).
@@ -304,6 +361,31 @@ class IndexStoreSpec extends SparkSpec {
       f.append3(c)
       sweptClean(c, "after the next append")
     }
+  }
+
+  test("ingest replay: with batch b committed, a probe excluding b reproduces the pre-append " +
+      "classification, and re-appending b leaves b's rows in exactly one dir") {
+    val p = fresh("ingest_replay")
+    ingest.build(p)
+    val b = 21L
+    val replayed = udocs(b until b + 10L).unionByName(ingestBatch)
+    val pre = classified(probeIngest(p, replayed, b))
+    // a first attempt of batch b with a different survivor, committed
+    Dedup.appendToIngestIndex(spark, p, udocs(Seq(99L)), "id", "text", b)
+    assert(classified(probeIngest(p, replayed, b)) == pre,
+      "a probe excluding b must not see b's committed first attempt")
+    ingest.append1(p) // the replay: ids 21–30 as batch b
+    assert(classified(probeIngest(p, replayed, b)) == pre,
+      "a probe excluding b must reproduce the pre-append classification")
+    val m = IndexStore.latest(spark, p)
+    for (t <- Seq("hashes", "shingles", "bands"))
+      assert(m.tables(t).count(d => Dedup.ingestOf(m, d.dir) == b) == 1,
+        s"$t: batch $b must sit in exactly one write dir: ${m.tables(t)}")
+    val shingles = Dedup.readIngestIndex(spark, p, org.apache.spark.sql.types.LongType).shingles
+      .filter($"__ingest" === b)
+    assert(shingles.select("id").distinct().as[Long].collect().toSet == (b until b + 10L).toSet &&
+      shingles.count() == Dedup.shingleTable(udocs(b until b + 10L), "id", $"text", 3).count(),
+      "the replay must replace the first attempt and hold each of its rows once")
   }
 
   test("the families the streaming sinks create empty read back as empty frames with their schema") {

@@ -698,7 +698,7 @@ class OpsSpec extends SparkSpec {
     assert(probe(b2, exclude = 3L) == r3, "empty append changed classification")
   }
 
-  test("ingest index: hot bucket star-degrades via the indexed hub; bloom self-heals; append overwrite is replay-idempotent") {
+  test("ingest index: hot bucket star-degrades via the indexed hub; append overwrite is replay-idempotent") {
     val corpus = (1L to 30L).map(i => (i, s"common shared boilerplate tail here x$i"))
       .toDF("doc_id", "text")
     val base = scratch("ingestHot").toString
@@ -721,15 +721,7 @@ class OpsSpec extends SparkSpec {
     val r1 = probe(b1, exclude = 1L, maxBucket = 2)
     assert(r1 == Seq((200L, "near_dup", Some(1L)), (201L, "new", None)),
       s"hot-cluster near dup must resolve to the indexed hub: $r1")
-    // bloom rename crash window: bloom.bin missing → read self-heals from
-    // the hash table and classification is unaffected
-    val bloomP = new org.apache.hadoop.fs.Path(s"$base/bloom.bin")
-    val fs = bloomP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.delete(bloomP, false))
-    val r1b = probe(b1, exclude = 1L, maxBucket = 2)
-    assert(fs.exists(bloomP), "self-heal must rewrite the sketch")
-    assert(r1b == r1, s"classification changed after bloom self-heal: $r1b vs $r1")
-    // replayed append (retried ingest) overwrites its own partition —
+    // replayed append (retried ingest) replaces its own write dirs —
     // duplicate shingle/size rows would inflate Jaccard
     Dedup.appendToIngestIndex(spark, base,
       b1.filter($"doc_id" === 201L), "doc_id", "text", ingestId = 1L)
@@ -748,7 +740,7 @@ class OpsSpec extends SparkSpec {
       s"got $r2")
   }
 
-  test("ingest index compaction: partitions fold into the base; a crash after the marker self-heals on read") {
+  test("ingest index compaction: write dirs fold into the base; appends continue beside it") {
     val base = scratch("ingestCompact").toString
     Dedup.initIngestIndex(spark, base, n = 3, numPerm = 64, numBands = 16,
       rowsPerBand = 4, expectedItems = 1000L)
@@ -765,10 +757,10 @@ class OpsSpec extends SparkSpec {
       r.unpersist()
       rows
     }
-    def partitions(tbl: String): Set[String] = {
-      val p = new org.apache.hadoop.fs.Path(s"$base/$tbl")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSet
+    // the batch each write dir of `tbl` holds, as the committed manifest names them
+    def batches(tbl: String): Seq[Long] = {
+      val m = IndexStore.latest(spark, base)
+      m.tables.getOrElse(tbl, Nil).map(d => Dedup.ingestOf(m, d.dir))
     }
     val pb = Seq(
       (100L, "aa bb cc dd ee ff"),              // exact dup of 1 (ingest 0)
@@ -778,60 +770,20 @@ class OpsSpec extends SparkSpec {
     assert(before == Seq((100L, "exact_dup", Some(1L)), (101L, "near_dup", Some(10L)),
       (102L, "new", None)), s"got $before")
     Dedup.compactIngestIndex(spark, base)
-    assert(partitions("hashes") == Set("__ingest=-1") &&
-      partitions("bands") == Set("__ingest=-1"),
-      s"compaction must fold every partition into the base: ${partitions("hashes")}")
+    assert(batches("hashes") == Seq(-1L) && batches("shingles") == Seq(-1L) &&
+      batches("bands") == Seq(-1L),
+      s"compaction must fold every write dir into the base: ${batches("hashes")}")
     assert(probe(pb) == before, "classification changed after compaction")
     // appends continue after compaction, alongside the base partition
     append(Seq((30L, "yy zz ab cd ef gh")).toDF("doc_id", "text"), 3L)
     val pb2 = pb.unionByName(Seq((103L, "yy zz ab cd ef gh")).toDF("doc_id", "text"))
     val after = probe(pb2)
     assert(after == before :+ ((103L, "exact_dup", Some(30L))), s"got $after")
-    // crash drill: marker published, source partitions NOT deleted — a
-    // plain read must finish the compaction before scanning, or the
-    // duplicated rows would fan out the verify join
-    Dedup.stageIngestCompaction(spark, base)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$base/_compacting.json")))
-    val healed = probe(pb2) // readIngestIndex self-heals
-    assert(healed == after, s"self-heal changed classification: $healed vs $after")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/_compacting.json")),
-      "the marker must be consumed by the self-heal")
-    assert(partitions("hashes") == Set("__ingest=-1"))
-    // negative ingest ids are reserved for the base partition
+    assert(batches("hashes").sorted == Seq(-1L, 3L), s"got ${batches("hashes")}")
+    // negative ingest ids are reserved for the base
     intercept[IllegalArgumentException] {
       append(Seq((40L, "zz zz zz")).toDF("doc_id", "text"), -1L)
     }
-  }
-
-  test("ingest index compaction: an orphan staging dir from a pre-marker crash never publishes") {
-    // hazard: a compaction that crashed BEFORE its marker leaves staging
-    // dirs behind; a later run whose source list for that table is empty
-    // must not let finishIngestCompaction rename the orphan over live base
-    // rows (stageIngestCompaction sweeps every table's staging up front)
-    val base = scratch("ingestOrphan").toString
-    Dedup.initIngestIndex(spark, base, n = 3, numPerm = 64, numBands = 16,
-      rowsPerBand = 4, expectedItems = 1000L)
-    Dedup.appendToIngestIndex(spark, base,
-      Seq((1L, "aa bb cc dd ee ff")).toDF("doc_id", "text"), "doc_id", "text",
-      ingestId = 0L)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // plant the orphan (content is irrelevant — publish is a dir rename)
-    Seq((999L, "POISON")).toDF("doc_id", "junk")
-      .write.parquet(s"$base/shingles.staging")
-    // make shingles' source list empty for the next compaction run
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$base/shingles/__ingest=*")))
-      .getOrElse(Array.empty).foreach(s => fs.delete(s.getPath, true))
-    Dedup.compactIngestIndex(spark, base)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/shingles.staging")),
-      "the orphan staging dir must be swept")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/shingles/__ingest=-1")),
-      "an empty-source table must not publish a stale staging dir as its base")
-    // the non-empty tables still folded normally
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$base/hashes/__ingest=-1")))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$base/_compacting.json")))
   }
 
   test("batch index compaction: hash/band/vec/paragraph appends fold to few files, probes classify identically") {
@@ -957,55 +909,6 @@ class OpsSpec extends SparkSpec {
       Seq((1000L, "another unique body")).toDF("doc_id", "text"),
       "doc_id", "text", autoCompactAt = 0)
     assert(partFiles() > after, "autoCompactAt=0 must not fold")
-  }
-
-  test("ingest index compaction: a re-run over a published marker completes the prior fold before sweeping staging") {
-    // hazard (round-11 advisor): run #1 crashes AFTER publishing its
-    // marker — staging holds the only complete copy of the listed source
-    // partitions. If run #2 swept staging FIRST and then crashed before
-    // republishing, the stale marker would later have finishIngestCompaction
-    // delete the sources with nothing to rename over them: permanent loss.
-    // The contract pinned here: stageIngestCompaction entered with a
-    // published marker completes the prior fold (sources → base) before it
-    // touches any staging dir, so the marker and staging are never stale
-    // relative to each other.
-    val base = scratch("ingestRerun").toString
-    Dedup.initIngestIndex(spark, base, n = 3, numPerm = 64, numBands = 16,
-      rowsPerBand = 4, expectedItems = 1000L)
-    Dedup.appendToIngestIndex(spark, base,
-      Seq((1L, "aa bb cc dd ee ff"), (2L, "gg hh ii jj kk ll")).toDF("doc_id", "text"),
-      "doc_id", "text", ingestId = 0L)
-    Dedup.appendToIngestIndex(spark, base,
-      Seq((10L, "mm nn oo pp qq rr")).toDF("doc_id", "text"), "doc_id", "text",
-      ingestId = 1L)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // run #1: crash after the marker
-    Dedup.stageIngestCompaction(spark, base)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$base/_compacting.json")))
-    // run #2's stage: must FIRST finish run #1's fold (sources gone, base
-    // present) and only then stage anew — its fresh marker can then list
-    // only the base partition as a source
-    Dedup.stageIngestCompaction(spark, base)
-    def parts(tbl: String): Set[String] =
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(s"$base/$tbl/__ingest=*")))
-        .getOrElse(Array.empty).map(_.getPath.getName).toSet
-    assert(parts("hashes") == Set("__ingest=-1"),
-      s"run #2's stage must complete run #1's fold first: ${parts("hashes")}")
-    val marker2 = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(base, "_compacting.json")), "UTF-8")
-    assert(!marker2.contains("__ingest=0") && !marker2.contains("__ingest=1"),
-      s"run #2's marker must not list partitions run #1 already folded: $marker2")
-    // and the eventual finish leaves a correct, probe-identical index
-    Dedup.finishIngestCompaction(spark, base)
-    val r = Dedup.probeIngestIndex(
-      Dedup.readIngestIndex(spark, base, org.apache.spark.sql.types.LongType),
-      Seq((100L, "aa bb cc dd ee ff"), (101L, "mm nn oo pp qq ZZ")).toDF("doc_id", "text"),
-      "doc_id", "text", threshold = 0.2, excludeIngest = 99L)
-    val rows = r.orderBy("doc_id").as[(Long, String, Option[Long])].collect().toSeq
-    r.unpersist()
-    assert(rows == Seq((100L, "exact_dup", Some(1L)), (101L, "near_dup", Some(10L))),
-      s"classification after the double-stage fold: $rows")
   }
 
   test("exactQuantiles: histogram refinement matches the sorted ground truth at every edge") {

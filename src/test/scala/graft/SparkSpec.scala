@@ -16,7 +16,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
-  /** A fresh dir under [[TmpDir.root]], deleted when the suite ends. */
+  /** A fresh dir under [[TmpDir.root]], deleted when the suite ends
+    * (with the scratch dirs of the probes the suite ran).
+    */
   def scratch(prefix: String): Path = {
     val d = Files.createTempDirectory(Paths.get(TmpDir.root), prefix)
     scratchDirs.add(d)
@@ -30,7 +32,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         f.delete()
       }
       delete(d.toFile)
-    } finally super.afterAll()
+    } finally try TmpDir.dropScratch() finally super.afterAll()
 }
 
 object SparkSpec {

@@ -298,11 +298,9 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(corpus).select("doc_id").as[Long].collect().toSet ==
       Set(1L, 3L, 5L, 9L),
       "dedup across batches must work through the compacted base partition")
-    val hp = new org.apache.hadoop.fs.Path(s"$index/hashes")
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(hp).filter(_.isDirectory).map(_.getPath.getName).toSet
-    assert(parts == Set("__ingest=-1", "__ingest=2"),
-      s"compaction must fold all but the current batch: $parts")
+    val m = ops.IndexStore.latest(spark, index)
+    val dirs = m.tables("hashes").map(d => ops.Dedup.ingestOf(m, d.dir))
+    assert(dirs.sorted == Seq(-1L, 2L), s"compaction must fold all but the current batch: $dirs")
   }
 
   test("indexed sink: kill + resume over a poisoned partial INCLUDING a stale index partition ≡ uninterrupted run") {
@@ -458,11 +456,9 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(corpus).select("vec_id").as[Long].collect().toSet ==
       Set(1L, 2L, 5L, 9L),
       "semantic dedup across batches must work through the compacted base partition")
-    val hp = new org.apache.hadoop.fs.Path(s"$index/vecs")
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(hp).filter(_.isDirectory).map(_.getPath.getName).toSet
-    assert(parts == Set("__ingest=-1", "__ingest=2"),
-      s"compaction must fold all but the current batch: $parts")
+    val m = ops.IndexStore.latest(spark, index)
+    val dirs = m.tables("vecs").map(d => ops.Dedup.ingestOf(m, d.dir))
+    assert(dirs.sorted == Seq(-1L, 2L), s"compaction must fold all but the current batch: $dirs")
   }
 
   test("indexed sink with bench index: contaminated docs never enter the corpus") {

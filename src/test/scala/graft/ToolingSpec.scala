@@ -111,28 +111,23 @@ class ToolingSpec extends SparkSpec {
     assert(naming("_manifest") == Vector("IndexStore.scala"),
       s"only the index store may know its manifest dir: ${naming("_manifest")}")
     val retired = Seq("_compacting_batch", "publishBatchMarker", "finishBatchCompaction",
-      "stageBatchCompaction", "compactBatchIndex", "maybeAutoCompact", "stats.dirty", "layout.json")
+      "stageBatchCompaction", "compactBatchIndex", "maybeAutoCompact", "stats.dirty", "layout.json",
+      "meta.json", "writeBloomFileAtomic", "_compacting.json", "stageIngestCompaction",
+      "finishIngestCompaction")
     val named = retired.flatMap(w => naming(w).map(f => s"$f: $w"))
-    assert(named.isEmpty, s"src/main still names the retired batch-marker protocol: $named")
-    // the two streaming ingest families and their sinks (plus the SCD2
-    // dim sink's own dir swap) are the last users of meta.json, staging
-    // swaps and the tmp-swapped sketch
-    val ingest = Map(
-      "Dedup.scala" -> ("// — streaming-maintained ingest index", "// — persisted SIMHASH index"),
-      "StreamingIngest.scala" -> ("def scd2DimSink(", "def mediaCorpusIndexedSink("))
+    assert(named.isEmpty, s"src/main still names a retired index protocol: $named")
+    // the SCD2 dim sink's dir swap — a warehouse table, not an index — is
+    // the one staging swap left
     val offenders = sources.flatMap { p =>
       val name = p.getFileName.toString
       val lines = Files.readAllLines(p).asScala.toVector
-      val (from, to) = ingest.get(name).map { case (a, b) =>
-        (lines.indexWhere(_.contains(a)), lines.indexWhere(_.contains(b)))
-      }.getOrElse((-1, -1))
-      assert(ingest.get(name).isEmpty || (from >= 0 && to > from), s"$name: ingest region markers moved")
+      val from = if (name == "StreamingIngest.scala") lines.indexWhere(_.contains("def scd2DimSink(")) else -1
+      val to = if (from < 0) -1 else lines.indexWhere(_.startsWith("  def "), from + 1)
+      assert(name != "StreamingIngest.scala" || (from >= 0 && to > from), s"$name: scd2DimSink moved")
       lines.zipWithIndex.collect {
-        case (l, i) if Seq("meta.json", ".staging\"", "writeBloomFileAtomic").exists(l.contains) &&
-            !(i > from && i < to) => s"$name:${i + 1}: ${l.trim}"
+        case (l, i) if l.contains(".staging\"") && !(i > from && i < to) => s"$name:${i + 1}: ${l.trim}"
       }
     }
-    assert(offenders.isEmpty,
-      s"only the streaming ingest families may keep meta.json or a staging swap:\n${offenders.mkString("\n")}")
+    assert(offenders.isEmpty, s"only scd2DimSink may keep a staging swap:\n${offenders.mkString("\n")}")
   }
 }
