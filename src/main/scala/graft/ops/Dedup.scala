@@ -58,15 +58,6 @@ object Dedup {
     */
   val BatchBroadcastCap: Long = 1000000L
 
-  /** Max corpus hash-index rows that still broadcast in the incremental
-    * exact probes (~tens of MB of 64-char hashes — comfortably inside a
-    * hashed relation). Above it the exact join degrades to sort-merge on
-    * the hash: the batch side of a left join is preserved and can never
-    * be the build side, so without this evidence gate a checkpoint-
-    * collapsed corpus estimate would static-broadcast the whole index.
-    */
-  val CorpusIndexBroadcastCap: Long = 1000000L
-
   /** Null-unambiguous string form of a content column: a null-flag prefix
     * ("true"/"false") + the value with null → "". A bare sentinel (e.g.
     * "␀") would collide with a document whose text IS the sentinel; the
@@ -954,16 +945,18 @@ object Dedup {
 
   /** Incremental dedup: a NEW batch of documents against an EXISTING
     * (already-deduped) corpus — the daily-ingest shape of a training-data
-    * pipeline. The critical scale property is asymmetry: the corpus side
-    * is only ever *probed*, never self-joined, so a 100-TB corpus costs
-    * one signature/banding pass (which a real deployment would persist
-    * and reuse across batches) and the pair work is bounded by
-    * |batch| × bucket-mates — never corpus².
+    * pipeline. The corpus becomes an UNPERSISTED band index — its
+    * `hashes`, `shingles` and `bands` in the ingest schema, derived from
+    * `corpus` and pinned for the call — and the batch is classified by
+    * the same [[probeNear]] that probes a persisted one
+    * ([[probeIngestIndex]], [[incrementalDedupIndexed]]), so the live and
+    * persisted paths agree by construction. The corpus is only ever
+    * *probed*, never self-joined: one signature/banding pass per call
+    * (persist it with [[writeBandIndex]] to pay it once), and the pair
+    * work is bounded by |batch| × bucket-mates — never corpus².
     *
     * Decision per batch doc, in precedence order:
-    *   1. `exact_dup`  — content hash already present in the corpus
-    *      (hash-equi anti-join semantics; 256-bit hashes shuffle, the
-    *      document bodies don't);
+    *   1. `exact_dup`  — content hash already present in the corpus;
     *   2. `near_dup`   — shares an LSH band bucket with ≥1 corpus doc AND
     *      exact n-gram Jaccard ≥ `threshold` (verification is exact, so
     *      every emitted match is a true near-duplicate);
@@ -971,120 +964,37 @@ object Dedup {
     *
     * Returns one row per batch doc: (idCol, status, dup_of) where
     * `dup_of` is the smallest matching corpus id (null for `new`). The
-    * result is EAGER — materialized and cached before the internal corpus
-    * shingle/hash caches are released (`unpersist()` it when done).
-    * Intra-batch duplicates are NOT resolved here — compose with
-    * [[exact]] / [[lshCandidates]] over the batch alone for that; keeping
-    * the operator batch→corpus keeps its cost profile linear in the batch.
-    *
-    * Hot-bucket guard: band buckets are capped by occupancy over
-    * corpus∪batch — a stop-phrase bucket in a 1M-doc corpus would
-    * otherwise fan every batch doc into it. As in [[lshCandidates]], a
-    * hot bucket degrades to STAR candidates: each batch doc in it is
-    * paired with the bucket's min CORPUS id only (linear in the batch),
-    * so a batch doc that duplicates a mass-dup corpus cluster is still
-    * found rather than silently classified `new`.
+    * result is EAGER — materialized and cached before the corpus shingle
+    * cache is released (`unpersist()` it when done). Intra-batch
+    * duplicates are NOT resolved here — compose with [[exact]] /
+    * [[lshCandidates]] over the batch alone for that; keeping the
+    * operator batch→corpus keeps its cost profile linear in the batch.
+    * Hot buckets star-degrade to the bucket's min corpus id ([[probeNear]]).
     */
   def incrementalDedup(
       corpus: DataFrame, batch: DataFrame, idCol: String, text: Column,
       n: Int, numPerm: Int, bands: Int, rowsPerBand: Int, threshold: Double,
       maxBucket: Int = DefaultMaxBucket,
-      corpusIndexBroadcastCap: Long = CorpusIndexBroadcastCap): DataFrame = {
+      batchBroadcastCap: Long = BatchBroadcastCap): DataFrame = {
     require(bands * rowsPerBand == numPerm,
       s"bands ($bands) × rowsPerBand ($rowsPerBand) must equal numPerm ($numPerm) — " +
         "anything else silently drops signature permutations from banding")
-    def hashOf(df: DataFrame) = df.select(col(idCol).as("id"),
-      sha2(tagged(text), 256).as("__h"))
-    // 1. exact: batch hash ∈ corpus hashes (min corpus id per hash probes
-    //    the join — one shuffle of 64-char hashes). The index is the only
-    //    BROADCASTABLE side of this left join (batch preserved), so a
-    //    static broadcast from a checkpoint-collapsed corpus estimate
-    //    would ship the whole corpus index to the driver at scale —
-    //    decide from the materialized index count instead (the cache is
-    //    released as soon as the exact statuses are pinned).
-    val corpusHashes = hashOf(corpus).groupBy(col("__h")).agg(min(col("id")).as("__exact_of"))
-      .persist()
-    val corpusHashRows = corpusHashes.count()
-    val exactJoined =
-      if (corpusHashRows <= corpusIndexBroadcastCap)
-        hashOf(batch).join(broadcast(corpusHashes), Seq("__h"), "left")
-      else
-        hashOf(batch).hint("merge").join(corpusHashes.hint("merge"), Seq("__h"), "left")
-    val exactStatus = exactJoined
-      .select(col("id"), col("__exact_of"))
-      .persist()
-    exactStatus.count()
-    corpusHashes.unpersist()
-
-    // 2. near: MinHash signatures both sides, band, batch-bands ⋈
-    //    corpus-bands (equi), exact-Jaccard verify on the candidates.
-    //    Exact-dup batch docs are excluded up front: their near matches are
-    //    subsumed by status precedence, and skipping them shrinks the
-    //    probe side.
-    val survivors = batch.join(
-      exactStatus.filter(col("__exact_of").isNotNull).select(col("id").as(idCol)),
-      Seq(idCol), "left_anti")
-    // persist (not count-pinned): each table feeds signatures AND
-    // verification, and the signature checkpoints below materialize the
-    // caches as a side effect — the explicit counts were two extra
-    // driver-serialized jobs buying nothing (round 15, guide §1.2)
-    val shC = shingleTable(corpus, idCol, text, n).persist()
-    val shB = shingleTable(survivors, idCol, text, n).persist()
-    def banded(sig: DataFrame, side: String) =
-      sig.select(col("id").as(side), explode(array(bandExprs(bands, rowsPerBand): _*)).as("band"))
-        .select(col(side), col("band.band_idx"), col("band.band_hash"))
-    // each banded side feeds the hot-bucket aggregate plus two candidate
-    // joins — checkpoint so the signature aggregation runs once per side
-    val bandC = banded(minhashFromShingles(shC, numPerm), "corpus_id").localCheckpoint()
-    val bandB = banded(minhashFromShingles(shB, numPerm), "batch_id").localCheckpoint()
-    val hot = bandC.select(col("band_idx"), col("band_hash"))
-      .unionByName(bandB.select(col("band_idx"), col("band_hash")))
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("__bs")).filter(col("__bs") > maxBucket)
-      .select(col("band_idx"), col("band_hash"))
-    val coldCands = bandB.join(hot, Seq("band_idx", "band_hash"), "left_anti")
-      .join(bandC, Seq("band_idx", "band_hash"))
-      .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"))
-    // hot buckets: each batch member probes only the bucket's min corpus
-    // id (star candidates — linear, and exact verification still decides)
-    val hotHubs = bandC.join(hot, Seq("band_idx", "band_hash"), "left_semi")
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(min(col("corpus_id")).as("corpus_id"))
-    val starCands = bandB.join(hot, Seq("band_idx", "band_hash"), "left_semi")
-      .join(hotHubs, Seq("band_idx", "band_hash"))
-      .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"))
-    val cands = coldCands.unionByName(starCands).distinct()
-    // exact verification over the union of both shingle tables (ids are
-    // disjoint between corpus and batch by contract)
-    val shAll = shB.unionByName(shC)
-    val sizes = shAll.groupBy(col("id")).agg(count(lit(1)).as("set_size"))
-    val nearOf = ngramJaccardForPairs(shAll, sizes, cands, threshold)
-      .groupBy(col("id_a").as("id"))
-      .agg(min(col("id_b")).as("__near_of"))
-
-    // materialize the (batch-sized) result, then release the big caches —
-    // the exploded corpus shingle table is the largest intermediate in the
-    // job and must not outlive the call. The returned frame stays cached;
-    // unpersist() it when done.
-    val result = exactStatus
-      .join(nearOf, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        when(col("__exact_of").isNotNull, "exact_dup")
-          .when(col("__near_of").isNotNull, "near_dup")
-          .otherwise("new").as("status"),
-        coalesce(col("__exact_of"), col("__near_of")).as("dup_of"))
-      .persist()
-    result.count()
-    shC.unpersist(); shB.unpersist(); exactStatus.unpersist()
-    result
+    // the shingles feed the bands AND the verify scan; the bands feed the
+    // occupancy AND the candidate scans — pin each, so the corpus is
+    // tokenized and MinHashed once per call
+    val sh = shingleTable(corpus, idCol, text, n).persist()
+    try probeNear(hashRows(corpus, idCol, text), sh,
+      bandRows(sh, numPerm, bands, rowsPerBand).localCheckpoint(), None,
+      n, numPerm, bands, rowsPerBand, batch, idCol, text, threshold, maxBucket, batchBroadcastCap)
+    finally sh.unpersist()
   }
 
   /** Incremental SEMANTIC dedup: a new batch of embeddings against an
     * EXISTING (already-deduped) embedding corpus — the embedding twin of
-    * [[incrementalDedup]], with the same asymmetry contract: the corpus is
-    * only ever PROBED (hash join + one sign-bucket equi-join), never
-    * self-joined, so corpus cost is one bucketing pass (persistable across
-    * batches in a real deployment) and pair work is |batch| × bucket-mates.
+    * [[incrementalDedup]]: the corpus becomes an UNPERSISTED vec index
+    * (`hashes` and bucketed `vecs` in the vec-ingest schema, derived from
+    * `corpus`), classified by the same [[probeSemantic]] that probes a
+    * persisted one ([[probeVecIngestIndex]], [[incrementalSemanticIndexed]]).
     *
     * Decision per batch vector, precedence:
     *   1. `exact_dup` — a corpus vector with identical contents exists.
@@ -1099,101 +1009,18 @@ object Dedup {
     *      gated by the planted-neighbor probe family);
     *   3. `new`.
     *
-    * A vector has exactly ONE sign bucket, so each (batch, corpus) pair
-    * arises at most once — no candidate dedup pass is needed. Hot buckets
-    * (> maxBucket members over corpus∪batch) degrade to star candidates
-    * against the bucket's min-id corpus hub, keeping the fan-out linear
-    * in the batch while a batch vector that duplicates a mass-dup corpus
-    * direction is still found. Returns one eager cached row per batch id:
-    * (idCol, status, dup_of) — `unpersist()` when done.
+    * Returns one eager cached row per batch id: (idCol, status, dup_of) —
+    * `unpersist()` when done.
     */
   def incrementalSemanticDedup(corpus: DataFrame, batch: DataFrame, idCol: String,
       vecCol: String, threshold: Double, numPlanes: Int, dim: Int,
       maxBucket: Int = DefaultMaxBucket,
       batchBroadcastCap: Long = BatchBroadcastCap): DataFrame = {
     val planes = Similarity.hyperplanes(numPlanes, dim)
-    // 1. exact: hash probe + byte-equality verify against the hash group's
-    //    min-id representative (hashes shuffle, corpus vectors stay put).
-    //    The hash index is the BROADCASTABLE side of this left join (the
-    //    batch is preserved, so only the corpus side can build) — and it
-    //    carries full corpus vectors, so a static broadcast decided from
-    //    a checkpoint-collapsed corpus estimate is a driver OOM at scale
-    //    (the same hazard class as the band frame below, one join up).
-    //    Decide from the MATERIALIZED index count: truly small index →
-    //    broadcast it; big → sort-merge on the hash, neither side builds.
-    val cHash = corpus
-      .select(xxhash64(col(vecCol)).as("__h"), col(idCol).as("__cid"), col(vecCol).as("__cvec"))
-      .groupBy(col("__h"))
-      .agg(min(col("__cid")).as("__exact_of"), min_by(col("__cvec"), col("__cid")).as("__rvec"))
-      .persist()
-    val cHashRows = cHash.count()
-    // byte-aware license: every index row carries a full dim-sized vector
-    // (__rvec), so the row cap shrinks with dim — a 1M-row cap justified
-    // for short strings would ship a multi-GB broadcast at dim ≥ 512
-    val vecCap = math.min(batchBroadcastCap, Similarity.vecBroadcastRows(dim))
-    val keyedB = batch
-      .select(col(idCol).as("id"), col(vecCol).as("__bvec"), xxhash64(col(vecCol)).as("__h"))
-    val exactJoined =
-      if (cHashRows <= vecCap) keyedB.join(broadcast(cHash), Seq("__h"), "left")
-      else keyedB.hint("merge").join(cHash.hint("merge"), Seq("__h"), "left")
-    val exactStatus = exactJoined
-      .select(col("id"),
-        when(col("__exact_of").isNotNull && col("__bvec") === col("__rvec"),
-          col("__exact_of")).as("__exact_of"))
-      .persist()
-    exactStatus.count()
-    cHash.unpersist() // exactStatus is materialized — the index is done
-
-    // 2. near: sign-bucket probe, exact cosine verify on bucket-mates
-    val survivors = batch.join(
-      exactStatus.filter(col("__exact_of").isNotNull).select(col("id").as(idCol)),
-      Seq(idCol), "left_anti")
-    val bC = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("__cvec"),
-      Similarity.bucketId(col(vecCol), planes).as("__bucket")).localCheckpoint()
-    val bB = survivors.select(col(idCol).as("batch_id"), col(vecCol).as("__bvec"),
-      Similarity.bucketId(col(vecCol), planes).as("__bucket")).localCheckpoint()
-    val hot = bC.select(col("__bucket")).unionByName(bB.select(col("__bucket")))
-      .groupBy(col("__bucket")).agg(count(lit(1)).as("__bs"))
-      .filter(col("__bs") > maxBucket).select(col("__bucket"))
-    // Both band frames are checkpoint-backed (LogicalRDD) and their size
-    // estimates are unreliable — the static planner has been observed
-    // broadcast-building the CORPUS side of the cold candidate join
-    // (driver OOM at real corpus scale). Decide the side from the
-    // MATERIALIZED batch count instead (bB is checkpointed — the count is
-    // a cached-block scan, and the eager pin already paid the compute):
-    // bounded batch → broadcast it; oversized batch → sort-merge join
-    // (hinted on BOTH sides, as Decontaminate.overlaps degrades): a
-    // shuffled hash join would still build a per-partition hash relation
-    // from whichever side the same unreliable checkpoint-backed estimates
-    // call smaller — which can be the corpus (executor OOM at scale).
-    // Merge builds no hash relation from either unbounded side.
-    val coldB = bB.join(hot, Seq("__bucket"), "left_anti")
-    val cold =
-      if (bB.count() <= vecCap) bC.join(broadcast(coldB), Seq("__bucket"))
-      else bC.hint("merge").join(coldB.hint("merge"), Seq("__bucket"))
-    val hubs = bC.join(hot, Seq("__bucket"), "left_semi")
-      .groupBy(col("__bucket"))
-      .agg(min(col("corpus_id")).as("corpus_id"), min_by(col("__cvec"), col("corpus_id")).as("__cvec"))
-    val star = bB.join(hot, Seq("__bucket"), "left_semi")
-      .join(hubs, Seq("__bucket"))
-    val pairCols = Seq(col("batch_id"), col("__bvec"), col("corpus_id"), col("__cvec"))
-    val nearOf = cold.select(pairCols: _*).unionByName(star.select(pairCols: _*))
-      .withColumn("__cos", round(Similarity.cosine(col("__bvec"), col("__cvec")), 6))
-      .filter(col("__cos") >= threshold)
-      .groupBy(col("batch_id").as("id"))
-      .agg(min(col("corpus_id")).as("__near_of"))
-
-    val result = exactStatus
-      .join(nearOf, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        when(col("__exact_of").isNotNull, "exact_dup")
-          .when(col("__near_of").isNotNull, "near_dup")
-          .otherwise("new").as("status"),
-        coalesce(col("__exact_of"), col("__near_of")).as("dup_of"))
-      .persist()
-    result.count()
-    bC.unpersist(); bB.unpersist(); exactStatus.unpersist()
-    result
+    // the bucketed vectors feed the occupancy AND the candidate scans
+    val vecs = vecRows(corpus, idCol, vecCol, planes).localCheckpoint()
+    probeSemantic(vecHashRows(corpus, idCol, vecCol), vecs, None, planes, dim,
+      batch, idCol, vecCol, threshold, maxBucket, batchBroadcastCap)
   }
 
   /** Bloom-pruned incremental EXACT dedup: classify a new batch against an
@@ -1228,10 +1055,7 @@ object Dedup {
       textCol: String, expectedItems: Long, fpp: Double = 0.01): DataFrame = {
     require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
     // one corpus pass feeds both the sketch and the verify index
-    val corpusHashes = corpus
-      .select(sha2(tagged(col(textCol)), 256).as("__h"), col(idCol).as("__cid"))
-      .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of"))
-      .persist()
+    val corpusHashes = hashRows(corpus, idCol, col(textCol)).persist()
     val keyed = batch.select(col(idCol).as("id"),
       sha2(tagged(col(textCol)), 256).as("__h"))
     // try/finally: a throw from the sketch build, the verify join, or the
@@ -1379,9 +1203,7 @@ object Dedup {
     require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
     val spark = corpus.sparkSession
     val v = IndexStore.nextVersion(spark, path)
-    val hashes = IndexStore.writeTable(path, "hashes", v, corpus
-      .select(sha2(tagged(col(textCol)), 256).as("__h"), col(idCol).as("__cid"))
-      .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of")))
+    val hashes = IndexStore.writeTable(path, "hashes", v, hashRows(corpus, idCol, col(textCol)))
     val bf = bloomOf(IndexStore.read(spark, path, "hashes", Seq(hashes)),
       xxhash64(col("__h")), expectedItems, fpp)
     IndexStore.commit(spark, path, IndexStore.Manifest(v,
@@ -1448,9 +1270,7 @@ object Dedup {
       autoCompactAt: Int = AutoCompactDefault): Unit = {
     val m = IndexStore.latest(spark, path)
     val index = readHashIndex(spark, path, m)
-    val fresh = newDocs
-      .select(sha2(tagged(col(textCol)), 256).as("__h"), col(idCol).as("__cid"))
-      .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of"))
+    val fresh = hashRows(newDocs, idCol, col(textCol))
       .join(index.hashes, Seq("__h"), "left_anti")
       .localCheckpoint()
     if (fresh.isEmpty) return
@@ -1749,440 +1569,14 @@ object Dedup {
       targetFiles: Int = 1): Unit =
     compactIndexTables(spark, path, Seq("spans"), targetFiles)
 
-  // — persisted NEAR-dup probe state (band index) ——————————————————————————
-  //   The banding twin of [[writeHashIndex]]: [[incrementalDedup]] pays a
-  //   full corpus tokenize + shingle explode + 64-permutation MinHash per
-  //   batch — the dominant CPU of the incremental path, and pure rebuild
-  //   (the corpus didn't change). The band index persists the corpus
-  //   shingle table, set sizes, banded signatures and per-bucket
-  //   (count, hub) aggregates; a batch then classifies with batch-sized
-  //   compute plus COLUMN SCANS of the compact index tables (the per-
-  //   batch corpus cost drops from hash CPU to I/O — and the scans join
-  //   against broadcast batch-sized frames, so nothing corpus-scale ever
-  //   shuffles per batch).
-
-  /** A loaded persistent band index. All frames are lazy parquet scans;
-    * `buckets` carries the per-bucket corpus occupancy and min-id hub so
-    * hot-bucket detection and star degradation need no corpus band
-    * aggregate per batch.
-    */
-  final case class BandIndex(
-      bands: DataFrame,    // (corpus_id, band_idx, band_hash)
-      buckets: DataFrame,  // (band_idx, band_hash, __ccnt, __hub)
-      shingles: DataFrame, // (id, shingle)
-      sizes: DataFrame,    // (id, set_size)
-      n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int)
-
-  /** Persist the corpus-side state of [[incrementalDedup]]'s near stage
-    * as an [[IndexStore]] version: `shingles`, `sizes`, `bands` and
-    * `buckets` tables, with the shingle width and banding geometry in the
-    * manifest. One corpus pass builds the shingle table; everything
-    * downstream derives from the persisted copy, so the artifacts can
-    * never disagree.
-    */
-  def writeBandIndex(corpus: DataFrame, idCol: String, text: Column, path: String,
-      n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int): Unit = {
-    require(numBands * rowsPerBand == numPerm,
-      s"numBands ($numBands) × rowsPerBand ($rowsPerBand) must equal numPerm ($numPerm)")
-    val spark = corpus.sparkSession
-    val v = IndexStore.nextVersion(spark, path)
-    val meta = Map("n" -> n, "numPerm" -> numPerm, "numBands" -> numBands, "rowsPerBand" -> rowsPerBand)
-    IndexStore.commit(spark, path, writeBandDelta(spark, path,
-      IndexStore.Manifest(v, meta, Map.empty), v, shingleTable(corpus, idCol, text, n)))
-  }
-
-  /** `sh`'s shingles, sizes and bands as version `v`'s dirs appended to
-    * `m`'s, and the buckets recomputed over every band dir (an aggregate —
-    * appending would double-count): the manifest to commit.
-    */
-  private def writeBandDelta(spark: org.apache.spark.sql.SparkSession, path: String,
-      m: IndexStore.Manifest, v: Long, sh: DataFrame): IndexStore.Manifest = {
-    def add(t: String, dir: IndexStore.WriteDir) = m.tables.getOrElse(t, Nil) :+ dir
-    val shingles = add("shingles", IndexStore.writeTable(path, "shingles", v, sh))
-    val shP = IndexStore.read(spark, path, "shingles", shingles.takeRight(1))
-    val sizes = add("sizes", IndexStore.writeTable(path, "sizes", v,
-      shP.groupBy(col("id")).agg(count(lit(1)).as("set_size"))))
-    val bands = add("bands", IndexStore.writeTable(path, "bands", v,
-      minhashFromShingles(shP, m.long("numPerm").toInt)
-        .select(col("id").as("corpus_id"), explode(array(
-          bandExprs(m.long("numBands").toInt, m.long("rowsPerBand").toInt): _*)).as("band"))
-        .select(col("corpus_id"), col("band.band_idx"), col("band.band_hash"))))
-    // NOTE: the bucket aggregate scans the FULL band table per append —
-    // amortized for the low-frequency batch-ingest shape this index
-    // serves; for high-frequency (per-micro-batch) appends use the
-    // streaming IngestIndex below, whose appends are pure partition
-    // writes and whose probe derives touched-bucket occupancy per batch
-    val buckets = IndexStore.writeTable(path, "buckets", v,
-      IndexStore.read(spark, path, "bands", bands)
-        .groupBy(col("band_idx"), col("band_hash"))
-        .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub")))
-    m.copy(version = v, tables = Map("shingles" -> shingles, "sizes" -> sizes, "bands" -> bands,
-      "buckets" -> Seq(buckets)))
-  }
-
-  /** Load the committed band index (lazy parquet frames + its geometry). */
-  def readBandIndex(spark: org.apache.spark.sql.SparkSession, path: String): BandIndex =
-    readBandIndex(spark, path, IndexStore.latest(spark, path))
-
-  private def readBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      m: IndexStore.Manifest): BandIndex =
-    BandIndex(
-      bands = IndexStore.read(spark, path, m, "bands"),
-      buckets = IndexStore.read(spark, path, m, "buckets"),
-      shingles = IndexStore.read(spark, path, m, "shingles"),
-      sizes = IndexStore.read(spark, path, m, "sizes"),
-      n = m.long("n").toInt, numPerm = m.long("numPerm").toInt,
-      numBands = m.long("numBands").toInt, rowsPerBand = m.long("rowsPerBand").toInt)
-
-  /** [[incrementalDedup]] against persisted indexes: the exact stage
-    * probes the [[HashIndex]] (Bloom-pruned — negatives skip the verify
-    * join), the near stage probes the [[BandIndex]]. Classification is
-    * IDENTICAL to the live operator (probe x59 shares x21's oracle); the
-    * per-batch corpus cost drops from tokenize+shingle+MinHash CPU to
-    * column scans of the index tables, each joined against a broadcast
-    * batch-sized frame — nothing corpus-scale shuffles per batch.
-    *
-    * Hot buckets: per-batch occupancy = persisted corpus count + batch
-    * count for every bucket the batch TOUCHES (corpus-hot buckets the
-    * batch never probes generate no candidates in the live operator
-    * either); star degradation pairs hot-bucket batch members with the
-    * bucket's persisted min-id hub.
-    */
-  def incrementalDedupIndexed(hashIndex: HashIndex, bandIndex: BandIndex,
-      batch: DataFrame, idCol: String, textCol: String, threshold: Double,
-      maxBucket: Int = DefaultMaxBucket,
-      batchBroadcastCap: Long = BatchBroadcastCap): DataFrame = {
-    import bandIndex.{numPerm, numBands, rowsPerBand}
-    // 1. exact via the persisted hash index
-    val exact = incrementalExactIndexed(hashIndex, batch, idCol, textCol)
-    val exactStatus = exact
-      .select(col(idCol).as("id"),
-        when(col("status") === "exact_dup", col("dup_of")).as("__exact_of"))
-      .persist()
-    exactStatus.count()
-    exact.unpersist()
-
-    // 2. near: batch-side shingles + signatures only; corpus side comes
-    //    from the index
-    val survivors = batch.join(
-      exactStatus.filter(col("__exact_of").isNotNull).select(col("id").as(idCol)),
-      Seq(idCol), "left_anti")
-    val shB = shingleTable(survivors, idCol, col(textCol), bandIndex.n).localCheckpoint()
-    val bandB = minhashFromShingles(shB, numPerm)
-      .select(col("id").as("batch_id"),
-        explode(array(bandExprs(numBands, rowsPerBand): _*)).as("band"))
-      .select(col("batch_id"), col("band.band_idx"), col("band.band_hash"))
-      .localCheckpoint()
-    // hot detection: persisted corpus occupancy + batch occupancy, for
-    // touched buckets only. batchCnt is batch-bounded → broadcast side of
-    // the buckets scan; batch-only buckets (absent from the corpus) are
-    // recovered with an anti-join against the (small) touched set.
-    val batchCnt = bandB.groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("__bcnt")).localCheckpoint()
-    val touched = bandIndex.buckets
-      .join(broadcast(batchCnt), Seq("band_idx", "band_hash"))
-    val batchOnly = batchCnt.join(touched.select(col("band_idx"), col("band_hash")),
-      Seq("band_idx", "band_hash"), "left_anti")
-    val hot = touched.filter(col("__ccnt") + col("__bcnt") > maxBucket)
-      .select(col("band_idx"), col("band_hash"), col("__hub"))
-      .unionByName(batchOnly.filter(col("__bcnt") > maxBucket)
-        .select(col("band_idx"), col("band_hash"), lit(null).cast("long").as("__hub")))
-      .localCheckpoint()
-    val hotKeys = hot.select(col("band_idx"), col("band_hash"))
-    // cold candidates: batch bands (hot excluded) against the persisted
-    // corpus bands — bounded batch side broadcasts (measured), else merge
-    val coldB = bandB.join(hotKeys, Seq("band_idx", "band_hash"), "left_anti")
-    val coldCands =
-      (if (bandB.count() <= batchBroadcastCap)
-        bandIndex.bands.join(broadcast(coldB), Seq("band_idx", "band_hash"))
-      else bandIndex.bands.hint("merge").join(coldB.hint("merge"), Seq("band_idx", "band_hash")))
-        .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"))
-    // star candidates: hot-bucket batch members against the persisted hub
-    val starCands = bandB.join(hotKeys, Seq("band_idx", "band_hash"), "left_semi")
-      .join(broadcast(hot.filter(col("__hub").isNotNull)), Seq("band_idx", "band_hash"))
-      .select(col("batch_id").as("id_a"), col("__hub").as("id_b"))
-    val cands = coldCands.unionByName(starCands).distinct().localCheckpoint()
-
-    // 3. exact-Jaccard verify: corpus shingles/sizes restricted to the
-    //    candidate corpus docs (semi-join against the bounded candidate
-    //    id set → index scans, no corpus shuffle)
-    val candB = cands.select(col("id_b").as("id")).distinct()
-    val shC = bandIndex.shingles.join(broadcast(candB), Seq("id"), "left_semi")
-    val sizesC = bandIndex.sizes.join(broadcast(candB), Seq("id"), "left_semi")
-    val shAll = shB.unionByName(shC)
-    val sizesAll = shB.groupBy(col("id")).agg(count(lit(1)).as("set_size"))
-      .unionByName(sizesC)
-    val nearOf = ngramJaccardForPairs(shAll, sizesAll, cands, threshold)
-      .groupBy(col("id_a").as("id"))
-      .agg(min(col("id_b")).as("__near_of"))
-
-    val result = exactStatus
-      .join(nearOf, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        when(col("__exact_of").isNotNull, "exact_dup")
-          .when(col("__near_of").isNotNull, "near_dup")
-          .otherwise("new").as("status"),
-        coalesce(col("__exact_of"), col("__near_of")).as("dup_of"))
-      .persist()
-    result.count()
-    exactStatus.unpersist()
-    result
-  }
-
-  /** Fold a batch's accepted documents into a persisted band index:
-    * shingles, sizes and bands for the new ids land as new dirs, the
-    * bucket aggregate is recomputed over the whole band table, and all
-    * four commit as one version. Idempotent under replay: documents whose
-    * id the index already sizes are skipped, and a batch with nothing new
-    * commits nothing — every table commits together, so one guard covers
-    * them all.
-    */
-  def appendToBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      newDocs: DataFrame, idCol: String, textCol: String,
-      autoCompactAt: Int = AutoCompactDefault): Unit = {
-    val m = IndexStore.latest(spark, path)
-    val idx = readBandIndex(spark, path, m)
-    val fresh = newDocs.join(idx.sizes.select(col("id").as(idCol)), Seq(idCol), "left_anti")
-      .localCheckpoint()
-    if (fresh.isEmpty) return
-    val next = IndexStore.commit(spark, path, writeBandDelta(spark, path, m, m.version + 1,
-      shingleTable(fresh, idCol, col(textCol), idx.n)))
-    autoCompactTarget(spark, path, next, BandIndexTables, autoCompactAt)
-      .foreach(compactBandIndex(spark, path, _))
-  }
-
-  // — persisted SEMANTIC incremental-dedup state (vec index) ———————————————
-  //   The embedding twin of the hash/band indexes above:
-  //   [[incrementalSemanticDedup]] rebuilds the corpus xxhash index AND the
-  //   sign-bucket frame every batch — a daily embedding ingest pays a full
-  //   corpus scan per batch for state that did not change. The vec index
-  //   persists both (plus a Bloom sketch over the content hashes, so
-  //   certainly-new batch vectors skip the exact verify join entirely) and
-  //   each batch classifies with batch-sized compute plus column scans of
-  //   the compact index tables joined against broadcast batch-sized frames
-  //   — nothing corpus-scale shuffles per batch.
-
-  /** A loaded persistent vec index. All frames are lazy parquet scans;
-    * `buckets` carries per-bucket corpus occupancy, min-id hub AND the
-    * hub's vector, so hot-bucket detection + star verification need no
-    * corpus aggregate per batch. The hyperplane geometry (numPlanes, dim,
-    * seed) rides in the manifest so batch bucketing can never silently
-    * desynchronize from the persisted corpus bucketing.
-    */
-  final case class VecIndex(
-      hashes: DataFrame,  // (__h xxhash64(vec), __exact_of min id, __rvec rep vector)
-      vecs: DataFrame,    // (corpus_id, __cvec, __bucket)
-      buckets: DataFrame, // (__bucket, __ccnt, __hub, __hubvec)
-      bloom: org.apache.spark.util.sketch.BloomFilter,
-      expectedItems: Long, fpp: Double,
-      numPlanes: Int, dim: Int, seed: Long)
-
-  /** Persist the corpus-side state of [[incrementalSemanticDedup]] as an
-    * [[IndexStore]] version: `vecs`, `hashes` and `buckets` tables, a
-    * sketch over the xxhash64 content keys, and the hyperplane geometry
-    * and sketch params in the manifest. One corpus pass builds the
-    * bucketed vector table; hashes and buckets derive from the persisted
-    * copy, so the artifacts can never disagree.
-    */
-  def writeVecIndex(corpus: DataFrame, idCol: String, vecCol: String, path: String,
-      numPlanes: Int, dim: Int, expectedItems: Long, fpp: Double = 0.01,
-      seed: Long = 42L): Unit = {
-    require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
-    val spark = corpus.sparkSession
-    val v = IndexStore.nextVersion(spark, path)
-    val planes = Similarity.hyperplanes(numPlanes, dim, seed)
-    val vecs = IndexStore.writeTable(path, "vecs", v, corpus
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("__cvec"),
-        Similarity.bucketId(col(vecCol), planes).as("__bucket")))
-    val hashes = IndexStore.writeTable(path, "hashes", v,
-      IndexStore.read(spark, path, "vecs", Seq(vecs))
-        .groupBy(xxhash64(col("__cvec")).as("__h"))
-        .agg(min(col("corpus_id")).as("__exact_of"),
-          min_by(col("__cvec"), col("corpus_id")).as("__rvec")))
-    val bf = bloomOf(IndexStore.read(spark, path, "hashes", Seq(hashes)), col("__h"),
-      expectedItems, fpp)
-    IndexStore.commit(spark, path, IndexStore.Manifest(v,
-      Map("numPlanes" -> numPlanes, "dim" -> dim, "seed" -> seed,
-        "expectedItems" -> expectedItems, "fpp" -> fpp),
-      Map("vecs" -> Seq(vecs), "hashes" -> Seq(hashes),
-        "buckets" -> Seq(writeVecBuckets(spark, path, v, Seq(vecs)))),
-      IndexStore.writeSketch(spark, path, v, bf, expectedItems, fpp)))
-  }
-
-  /** The per-bucket occupancy, min-id hub and hub vector over every
-    * `vecs` dir, as version `v`'s `buckets` dir (an aggregate —
-    * appending would double-count).
-    */
-  private def writeVecBuckets(spark: org.apache.spark.sql.SparkSession, path: String,
-      v: Long, vecs: Seq[IndexStore.WriteDir]): IndexStore.WriteDir =
-    IndexStore.writeTable(path, "buckets", v,
-      IndexStore.read(spark, path, "vecs", vecs)
-        .groupBy(col("__bucket"))
-        .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub"),
-          min_by(col("__cvec"), col("corpus_id")).as("__hubvec")))
-
-  /** Load the committed vec index (lazy parquet frames + sketch). */
-  def readVecIndex(spark: org.apache.spark.sql.SparkSession, path: String): VecIndex =
-    readVecIndex(spark, path, IndexStore.latest(spark, path))
-
-  private def readVecIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      m: IndexStore.Manifest): VecIndex =
-    VecIndex(
-      hashes = IndexStore.read(spark, path, m, "hashes"),
-      vecs = IndexStore.read(spark, path, m, "vecs"),
-      buckets = IndexStore.read(spark, path, m, "buckets"),
-      bloom = IndexStore.readSketch(spark, path, m)._1,
-      expectedItems = m.long("expectedItems"), fpp = m.double("fpp"),
-      numPlanes = m.long("numPlanes").toInt, dim = m.long("dim").toInt,
-      seed = m.long("seed"))
-
-  /** [[incrementalSemanticDedup]] against a persisted [[VecIndex]]:
-    * classification is IDENTICAL to the live operator (the x84 probe
-    * shares x47's per-row value oracle), but the corpus is never
-    * re-hashed or re-bucketed — per-batch corpus cost drops to column
-    * scans of the index tables. The exact stage is additionally
-    * Bloom-pruned: certainly-new vectors (no false negatives) skip the
-    * hash verify join entirely; positives verify by array equality
-    * against the persisted hash group's min-id representative, so the
-    * classification stays exact (same 64-bit-collision fine print as the
-    * live operator). Hot buckets: persisted corpus occupancy + batch
-    * occupancy for buckets the batch TOUCHES; star degradation pairs
-    * hot-bucket batch members with the persisted min-id hub, verified
-    * against the persisted hub vector. Returns the same eager cached
-    * (idCol, status, dup_of) frame — `unpersist()` when done.
-    */
-  def incrementalSemanticIndexed(index: VecIndex, batch: DataFrame,
-      idCol: String, vecCol: String, threshold: Double,
-      maxBucket: Int = DefaultMaxBucket,
-      batchBroadcastCap: Long = BatchBroadcastCap): DataFrame = {
-    val planes = Similarity.hyperplanes(index.numPlanes, index.dim, index.seed)
-    val idType = index.hashes.schema("__exact_of").dataType
-    val keyedB = batch.select(col(idCol).as("id"), col(vecCol).as("__bvec"),
-      xxhash64(col(vecCol)).as("__h"))
-    // 1. exact: Bloom prune, then verify positives against the persisted
-    //    hash index (rep-vector equality keeps it exact)
-    val positive = keyedB
-      .filter(graft.functions.BloomFunctions.mightContain(col("__h"), index.bloom))
-      .join(index.hashes, Seq("__h"), "left")
-      .select(col("id"), col("__bvec"),
-        when(col("__exact_of").isNotNull && col("__bvec") === col("__rvec"),
-          col("__exact_of")).as("__exact_of"))
-    val negative = keyedB
-      .filter(!graft.functions.BloomFunctions.mightContain(col("__h"), index.bloom))
-      .select(col("id"), col("__bvec"), lit(null).cast(idType).as("__exact_of"))
-    val exactStatus = positive.unionByName(negative).persist()
-    exactStatus.count()
-
-    // 2. near: batch-side bucketing only; corpus side comes from the index
-    val bB = exactStatus.filter(col("__exact_of").isNull)
-      .select(col("id").as("batch_id"), col("__bvec"),
-        Similarity.bucketId(col("__bvec"), planes).as("__bucket"))
-      .localCheckpoint()
-    // hot detection: persisted corpus occupancy + batch occupancy for
-    // touched buckets only (corpus-hot buckets the batch never probes
-    // generate no candidates in the live operator either); batch-only
-    // buckets are recovered with an anti-join against the touched set
-    val batchCnt = bB.groupBy(col("__bucket"))
-      .agg(count(lit(1)).as("__bcnt")).localCheckpoint()
-    val touched = index.buckets.join(broadcast(batchCnt), Seq("__bucket"))
-    val batchOnly = batchCnt.join(touched.select(col("__bucket")),
-      Seq("__bucket"), "left_anti")
-    val vecType = index.vecs.schema("__cvec").dataType
-    val hot = touched.filter(col("__ccnt") + col("__bcnt") > maxBucket)
-      .select(col("__bucket"), col("__hub"), col("__hubvec"))
-      .unionByName(batchOnly.filter(col("__bcnt") > maxBucket)
-        .select(col("__bucket"), lit(null).cast(idType).as("__hub"),
-          lit(null).cast(vecType).as("__hubvec")))
-      .localCheckpoint()
-    val hotKeys = hot.select(col("__bucket"))
-    // cold candidates: persisted corpus vectors against the (bounded)
-    // batch side — byte-aware broadcast license, merge-join degrade on
-    // BOTH sides past it (same discipline as the live operator)
-    val vecCap = math.min(batchBroadcastCap, Similarity.vecBroadcastRows(index.dim))
-    val coldB = bB.join(hotKeys, Seq("__bucket"), "left_anti")
-    val cold =
-      if (bB.count() <= vecCap) index.vecs.join(broadcast(coldB), Seq("__bucket"))
-      else index.vecs.hint("merge").join(coldB.hint("merge"), Seq("__bucket"))
-    // star candidates: hot-bucket batch members vs the persisted hub (a
-    // null hub = batch-only hot bucket — no corpus member to match)
-    val star = bB.join(hotKeys, Seq("__bucket"), "left_semi")
-      .join(broadcast(hot.filter(col("__hub").isNotNull)), Seq("__bucket"))
-      .select(col("batch_id"), col("__bvec"),
-        col("__hub").as("corpus_id"), col("__hubvec").as("__cvec"))
-    val pairCols = Seq(col("batch_id"), col("__bvec"), col("corpus_id"), col("__cvec"))
-    val nearOf = cold.select(pairCols: _*).unionByName(star.select(pairCols: _*))
-      .withColumn("__cos", round(Similarity.cosine(col("__bvec"), col("__cvec")), 6))
-      .filter(col("__cos") >= threshold)
-      .groupBy(col("batch_id").as("id"))
-      .agg(min(col("corpus_id")).as("__near_of"))
-
-    val result = exactStatus
-      .join(nearOf, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        when(col("__exact_of").isNotNull, "exact_dup")
-          .when(col("__near_of").isNotNull, "near_dup")
-          .otherwise("new").as("status"),
-        coalesce(col("__exact_of"), col("__near_of")).as("dup_of"))
-      .persist()
-    result.count()
-    exactStatus.unpersist()
-    result
-  }
-
-  /** Fold a batch's accepted vectors into a persisted vec index: bucketed
-    * vector rows for the new ids and new hash rows (anti-joined on the
-    * content key — keep-first: an existing hash group's representative
-    * survives; intra-batch duplicates elect min id) land as new dirs, the
-    * bucket aggregate is recomputed over the whole vector table, the
-    * hash keys merge into the sketch, and all of it commits as one
-    * version (a batch with nothing new commits nothing). The sketch
-    * saturates past `expectedItems` total inserts (fpp degrades,
-    * correctness doesn't — positives always verify); rewrite with
-    * [[writeVecIndex]] when the corpus outgrows it.
-    */
-  def appendToVecIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      newVecs: DataFrame, idCol: String, vecCol: String,
-      autoCompactAt: Int = AutoCompactDefault): Unit = {
-    val m = IndexStore.latest(spark, path)
-    val idx = readVecIndex(spark, path, m)
-    val planes = Similarity.hyperplanes(idx.numPlanes, idx.dim, idx.seed)
-    val freshVecRows = newVecs
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("__cvec"),
-        Similarity.bucketId(col(vecCol), planes).as("__bucket"))
-      .join(idx.vecs.select(col("corpus_id")), Seq("corpus_id"), "left_anti")
-      .localCheckpoint()
-    val freshHashes = newVecs
-      .select(xxhash64(col(vecCol)).as("__h"), col(idCol).as("__cid"),
-        col(vecCol).as("__v"))
-      .groupBy(col("__h"))
-      .agg(min(col("__cid")).as("__exact_of"), min_by(col("__v"), col("__cid")).as("__rvec"))
-      .join(idx.hashes.select(col("__h")), Seq("__h"), "left_anti")
-      .localCheckpoint()
-    if (freshVecRows.isEmpty && freshHashes.isEmpty) return
-    idx.bloom.mergeInPlace(bloomOf(freshHashes, col("__h"), idx.expectedItems, idx.fpp))
-    val v = m.version + 1
-    val vecs = m.tables("vecs") :+ IndexStore.writeTable(path, "vecs", v, freshVecRows)
-    val next = IndexStore.commit(spark, path, m.copy(version = v,
-      tables = Map("vecs" -> vecs,
-        "hashes" -> (m.tables("hashes") :+ IndexStore.writeTable(path, "hashes", v, freshHashes)),
-        "buckets" -> Seq(writeVecBuckets(spark, path, v, vecs))),
-      sketch = IndexStore.writeSketch(spark, path, v, idx.bloom, idx.expectedItems, idx.fpp)))
-    autoCompactTarget(spark, path, next, VecIndexTables, autoCompactAt)
-      .foreach(compactVecIndex(spark, path, _))
-  }
-
   // — batch-index COMPACTION (small-file maintenance for the append
   //   deltas) ———————————————————————————————————————————————————————————
   //   Every batch append commits one more write dir per table: months of
-  //   daily appends reproduce the small-file swamp the streaming
-  //   IngestIndex solves for its partitioned layout. A compaction rewrites
+  //   daily appends reproduce the small-file swamp. A compaction rewrites
   //   tables into few files and commits them as one [[IndexStore]]
   //   version naming only the rewritten dirs; a crash before that commit
-  //   leaves the previous version current.
-
-  /** Table sets for the convenience wrappers below. */
-  private val BandIndexTables = Seq("shingles", "sizes", "bands")
-  private val VecIndexTables = Seq("vecs", "hashes")
+  //   leaves the previous version current. (The band and vec indexes fold
+  //   into their `__ingest=-1` base instead: [[compactIngestIndex]].)
 
   /** Default part-file trigger for append-side auto-compaction: every
     * batch append adds ~one shuffle's worth of part files, so the
@@ -2206,8 +1600,7 @@ object Dedup {
     val maxFiles = tables.map(m.files).max
     if (at <= 0 || maxFiles < at) None
     else {
-      val maxPartBytes = spark.sessionState.conf.filesMaxPartitionBytes
-      val target = math.max(1L, (tables.map(m.bytes).max + maxPartBytes - 1) / maxPartBytes).toInt
+      val target = foldFiles(spark, tables.map(m.bytes).max)
       System.err.println(
         s"""{"index_auto_compact":${"\"" + path + "\""},"part_files":$maxFiles,"trigger":$at,"target_files":$target}""")
       Some(target)
@@ -2239,19 +1632,6 @@ object Dedup {
   def compactParagraphIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int = 1): Unit =
     compactIndexTables(spark, path, Seq("paras"), targetFiles)
-
-  /** [[compactIndexTables]] over [[writeBandIndex]]'s layout (`buckets` is
-    * excluded: each append already rewrites it whole).
-    */
-  def compactBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFiles: Int = 1): Unit =
-    compactIndexTables(spark, path, BandIndexTables, targetFiles)
-
-  /** [[compactIndexTables]] over [[writeVecIndex]]'s layout (`buckets`
-    * excluded, same reason as the band index). */
-  def compactVecIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      targetFiles: Int = 1): Unit =
-    compactIndexTables(spark, path, VecIndexTables, targetFiles)
 
   // — duplication-aware SOFT dedup —————————————————————————————————————————
 
@@ -2341,41 +1721,45 @@ object Dedup {
     docs.join(kept, Seq(idCol), "left_semi")
   }
 
-  // — streaming-maintained ingest index ————————————————————————————————————
-  //   The STREAMING twin of the hash/band indexes above, designed for a
-  //   sink that must be exactly-once under micro-batch replay. Two deltas
-  //   from [[writeHashIndex]]/[[writeBandIndex]]:
+  // — the BAND index: persisted near-dup state, batch and streaming ————————
+  //   One layout serves the batch daily-ingest API ([[writeBandIndex]],
+  //   [[appendToBandIndex]], [[incrementalDedupIndexed]]) and the
+  //   exactly-once streaming sink ([[initIngestIndex]],
+  //   [[appendToIngestIndex]], [[probeIngestIndex]]), and
+  //   [[incrementalDedup]] probes the same tables derived, unpersisted,
+  //   from a live corpus. The index persists the corpus content hashes,
+  //   shingle table and banded signatures, so a batch classifies with
+  //   batch-sized compute plus column scans of the compact index tables
+  //   instead of a corpus tokenize + shingle + MinHash per batch.
   //
   //   1. BATCH PROVENANCE. Each append commits one [[IndexStore]] version
   //      whose write dirs hold the batch's rows under an
   //      `__ingest=<batchId>` partition, and the manifest records which
-  //      batch each write dir holds. So (a) a replayed append replaces the
-  //      dirs its earlier attempt committed — no anti-join guards — and
-  //      (b) a probe can EXCLUDE the current batch id, so a replay that
-  //      crashed after its index append still classifies against exactly
-  //      the pre-append corpus and reproduces the original decision.
-  //      Without the exclusion, a replayed batch would find its own
-  //      first-attempt rows and classify every doc as a duplicate of
-  //      itself, emptying the corpus partition it is about to rewrite.
-  //   2. NO PERSISTED BUCKET AGGREGATE. [[appendToBandIndex]] recomputes
-  //      the bucket table from the FULL band table per append — a
-  //      corpus-scale aggregate per micro-batch. Here occupancy and hub
-  //      are computed per batch for TOUCHED buckets only, from a band-scan
-  //      joined against the broadcast batch key set (map-side-combined, so
-  //      the shuffled state is touched-bucket counts — batch-bounded).
-  //      The probe thus pays two column scans of the compact band table
-  //      (occupancy + candidates) instead of one scan each of buckets and
-  //      bands, and the append drops to pure parquet partition writes.
+  //      batch each write dir holds (a batch-API append is the batch whose
+  //      id is its version). So (a) a replayed append replaces the dirs
+  //      its earlier attempt committed, and (b) a probe can EXCLUDE the
+  //      current batch id, so a stream replay that crashed after its index
+  //      append still classifies against exactly the pre-append corpus and
+  //      reproduces the original decision. Without the exclusion, a
+  //      replayed batch would find its own first-attempt rows and classify
+  //      every doc as a duplicate of itself.
+  //   2. NO PERSISTED BUCKET AGGREGATE. An append writes the batch's own
+  //      rows and nothing else, so its cost tracks the batch, not the
+  //      corpus. The probe derives occupancy and hub for the buckets the
+  //      batch TOUCHES from a band-table scan joined against the broadcast
+  //      batch key set (map-side-combined, so the shuffled state is
+  //      touched-bucket counts — batch-bounded): two column scans of the
+  //      band table per probe (occupancy + candidates).
   //
-  //   Sketch: every append commits a fresh sketch, the previous one
-  //   OR-ed with the batch's content keys. A replaced attempt's keys stay
-  //   in it, which is harmless: positives always verify against the
+  //   Sketch: every append commits a fresh sketch, the previous one OR-ed
+  //   with the batch's content keys. A replaced attempt's keys stay in it,
+  //   which is harmless: positives always verify against the
   //   provenance-FILTERED hash table.
 
-  /** A loaded streaming ingest index. Frames are lazy parquet scans
-    * carrying the `__ingest` partition column (empty frames with that
-    * schema for a table no write has reached yet); only the Bloom sketch
-    * is driver-held.
+  /** A loaded band index. Frames are lazy parquet scans carrying the
+    * `__ingest` partition column (empty frames with that schema for a
+    * table no write has reached yet); only the Bloom sketch is
+    * driver-held.
     */
   final case class IngestIndex(
       hashes: DataFrame,   // (__h sha256 hex, __exact_of min id, __ingest)
@@ -2385,17 +1769,44 @@ object Dedup {
       expectedItems: Long, fpp: Double,
       n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int)
 
-  /** Commit version 1 of an EMPTY ingest index: the `geometry`, the
-    * sketch params and an empty sketch. Probing it classifies everything
-    * `new`, so the first batch needs no special casing.
+  /** Content-hash rows: `__h` (sha256 of the tagged text) and
+    * `__exact_of`, the min id per hash.
+    */
+  private def hashRows(docs: DataFrame, idCol: String, text: Column): DataFrame =
+    docs.select(sha2(tagged(text), 256).as("__h"), col(idCol).as("__cid"))
+      .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of"))
+
+  /** The banded signatures of a [[shingleTable]]: (corpus_id, band_idx,
+    * band_hash).
+    */
+  private def bandRows(sh: DataFrame, numPerm: Int, numBands: Int, rowsPerBand: Int): DataFrame =
+    minhashFromShingles(sh, numPerm)
+      .select(col("id").as("corpus_id"),
+        explode(array(bandExprs(numBands, rowsPerBand): _*)).as("band"))
+      .select(col("corpus_id"), col("band.band_idx"), col("band.band_hash"))
+
+  /** The manifest an EMPTY ingest index would have as the version before
+    * `path`'s next one: `geometry` and the sketch params, no tables. A
+    * build appends to it and commits once; [[initIngest]] commits it
+    * with an empty sketch.
+    */
+  private def emptyIngest(spark: org.apache.spark.sql.SparkSession, path: String,
+      geometry: Map[String, Any], expectedItems: Long, fpp: Double): IndexStore.Manifest = {
+    require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
+    IndexStore.Manifest(IndexStore.nextVersion(spark, path) - 1,
+      geometry ++ Map("expectedItems" -> expectedItems, "fpp" -> fpp), Map.empty)
+  }
+
+  /** Commit an EMPTY ingest index: the `geometry`, the sketch params and
+    * an empty sketch. Probing it classifies everything `new`, so the
+    * first batch needs no special casing.
     */
   private def initIngest(spark: org.apache.spark.sql.SparkSession, path: String,
       geometry: Map[String, Any], expectedItems: Long, fpp: Double): Unit = {
-    require(expectedItems > 0, s"expectedItems must be positive, got $expectedItems")
-    val v = IndexStore.nextVersion(spark, path)
-    IndexStore.commit(spark, path, IndexStore.Manifest(v,
-      geometry ++ Map("expectedItems" -> expectedItems, "fpp" -> fpp), Map.empty,
-      IndexStore.writeSketch(spark, path, v, emptyBloom(spark, expectedItems, fpp), expectedItems, fpp)))
+    val m = emptyIngest(spark, path, geometry, expectedItems, fpp)
+    val v = m.version + 1
+    IndexStore.commit(spark, path, m.copy(version = v,
+      sketch = IndexStore.writeSketch(spark, path, v, emptyBloom(spark, expectedItems, fpp), expectedItems, fpp)))
   }
 
   /** The ingest batch the manifest `m` records for write dir `dir`
@@ -2421,7 +1832,7 @@ object Dedup {
     */
   private def commitIngest(spark: org.apache.spark.sql.SparkSession, path: String,
       m: IndexStore.Manifest, v: Long, tables: Map[String, Seq[IndexStore.WriteDir]],
-      batch: Long, sketch: Option[String]): Unit = {
+      batch: Long, sketch: Option[String]): IndexStore.Manifest = {
     val live = tables.map { case (t, ds) => t -> ds.filter(_.files > 0) }
     IndexStore.commit(spark, path, m.copy(version = v,
       meta = m.meta.filterNot(_._1.startsWith("ingest:")) ++ live.values.flatten.map(d =>
@@ -2429,18 +1840,19 @@ object Dedup {
       tables = live, sketch = sketch))
   }
 
-  /** The shared append of both ingest families: write each of `tables`
-    * as the next version's dir partitioned by `__ingest = ingestId`, drop
-    * the dirs an earlier attempt committed for `ingestId`, merge the
-    * `key`s of `keyed` into `bloom` and commit all of it as one version.
+  /** The shared append of both ingest families: on top of `m`, write each
+    * of `tables` as the next version's dir partitioned by `__ingest =
+    * ingestId`, drop the dirs an earlier attempt committed for
+    * `ingestId`, merge the `key`s of `keyed` into `bloom` and commit all
+    * of it as one version, which is returned.
     */
   private def appendIngest(spark: org.apache.spark.sql.SparkSession, path: String,
-      ingestId: Long, tables: Seq[(String, DataFrame)],
-      bloom: org.apache.spark.util.sketch.BloomFilter, keyed: DataFrame, key: Column): Unit = {
+      m: IndexStore.Manifest, ingestId: Long, tables: Seq[(String, DataFrame)],
+      bloom: org.apache.spark.util.sketch.BloomFilter, keyed: DataFrame,
+      key: Column): IndexStore.Manifest = {
     require(ingestId >= 0,
       s"ingestId must be non-negative (got $ingestId): negative ids are reserved " +
         "for compaction base partitions")
-    val m = IndexStore.latest(spark, path)
     val v = m.version + 1
     val (items, fpp) = (m.long("expectedItems"), m.double("fpp"))
     bloom.mergeInPlace(bloomOf(keyed, key, items, fpp))
@@ -2450,10 +1862,20 @@ object Dedup {
     }.toMap, ingestId, IndexStore.writeSketch(spark, path, v, bloom, items, fpp))
   }
 
+  /** The part files a fold of `bytes` writes: one per
+    * `spark.sql.files.maxPartitionBytes`, so a large index folds to
+    * scan-parallel files.
+    */
+  private def foldFiles(spark: org.apache.spark.sql.SparkSession, bytes: Long): Int = {
+    val maxPartBytes = spark.sessionState.conf.filesMaxPartitionBytes
+    math.max(1L, (bytes + maxPartBytes - 1) / maxPartBytes).toInt
+  }
+
   /** The shared compaction of both ingest families: fold every committed
     * write dir except those holding `keepIngest` into one `__ingest=-1`
-    * dir per table and commit that as one version (the sketch stays).
-    * Nothing is committed when the fold would only rewrite the base.
+    * dir per table, in [[foldFiles]] part files, and commit that as one
+    * version (the sketch stays). Nothing is committed when the fold would
+    * only rewrite the base.
     */
   private def compactIngest(spark: org.apache.spark.sql.SparkSession, path: String,
       keepIngest: Option[Long]): Unit = {
@@ -2466,32 +1888,117 @@ object Dedup {
     commitIngest(spark, path, m, v, m.tables.map { case (t, ds) =>
       val f = folds(t)
       val base = if (f.isEmpty) Nil else Seq(IndexStore.writeTable(path, t, v,
-        IndexStore.read(spark, path, t, f).withColumn("__ingest", lit(-1L)), Seq("__ingest")))
+        IndexStore.read(spark, path, t, f).coalesce(foldFiles(spark, f.map(_.bytes).sum))
+          .withColumn("__ingest", lit(-1L)), Seq("__ingest")))
       t -> (base ++ ds.diff(f))
     }, -1L, m.sketch)
   }
 
-  /** Create an EMPTY ingest index: version 1 holds the banding geometry,
-    * the sketch params and an empty sketch. Tables materialize on the
-    * first [[appendToIngestIndex]].
+  /** The batch-API append tail: fold the index at `path` into its base
+    * once a table of `m` holds `autoCompactAt` part files (0 disables).
+    */
+  private def autoFold(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, tables: Seq[String], autoCompactAt: Int): Unit =
+    autoCompactTarget(spark, path, m, tables, autoCompactAt).foreach(_ => compactIngest(spark, path, None))
+
+  /** `rows` without those whose `key` the one-column frame `known` holds:
+    * the replay guard of a batch append, as a scan of `known` joined
+    * against the broadcast batch keys, so nothing corpus-scale shuffles.
+    */
+  private def unseen(rows: DataFrame, key: String, known: DataFrame): DataFrame =
+    rows.join(known.join(broadcast(rows.select(col(key))), Seq(key), "left_semi"), Seq(key), "left_anti")
+
+  /** Append `docs` (`idCol`, text) on top of `m` as batch `ingestId`:
+    * their content hashes (without those in `known`, when given — the
+    * batch API's keep-first guard), shingles and bands.
+    */
+  private def appendBand(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, ingestId: Long, docs: DataFrame, idCol: String, text: Column,
+      bloom: org.apache.spark.util.sketch.BloomFilter, known: Option[DataFrame]): IndexStore.Manifest = {
+    val fresh = hashRows(docs, idCol, text).localCheckpoint()
+    val hashes = known.fold(fresh)(h => unseen(fresh, "__h", h.select(col("__h"))).localCheckpoint())
+    // one shingle table feeds shingles AND bands; the probe derives set
+    // sizes from its shingle scan
+    val sh = shingleTable(docs, idCol, text, m.long("n").toInt).localCheckpoint()
+    appendIngest(spark, path, m, ingestId, Seq("hashes" -> hashes, "shingles" -> sh,
+      "bands" -> bandRows(sh, m.long("numPerm").toInt, m.long("numBands").toInt,
+        m.long("rowsPerBand").toInt)), bloom, hashes, xxhash64(col("__h")))
+  }
+
+  private def bandGeometry(n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int): Map[String, Any] = {
+    require(numBands * rowsPerBand == numPerm,
+      s"numBands ($numBands) × rowsPerBand ($rowsPerBand) must equal numPerm ($numPerm)")
+    Map("n" -> n, "numPerm" -> numPerm, "numBands" -> numBands, "rowsPerBand" -> rowsPerBand)
+  }
+
+  /** Build a band index over `corpus` as one [[IndexStore]] version: an
+    * empty index plus the corpus appended as the batch whose id is that
+    * version. The sketch is sized to the corpus (1% fpp); appends past it
+    * degrade the fpp, never correctness — rebuild when the corpus
+    * outgrows it. Read it with [[readIngestIndex]].
+    */
+  def writeBandIndex(corpus: DataFrame, idCol: String, text: Column, path: String,
+      n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int): Unit = {
+    val spark = corpus.sparkSession
+    val docs = corpus.select(col(idCol), text.as("__text")).localCheckpoint()
+    val m = emptyIngest(spark, path, bandGeometry(n, numPerm, numBands, rowsPerBand),
+      math.max(1L, docs.count()), 0.01)
+    appendBand(spark, path, m, m.version + 1, docs, idCol, col("__text"),
+      emptyBloom(spark, m.long("expectedItems"), m.double("fpp")), None)
+  }
+
+  /** Fold a batch's accepted documents into a band index as the batch
+    * whose id is the next version. Idempotent under replay: documents
+    * whose id the index already bands are skipped, and a batch with
+    * nothing new commits nothing; content hashes the index already holds
+    * keep their first id. Only the batch's own rows are written — no
+    * corpus-scale aggregate — and the index folds into its base once a
+    * table holds `autoCompactAt` part files ([[compactIngestIndex]]; 0
+    * disables).
+    */
+  def appendToBandIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      newDocs: DataFrame, idCol: String, textCol: String,
+      autoCompactAt: Int = AutoCompactDefault): Unit = {
+    val m = IndexStore.latest(spark, path)
+    val idx = readIngest(spark, path, m, newDocs.schema(idCol).dataType)
+    val fresh = unseen(newDocs.select(col(idCol), col(textCol)), idCol,
+      idx.bands.select(col("corpus_id").as(idCol))).localCheckpoint()
+    if (fresh.isEmpty) return
+    autoFold(spark, path, appendBand(spark, path, m, m.version + 1, fresh, idCol, col(textCol),
+      idx.bloom, Some(idx.hashes)), Seq("hashes", "shingles", "bands"), autoCompactAt)
+  }
+
+  /** [[incrementalDedup]] against a band index, nothing excluded: the
+    * same [[probeNear]] classification, with the corpus side read from
+    * the index. Returns the eager cached (idCol, status, dup_of) frame —
+    * `unpersist()` it when done.
+    */
+  def incrementalDedupIndexed(index: IngestIndex, batch: DataFrame, idCol: String,
+      textCol: String, threshold: Double, maxBucket: Int = DefaultMaxBucket,
+      batchBroadcastCap: Long = BatchBroadcastCap): DataFrame =
+    probeNear(index.hashes, index.shingles, index.bands, Some(index.bloom), index.n,
+      index.numPerm, index.numBands, index.rowsPerBand, batch, idCol, col(textCol), threshold,
+      maxBucket, batchBroadcastCap)
+
+  /** Create an EMPTY band index for a stream: version 1 holds the banding
+    * geometry, the sketch params and an empty sketch. Tables materialize
+    * on the first [[appendToIngestIndex]].
     */
   def initIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int,
-      expectedItems: Long, fpp: Double = 0.01): Unit = {
-    require(numBands * rowsPerBand == numPerm,
-      s"numBands ($numBands) × rowsPerBand ($rowsPerBand) must equal numPerm ($numPerm)")
-    initIngest(spark, path,
-      Map("n" -> n, "numPerm" -> numPerm, "numBands" -> numBands, "rowsPerBand" -> rowsPerBand),
-      expectedItems, fpp)
-  }
+      expectedItems: Long, fpp: Double = 0.01): Unit =
+    initIngest(spark, path, bandGeometry(n, numPerm, numBands, rowsPerBand), expectedItems, fpp)
 
-  /** Load the committed ingest index. `idType` supplies the id column
-    * type of a table no write has reached yet (an empty frame).
+  /** Load the committed band index. `idType` supplies the id column type
+    * of a table no write has reached yet (an empty frame).
     */
   def readIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      idType: org.apache.spark.sql.types.DataType): IngestIndex = {
+      idType: org.apache.spark.sql.types.DataType): IngestIndex =
+    readIngest(spark, path, IndexStore.latest(spark, path), idType)
+
+  private def readIngest(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, idType: org.apache.spark.sql.types.DataType): IngestIndex = {
     import org.apache.spark.sql.types._
-    val m = IndexStore.latest(spark, path)
     IngestIndex(
       ingestTable(spark, path, m, "hashes",
         StructField("__h", StringType), StructField("__exact_of", idType)),
@@ -2504,107 +2011,91 @@ object Dedup {
       m.long("rowsPerBand").toInt)
   }
 
-  /** [[incrementalDedup]] against a streaming [[IngestIndex]], excluding
-    * rows appended by ingest `excludeIngest` (pass the CURRENT batch id:
-    * on a clean first attempt the partition doesn't exist and the filter
-    * is a no-op; on a crash replay it hides the first attempt's own
-    * appends, so the replay reproduces the original classification).
-    * Classification is identical to the live operator — exact via the
-    * Bloom-pruned hash probe, near via band candidates (hot buckets
-    * star-degrade to the persisted min-id hub) with exact-Jaccard
-    * verification.
-    *
-    * Per-batch corpus cost: the exact verify join of the Bloom positives,
-    * plus two column scans of the compact band table — occupancy for
-    * TOUCHED buckets (aggregated map-side; shuffled state is
-    * batch-bounded) and candidate generation — plus shingle/size scans
-    * restricted to candidate ids. Every corpus-side scan joins against a
-    * broadcast batch-bounded frame (evidence-gated: past
-    * `batchBroadcastCap` the candidate join merge-hints BOTH sides), so
-    * nothing corpus-scale shuffles per batch. Returns the eager cached
+  /** [[incrementalDedupIndexed]] excluding rows appended by ingest
+    * `excludeIngest` (pass the CURRENT batch id: on a clean first attempt
+    * the partition doesn't exist and the filter is a no-op; on a crash
+    * replay it hides the first attempt's own appends, so the replay
+    * reproduces the original classification). Returns the eager cached
     * (idCol, status, dup_of) frame — `unpersist()` it when done.
     */
   def probeIngestIndex(index: IngestIndex, batch: DataFrame, idCol: String,
       textCol: String, threshold: Double, excludeIngest: Long,
       maxBucket: Int = DefaultMaxBucket,
       batchBroadcastCap: Long = BatchBroadcastCap): DataFrame = {
-    import index.{n, numPerm, numBands, rowsPerBand}
-    val idType = batch.schema(idCol).dataType
     def excl(df: DataFrame): DataFrame =
       df.filter(col("__ingest").cast("long") =!= excludeIngest)
-    // 1. exact via the provenance-filtered hash table (Bloom-pruned; a
-    //    replayed batch's own keys in the sketch just verify-fail)
-    val keyed = batch.select(col(idCol).as("id"),
-      sha2(tagged(col(textCol)), 256).as("__h"))
-    val exact = classifyExactWithBloom(
-      excl(index.hashes).select(col("__h"), col("__exact_of")),
-      index.bloom, keyed, idCol, idType)
-    val exactStatus = exact
-      .select(col(idCol).as("id"),
-        when(col("status") === "exact_dup", col("dup_of")).as("__exact_of"))
-      .persist()
-    exactStatus.count()
-    exact.unpersist()
+    probeNear(excl(index.hashes), excl(index.shingles), excl(index.bands), Some(index.bloom),
+      index.n, index.numPerm, index.numBands, index.rowsPerBand, batch, idCol, col(textCol),
+      threshold, maxBucket, batchBroadcastCap)
+  }
 
-    // 2. near: batch-side shingles + signatures; corpus side from the index
-    val survivors = batch.join(
-      exactStatus.filter(col("__exact_of").isNotNull).select(col("id").as(idCol)),
-      Seq(idCol), "left_anti")
-    val shB = shingleTable(survivors, idCol, col(textCol), n).localCheckpoint()
-    val bandB = minhashFromShingles(shB, numPerm)
-      .select(col("id").as("batch_id"),
-        explode(array(bandExprs(numBands, rowsPerBand): _*)).as("band"))
-      .select(col("batch_id"), col("band.band_idx"), col("band.band_hash"))
-      .localCheckpoint()
-    val bandsF = excl(index.bands)
-      .select(col("corpus_id"), col("band_idx"), col("band_hash"))
-    // occupancy scan: corpus count + min-id hub for touched buckets only
-    // (a left join covers batch-only buckets — null __ccnt/__hub)
-    val batchCnt = bandB.groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("__bcnt")).localCheckpoint()
-    val corpusOcc = bandsF
-      .join(broadcast(batchCnt.select(col("band_idx"), col("band_hash"))),
-        Seq("band_idx", "band_hash"))
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub"))
-    val hot = batchCnt.join(corpusOcc, Seq("band_idx", "band_hash"), "left")
+  /** The exact stage of both probes: each `keyed` row (id, __h, …) gains
+    * `__exact_of`, the index's id for its content hash — null when the
+    * sketch test `might` rules the row out, no `hashes` row matches, or
+    * `verify` (over the joined row) fails. Within `cap` batch rows the
+    * hash scan is cut to the batch's keys by a broadcast semi-join (no
+    * corpus shuffle); past it both sides merge-join. Either way no
+    * broadcast is ever built from the index side. Eager and cached.
+    */
+  private def exactOf(keyed: DataFrame, hashes: DataFrame, might: Option[Column],
+      verify: Column, cap: Long): DataFrame = {
+    val probed = might.fold(keyed)(keyed.filter)
+    val joined =
+      if (keyed.count() <= cap)
+        probed.join(hashes.join(broadcast(probed.select(col("__h"))), Seq("__h"), "left_semi"),
+          Seq("__h"), "left")
+      else probed.hint("merge").join(hashes.hint("merge"), Seq("__h"), "left")
+    val matched = joined.select(keyed.columns.map(col) :+ when(verify, col("__exact_of")).as("__exact_of"): _*)
+    val out = might.fold(matched)(m => matched.unionByName(keyed.filter(!m)
+      .withColumn("__exact_of", lit(null).cast(hashes.schema("__exact_of").dataType)))).persist()
+    out.count()
+    out
+  }
+
+  /** The candidate stage of both probes: batch rows `b` (batch_id, `keys`,
+    * …) against index rows `c` (corpus_id, `keys`, `pay`). Occupancy and
+    * the min-id hub (with its `pay`) of each bucket the batch TOUCHES come
+    * from a scan of `c` joined against the broadcast batch keys (corpus
+    * buckets the batch never probes generate no candidates). A bucket
+    * whose corpus + batch occupancy passes `maxBucket` is hot: its batch
+    * rows pair with the hub only (star — linear in the batch, and a batch
+    * row that duplicates a mass-dup corpus cluster is still found; a null
+    * hub is a batch-only bucket, with no corpus member to match). Cold
+    * rows pair with every corpus row of their bucket: the batch side
+    * broadcasts within `cap` rows, else both sides merge-join — a
+    * shuffled hash join would build from whichever side an unreliable
+    * estimate calls smaller. Returns (b's non-key columns, corpus_id, `pay`).
+    */
+  private def bucketPairs(b: DataFrame, c: DataFrame, keys: Seq[String], pay: Seq[String],
+      maxBucket: Int, cap: Long): DataFrame = {
+    val keyCols = keys.map(col)
+    val batchCnt = b.groupBy(keyCols: _*).agg(count(lit(1)).as("__bcnt"))
+    val corpusOcc = c.join(broadcast(batchCnt.select(keyCols: _*)), keys)
+      .groupBy(keyCols: _*)
+      .agg(count(lit(1)).as("__ccnt"),
+        min(col("corpus_id")).as("__hub") +: pay.map(p => min_by(col(p), col("corpus_id")).as(p)): _*)
+    val hot = batchCnt.join(corpusOcc, keys, "left")
       .filter(coalesce(col("__ccnt"), lit(0L)) + col("__bcnt") > maxBucket)
-      .select(col("band_idx"), col("band_hash"), col("__hub"))
+      .select((keys ++ ("__hub" +: pay)).map(col): _*)
       .localCheckpoint()
-    val hotKeys = hot.select(col("band_idx"), col("band_hash"))
-    // candidate scan: cold batch bands against the filtered corpus bands
-    val coldB = bandB.join(hotKeys, Seq("band_idx", "band_hash"), "left_anti")
-    val coldCands =
-      (if (bandB.count() <= batchBroadcastCap)
-        bandsF.join(broadcast(coldB), Seq("band_idx", "band_hash"))
-      else bandsF.hint("merge").join(coldB.hint("merge"), Seq("band_idx", "band_hash")))
-        .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"))
-    // star: hot-bucket batch members vs the hub (null hub = batch-only)
-    val starCands = bandB.join(hotKeys, Seq("band_idx", "band_hash"), "left_semi")
-      .join(broadcast(hot.filter(col("__hub").isNotNull)), Seq("band_idx", "band_hash"))
-      .select(col("batch_id").as("id_a"), col("__hub").as("id_b"))
-    val cands = coldCands.unionByName(starCands).distinct().localCheckpoint()
+    val hotKeys = hot.select(keyCols: _*)
+    val coldB = b.join(hotKeys, keys, "left_anti")
+    val cold =
+      if (b.count() <= cap) c.join(broadcast(coldB), keys)
+      else c.hint("merge").join(coldB.hint("merge"), keys)
+    val star = b.join(hotKeys, keys, "left_semi")
+      .join(broadcast(hot.filter(col("__hub").isNotNull)), keys)
+      .withColumnRenamed("__hub", "corpus_id")
+    val out = (b.columns.filterNot(keys.contains) ++ ("corpus_id" +: pay)).map(col)
+    cold.select(out: _*).unionByName(star.select(out: _*))
+  }
 
-    // 3. exact-Jaccard verify: corpus shingles/sizes restricted to the
-    //    candidate corpus docs
-    val candB = cands.select(col("id_b").as("id")).distinct()
-    // the candidate semi-join keeps each candidate doc's FULL shingle set,
-    // so set sizes derive from this scan — no separate sizes table (one
-    // fewer write per append, one fewer scan per probe); pinned because
-    // it feeds both the union and the size aggregate
-    val shC = excl(index.shingles).select(col("id"), col("shingle"))
-      .join(broadcast(candB), Seq("id"), "left_semi")
-      .localCheckpoint()
-    val sizesC = shC.groupBy(col("id")).agg(count(lit(1)).as("set_size"))
-    val shAll = shB.unionByName(shC)
-    val sizesAll = shB.groupBy(col("id")).agg(count(lit(1)).as("set_size"))
-      .unionByName(sizesC)
-    val nearOf = ngramJaccardForPairs(shAll, sizesAll, cands, threshold)
-      .groupBy(col("id_a").as("id"))
-      .agg(min(col("id_b")).as("__near_of"))
-
-    val result = exactStatus
-      .join(nearOf, Seq("id"), "left")
+  /** The result of both probes, eager and cached: (idCol, status, dup_of)
+    * with exact beating near beating new, `dup_of` the matching corpus
+    * id. Releases `exactStatus`.
+    */
+  private def statusOf(exactStatus: DataFrame, nearOf: DataFrame, idCol: String): DataFrame = {
+    val result = exactStatus.join(nearOf, Seq("id"), "left")
       .select(col("id").as(idCol),
         when(col("__exact_of").isNotNull, "exact_dup")
           .when(col("__near_of").isNotNull, "near_dup")
@@ -2616,15 +2107,61 @@ object Dedup {
     result
   }
 
-  /** Compact the ingest index's per-batch write dirs into one reserved
+  /** The one near-dup classification, over a band index's frames
+    * (`hashes`, `shingles`, `bands`, any excluded batch already filtered
+    * out) — persisted, or derived from a live corpus by
+    * [[incrementalDedup]]. Exact via the content-hash probe ([[exactOf]],
+    * pruned by `bloom` when the index has one); near via band candidates
+    * ([[bucketPairs]]) verified by exact n-gram Jaccard over the full
+    * shingle sets, the corpus side restricted to the candidate ids.
+    *
+    * Per-batch corpus cost: the exact scan of the hash table, two column
+    * scans of the band table and one of the shingle table restricted to
+    * the candidate ids — each joined against a broadcast batch-bounded
+    * frame, so nothing corpus-scale shuffles per batch.
+    */
+  private def probeNear(hashes: DataFrame, shingles: DataFrame, bands: DataFrame,
+      bloom: Option[org.apache.spark.util.sketch.BloomFilter],
+      n: Int, numPerm: Int, numBands: Int, rowsPerBand: Int,
+      batch: DataFrame, idCol: String, text: Column, threshold: Double,
+      maxBucket: Int, batchBroadcastCap: Long): DataFrame = {
+    val exactStatus = exactOf(
+      batch.select(col(idCol).as("id"), sha2(tagged(text), 256).as("__h")),
+      hashes.select(col("__h"), col("__exact_of")),
+      bloom.map(bf => graft.functions.BloomFunctions.mightContain(xxhash64(col("__h")), bf)),
+      lit(true), batchBroadcastCap)
+    // exact dups skip the near stage: status precedence subsumes it
+    val survivors = batch.join(
+      exactStatus.filter(col("__exact_of").isNotNull).select(col("id").as(idCol)),
+      Seq(idCol), "left_anti")
+    val shB = shingleTable(survivors, idCol, text, n).localCheckpoint()
+    val bandB = bandRows(shB, numPerm, numBands, rowsPerBand)
+      .withColumnRenamed("corpus_id", "batch_id").localCheckpoint()
+    val cands = bucketPairs(bandB, bands.select(col("corpus_id"), col("band_idx"), col("band_hash")),
+        Seq("band_idx", "band_hash"), Nil, maxBucket, batchBroadcastCap)
+      .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"))
+      .distinct().localCheckpoint()
+    // the candidate semi-join keeps each candidate doc's FULL shingle set,
+    // so set sizes derive from this scan; pinned because it feeds the
+    // size aggregate and both verify joins
+    val shC = shingles.select(col("id"), col("shingle"))
+      .join(broadcast(cands.select(col("id_b").as("id")).distinct()), Seq("id"), "left_semi")
+      .localCheckpoint()
+    val nearOf = jaccardFromShingles(shB.unionByName(shC), cands, threshold)
+      .groupBy(col("id_a").as("id"))
+      .agg(min(col("id_b")).as("__near_of"))
+    statusOf(exactStatus, nearOf, idCol)
+  }
+
+  /** Compact the band index's per-batch write dirs into one reserved
     * base dir per table, `__ingest=-1`. Appends accumulate one dir per
-    * micro-batch; after months of daily batches the index is a
-    * small-file swamp and file listing itself dominates the probe. The
-    * reserved id is negative because stream batch ids are non-negative:
-    * no probe's own-batch exclusion can ever hide the base, and no
-    * future append can collide with it. The fold commits as one
-    * [[IndexStore]] version, so a crash before its commit leaves the
-    * previous version current and the next compaction redoes it.
+    * batch; after months of daily batches the index is a small-file swamp
+    * and file listing itself dominates the probe. The reserved id is
+    * negative because stream batch ids are non-negative: no probe's
+    * own-batch exclusion can ever hide the base, and no future append can
+    * collide with it. The fold commits as one [[IndexStore]] version, so
+    * a crash before its commit leaves the previous version current and
+    * the next compaction redoes it.
     *
     * `keepIngest`: leave that batch's dirs OUT of the fold — the
     * in-stream compaction contract. A sink compacting inside its own
@@ -2637,55 +2174,41 @@ object Dedup {
       keepIngest: Option[Long] = None): Unit =
     compactIngest(spark, path, keepIngest)
 
-  /** Fold a batch's accepted documents into the ingest index as batch
+  /** Fold a stream batch's accepted documents into the band index as batch
     * `ingestId`'s write dirs, committed as one version that replaces
     * whatever an earlier attempt committed for the same batch — the
     * idempotence story in one move: a replayed or crash-retried batch
     * leaves its rows in exactly one dir. The caller must append only
     * PROBE SURVIVORS (`status = new`), which keeps content hashes unique
     * across dirs — the invariant the exact verify join's fan-out relies
-    * on. Pure parquet writes: no corpus-scale aggregate per append
-    * (contrast [[appendToBandIndex]]'s bucket recompute). `index` may
-    * pass the already-loaded [[IngestIndex]] (the sink loads it for the
-    * probe) to skip a redundant sketch read.
+    * on. `index` may pass the already-loaded [[IngestIndex]] (the sink
+    * loads it for the probe) to skip a redundant sketch read.
     */
   def appendToIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, textCol: String, ingestId: Long,
       index: Option[IngestIndex] = None): Unit = {
-    val idx = index.getOrElse(readIngestIndex(spark, path, newDocs.schema(idCol).dataType))
-    val docs = newDocs.select(col(idCol), col(textCol)).localCheckpoint()
-    val hashRows = docs
-      .select(sha2(tagged(col(textCol)), 256).as("__h"), col(idCol).as("__cid"))
-      .groupBy(col("__h")).agg(min(col("__cid")).as("__exact_of"))
-      .localCheckpoint()
-    // one shingle table feeds shingles AND bands (set sizes derive from
-    // the shingle scan at probe time — no sizes table)
-    val sh = shingleTable(docs, idCol, col(textCol), idx.n).localCheckpoint()
-    val bands = minhashFromShingles(sh, idx.numPerm)
-      .select(col("id").as("corpus_id"),
-        explode(array(bandExprs(idx.numBands, idx.rowsPerBand): _*)).as("band"))
-      .select(col("corpus_id"), col("band.band_idx"), col("band.band_hash"))
-    appendIngest(spark, path, ingestId,
-      Seq("hashes" -> hashRows, "shingles" -> sh, "bands" -> bands),
-      idx.bloom, hashRows, xxhash64(col("__h")))
+    val m = IndexStore.latest(spark, path)
+    val idx = index.getOrElse(readIngest(spark, path, m, newDocs.schema(idCol).dataType))
+    appendBand(spark, path, m, ingestId, newDocs.select(col(idCol), col(textCol)).localCheckpoint(),
+      idCol, col(textCol), idx.bloom, None)
   }
 
-  // — streaming VEC ingest index (the EMBEDDING arm of the IngestIndex) ————
-  //   [[curatedCorpusIndexedSink]]-shaped streams that carry an embedding
-  //   column need the same exactly-once discipline for SEMANTIC dedup
-  //   state: batch-owned write dirs that a replay replaces, probe-side
-  //   exclusion of the current batch id (a crash replay must not find its
-  //   own first-attempt appends), a bitwise-OR Bloom sketch, and the same
-  //   compaction. The batch probe mirrors [[incrementalSemanticIndexed]]'s
-  //   classification (exact via content-hash + rep-vector verify, near via
-  //   sign-bucket candidates + exact-cosine verify) but derives
-  //   touched-bucket occupancy per batch from the vector table — appends
-  //   stay pure writes, no corpus-scale bucket aggregate per append
-  //   (contrast [[appendToVecIndex]]'s full-table recompute).
+  // — the VEC index: persisted SEMANTIC dedup state, batch and streaming ———
+  //   The embedding arm of the band index, with the same layout, replay
+  //   contract and compaction: the batch API ([[writeVecIndex]],
+  //   [[appendToVecIndex]], [[incrementalSemanticIndexed]]), the streaming
+  //   sink ([[initVecIngestIndex]], [[appendToVecIngestIndex]],
+  //   [[probeVecIngestIndex]]) and the live [[incrementalSemanticDedup]]
+  //   all classify through [[probeSemantic]] (exact via content-hash +
+  //   rep-vector verify, near via sign-bucket candidates + exact-cosine
+  //   verify), which derives touched-bucket occupancy per probe from the
+  //   vector table, so an append stays a pure write of the batch's rows.
 
-  /** A loaded streaming vec ingest index. Both frames are lazy parquet
-    * scans carrying their `__ingest` provenance; the sketch is over the
-    * raw `xxhash64` content keys.
+  /** A loaded vec index. Both frames are lazy parquet scans carrying
+    * their `__ingest` provenance; the sketch is over the raw `xxhash64`
+    * content keys. The hyperplane geometry (numPlanes, dim, seed) rides
+    * in the manifest so batch bucketing can never silently desynchronize
+    * from the indexed corpus bucketing.
     */
   final case class VecIngestIndex(
       hashes: DataFrame, // (__h xxhash64(vec), __exact_of min id, __rvec rep vector, __ingest)
@@ -2694,10 +2217,86 @@ object Dedup {
       expectedItems: Long, fpp: Double,
       numPlanes: Int, dim: Int, seed: Long)
 
-  /** Create an EMPTY vec ingest index: version 1 holds the hyperplane
-    * geometry, the sketch params and an empty sketch. Tables materialize
-    * on the first [[appendToVecIngestIndex]]; probing the empty index
-    * classifies everything `new`.
+  /** Content-hash rows of embeddings: `__h` (xxhash64 of the vector),
+    * `__exact_of` (min id per hash) and `__rvec` (that id's vector).
+    */
+  private def vecHashRows(docs: DataFrame, idCol: String, vecCol: String): DataFrame =
+    docs.select(xxhash64(col(vecCol)).as("__h"), col(idCol).as("__cid"), col(vecCol).as("__v"))
+      .groupBy(col("__h"))
+      .agg(min(col("__cid")).as("__exact_of"), min_by(col("__v"), col("__cid")).as("__rvec"))
+
+  /** Bucketed embeddings: (corpus_id, __cvec, __bucket). */
+  private def vecRows(docs: DataFrame, idCol: String, vecCol: String,
+      planes: Array[Array[Double]]): DataFrame =
+    docs.select(col(idCol).as("corpus_id"), col(vecCol).as("__cvec"),
+      Similarity.bucketId(col(vecCol), planes).as("__bucket"))
+
+  /** [[appendBand]]'s embedding twin: `docs` (`idCol`, `vecCol`) as
+    * batch `ingestId`'s content hashes (keep-first against `known`, when
+    * given) and bucketed vectors.
+    */
+  private def appendVec(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, ingestId: Long, docs: DataFrame, idCol: String, vecCol: String,
+      bloom: org.apache.spark.util.sketch.BloomFilter, known: Option[DataFrame]): IndexStore.Manifest = {
+    val fresh = vecHashRows(docs, idCol, vecCol).localCheckpoint()
+    val hashes = known.fold(fresh)(h => unseen(fresh, "__h", h.select(col("__h"))).localCheckpoint())
+    val planes = Similarity.hyperplanes(m.long("numPlanes").toInt, m.long("dim").toInt, m.long("seed"))
+    appendIngest(spark, path, m, ingestId,
+      Seq("hashes" -> hashes, "vecs" -> vecRows(docs, idCol, vecCol, planes)), bloom, hashes, col("__h"))
+  }
+
+  /** Build a vec index over `corpus` as one [[IndexStore]] version: an
+    * empty index plus the corpus appended as the batch whose id is that
+    * version. The sketch saturates past `expectedItems` total inserts
+    * (fpp degrades, correctness doesn't — positives always verify).
+    * Read it with [[readVecIngestIndex]].
+    */
+  def writeVecIndex(corpus: DataFrame, idCol: String, vecCol: String, path: String,
+      numPlanes: Int, dim: Int, expectedItems: Long, fpp: Double = 0.01,
+      seed: Long = 42L): Unit = {
+    val spark = corpus.sparkSession
+    val m = emptyIngest(spark, path, Map("numPlanes" -> numPlanes, "dim" -> dim, "seed" -> seed),
+      expectedItems, fpp)
+    appendVec(spark, path, m, m.version + 1, corpus.select(col(idCol), col(vecCol)).localCheckpoint(),
+      idCol, vecCol, emptyBloom(spark, expectedItems, fpp), None)
+  }
+
+  /** Fold a batch's accepted vectors into a vec index as the batch whose
+    * id is the next version — [[appendToBandIndex]]'s contract: vectors
+    * whose id the index already holds are skipped, a batch with nothing
+    * new commits nothing, content hashes the index already holds keep
+    * their first id, and the index folds into its base at
+    * `autoCompactAt` part files.
+    */
+  def appendToVecIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+      newVecs: DataFrame, idCol: String, vecCol: String,
+      autoCompactAt: Int = AutoCompactDefault): Unit = {
+    val m = IndexStore.latest(spark, path)
+    val idx = readVecIngest(spark, path, m, newVecs.schema(idCol).dataType, newVecs.schema(vecCol).dataType)
+    val fresh = unseen(newVecs.select(col(idCol), col(vecCol)), idCol,
+      idx.vecs.select(col("corpus_id").as(idCol))).localCheckpoint()
+    if (fresh.isEmpty) return
+    autoFold(spark, path, appendVec(spark, path, m, m.version + 1, fresh, idCol, vecCol,
+      idx.bloom, Some(idx.hashes)), Seq("hashes", "vecs"), autoCompactAt)
+  }
+
+  /** [[incrementalSemanticDedup]] against a vec index, nothing excluded:
+    * the same [[probeSemantic]] classification, with the corpus side read
+    * from the index and the exact stage Bloom-pruned. Returns the eager
+    * cached (idCol, status, dup_of) frame — `unpersist()` when done.
+    */
+  def incrementalSemanticIndexed(index: VecIngestIndex, batch: DataFrame,
+      idCol: String, vecCol: String, threshold: Double,
+      maxBucket: Int = DefaultMaxBucket,
+      batchBroadcastCap: Long = BatchBroadcastCap): DataFrame =
+    probeSemantic(index.hashes, index.vecs, Some(index.bloom),
+      Similarity.hyperplanes(index.numPlanes, index.dim, index.seed), index.dim,
+      batch, idCol, vecCol, threshold, maxBucket, batchBroadcastCap)
+
+  /** Create an EMPTY vec index for a stream: version 1 holds the
+    * hyperplane geometry, the sketch params and an empty sketch. Tables
+    * materialize on the first [[appendToVecIngestIndex]]; probing the
+    * empty index classifies everything `new`.
     */
   def initVecIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       numPlanes: Int, dim: Int, expectedItems: Long, fpp: Double = 0.01,
@@ -2705,16 +2304,20 @@ object Dedup {
     initIngest(spark, path, Map("numPlanes" -> numPlanes, "dim" -> dim, "seed" -> seed),
       expectedItems, fpp)
 
-  /** Load the committed vec ingest index. `idType` and `vecType` supply
-    * the column types of a table no write has reached yet.
+  /** Load the committed vec index. `idType` and `vecType` supply the
+    * column types of a table no write has reached yet.
     */
   def readVecIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       idType: org.apache.spark.sql.types.DataType,
       vecType: org.apache.spark.sql.types.DataType =
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))
-      : VecIngestIndex = {
+      : VecIngestIndex =
+    readVecIngest(spark, path, IndexStore.latest(spark, path), idType, vecType)
+
+  private def readVecIngest(spark: org.apache.spark.sql.SparkSession, path: String,
+      m: IndexStore.Manifest, idType: org.apache.spark.sql.types.DataType,
+      vecType: org.apache.spark.sql.types.DataType): VecIngestIndex = {
     import org.apache.spark.sql.types._
-    val m = IndexStore.latest(spark, path)
     VecIngestIndex(
       ingestTable(spark, path, m, "hashes", StructField("__h", LongType),
         StructField("__exact_of", idType), StructField("__rvec", vecType)),
@@ -2724,126 +2327,74 @@ object Dedup {
       m.long("numPlanes").toInt, m.long("dim").toInt, m.long("seed"))
   }
 
-  /** [[incrementalSemanticIndexed]] against a streaming [[VecIngestIndex]],
-    * excluding rows appended by ingest `excludeIngest` (pass the CURRENT
-    * batch id — the replay contract of [[probeIngestIndex]]). Exact via
-    * the Bloom-pruned content-hash probe verified by rep-vector equality;
-    * near via sign-bucket candidates with exact-cosine verification, hot
-    * buckets star-degrading to the bucket's min-id corpus hub.
-    *
-    * Per-batch corpus cost: the exact verify join of the Bloom positives,
-    * plus two column scans of the compact vector table — occupancy +
-    * hub/hub-vector for TOUCHED buckets only (aggregated map-side;
-    * shuffled state is batch-bounded) and candidate generation — each
-    * joined against a broadcast batch-bounded frame (byte-aware license:
-    * the row cap shrinks with `dim`; past it BOTH sides merge-hint).
-    * Returns the eager cached (idCol, status, dup_of) frame —
-    * `unpersist()` when done.
+  /** [[incrementalSemanticIndexed]] excluding rows appended by ingest
+    * `excludeIngest` (pass the CURRENT batch id — the replay contract of
+    * [[probeIngestIndex]]). Returns the eager cached (idCol, status,
+    * dup_of) frame — `unpersist()` when done.
     */
   def probeVecIngestIndex(index: VecIngestIndex, batch: DataFrame, idCol: String,
       vecCol: String, threshold: Double, excludeIngest: Long,
       maxBucket: Int = DefaultMaxBucket,
       batchBroadcastCap: Long = BatchBroadcastCap): DataFrame = {
-    val planes = Similarity.hyperplanes(index.numPlanes, index.dim, index.seed)
-    val idType = batch.schema(idCol).dataType
     def excl(df: DataFrame): DataFrame =
       df.filter(col("__ingest").cast("long") =!= excludeIngest)
-    val keyedB = batch.select(col(idCol).as("id"), col(vecCol).as("__bvec"),
-      xxhash64(col(vecCol)).as("__h"))
-    // 1. exact: Bloom prune, then rep-vector verify against the
-    //    provenance-filtered hash table (a replayed batch's own keys in
-    //    the sketch just verify against zero visible rows)
-    val hashesF = excl(index.hashes).select(col("__h"), col("__exact_of"), col("__rvec"))
-    val positive = keyedB
-      .filter(graft.functions.BloomFunctions.mightContain(col("__h"), index.bloom))
-      .join(hashesF, Seq("__h"), "left")
-      .select(col("id"), col("__bvec"),
-        when(col("__exact_of").isNotNull && col("__bvec") === col("__rvec"),
-          col("__exact_of")).as("__exact_of"))
-    val negative = keyedB
-      .filter(!graft.functions.BloomFunctions.mightContain(col("__h"), index.bloom))
-      .select(col("id"), col("__bvec"), lit(null).cast(idType).as("__exact_of"))
-    val exactStatus = positive.unionByName(negative).persist()
-    exactStatus.count()
+    probeSemantic(excl(index.hashes), excl(index.vecs), Some(index.bloom),
+      Similarity.hyperplanes(index.numPlanes, index.dim, index.seed), index.dim,
+      batch, idCol, vecCol, threshold, maxBucket, batchBroadcastCap)
+  }
 
-    // 2. near: batch-side bucketing; corpus occupancy derived for TOUCHED
-    //    buckets only from the provenance-filtered vector table
+  /** The one semantic near-dup classification, over a vec index's frames
+    * (`hashes`, `vecs`, any excluded batch already filtered out) —
+    * persisted, or derived from a live corpus by
+    * [[incrementalSemanticDedup]]. Exact via the content-hash probe
+    * verified by rep-vector equality ([[exactOf]], pruned by `bloom` when
+    * the index has one); near via sign-bucket candidates ([[bucketPairs]];
+    * a hot bucket's hub carries its vector) verified by exact cosine. A
+    * vector has exactly ONE sign bucket, so each (batch, corpus) pair
+    * arises at most once. Broadcast caps are byte-aware: every row
+    * carries a full `dim`-sized vector, so the row cap shrinks with `dim`.
+    */
+  private def probeSemantic(hashes: DataFrame, vecs: DataFrame,
+      bloom: Option[org.apache.spark.util.sketch.BloomFilter],
+      planes: Array[Array[Double]], dim: Int,
+      batch: DataFrame, idCol: String, vecCol: String, threshold: Double,
+      maxBucket: Int, batchBroadcastCap: Long): DataFrame = {
+    val vecCap = math.min(batchBroadcastCap, Similarity.vecBroadcastRows(dim))
+    val exactStatus = exactOf(
+      batch.select(col(idCol).as("id"), col(vecCol).as("__bvec"), xxhash64(col(vecCol)).as("__h")),
+      hashes.select(col("__h"), col("__exact_of"), col("__rvec")),
+      bloom.map(bf => graft.functions.BloomFunctions.mightContain(col("__h"), bf)),
+      col("__bvec") === col("__rvec"), vecCap)
     val bB = exactStatus.filter(col("__exact_of").isNull)
       .select(col("id").as("batch_id"), col("__bvec"),
         Similarity.bucketId(col("__bvec"), planes).as("__bucket"))
       .localCheckpoint()
-    val vecsF = excl(index.vecs).select(col("corpus_id"), col("__cvec"), col("__bucket"))
-    val batchCnt = bB.groupBy(col("__bucket"))
-      .agg(count(lit(1)).as("__bcnt")).localCheckpoint()
-    val corpusOcc = vecsF
-      .join(broadcast(batchCnt.select(col("__bucket"))), Seq("__bucket"))
-      .groupBy(col("__bucket"))
-      .agg(count(lit(1)).as("__ccnt"), min(col("corpus_id")).as("__hub"),
-        min_by(col("__cvec"), col("corpus_id")).as("__hubvec"))
-    val hot = batchCnt.join(corpusOcc, Seq("__bucket"), "left")
-      .filter(coalesce(col("__ccnt"), lit(0L)) + col("__bcnt") > maxBucket)
-      .select(col("__bucket"), col("__hub"), col("__hubvec"))
-      .localCheckpoint()
-    val hotKeys = hot.select(col("__bucket"))
-    val vecCap = math.min(batchBroadcastCap, Similarity.vecBroadcastRows(index.dim))
-    val coldB = bB.join(hotKeys, Seq("__bucket"), "left_anti")
-    val cold =
-      if (bB.count() <= vecCap) vecsF.join(broadcast(coldB), Seq("__bucket"))
-      else vecsF.hint("merge").join(coldB.hint("merge"), Seq("__bucket"))
-    // star: hot-bucket batch members vs the hub (null hub = batch-only)
-    val star = bB.join(hotKeys, Seq("__bucket"), "left_semi")
-      .join(broadcast(hot.filter(col("__hub").isNotNull)), Seq("__bucket"))
-      .select(col("batch_id"), col("__bvec"),
-        col("__hub").as("corpus_id"), col("__hubvec").as("__cvec"))
-    val pairCols = Seq(col("batch_id"), col("__bvec"), col("corpus_id"), col("__cvec"))
-    val nearOf = cold.select(pairCols: _*).unionByName(star.select(pairCols: _*))
+    val nearOf = bucketPairs(bB, vecs.select(col("corpus_id"), col("__cvec"), col("__bucket")),
+        Seq("__bucket"), Seq("__cvec"), maxBucket, vecCap)
       .withColumn("__cos", round(Similarity.cosine(col("__bvec"), col("__cvec")), 6))
       .filter(col("__cos") >= threshold)
       .groupBy(col("batch_id").as("id"))
       .agg(min(col("corpus_id")).as("__near_of"))
-
-    val result = exactStatus
-      .join(nearOf, Seq("id"), "left")
-      .select(col("id").as(idCol),
-        when(col("__exact_of").isNotNull, "exact_dup")
-          .when(col("__near_of").isNotNull, "near_dup")
-          .otherwise("new").as("status"),
-        coalesce(col("__exact_of"), col("__near_of")).as("dup_of"))
-      .persist()
-    result.count()
-    exactStatus.unpersist()
-    result
+    statusOf(exactStatus, nearOf, idCol)
   }
 
-  /** Fold a batch's accepted vectors into the vec ingest index as batch
+  /** Fold a stream batch's accepted vectors into the vec index as batch
     * `ingestId`'s write dirs — the [[appendToIngestIndex]] idempotence
     * story verbatim: a replay replaces exactly its own earlier dirs. The
     * caller must append only PROBE SURVIVORS (`status = new`), which
-    * keeps content hashes unique across dirs. Pure writes: no
-    * corpus-scale bucket aggregate per append (the probe derives
-    * touched-bucket occupancy instead).
+    * keeps content hashes unique across dirs.
     */
   def appendToVecIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       newDocs: DataFrame, idCol: String, vecCol: String, ingestId: Long,
       index: Option[VecIngestIndex] = None): Unit = {
+    val m = IndexStore.latest(spark, path)
     val idx = index.getOrElse(
-      readVecIngestIndex(spark, path, newDocs.schema(idCol).dataType,
-        newDocs.schema(vecCol).dataType))
-    val planes = Similarity.hyperplanes(idx.numPlanes, idx.dim, idx.seed)
-    val docs = newDocs.select(col(idCol), col(vecCol)).localCheckpoint()
-    val hashRows = docs
-      .select(xxhash64(col(vecCol)).as("__h"), col(idCol).as("__cid"),
-        col(vecCol).as("__v"))
-      .groupBy(col("__h"))
-      .agg(min(col("__cid")).as("__exact_of"), min_by(col("__v"), col("__cid")).as("__rvec"))
-      .localCheckpoint()
-    appendIngest(spark, path, ingestId,
-      Seq("hashes" -> hashRows, "vecs" -> docs.select(col(idCol).as("corpus_id"),
-        col(vecCol).as("__cvec"), Similarity.bucketId(col(vecCol), planes).as("__bucket"))),
-      idx.bloom, hashRows, col("__h"))
+      readVecIngest(spark, path, m, newDocs.schema(idCol).dataType, newDocs.schema(vecCol).dataType))
+    appendVec(spark, path, m, ingestId, newDocs.select(col(idCol), col(vecCol)).localCheckpoint(),
+      idCol, vecCol, idx.bloom, None)
   }
 
-  /** [[compactIngestIndex]] for the vec ingest index. */
+  /** [[compactIngestIndex]] for the vec index. */
   def compactVecIngestIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       keepIngest: Option[Long] = None): Unit =
     compactIngest(spark, path, keepIngest)
@@ -2923,42 +2474,34 @@ object Dedup {
   //   hashes — because [[simhashPairs]]' chunk machinery is hash-agnostic.
   //   Without it, a daily media-ingest pipeline re-chunks the WHOLE
   //   signature corpus per batch; with it, a batch probes column scans of
-  //   the persisted chunk table against broadcast batch-sized frames.
+  //   the persisted chunk table against broadcast batch-sized frames, and
+  //   an append writes the batch's own rows only (the probe derives
+  //   touched-bucket occupancy, as the band and vec indexes do).
 
-  /** A loaded persistent simhash index. `buckets` carries per-bucket
-    * corpus occupancy plus the min-id hub AND the hub's signature, so
-    * hot-bucket detection and star verification need no corpus aggregate
-    * per batch (the [[VecIndex]] convention). `maxDist` rides in the
-    * manifest — probing with a different distance than the index was
-    * chunked for would silently lose the pigeonhole guarantee.
+  /** A loaded persistent simhash index. `maxDist` rides in the manifest —
+    * probing with a different distance than the index was chunked for
+    * would silently lose the pigeonhole guarantee.
     */
-  final case class SimhashIndex(sigs: DataFrame, chunks: DataFrame,
-      buckets: DataFrame, maxDist: Int)
+  final case class SimhashIndex(sigs: DataFrame, chunks: DataFrame, maxDist: Int)
 
   /** `batch`'s signatures and chunks as version `v`'s dirs appended to
-    * `m`'s, and the buckets recomputed over every chunk dir: the manifest
-    * to commit.
+    * `m`'s: the manifest to commit.
     */
   private def writeSimhashDelta(spark: org.apache.spark.sql.SparkSession, path: String,
       m: IndexStore.Manifest, v: Long, batch: DataFrame): IndexStore.Manifest = {
     val sigs = IndexStore.writeTable(path, "sigs", v, batch)
-    val chunks = m.tables.getOrElse("chunks", Nil) :+ IndexStore.writeTable(path, "chunks", v,
+    val chunks = IndexStore.writeTable(path, "chunks", v,
       IndexStore.read(spark, path, "sigs", Seq(sigs))
         .select(col("corpus_id"), col("simhash"),
           explode(array(simhashChunkCols(col("simhash"), m.long("maxDist").toInt): _*)).as("ch"))
         .select(col("corpus_id"), col("simhash"), col("ch.chunk_idx"), col("ch.chunk_val")))
-    val buckets = IndexStore.writeTable(path, "buckets", v,
-      IndexStore.read(spark, path, "chunks", chunks)
-        .groupBy(col("chunk_idx"), col("chunk_val"))
-        .agg(count(lit(1)).as("__ccnt"),
-          min(struct(col("corpus_id"), col("simhash"))).as("__hub")))
     m.copy(version = v, tables = Map("sigs" -> (m.tables.getOrElse("sigs", Nil) :+ sigs),
-      "chunks" -> chunks, "buckets" -> Seq(buckets)))
+      "chunks" -> (m.tables.getOrElse("chunks", Nil) :+ chunks)))
   }
 
   /** Persist the corpus side of Hamming near-dup state as an
-    * [[IndexStore]] version: `sigs`, `chunks` and `buckets` tables, with
-    * the chunk geometry's `maxDist` in the manifest.
+    * [[IndexStore]] version: `sigs` and `chunks` tables, with the chunk
+    * geometry's `maxDist` in the manifest.
     */
   def writeSimhashIndex(sig: DataFrame, idCol: String, sigCol: String,
       path: String, maxDist: Int): Unit = {
@@ -2979,12 +2522,10 @@ object Dedup {
     SimhashIndex(
       sigs = IndexStore.read(spark, path, m, "sigs"),
       chunks = IndexStore.read(spark, path, m, "chunks"),
-      buckets = IndexStore.read(spark, path, m, "buckets"),
       maxDist = m.long("maxDist").toInt)
 
   /** Append a signature batch: new ids' signatures and chunks land as new
-    * dirs, the buckets are recomputed over the whole chunk table, and all
-    * three commit as one version. Idempotent under replay: ids the index
+    * dirs and commit as one version. Idempotent under replay: ids the index
     * already holds are skipped, and a batch with nothing new commits
     * nothing.
     */
@@ -3007,43 +2548,24 @@ object Dedup {
     * Hamming `maxDist` of a batch item (batch-INTERNAL pairs are the live
     * [[simhashPairs]]' job — same split as the band/vec index probes).
     * Candidates are exact by pigeonhole on the cold path; hot buckets
-    * (persisted corpus occupancy + batch occupancy > maxBucket, counted
-    * for TOUCHED buckets only) star-degrade against the persisted min-id
-    * hub. Per-batch cost: batch-sized chunking + column scans of the
-    * index tables joined against broadcast batch-sized frames — nothing
+    * star-degrade against the bucket's min-id hub ([[bucketPairs]]).
+    * Per-batch cost: batch-sized chunking + two column scans of the chunk
+    * table joined against broadcast batch-sized frames — nothing
     * corpus-scale shuffles per batch.
     */
   def probeSimhashIndex(idx: SimhashIndex, batch: DataFrame, idCol: String,
       sigCol: String, maxBucket: Int = DefaultMaxBucket,
       batchBroadcastCap: Long = BatchBroadcastCap): DataFrame = {
     val chB = batch
-      .select(col(idCol).as("batch_id"), col(sigCol).cast("long").as("simhash"))
-      .select(col("batch_id"), col("simhash"),
-        explode(array(simhashChunkCols(col("simhash"), idx.maxDist): _*)).as("ch"))
-      .select(col("batch_id"), col("simhash"), col("ch.chunk_idx"), col("ch.chunk_val"))
+      .select(col(idCol).as("batch_id"), col(sigCol).cast("long").as("__bsig"))
+      .select(col("batch_id"), col("__bsig"),
+        explode(array(simhashChunkCols(col("__bsig"), idx.maxDist): _*)).as("ch"))
+      .select(col("batch_id"), col("__bsig"), col("ch.chunk_idx"), col("ch.chunk_val"))
       .localCheckpoint()
-    val batchCnt = chB.groupBy(col("chunk_idx"), col("chunk_val"))
-      .agg(count(lit(1)).as("__bcnt")).localCheckpoint()
-    val touched = idx.buckets.join(broadcast(batchCnt), Seq("chunk_idx", "chunk_val"))
-    val hot = touched.filter(col("__ccnt") + col("__bcnt") > maxBucket)
-      .select(col("chunk_idx"), col("chunk_val"), col("__hub"))
-      .localCheckpoint()
-    val hotKeys = hot.select(col("chunk_idx"), col("chunk_val"))
-    // batch side renamed pre-join: both sides carry a `simhash` column and
-    // the Hamming xor must pair the BATCH signature with the CORPUS one
-    val coldB = chB.join(hotKeys, Seq("chunk_idx", "chunk_val"), "left_anti")
-      .withColumnRenamed("simhash", "__bsig")
-    val cold =
-      (if (chB.count() <= batchBroadcastCap)
-        idx.chunks.join(broadcast(coldB), Seq("chunk_idx", "chunk_val"))
-      else idx.chunks.hint("merge").join(coldB.hint("merge"), Seq("chunk_idx", "chunk_val")))
-        .select(col("batch_id"), col("corpus_id"),
-          bit_count(col("__bsig").bitwiseXOR(col("simhash"))).as("hamming"))
-    val star = chB.join(hotKeys, Seq("chunk_idx", "chunk_val"), "left_semi")
-      .join(broadcast(hot), Seq("chunk_idx", "chunk_val"))
-      .select(col("batch_id"), col("__hub.corpus_id").as("corpus_id"),
-        bit_count(col("simhash").bitwiseXOR(col("__hub.simhash"))).as("hamming"))
-    cold.unionByName(star)
+    bucketPairs(chB, idx.chunks.select(col("corpus_id"), col("simhash"), col("chunk_idx"),
+        col("chunk_val")), Seq("chunk_idx", "chunk_val"), Seq("simhash"), maxBucket, batchBroadcastCap)
+      .select(col("batch_id"), col("corpus_id"),
+        bit_count(col("__bsig").bitwiseXOR(col("simhash"))).as("hamming"))
       .filter(col("batch_id") =!= col("corpus_id"))
       .distinct()
       .filter(col("hamming") <= idx.maxDist)
@@ -3051,9 +2573,7 @@ object Dedup {
 
   private val SimhashIndexTables = Seq("sigs", "chunks")
 
-  /** [[compactIndexTables]] over [[writeSimhashIndex]]'s layout
-    * (`buckets` excluded — each append already rewrites it whole).
-    */
+  /** [[compactIndexTables]] over [[writeSimhashIndex]]'s layout. */
   def compactSimhashIndex(spark: org.apache.spark.sql.SparkSession, path: String,
       targetFiles: Int = 1): Unit =
     compactIndexTables(spark, path, SimhashIndexTables, targetFiles)

@@ -24,8 +24,9 @@ import org.apache.spark.util.sketch.CountMinSketch
   * (N = total items folded in).
   *
   * Sketches with identical (eps, confidence, seed) are mergeable —
-  * [[merged]] — so per-day sketches union incrementally the same way
-  * [[Dedup.incrementalDedup]] avoids corpus rescans.
+  * [[merged]] — so per-day sketches union incrementally, the way
+  * [[Dedup.appendToBandIndex]] folds in a day's batch without a corpus
+  * rescan.
   */
 object Frequency {
 

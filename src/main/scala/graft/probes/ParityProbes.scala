@@ -491,22 +491,27 @@ object ParityProbes {
        |  WHERE rn = 1 AND shipping_id IS NOT NULL)""".stripMargin
   }
 
-  /** Drop every stage [[parcelStage]] made: its dir and catalog table. */
+  private val stageDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** Drop every stage [[parcelStage]] made in this JVM so far: its dir and
+    * catalog table. Stages other processes made under the same root stay.
+    */
   def dropStages(s: SparkSession): Unit =
-    Option(new java.io.File(graft.TmpDir.root).listFiles((_, n) => n.startsWith("parcel_flat_stage_")))
-      .foreach(_.foreach(d => EtlJob.dropStage(s, d.getPath)))
+    Iterator.continually(stageDirs.poll()).takeWhile(_ != null).foreach(EtlJob.dropStage(s, _))
 
   /** The probes' fixture — the events table synthesized as the ETL's JSON
     * payload, parsed and flattened — staged by [[EtlJob.stage]] under
-    * TmpDir with the `parcel_flat_stage_` prefix, which [[dropStages]]
-    * reclaims. Fan out first: events.parquet is a single row-group at
-    * test SFs, so the to_json synth + from_json parse would otherwise run
-    * on one core. Unique per call: concurrent suites sharing the session must
-    * never overwrite a stage another build is still lazily reading.
+    * TmpDir with the `parcel_flat_stage_` prefix and recorded for
+    * [[dropStages]]. Fan out first: events.parquet is a single row-group
+    * at test SFs, so the to_json synth + from_json parse would otherwise
+    * run on one core. Unique per call: concurrent suites sharing the
+    * session must never overwrite a stage another build is still lazily
+    * reading.
     */
   private def parcelStage(s: SparkSession, dir: String): DataFrame = {
     val events = t(s, dir, "events")
     val stageDir = s"${graft.TmpDir.root}/parcel_flat_stage_${java.util.UUID.randomUUID}"
+    stageDirs.add(stageDir)
     EtlJob.stage(Flatten(EventsVocab.synth(Readers.fanOut(events))), stageDir,
       events.queryExecution.optimizedPlan.stats.sizeInBytes)
   }

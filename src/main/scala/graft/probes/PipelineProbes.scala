@@ -163,16 +163,15 @@ object PipelineProbes {
 
   // — persisted band index (near-dup daily-ingest shape) ——————————————————
   //   The banding twin of x57: x21's exact fixture and oracle, but the
-  //   corpus side comes entirely from a cached on-disk
-  //   [[Dedup.BandIndex]] (+ the hash index for the exact stage) — the
-  //   persisted near-dup path must classify every batch row identically
-  //   to the live operator, so it shares x21's full per-row value oracle
-  //   (banding recall is exactly 1.0 on this fixture, same pin as x21).
+  //   corpus side comes entirely from a cached on-disk band index (its
+  //   own `hashes` table serves the exact stage) — the persisted near-dup
+  //   path must classify every batch row identically to the live
+  //   operator, so it shares x21's full per-row value oracle (banding
+  //   recall is exactly 1.0 on this fixture, same pin as x21).
   private def x59Index(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    graft.TmpDir.cached("x59_bandidx", "v3", dir, s"$dir/documents.parquet") { base =>
+    graft.TmpDir.cached("x59_bandidx", "v4", dir, s"$dir/documents.parquet") { base =>
       val corpus = Readers.fanOut(t(s, dir, "documents"))
         .select(col("doc_id"), col("text")).filter(col("doc_id") % 5 =!= 0)
-      Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 1000L)
       Dedup.writeBandIndex(corpus, "doc_id", col("text"), s"$base/band",
         n = 3, numPerm = 64, numBands = 16, rowsPerBand = 4)
     }
@@ -186,7 +185,7 @@ object PipelineProbes {
           .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
       val base = x59Index(s, dir)
       Dedup.incrementalDedupIndexed(
-          Dedup.readHashIndex(s, s"$base/hash"), Dedup.readBandIndex(s, s"$base/band"),
+          Dedup.readIngestIndex(s, s"$base/band", batch.schema("doc_id").dataType),
           batch, "doc_id", "text", threshold = 0.2)
         .orderBy("doc_id")
     },
@@ -2270,11 +2269,11 @@ object PipelineProbes {
   //   The embedding twin of x59: x47's exact fixture and oracle (exact
   //   copies / 2×-scaled copies / reversed vectors — LSH recall is
   //   provably 1.0, see ExtensionProbes.x47), but the corpus side comes
-  //   entirely from a cached on-disk [[Dedup.VecIndex]]. The
+  //   entirely from a cached on-disk vec index. The
   //   persisted semantic path must classify every batch row identically
   //   to the live operator, so it shares x47's full per-row value oracle.
   private def x84Index(s: org.apache.spark.sql.SparkSession, dir: String): String =
-    graft.TmpDir.cached("x84_vecidx", "v2", dir, s"$dir/embeddings.parquet") { base =>
+    graft.TmpDir.cached("x84_vecidx", "v3", dir, s"$dir/embeddings.parquet") { base =>
       Dedup.writeVecIndex(Readers.fanOut(t(s, dir, "embeddings")), "vec_id", "embedding",
         s"$base/vec", numPlanes = 8, dim = 64, expectedItems = 1000000L)
     }
@@ -2288,7 +2287,8 @@ object PipelineProbes {
           .when(col("vec_id") % 5 === 1, transform(col("embedding"), x => x * lit(2.0f)))
           .otherwise(reverse(col("embedding"))).as("embedding"))
       val base = x84Index(s, dir)
-      Dedup.incrementalSemanticIndexed(Dedup.readVecIndex(s, s"$base/vec"),
+      Dedup.incrementalSemanticIndexed(
+          Dedup.readVecIngestIndex(s, s"$base/vec", batch.schema("vec_id").dataType),
           batch, "vec_id", "embedding", threshold = 0.9)
         .orderBy("vec_id")
     },

@@ -220,9 +220,11 @@ object StreamingIngest {
     * batch-locally (scrub → quality/repetition gates → intra-batch exact
     * + near dedup via [[graft.ops.Curate.run]]), then deduped AGAINST THE
     * ACCUMULATED CORPUS with [[graft.ops.Dedup.incrementalDedup]] — the
-    * corpus is only probed, never self-joined, so per-batch cost is
-    * bounded by the batch — and the survivors are appended as a new
-    * corpus partition.
+    * corpus is only probed, never self-joined, so the pair work is
+    * bounded by the batch, but each batch re-derives the corpus's band
+    * index (a tokenize + shingle + MinHash pass over every prior
+    * partition) — and the survivors are appended as a new corpus
+    * partition.
     *
     * Exactly-once without a swap: each batch writes to its own
     * `__batch=<id>` Hive partition with overwrite, so a replayed batch
@@ -277,14 +279,15 @@ object StreamingIngest {
       .start()
 
   /** [[curatedCorpusSink]] with a streaming-maintained dedup index — the
-    * deployment shape for a daily 100-TB ingest. The live sink re-runs
-    * [[graft.ops.Dedup.incrementalDedup]] against ALL prior corpus
-    * partitions every micro-batch: a full corpus re-tokenize + re-shingle
-    * + re-MinHash per batch, for state that did not change. Here the
-    * corpus-side state persists in a
-    * [[graft.ops.Dedup.IngestIndex]] at `indexPath`, so a batch pays
-    * batch-sized compute plus column scans of the compact index tables —
-    * batch cost tracks the batch, not the corpus.
+    * deployment shape for a daily 100-TB ingest. The live sink's
+    * [[graft.ops.Dedup.incrementalDedup]] derives the band index of ALL
+    * prior corpus partitions every micro-batch (a corpus tokenize +
+    * shingle + MinHash per batch, for state that did not change) and
+    * probes it. Here the same index persists as a
+    * [[graft.ops.Dedup.IngestIndex]] at `indexPath` and the same probe
+    * runs against it, so a batch pays batch-sized compute plus column
+    * scans of the compact index tables — batch cost tracks the batch,
+    * not the corpus.
     *
     * Exactly-once under replay, without a swap, THROUGH the index:
     *

@@ -391,7 +391,8 @@ class CurationSpec extends SparkSpec {
       numPlanes = 4, dim = 4, expectedItems = 100L)
     val live = Dedup.incrementalSemanticDedup(corpus, batch, "vec_id", "embedding",
       threshold = 0.9, numPlanes = 4, dim = 4)
-    val idx = Dedup.incrementalSemanticIndexed(Dedup.readVecIndex(spark, s"$base/vec"),
+    val idx = Dedup.incrementalSemanticIndexed(
+      Dedup.readVecIngestIndex(spark, s"$base/vec", org.apache.spark.sql.types.LongType),
       batch, "vec_id", "embedding", threshold = 0.9)
     val liveRows = live.orderBy("vec_id").as[(Long, String, Option[Long])].collect().toSeq
     val idxRows = idx.orderBy("vec_id").as[(Long, String, Option[Long])].collect().toSeq
@@ -413,9 +414,10 @@ class CurationSpec extends SparkSpec {
     val base = scratch("vecIdxApp").toString
     Dedup.writeVecIndex(corpus, "vec_id", "embedding", s"$base/vec",
       numPlanes = 4, dim = 4, expectedItems = 1000L)
+    def index() = Dedup.readVecIngestIndex(spark, s"$base/vec", org.apache.spark.sql.types.LongType)
     def classify(b: org.apache.spark.sql.DataFrame, maxBucket: Int = Dedup.DefaultMaxBucket) =
-      Dedup.incrementalSemanticIndexed(Dedup.readVecIndex(spark, s"$base/vec"),
-        b, "vec_id", "embedding", threshold = 0.9, maxBucket = maxBucket)
+      Dedup.incrementalSemanticIndexed(index(), b, "vec_id", "embedding", threshold = 0.9,
+        maxBucket = maxBucket)
     val b1 = Seq(
       (100L, Array(0.5f, 0.0f, 0.0f, 0.0f)),    // hot-bucket near dup → hub 1
       (101L, Array(0.0f, 0.0f, -1.0f, 0.0f))).toDF("vec_id", "embedding") // new
@@ -437,11 +439,11 @@ class CurationSpec extends SparkSpec {
     // REPLAYED append (a retried ingest): both vector rows and hash rows
     // must not double-insert (duplicate vec rows would duplicate candidate
     // pairs; duplicate hash rows would make the rep-vector verify ambiguous)
-    val idxBefore = Dedup.readVecIndex(spark, s"$base/vec")
+    val idxBefore = index()
     val (vecsBefore, hashesBefore) = (idxBefore.vecs.count(), idxBefore.hashes.count())
     Dedup.appendToVecIndex(spark, s"$base/vec",
       b1.filter($"vec_id" === 101L), "vec_id", "embedding")
-    val idxAfter = Dedup.readVecIndex(spark, s"$base/vec")
+    val idxAfter = index()
     assert(idxAfter.vecs.count() == vecsBefore && idxAfter.hashes.count() == hashesBefore,
       "a replayed batch double-inserted vec-index rows")
     val c3 = classify(b2)
@@ -457,7 +459,7 @@ class CurationSpec extends SparkSpec {
     val base = scratch("vecIdxCrash").toString
     Dedup.writeVecIndex(corpus, "vec_id", "embedding", s"$base/vec",
       numPlanes = 2, dim = 2, expectedItems = 10L)
-    assert(Dedup.readVecIndex(spark, s"$base/vec").dim == 2)
+    assert(Dedup.readVecIngestIndex(spark, s"$base/vec", org.apache.spark.sql.types.LongType).dim == 2)
     val committed = IndexStore.latest(spark, s"$base/vec")
     // rebuild whose corpus evaluation throws inside the FIRST table write:
     // no manifest may vouch for its tables — readers keep loading the
@@ -469,36 +471,43 @@ class CurationSpec extends SparkSpec {
         numPlanes = 2, dim = 2, expectedItems = 10L)
     }
     assert(IndexStore.latest(spark, s"$base/vec") == committed)
-    val idx = Dedup.readVecIndex(spark, s"$base/vec")
-    assert(idx.vecs.count() == 2L && idx.hashes.count() == 2L &&
-      idx.buckets.agg(sum("__ccnt")).head().getLong(0) == 2L)
+    val idx = Dedup.readVecIngestIndex(spark, s"$base/vec", org.apache.spark.sql.types.LongType)
+    assert(idx.vecs.count() == 2L && idx.hashes.count() == 2L)
   }
 
   test("incrementalSemanticIndexed: corpus-scale index frames never broadcast-build") {
     // same hazard class as the live operator: the vecs frame and the hash
     // index both carry full corpus vectors — over the batch cap the cold
-    // join must degrade to merge, never build from the corpus side
+    // join must degrade to merge, never build from the corpus side. The
+    // persisted index and the live operator's unpersisted one run the same
+    // probe; both must hold it.
     val corpus = (1L to 50L).map(i => (i, Array(i.toFloat, 1.0f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
     val batch = Seq((100L, Array(0.5f, -1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
     val base = scratch("vecIdxBx").toString
     Dedup.writeVecIndex(corpus, "vec_id", "embedding", s"$base/vec",
       numPlanes = 2, dim = 4, expectedItems = 100L)
-    def bxSubtreeHeads(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-      val ls = df.queryExecution.executedPlan.toString.linesIterator.toVector
-      ls.zipWithIndex.filter(_._1.contains("BroadcastExchange")).map { case (_, i) =>
-        ls.drop(i + 1).take(3).mkString("\n")
-      }
+    // each exchange's own subtree head, never a sibling's lines
+    def bxSubtreeHeads(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      Profile.broadcastHeads(df.queryExecution.executedPlan.toString)
+    val inputs = Seq(
+      "persisted" -> (() => Dedup.incrementalSemanticIndexed(
+        Dedup.readVecIngestIndex(spark, s"$base/vec", org.apache.spark.sql.types.LongType),
+        batch, "vec_id", "embedding", threshold = 0.9, batchBroadcastCap = 0L)),
+      "live" -> (() => Dedup.incrementalSemanticDedup(corpus.localCheckpoint(), batch,
+        "vec_id", "embedding", threshold = 0.9, numPlanes = 2, dim = 4, batchBroadcastCap = 0L)))
+    for ((name, run) <- inputs) {
+      val big = run()
+      val bigPlan = big.queryExecution.executedPlan.toString
+      val heads = bxSubtreeHeads(big)
+      big.unpersist()
+      assert(!heads.exists(h => h.contains("corpus_id") && h.contains("__cvec")),
+        s"$name: over-cap path must not broadcast the corpus vectors:\n$bigPlan")
+      assert(!heads.exists(_.contains("__rvec")),
+        s"$name: over-cap path must not broadcast the corpus hash index:\n$bigPlan")
+      assert(bigPlan.contains("SortMergeJoin"),
+        s"$name: over-cap cold join must degrade to sort-merge:\n$bigPlan")
     }
-    val big = Dedup.incrementalSemanticIndexed(Dedup.readVecIndex(spark, s"$base/vec"),
-      batch, "vec_id", "embedding", threshold = 0.9, batchBroadcastCap = 0L)
-    val bigPlan = big.queryExecution.executedPlan.toString
-    val heads = bxSubtreeHeads(big)
-    big.unpersist()
-    assert(!heads.exists(h => h.contains("corpus_id") && h.contains("__cvec")),
-      s"over-cap path must not broadcast the persisted corpus vectors:\n$bigPlan")
-    assert(bigPlan.contains("SortMergeJoin"),
-      s"over-cap cold join must degrade to sort-merge:\n$bigPlan")
   }
 
   test("incremental semantic dedup: corpus band frame never broadcast-builds") {
@@ -513,12 +522,9 @@ class CurationSpec extends SparkSpec {
     val corpus = (1L to 50L).map(i => (i, Array(i.toFloat, 1.0f, 0.0f, 0.0f)))
       .toDF("vec_id", "embedding")
     val batch = Seq((100L, Array(0.5f, -1.0f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
-    def bxSubtreeHeads(df: org.apache.spark.sql.DataFrame): Seq[String] = {
-      val ls = df.queryExecution.executedPlan.toString.linesIterator.toVector
-      ls.zipWithIndex.filter(_._1.contains("BroadcastExchange")).map { case (_, i) =>
-        ls.drop(i + 1).take(3).mkString("\n")
-      }
-    }
+    // each exchange's own subtree head, never a sibling's lines
+    def bxSubtreeHeads(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      Profile.broadcastHeads(df.queryExecution.executedPlan.toString)
     val res = Dedup.incrementalSemanticDedup(corpus, batch, "vec_id", "embedding",
       threshold = 0.9, numPlanes = 2, dim = 4)
     val heads = bxSubtreeHeads(res)

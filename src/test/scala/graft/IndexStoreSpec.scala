@@ -22,8 +22,7 @@ class IndexStoreSpec extends SparkSpec {
     * families rewrite their one table on every fold), and the answer a
     * reader gets from the committed index. `replayNoop`: a replayed
     * append commits nothing (the cc and HLL folds are idempotent by
-    * algebra, and an ingest append replaces its batch's earlier dirs, so
-    * their replay commits an equal answer instead).
+    * algebra, so their replay commits an equal answer instead).
     */
   private final case class Family(name: String, build: String => Unit,
       append: (String, Seq[Long]) => Unit, compact: Option[String => Unit],
@@ -100,14 +99,9 @@ class IndexStoreSpec extends SparkSpec {
       p => Dedup.writeBandIndex(udocs(1L to 20L), "id", $"text", p,
         n = 3, numPerm = 32, numBands = 16, rowsPerBand = 2),
       (p, ids) => Dedup.appendToBandIndex(spark, p, udocs(ids), "id", "text"),
-      Some(p => Dedup.compactBandIndex(spark, p)),
-      p => {
-        val exact = s"$p.hash" // a fixed exact stage: the drill is about the band index
-        if (!IndexStore.committed(spark, exact))
-          Dedup.writeHashIndex(udocs(Seq(1000L)), "id", "text", exact, expectedItems = 10L)
-        classified(Dedup.incrementalDedupIndexed(Dedup.readHashIndex(spark, exact),
-          Dedup.readBandIndex(spark, p), batch, "id", "text", threshold = 0.5))
-      })
+      Some(p => Dedup.compactIngestIndex(spark, p)),
+      p => classified(Dedup.incrementalDedupIndexed(Dedup.readIngestIndex(spark, p, org.apache.spark.sql.types.LongType),
+        batch, "id", "text", threshold = 0.5)))
   }
 
   private def vec(i: Long): Array[Float] = {
@@ -122,8 +116,9 @@ class IndexStoreSpec extends SparkSpec {
     Family("vec",
       p => Dedup.writeVecIndex(vecs(1L to 20L), "id", "v", p, numPlanes = 4, dim = 8, expectedItems = 100L),
       (p, ids) => Dedup.appendToVecIndex(spark, p, vecs(ids), "id", "v"),
-      Some(p => Dedup.compactVecIndex(spark, p)),
-      p => classified(Dedup.incrementalSemanticIndexed(Dedup.readVecIndex(spark, p), batch, "id", "v", 0.99)))
+      Some(p => Dedup.compactVecIngestIndex(spark, p)),
+      p => classified(Dedup.incrementalSemanticIndexed(Dedup.readVecIngestIndex(spark, p, org.apache.spark.sql.types.LongType),
+        batch, "id", "v", 0.99)))
   }
 
   private def sig(i: Long): Long = new scala.util.Random(i).nextLong() & Long.MaxValue
@@ -204,20 +199,17 @@ class IndexStoreSpec extends SparkSpec {
       p => rows(Decontaminate.overlapsIndexed(Decontaminate.readBenchIndex(spark, p), corpus, "id", $"text")))
   }
 
-  /** Appends as the streaming sinks do: the batch of `ids` is ingest
+  /** Appends as the streaming sink does: the batch of `ids` is ingest
     * `ids.head`, probed with its own id excluded, and only its survivors
-    * are appended under that id — so a replay after a fold finds its rows
-    * in the base and appends none.
+    * are appended under that id.
     */
-  private def ingestAppend(probe: (String, DataFrame, Long) => DataFrame,
-      append: (String, DataFrame, Long) => Unit, rowsOf: Seq[Long] => DataFrame)(
-      p: String, ids: Seq[Long]): Unit = {
-    val b = rowsOf(ids)
-    val r = probe(p, b, ids.head)
+  private def ingestAppend(p: String, ids: Seq[Long]): Unit = {
+    val b = udocs(ids)
+    val r = probeIngest(p, b, ids.head)
     val survivors = b.join(r.filter($"status" === "new").select("id"), Seq("id"), "left_semi")
       .localCheckpoint()
     r.unpersist()
-    append(p, survivors, ids.head)
+    Dedup.appendToIngestIndex(spark, p, survivors, "id", "text", ids.head)
   }
 
   private def probeIngest(p: String, b: DataFrame, exclude: Long): DataFrame =
@@ -229,39 +221,13 @@ class IndexStoreSpec extends SparkSpec {
     Seq((105L, udoc(5)), (125L, near(25)), (135L, near(35)), (199L, udoc(199))).toDF("id", "text")
   }
 
-  private val ingest = {
-    val append = ingestAppend(probeIngest,
-      (p, df, b) => Dedup.appendToIngestIndex(spark, p, df, "id", "text", b), udocs) _
-    Family("ingest",
-      p => {
-        Dedup.initIngestIndex(spark, p, n = 3, numPerm = 32, numBands = 16, rowsPerBand = 2,
-          expectedItems = 100L)
-        append(p, 1L to 20L)
-      },
-      append, Some(p => Dedup.compactIngestIndex(spark, p)),
-      p => classified(probeIngest(p, ingestBatch, 999L)), replayNoop = false)
-  }
-
-  private def probeVecIngest(p: String, b: DataFrame, exclude: Long): DataFrame =
-    Dedup.probeVecIngestIndex(Dedup.readVecIngestIndex(spark, p, org.apache.spark.sql.types.LongType),
-      b, "id", "v", threshold = 0.99, excludeIngest = exclude)
-
-  private val vecIngest = {
-    val batch = Seq((105L, vec(5)), (125L, vec(25)), (135L, vec(35).map(_ * 2f)), (199L, vec(199)))
-      .toDF("id", "v")
-    val append = ingestAppend(probeVecIngest,
-      (p, df, b) => Dedup.appendToVecIngestIndex(spark, p, df, "id", "v", b), vecs) _
-    Family("vec-ingest",
-      p => {
-        Dedup.initVecIngestIndex(spark, p, numPlanes = 4, dim = 8, expectedItems = 100L)
-        append(p, 1L to 20L)
-      },
-      append, Some(p => Dedup.compactVecIngestIndex(spark, p)),
-      p => classified(probeVecIngest(p, batch, 999L)), replayNoop = false)
-  }
-
+  /** Every family that persists through the store. The streaming sinks'
+    * band and vec indexes are the `band` and `vec` families, appended
+    * here through the batch API; the stream's own append and its replay
+    * are the ingest replay test below and StreamingSpec's kill + resume.
+    */
   private val families = Seq(bm25, hash, paragraph, span, band, vecFamily, simhash, cc,
-    ivf, ivfPq, lm, sourceToken, hll, bench, ingest, vecIngest)
+    ivf, ivfPq, lm, sourceToken, hll, bench)
 
   /** A fresh index path inside a scratch dir (so a family may keep a
     * fixture beside it).
@@ -366,7 +332,9 @@ class IndexStoreSpec extends SparkSpec {
   test("ingest replay: with batch b committed, a probe excluding b reproduces the pre-append " +
       "classification, and re-appending b leaves b's rows in exactly one dir") {
     val p = fresh("ingest_replay")
-    ingest.build(p)
+    Dedup.initIngestIndex(spark, p, n = 3, numPerm = 32, numBands = 16, rowsPerBand = 2,
+      expectedItems = 100L)
+    ingestAppend(p, 1L to 20L)
     val b = 21L
     val replayed = udocs(b until b + 10L).unionByName(ingestBatch)
     val pre = classified(probeIngest(p, replayed, b))
@@ -374,7 +342,7 @@ class IndexStoreSpec extends SparkSpec {
     Dedup.appendToIngestIndex(spark, p, udocs(Seq(99L)), "id", "text", b)
     assert(classified(probeIngest(p, replayed, b)) == pre,
       "a probe excluding b must not see b's committed first attempt")
-    ingest.append1(p) // the replay: ids 21–30 as batch b
+    ingestAppend(p, b until b + 10L) // the replay: ids 21–30 as batch b
     assert(classified(probeIngest(p, replayed, b)) == pre,
       "a probe excluding b must reproduce the pre-append classification")
     val m = IndexStore.latest(spark, p)
@@ -388,6 +356,37 @@ class IndexStoreSpec extends SparkSpec {
       "the replay must replace the first attempt and hold each of its rows once")
   }
 
+  test("an append's cost does not grow with the corpus: the same 10-doc batch shuffles the same " +
+      "bytes into a band or vec index of 20 and of 80 docs, and no manifest names a bucket table") {
+    // the tap is scoped to this thread's job group: suites share the
+    // context and run concurrently
+    val tag = s"append-cost-${java.util.UUID.randomUUID()}"
+    spark.sparkContext.setJobGroup(tag, "append shuffle-byte measurement")
+    val tap = new ShuffleTap(spark, jobGroup = Some(tag))
+    try {
+      val indexes = Seq(
+        ("band", (p: String, n: Long) => Dedup.writeBandIndex(udocs(1L to n), "id", $"text", p,
+            n = 3, numPerm = 32, numBands = 16, rowsPerBand = 2),
+          (p: String) => Dedup.appendToBandIndex(spark, p, udocs(101L to 110L), "id", "text")),
+        ("vec", (p: String, n: Long) => Dedup.writeVecIndex(vecs(1L to n), "id", "v", p,
+            numPlanes = 4, dim = 8, expectedItems = 1000L),
+          (p: String) => Dedup.appendToVecIndex(spark, p, vecs(101L to 110L), "id", "v")))
+      for ((name, build, append) <- indexes) {
+        val bytes = Seq(20L, 80L).map { n =>
+          val p = fresh(s"cost_${name}_$n")
+          build(p, n)
+          val (_, d) = tap.measure(append(p))
+          val m = IndexStore.latest(spark, p)
+          assert(!m.tables.contains("buckets"), s"$name: the manifest names a bucket table: ${m.tables.keys}")
+          d.write
+        }
+        assert(bytes.forall(_ > 0L), s"$name: the append shuffled nothing: $bytes")
+        assert(math.abs(bytes(0) - bytes(1)) <= 0.05 * bytes.max,
+          s"$name: the append shuffled ${bytes(0)} B into 20 docs but ${bytes(1)} B into 80")
+      }
+    } finally { tap.close(); spark.sparkContext.clearJobGroup() }
+  }
+
   test("the families the streaming sinks create empty read back as empty frames with their schema") {
     val cc = fresh("empty_cc")
     Dedup.writeCcIndex(spark, cc, pairs(Seq(1L, 2L)).select($"id_a".as("id"), $"id_b".as("comp")).limit(0))
@@ -397,10 +396,9 @@ class IndexStoreSpec extends SparkSpec {
     val sh = fresh("empty_simhash")
     Dedup.writeSimhashIndex(sigs(Seq(1L)).limit(0), "id", "s", sh, maxDist = 2)
     val sx = Dedup.readSimhashIndex(spark, sh)
-    assert(sx.sigs.isEmpty && sx.chunks.isEmpty && sx.buckets.isEmpty && sx.maxDist == 2)
+    assert(sx.sigs.isEmpty && sx.chunks.isEmpty && sx.maxDist == 2)
     assert(sx.sigs.columns.toSeq == Seq("corpus_id", "simhash") &&
-      sx.chunks.columns.toSeq == Seq("corpus_id", "simhash", "chunk_idx", "chunk_val") &&
-      sx.buckets.columns.toSeq == Seq("chunk_idx", "chunk_val", "__ccnt", "__hub"))
+      sx.chunks.columns.toSeq == Seq("corpus_id", "simhash", "chunk_idx", "chunk_val"))
     assert(Dedup.probeSimhashIndex(sx, sigs(Seq(7L)), "id", "s").isEmpty)
 
     val lmp = fresh("empty_lm")

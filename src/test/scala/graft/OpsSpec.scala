@@ -580,13 +580,12 @@ class OpsSpec extends SparkSpec {
       (101L, "a b c d e f g X"), // near dup of 10
       (102L, "nothing in common with anything else at all")).toDF("doc_id", "text")
     val base = scratch("bandIdx").toString
-    Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 100L)
     Dedup.writeBandIndex(corpus, "doc_id", $"text", s"$base/band",
       n = 3, numPerm = 64, numBands = 16, rowsPerBand = 4)
     val live = Dedup.incrementalDedup(corpus, batch, "doc_id", $"text",
       n = 3, numPerm = 64, bands = 16, rowsPerBand = 4, threshold = 0.2)
     val idx = Dedup.incrementalDedupIndexed(
-      Dedup.readHashIndex(spark, s"$base/hash"), Dedup.readBandIndex(spark, s"$base/band"),
+      Dedup.readIngestIndex(spark, s"$base/band", org.apache.spark.sql.types.LongType),
       batch, "doc_id", "text", threshold = 0.2)
     val liveRows = live.orderBy("doc_id").as[(Long, String, Option[Long])].collect().toSeq
     val idxRows = idx.orderBy("doc_id").as[(Long, String, Option[Long])].collect().toSeq
@@ -602,13 +601,11 @@ class OpsSpec extends SparkSpec {
     val corpus = (1L to 30L).map(i => (i, s"common shared boilerplate tail here x$i"))
       .toDF("doc_id", "text") // every doc shares most 3-grams → one hot-ish cluster
     val base = scratch("bandIdxApp").toString
-    Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 1000L)
     Dedup.writeBandIndex(corpus, "doc_id", $"text", s"$base/band",
       n = 3, numPerm = 64, numBands = 16, rowsPerBand = 4)
+    def index() = Dedup.readIngestIndex(spark, s"$base/band", org.apache.spark.sql.types.LongType)
     def classify(b: org.apache.spark.sql.DataFrame, maxBucket: Int = Dedup.DefaultMaxBucket) =
-      Dedup.incrementalDedupIndexed(
-        Dedup.readHashIndex(spark, s"$base/hash"), Dedup.readBandIndex(spark, s"$base/band"),
-        b, "doc_id", "text", threshold = 0.2, maxBucket = maxBucket)
+      Dedup.incrementalDedupIndexed(index(), b, "doc_id", "text", threshold = 0.2, maxBucket = maxBucket)
     // tight maxBucket forces the star path: a batch doc near-dup of the
     // hot cluster must still be found via the persisted min-id hub
     val b1 = Seq((200L, "common shared boilerplate tail here y200"),
@@ -620,7 +617,6 @@ class OpsSpec extends SparkSpec {
       s"hot-cluster near dup must resolve to the persisted hub: $r1")
     assert(r1(1) == (201L, "new", None), s"got $r1")
     // append doc 201 (the accepted new doc) and re-see its content
-    Dedup.appendToHashIndex(spark, s"$base/hash", b1.filter($"doc_id" === 201L), "doc_id", "text")
     Dedup.appendToBandIndex(spark, s"$base/band", b1.filter($"doc_id" === 201L), "doc_id", "text")
     val b2 = Seq((300L, "zz yy xx ww vv uu tt ss"),   // exact dup of appended 201
       (301L, "zz yy xx ww vv uu tt QQ")).toDF("doc_id", "text") // near dup of appended 201
@@ -628,14 +624,13 @@ class OpsSpec extends SparkSpec {
     val r2 = c2.orderBy("doc_id").as[(Long, String, Option[Long])].collect().toSeq
     c2.unpersist()
     assert(r2 == Seq((300L, "exact_dup", Some(201L)), (301L, "near_dup", Some(201L))), s"got $r2")
-    // REPLAYED append (a retried ingest): both index appends must be
-    // idempotent — duplicate shingle/size rows would inflate Jaccard and
-    // flip classifications
-    val sizesBefore = Dedup.readBandIndex(spark, s"$base/band").sizes.count()
-    Dedup.appendToHashIndex(spark, s"$base/hash", b1.filter($"doc_id" === 201L), "doc_id", "text")
+    // REPLAYED append (a retried ingest): the append must be idempotent
+    // — duplicate shingle or hash rows would inflate Jaccard and fan out
+    // the exact join
+    def tableRows() = { val i = index(); (i.hashes.count(), i.shingles.count(), i.bands.count()) }
+    val rowsBefore = tableRows()
     Dedup.appendToBandIndex(spark, s"$base/band", b1.filter($"doc_id" === 201L), "doc_id", "text")
-    assert(Dedup.readBandIndex(spark, s"$base/band").sizes.count() == sizesBefore,
-      "a replayed batch double-inserted band-index rows")
+    assert(tableRows() == rowsBefore, "a replayed batch double-inserted band-index rows")
     val c3 = classify(b2)
     val r3 = c3.orderBy("doc_id").as[(Long, String, Option[Long])].collect().toSeq
     c3.unpersist()
@@ -797,19 +792,15 @@ class OpsSpec extends SparkSpec {
     Dedup.writeHashIndex(corpus, "doc_id", "text", s"$base/hash", expectedItems = 100L)
     Dedup.writeBandIndex(corpus, "doc_id", $"text", s"$base/band",
       n = 3, numPerm = 64, numBands = 16, rowsPerBand = 4)
-    Dedup.appendToHashIndex(spark, s"$base/hash",
-      Seq((20L, "k l m n o p q r")).toDF("doc_id", "text"), "doc_id", "text")
-    Dedup.appendToBandIndex(spark, s"$base/band",
-      Seq((20L, "k l m n o p q r")).toDF("doc_id", "text"), "doc_id", "text")
-    Dedup.appendToHashIndex(spark, s"$base/hash",
-      Seq((21L, "z y x w v u t s")).toDF("doc_id", "text"), "doc_id", "text")
-    Dedup.appendToBandIndex(spark, s"$base/band",
-      Seq((21L, "z y x w v u t s")).toDF("doc_id", "text"), "doc_id", "text")
+    for (d <- Seq((20L, "k l m n o p q r"), (21L, "z y x w v u t s"))) {
+      Dedup.appendToHashIndex(spark, s"$base/hash", Seq(d).toDF("doc_id", "text"), "doc_id", "text")
+      Dedup.appendToBandIndex(spark, s"$base/band", Seq(d).toDF("doc_id", "text"), "doc_id", "text")
+    }
     val batch = Seq((100L, "a b c d e f g h"), (101L, "k l m n o p q X"),
       (102L, "totally different content here okay")).toDF("doc_id", "text")
     def classifyText() = {
       val r = Dedup.incrementalDedupIndexed(
-        Dedup.readHashIndex(spark, s"$base/hash"), Dedup.readBandIndex(spark, s"$base/band"),
+        Dedup.readIngestIndex(spark, s"$base/band", org.apache.spark.sql.types.LongType),
         batch, "doc_id", "text", threshold = 0.2)
       val rows = r.orderBy("doc_id").as[(Long, String, Option[Long])].collect().toSeq
       r.unpersist(); rows
@@ -819,13 +810,13 @@ class OpsSpec extends SparkSpec {
     def hashFiles(): Int = partFiles(s"$base/hash", "hashes")
     assert(hashFiles() >= 3, "appends must have accumulated parts")
     Dedup.compactHashIndex(spark, s"$base/hash")
-    Dedup.compactBandIndex(spark, s"$base/band")
+    Dedup.compactIngestIndex(spark, s"$base/band")
     assert(hashFiles() == 1, "hash table must fold to one file")
     assert(partFiles(s"$base/band", "shingles") == 1 && partFiles(s"$base/band", "bands") == 1,
       "band tables must fold to one file")
     assert(classifyText() == textBefore, "text classification changed after compaction")
 
-    // vec — write + append, then compact (buckets untouched by design)
+    // vec — write + append, then compact
     def e(k: Int, scale: Float = 1f): Array[Float] =
       Array.tabulate(8)(i => if (i == k) scale else 0f)
     val vcorpus = Seq((1L, e(0)), (2L, e(1))).toDF("vec_id", "embedding")
@@ -836,14 +827,15 @@ class OpsSpec extends SparkSpec {
     val vbatch = Seq((100L, e(2)), (101L, e(1, 2f)), (102L, e(4))).toDF("vec_id", "embedding")
     def classifyVec() = {
       val r = Dedup.incrementalSemanticIndexed(
-        Dedup.readVecIndex(spark, s"$base/vec"), vbatch, "vec_id", "embedding", 0.9)
+        Dedup.readVecIngestIndex(spark, s"$base/vec", org.apache.spark.sql.types.LongType),
+        vbatch, "vec_id", "embedding", 0.9)
       val rows = r.orderBy("vec_id").as[(Long, String, Option[Long])].collect().toSeq
       r.unpersist(); rows
     }
     val vecBefore = classifyVec()
     assert(vecBefore == Seq((100L, "exact_dup", Some(3L)), (101L, "near_dup", Some(2L)),
       (102L, "new", None)), s"got $vecBefore")
-    Dedup.compactVecIndex(spark, s"$base/vec")
+    Dedup.compactVecIngestIndex(spark, s"$base/vec")
     assert(partFiles(s"$base/vec", "vecs") == 1 && partFiles(s"$base/vec", "hashes") == 1)
     assert(classifyVec() == vecBefore, "vec classification changed after compaction")
 
@@ -1136,8 +1128,9 @@ class OpsSpec extends SparkSpec {
     // the corpus hash index is the only broadcastable side of the exact
     // left join (batch preserved) — with a checkpoint-backed corpus its
     // size estimate collapses and a static broadcast would ship the whole
-    // index at scale. cap=0 forces the evidence-gated merge arm; results
-    // must be identical to the broadcast arm.
+    // index at scale. Past the batch cap (0 here) the exact join merges
+    // both sides; within it the index scan is cut to the batch's keys.
+    // Results must be identical either way.
     val corpus = Seq(
       (10L, "a b c d e f g h"),
       (11L, "p q r s t u v w")).toDF("doc_id", "text").localCheckpoint()
@@ -1146,10 +1139,19 @@ class OpsSpec extends SparkSpec {
       (102L, "nothing in common with anything else at all")).toDF("doc_id", "text")
     val got = Dedup.incrementalDedup(corpus, batch, "doc_id", $"text",
       n = 3, numPerm = 64, bands = 16, rowsPerBand = 4, threshold = 0.2,
-      corpusIndexBroadcastCap = 0L)
+      batchBroadcastCap = 0L)
+    val plan = got.queryExecution.executedPlan.toString
     val rows = got.orderBy("doc_id").as[(Long, String, Option[Long])].collect().toSeq
     got.unpersist()
     assert(rows == Seq((100L, "exact_dup", Some(10L)), (102L, "new", None)))
+    // the exact stage is the only one that joins on the content hash __h
+    val bxHeads = Profile.broadcastHeads(plan)
+    assert(plan.contains("SortMergeJoin") && !bxHeads.exists(_.contains("__h")),
+      s"over-cap exact join must merge, never broadcast-build:\n$plan")
+    val underCap = Dedup.incrementalDedup(corpus, batch, "doc_id", $"text",
+      n = 3, numPerm = 64, bands = 16, rowsPerBand = 4, threshold = 0.2)
+    assert(underCap.orderBy("doc_id").as[(Long, String, Option[Long])].collect().toSeq == rows)
+    underCap.unpersist()
   }
 
   test("quantizedTopK: int8 candidates + exact rerank reproduce brute-force top-k") {

@@ -17,7 +17,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
   /** A fresh dir under [[TmpDir.root]], deleted when the suite ends
-    * (with the scratch dirs of the probes the suite ran).
+    * (with the scratch dirs and parcel stages of the probes the suite ran).
     */
   def scratch(prefix: String): Path = {
     val d = Files.createTempDirectory(Paths.get(TmpDir.root), prefix)
@@ -32,7 +32,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
         f.delete()
       }
       delete(d.toFile)
-    } finally try TmpDir.dropScratch() finally super.afterAll()
+    } finally try TmpDir.dropScratch()
+    finally try graft.probes.ParityProbes.dropStages(spark) finally super.afterAll()
 }
 
 object SparkSpec {

@@ -38,6 +38,9 @@ class ToolingSpec extends SparkSpec {
 
   test("Profile on a catalog query prints its jobs, writes its plan and leaves the session running") {
     val out = scratch("profile").toString
+    def stageDirs = Option(new java.io.File(TmpDir.root)
+      .listFiles((_, n) => n.startsWith("parcel_flat_stage_"))).map(_.toSet).getOrElse(Set.empty)
+    val before = stageDirs
     val lines = Profile.profile(spark, sf0001, Seq("q16_kpi_headline", "q17_parcel_etl_fact"), out)
     assert(!lines.exists(_.contains("\"error\"")), lines.mkString("\n"))
     assert(lines.count(_.contains("\"job\":")) >= 1, lines.mkString("\n"))
@@ -47,9 +50,8 @@ class ToolingSpec extends SparkSpec {
     // the plan the timed write ran, as adaptive execution finished it
     assert(plan.contains("isFinalPlan=true") || plan.contains("== Final Plan =="), plan)
     // every query is released: the parcel probe's stage leaves no dir and
-    // no catalog table behind
-    val stages = Option(new java.io.File(TmpDir.root)
-      .listFiles((_, n) => n.startsWith("parcel_flat_stage_"))).map(_.toSeq).getOrElse(Nil)
+    // no catalog table behind (stages another process made stay theirs)
+    val stages = stageDirs -- before
     assert(stages.isEmpty, s"stage dirs left behind: $stages")
     val tables = spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("parcel_flat_stage_"))
@@ -113,9 +115,17 @@ class ToolingSpec extends SparkSpec {
     val retired = Seq("_compacting_batch", "publishBatchMarker", "finishBatchCompaction",
       "stageBatchCompaction", "compactBatchIndex", "maybeAutoCompact", "stats.dirty", "layout.json",
       "meta.json", "writeBloomFileAtomic", "_compacting.json", "stageIngestCompaction",
-      "finishIngestCompaction")
+      "finishIngestCompaction", "writeBandDelta", "writeVecBuckets")
     val named = retired.flatMap(w => naming(w).map(f => s"$f: $w"))
     assert(named.isEmpty, s"src/main still names a retired index protocol: $named")
+    // one band index and one vec index, in the ingest layout: the batch
+    // families' own types and their corpus-wide bucket aggregate are gone
+    val retiredTypes = """\b(?:BandIndex|VecIndex)\b""".r
+    val typed = sources.flatMap(p => retiredTypes.findAllIn(Files.readString(p)).toSet
+      .map((m: String) => s"${p.getFileName}: $m"))
+    assert(typed.isEmpty, s"src/main still names a retired index type: $typed")
+    val dedup = Files.readString(Paths.get("src/main/scala/graft/ops/Dedup.scala"))
+    assert(!dedup.contains("\"buckets\""), "Dedup.scala still writes a bucket aggregate table")
     // the SCD2 dim sink's dir swap — a warehouse table, not an index — is
     // the one staging swap left
     val offenders = sources.flatMap { p =>
